@@ -1,20 +1,7 @@
 package graft
 import org.apache.spark.sql.SparkSession
+import graft.JsonString.{esc, quote}
 object Bench {
-  /** One-line JSON string escape (the artifact must stay a single line
-    * even when an error message carries quotes or newlines).
-    */
-  private def esc(s: String): String =
-    s.flatMap {
-      case '"' => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    }
-
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
@@ -114,7 +101,7 @@ object Bench {
     val qs = jmap(minPer.map { case (k, v) => k -> v.toString })
     val firstQs = jmap(passes.head.map { case (n, t, _) => n -> t.toString })
     val errJson = jmap(errors.toSeq.map { case (k, v) =>
-      k -> ("\"" + esc(v) + "\"") })
+      k -> quote(v) })
     val total = passes.head.map(_._2).sum
     val sumOfMin = minPer.map(_._2).filter(_ >= 0).sum
     println(s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"queries_first_pass":$firstQs,"sum_of_min":$sumOfMin,"reps":$reps,"warmup_calib_sec":$warmupCalib,"errors":$errJson,"sf":"${esc(sfDir)}"}""")

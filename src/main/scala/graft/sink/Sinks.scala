@@ -2,6 +2,7 @@ package graft.sink
 
 import org.apache.spark.sql.{DataFrame, SaveMode}
 import org.apache.spark.sql.functions._
+import graft.JsonString.quote
 
 /** Sink layer (SURVEY §2.1 S8-S13): partitioned directory layout,
   * metadata-envelope outputs, run summaries, overwrite-or-create
@@ -29,11 +30,12 @@ object Sinks {
     */
   def writePartitioned(df: DataFrame, path: String, partitionCols: Seq[String],
       format: String = "parquet", compact: Boolean = true): Unit = {
-    df.sparkSession.conf
-      .set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     val out = if (compact) df.repartition(partitionCols.map(col): _*) else df
+    // Per-write option, not the session conf: other writes in the
+    // session keep their own overwrite semantics.
     out.write
       .mode(SaveMode.Overwrite)
+      .option("partitionOverwriteMode", "dynamic")
       .partitionBy(partitionCols: _*)
       .format(format)
       .save(path)
@@ -67,18 +69,9 @@ object Sinks {
     // JSON line. Hadoop FS, not java.nio, so the sink stays
     // FS-agnostic. Same line a single-row Spark JSON write produced;
     // readers (schema-supplied or inferred) see an identical relation.
-    def esc(v: String): String = v.flatMap {
-      case '"' => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    }
-    val line = s"""{"record_count":$recordCount,"source":"${esc(source)}",""" +
-      s""""scraped_at":"${esc(runTimestamp)}",""" +
-      s""""columns":"${esc(df.columns.mkString(","))}"}""" + "\n"
+    val line = s"""{"record_count":$recordCount,"source":${quote(source)},""" +
+      s""""scraped_at":${quote(runTimestamp)},""" +
+      s""""columns":${quote(df.columns.mkString(","))}}""" + "\n"
     val metaDir = new org.apache.hadoop.fs.Path(s"$path/_meta")
     val fs = metaDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
     fs.delete(metaDir, true) // SaveMode.Overwrite semantics, kept

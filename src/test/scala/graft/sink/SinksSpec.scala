@@ -22,6 +22,21 @@ class SinksSpec extends SparkSpecBase {
     assert(back == Map("t1" -> 99, "t2" -> 2))
   }
 
+  test("writePartitioned: dynamic per write, session conf left as it was") {
+    val key = "spark.sql.sources.partitionOverwriteMode"
+    // its own session, so the explicit static setting cannot leak
+    val session = spark.newSession()
+    session.conf.set(key, "static")
+    val path = tmpDir()
+    def rows(xs: (String, Int)*) = session.createDataFrame(xs).toDF("team", "v")
+    Sinks.writePartitioned(rows("t1" -> 1, "t2" -> 2), path, Seq("team"))
+    Sinks.writePartitioned(rows("t1" -> 99), path, Seq("team"))
+    assert(session.conf.get(key) == "static")
+    val back = session.read.parquet(path)
+      .collect().map(r => r.getAs[String]("team") -> r.getAs[Int]("v")).toMap
+    assert(back == Map("t1" -> 99, "t2" -> 2))
+  }
+
   test("writeEnveloped: parallel data files + sidecar metadata") {
     val path = tmpDir()
     val df = Seq((1, "x"), (2, "y"), (3, "z")).toDF("id", "s")
@@ -33,6 +48,10 @@ class SinksSpec extends SparkSpecBase {
     assert(meta.getAs[String]("source") == "unit-test")
     assert(meta.getAs[String]("scraped_at") == "2026-01-01T00:00:00")
     assert(meta.getAs[String]("columns") == "id,s")
+    assert(new String(Files.readAllBytes(
+      java.nio.file.Paths.get(s"$path/_meta/part-00000.json")), "UTF-8") ==
+      """{"record_count":3,"source":"unit-test",""" +
+      """"scraped_at":"2026-01-01T00:00:00","columns":"id,s"}""" + "\n")
   }
 
   test("writeRunSummary + partitionExists") {
