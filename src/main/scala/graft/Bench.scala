@@ -1,28 +1,10 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import graft.JsonString.{esc, quote}
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // UTC like Verify/SparkSpecBase: the events TIMESTAMP_NTZ→TIMESTAMP
-      // normalization (Tables.normalizeTs) is value-identity only in UTC
-      .config("spark.sql.session.timeZone", "UTC")
-      // FileOutputCommitter v2 (public MR/Spark setting): task commits
-      // rename straight to the destination instead of through the job-
-      // commit's single-threaded driver merge. The many-partition fan-out
-      // writes (a23's ~240 day×bucket dirs) otherwise serialize their
-      // commit on the driver; v2's tradeoff (partial task output visible
-      // on job failure) is irrelevant for these scratch-dir stagings and
-      // the standard choice for HDFS-like stores (object stores use
-      // dedicated committers instead).
-      .config("spark.hadoop.mapreduce.fileoutputcommitter.algorithm.version",
-        "2")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.local(
+      sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt)
     spark.sparkContext.setLogLevel("WARN")
     // JVM/codegen warmup outside the timed region: the first query
     // otherwise absorbs ~3-5s of one-time session cost into its number.

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 import graft.JsonString.quote
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
@@ -7,17 +6,10 @@ import graft.JsonString.quote
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // same committer as Bench (see Bench.scala) so correctness runs
-      // exercise the exact write path the bench times
-      .config("spark.hadoop.mapreduce.fileoutputcommitter.algorithm.version",
-        "2")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    // Bench's session, so correctness runs exercise the exact write
+    // path the bench times
+    val spark = GraftSession.local(
+      sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt)
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     // opt-in subset for local iteration (comma-separated names); the

@@ -257,8 +257,9 @@ object Joins {
       |JOIN customer ON cust_id = c_custkey
       |GROUP BY 1 ORDER BY 1""".stripMargin
 
-  /** Conf scope with set-or-unset restore (the CatchupConf discipline,
-    * shared by the j6/j7/a17 harnesses).
+  /** Conf scope with set-or-unset restore, shared by the j6/j7/a17
+    * harnesses. It writes the caller's session conf, so it assumes
+    * nothing else runs on the session meanwhile.
     */
   private[queries] def withConfs[A](s: SparkSession, kv: Seq[(String, String)])(
       body: => A): A = {

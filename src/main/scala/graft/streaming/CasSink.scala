@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 import graft.Tables._
 import graft.queries.Warehouse
 
@@ -96,68 +95,47 @@ object CasSink {
       .map(v => Warehouse.o16Read(s, base, v).withColumn("version", lit(v)))
       .reduce(_ unionByName _)
 
-  def st25StreamCasSink(s: SparkSession, d: String): DataFrame =
-    CatchupConf.withBoundedStatePartitions(s) {
-    val rawSchema = eventsRaw(s, d).schema
-    val root = java.nio.file.Files.createTempDirectory("graft_st25_")
-    val data = root.resolve("data"); java.nio.file.Files.createDirectory(data)
-    val table = root.resolve("table"); java.nio.file.Files.createDirectory(table)
-    val base = table.toString
-    val attempts = root.resolve("attempts")
-    val failFlag = root.resolve("fail_once")
-    val cp = root.resolve("cp").toString
+  def st25StreamCasSink(caller: SparkSession, d: String): DataFrame =
+    StreamRun(caller, "st25") { run =>
+      val s = run.session
+      val rawSchema = eventsRaw(s, d).schema
+      val data = run.dir.resolve("data")
+      val table = run.dir.resolve("table")
+      java.nio.file.Files.createDirectory(table)
+      val base = table.toString
+      val attempts = run.ledger("attempts")
+      val failFlag = run.dir.resolve("fail_once")
 
-    def writeBatch(bdf: DataFrame, bid: Long): Unit = {
-      java.nio.file.Files.write(attempts,
-        s"$bid\n".getBytes(java.nio.charset.StandardCharsets.UTF_8),
-        java.nio.file.StandardOpenOption.CREATE,
-        java.nio.file.StandardOpenOption.APPEND)
-      commitBatch(base, "st25", bdf.select(col("ts"), col("event_type"),
-          col("value")), bid,
-        // the injected crash fires AFTER the manifest commit but BEFORE
-        // Spark's checkpoint records the batch — the window only the
-        // transaction log itself can dedupe (st14's side marker would
-        // equally be written by then; the point is the LOG carries the
-        // idempotence, no second mechanism)
-        afterCommitHook = () =>
-          if (java.nio.file.Files.deleteIfExists(failFlag))
-            sys.error("st25: injected crash after commit, before checkpoint"))
-    }
+      def writeBatch(bdf: DataFrame, bid: Long): Unit = {
+        attempts.add(bid)
+        commitBatch(base, "st25", bdf.select(col("ts"), col("event_type"),
+            col("value")), bid,
+          // the injected crash fires AFTER the manifest commit but BEFORE
+          // Spark's checkpoint records the batch — the window only the
+          // transaction log itself can dedupe (st14's side marker would
+          // equally be written by then; the point is the LOG carries the
+          // idempotence, no second mechanism)
+          afterCommitHook = () =>
+            if (java.nio.file.Files.deleteIfExists(failFlag))
+              sys.error("st25: injected crash after commit, before checkpoint"))
+      }
 
-    def runOnce(): Unit = {
-      val streamEv = normalizeTs(s.readStream
-        .schema(rawSchema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(data.toString))
-      val q = streamEv.writeStream
-        .foreachBatch((bdf: DataFrame, bid: Long) => writeBatch(bdf, bid))
-        .option("checkpointLocation", cp)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      CatchupConf.awaitBounded(q, "st25")
-    }
+      def runOnce(): Unit = {
+        val streamEv = normalizeTs(s.readStream
+          .schema(rawSchema)
+          .option("maxFilesPerTrigger", "1")
+          .parquet(data.toString))
+        run.catchUp(streamEv.writeStream
+          .foreachBatch((bdf: DataFrame, bid: Long) => writeBatch(bdf, bid))
+          .option("checkpointLocation", run.dir.resolve("cp").toString))
+      }
 
-    try {
-      val src = java.nio.file.Paths.get(s"$d/events.parquet")
-      java.nio.file.Files.copy(src, data.resolve("a.parquet"))
+      run.stageEvents(d, "data/a.parquet")
       java.nio.file.Files.createFile(failFlag)
-      val crashed =
-        try { runOnce(); false }
-        catch {
-          case e: org.apache.spark.sql.streaming.StreamingQueryException =>
-            def chain(t: Throwable): Seq[String] =
-              if (t == null) Seq.empty
-              else Option(t.getMessage).toSeq ++ chain(t.getCause)
-            require(chain(e).exists(_.contains("injected crash")),
-              s"st25: run 1 failed for the wrong reason: ${e.getMessage}")
-            true
-        }
-      require(crashed,
-        "st25: injected crash did not fire - harness lost its failure path")
-      java.nio.file.Files.copy(src, data.resolve("b.parquet"))
+      run.expectInjectedCrash(runOnce())
+      run.stageEvents(d, "data/b.parquet")
       runOnce()
-      val tries = new String(java.nio.file.Files.readAllBytes(attempts),
-        java.nio.charset.StandardCharsets.UTF_8).split("\n").filter(_.nonEmpty)
+      val tries = attempts.entries
       require(tries.count(_ == "0") == 2,
         s"st25: batch 0 entered ${tries.count(_ == "0")} times, expected 2 " +
           "(crashed-after-commit attempt + skipped replay)")
@@ -175,8 +153,7 @@ object CasSink {
           dsum(col("value")).as("total_value"))
         .localCheckpoint()
         .orderBy("event_type")
-    } finally org.apache.commons.io.FileUtils.deleteDirectory(root.toFile)
-  }
+    }
 
   /** Two staged copies of the corpus, one committed version each —
     * a duplicated batch-0 commit would show 2× its share and 3

@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 import graft.Tables._
 import graft.queries.{Warehouse, WarehouseDeletes}
 
@@ -40,18 +39,16 @@ import graft.queries.{Warehouse, WarehouseDeletes}
   */
 object CdcEqDelete {
 
-  def st29StreamEqDelete(s: SparkSession, d: String): DataFrame =
-    CatchupConf.withBoundedStatePartitions(s) {
-    val root = java.nio.file.Files.createTempDirectory("graft_st29_")
-    val table = root.resolve("table")
-    val inDir = root.resolve("in")
-    java.nio.file.Files.createDirectory(table)
-    java.nio.file.Files.createDirectory(inDir)
-    val base = table.toString
-    val attempts = root.resolve("attempts")
-    val cp = root.resolve("cp").toString
-    try {
+  def st29StreamEqDelete(caller: SparkSession, d: String): DataFrame =
+    StreamRun(caller, "st29") { run =>
       import java.nio.file.{Files, Paths}
+      val s = run.session
+      val table = run.dir.resolve("table")
+      val inDir = run.dir.resolve("in")
+      Files.createDirectory(table)
+      Files.createDirectory(inDir)
+      val base = table.toString
+      val attempts = run.ledger("attempts")
       val cust = customer(s, d).select(col("c_custkey").as("cust_id"),
         col("c_mktsegment").as("segment"), col("c_acctbal").as("bal"))
       Warehouse.o16Stage(base, "w0", cust.repartition(4))
@@ -71,28 +68,22 @@ object CdcEqDelete {
         col("user_id"), col("event_type"), col("value"))
       val boundary = (ev.agg(max(col("event_id"))).head().getLong(0) + 1) / 2
       def stageBatch(df: DataFrame, name: String, bump: Long): Unit = {
-        val scratch = root.resolve(s"scratch_$name")
+        val scratch = run.dir.resolve(s"scratch_$name")
         df.coalesce(1).write.parquet(scratch.toString)
         val part = graft.Tables.listDir(scratch)
           .find(_.toString.endsWith(".parquet")).get
         val target = inDir.resolve(s"$name.parquet")
         Files.copy(part, target)
-        org.apache.commons.io.FileUtils.deleteDirectory(scratch.toFile)
         Files.setLastModifiedTime(target,
           java.nio.file.attribute.FileTime.fromMillis(
             System.currentTimeMillis() + bump))
       }
-      def fedBatches(): Seq[Long] =
-        if (Files.exists(attempts))
-          new String(Files.readAllBytes(attempts),
-            java.nio.charset.StandardCharsets.UTF_8)
-            .split("\n").filter(_.nonEmpty).map(_.toLong).toSeq
-        else Seq.empty
+      def fedBatches(): Seq[Long] = attempts.entries.map(_.toLong)
       val evSchema = ev.schema
       def runOnce(): Unit = {
         val stream = s.readStream.schema(evSchema)
           .option("maxFilesPerTrigger", "1").parquet(inDir.toString)
-        val q = stream.writeStream
+        run.catchUp(stream.writeStream
           .foreachBatch { (batch: DataFrame, batchId: Long) =>
             if (!fedBatches().contains(batchId)) {
               // replay idempotence at the COMMIT level too: a crash
@@ -111,18 +102,11 @@ object CdcEqDelete {
                   .filter(col("op") === "D").select("cust_id")
                 WarehouseDeletes.o27EqDelete(s, base, keys, s"k$batchId")
               }
-              Files.write(attempts,
-                s"$batchId\n".getBytes(
-                  java.nio.charset.StandardCharsets.UTF_8),
-                java.nio.file.StandardOpenOption.CREATE,
-                java.nio.file.StandardOpenOption.APPEND)
+              attempts.add(batchId)
             }
             ()
           }
-          .option("checkpointLocation", cp)
-          .trigger(Trigger.AvailableNow())
-          .start()
-        CatchupConf.awaitBounded(q, "st29")
+          .option("checkpointLocation", run.dir.resolve("cp").toString))
       }
 
       // the WHOLE streaming phase runs with the table's data absent —
@@ -161,8 +145,7 @@ object CdcEqDelete {
         .select(col("version"), col("cust_id"), col("segment"), col("bal"))
         .orderBy("version", "cust_id")
         .localCheckpoint()
-    } finally org.apache.commons.io.FileUtils.deleteDirectory(root.toFile)
-  }
+    }
 
   private def keysSql(pred: String): String =
     s"""SELECT cust_id FROM (

@@ -31,27 +31,25 @@ import graft.Tables._
   */
 object CdcMerge {
 
-  def st16StreamingCdcMerge(s: SparkSession, d: String): DataFrame =
-    CatchupConf.withBoundedStatePartitions(s) {
-    import org.apache.spark.sql.streaming.Trigger
-    val dir = java.nio.file.Files.createTempDirectory("graft_st16_")
-    val inDir = dir.resolve("in")
-    val snapRoot = dir.resolve("snapshot")
-    java.nio.file.Files.createDirectories(inDir)
-    java.nio.file.Files.createDirectories(snapRoot)
-    val hPath = new org.apache.hadoop.fs.Path(snapRoot.toString)
-    val fs = hPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-    try {
+  def st16StreamingCdcMerge(caller: SparkSession, d: String): DataFrame =
+    StreamRun(caller, "st16") { run =>
+      val s = run.session
+      val inDir = run.dir.resolve("in")
+      val snapRoot = run.dir.resolve("snapshot")
+      java.nio.file.Files.createDirectories(inDir)
+      java.nio.file.Files.createDirectories(snapRoot)
+      val hPath = new org.apache.hadoop.fs.Path(snapRoot.toString)
+      val fs = hPath.getFileSystem(s.sparkContext.hadoopConfiguration)
       val ev = events(s, d).select(col("event_id"), col("ts"),
         col("user_id"), col("event_type"), col("value"))
       val boundary = (ev.agg(max(col("event_id"))).head().getLong(0) + 1) / 2
 
       // stage the two change batches as single files in mtime order —
       // ONE clustered staging job
-      CatchupConf.stageTagged(ev,
+      run.stageTagged(ev,
         when(col("event_id") < boundary, lit("a_batch1"))
           .otherwise(lit("b_batch2")),
-        inDir, Seq("a_batch1", "b_batch2"))
+        Seq("a_batch1", "b_batch2"), inDir)
 
       // snapshot v0 = the customer base
       customer(s, d).select(col("c_custkey").as("cust_id"),
@@ -62,19 +60,16 @@ object CdcMerge {
       val stream = s.readStream.schema(evSchema)
         .option("maxFilesPerTrigger", "1")
         .parquet(inDir.toString)
-      val q = stream.writeStream
+      run.catchUp(stream.writeStream
         .foreachBatch { (batch: DataFrame, batchId: Long) =>
           mergeBatch(s, snapRoot.toString, batch, batchId)
-        }
-        .trigger(Trigger.AvailableNow()).start()
-      CatchupConf.awaitBounded(q, "st16")
+        })
       require(fs.exists(new org.apache.hadoop.fs.Path(
         s"$snapRoot/_committed_1")), "st16: expected two merged batches")
       s.read.parquet(s"$snapRoot/current")
         .localCheckpoint()
         .orderBy("cust_id")
-    } finally org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)
-  }
+    }
 
   /** The foreachBatch body, factored for `CdcMergeSpec`: merge one
     * change batch into the `current` snapshot under `snapRoot`,

@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 import graft.Tables._
 import graft.queries.Warehouse
 
@@ -56,15 +55,15 @@ object CdfStream {
       .write.mode("overwrite").parquet(s"$feedDir/v$v")
   }
 
-  def st26StreamChangeFeed(s: SparkSession, d: String): DataFrame =
-    CatchupConf.withBoundedStatePartitions(s) {
-    val root = java.nio.file.Files.createTempDirectory("graft_st26_")
-    val table = root.resolve("table"); java.nio.file.Files.createDirectory(table)
-    val base = table.toString
-    val feedDir = root.resolve("feed").toString
-    val attempts = root.resolve("attempts")
-    val cp = root.resolve("cp").toString
-    try {
+  def st26StreamChangeFeed(caller: SparkSession, d: String): DataFrame =
+    StreamRun(caller, "st26") { run =>
+      val s = run.session
+      val table = run.dir.resolve("table")
+      java.nio.file.Files.createDirectory(table)
+      val base = table.toString
+      val feedDir = run.dir.resolve("feed").toString
+      val attempts = run.ledger("attempts")
+      def tried: Seq[Int] = attempts.entries.map(_.toInt)
       // the keyed snapshot table, committed through the o16 CAS:
       // v1 = the customer dim; v2 = o10's CDC merge of it; v3 = a
       // maintenance pass (balance doubling for one cohort + a purge)
@@ -89,7 +88,7 @@ object CdfStream {
           .option("maxFilesPerTrigger", "1")
           .text(base)
           .select(col("_metadata.file_path").as("path"))
-        val q = manifests.writeStream
+        run.catchUp(manifests.writeStream
           .foreachBatch { (bdf: DataFrame, _: Long) =>
             // driver-sized by construction: one row per LINE of a new
             // manifest — single-line today, but `.distinct` keeps the
@@ -100,34 +99,19 @@ object CdfStream {
             // replay idempotence: a batch re-fired after a crash between
             // the feed write and the checkpoint commit must not re-diff —
             // the attempts ledger doubles as the processed-version set
-            val fed: Set[Int] =
-              if (java.nio.file.Files.exists(attempts))
-                new String(java.nio.file.Files.readAllBytes(attempts),
-                  java.nio.charset.StandardCharsets.UTF_8)
-                  .split("\n").filter(_.nonEmpty).map(_.toInt).toSet
-              else Set.empty
+            val fed = tried.toSet
             vs.filterNot(fed).foreach { v =>
               // feed FIRST (idempotent per-version overwrite), ledger
               // SECOND: ledger-first turned a crash in between into a
               // permanently skipped version — silent feed loss
               diffVersion(s, base, v, feedDir)
-              java.nio.file.Files.write(attempts,
-                s"$v\n".getBytes(java.nio.charset.StandardCharsets.UTF_8),
-                java.nio.file.StandardOpenOption.CREATE,
-                java.nio.file.StandardOpenOption.APPEND)
+              attempts.add(v)
             }
             ()
           }
-          .option("checkpointLocation", cp)
-          .trigger(Trigger.AvailableNow())
-          .start()
-        CatchupConf.awaitBounded(q, "st26")
+          .option("checkpointLocation", run.dir.resolve("cp").toString))
       }
       runOnce()
-      def tried: Seq[Int] =
-        new String(java.nio.file.Files.readAllBytes(attempts),
-          java.nio.charset.StandardCharsets.UTF_8)
-          .split("\n").filter(_.nonEmpty).map(_.toInt).toSeq
       require(tried == Seq(1, 2),
         s"st26: run 1 must consume exactly v1,v2 in order — got $tried")
       // v3 lands AFTER the stream terminated; the checkpointed restart
@@ -162,8 +146,7 @@ object CdfStream {
       feed.select(col("version"), col("cust_id"), col("segment"),
           col("bal"), col("change_type"))
         .orderBy("version", "cust_id", "change_type")
-    } finally org.apache.commons.io.FileUtils.deleteDirectory(root.toFile)
-  }
+    }
 
   /** The o10 change-set, re-exposed for the commit ladder (the same
     * derivation the o10/o20 rows certify). */

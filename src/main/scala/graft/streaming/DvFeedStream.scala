@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 import graft.Tables._
 import graft.queries.Warehouse
 
@@ -57,15 +56,15 @@ object DvFeedStream {
       .write.mode("overwrite").parquet(s"$feedDir/v$v")
   }
 
-  def st27StreamDvFeed(s: SparkSession, d: String): DataFrame =
-    CatchupConf.withBoundedStatePartitions(s) {
-    val root = java.nio.file.Files.createTempDirectory("graft_st27_")
-    val table = root.resolve("table"); java.nio.file.Files.createDirectory(table)
-    val base = table.toString
-    val feedDir = root.resolve("feed").toString
-    val attempts = root.resolve("attempts")
-    val cp = root.resolve("cp").toString
-    try {
+  def st27StreamDvFeed(caller: SparkSession, d: String): DataFrame =
+    StreamRun(caller, "st27") { run =>
+      val s = run.session
+      val table = run.dir.resolve("table")
+      java.nio.file.Files.createDirectory(table)
+      val base = table.toString
+      val feedDir = run.dir.resolve("feed").toString
+      val attempts = run.ledger("attempts")
+      def tried: Seq[Int] = attempts.entries.map(_.toInt)
       val docs = documents(s, d).select(col("doc_id"), col("lang"),
         col("source"))
       def stamp(v: Int): Unit =
@@ -86,7 +85,7 @@ object DvFeedStream {
           .option("maxFilesPerTrigger", "1")
           .text(base)
           .select(col("_metadata.file_path").as("path"))
-        val q = manifests.writeStream
+        run.catchUp(manifests.writeStream
           .foreachBatch { (bdf: DataFrame, _: Long) =>
             // driver-sized by construction: one row per LINE of a new
             // manifest — an o22 DV manifest is two lines, so the path
@@ -96,12 +95,7 @@ object DvFeedStream {
             // replay idempotence: a batch re-fired after a crash between
             // the feed write and the checkpoint commit must not re-feed —
             // the attempts ledger doubles as the processed-version set
-            val fed: Set[Int] =
-              if (java.nio.file.Files.exists(attempts))
-                new String(java.nio.file.Files.readAllBytes(attempts),
-                  java.nio.charset.StandardCharsets.UTF_8)
-                  .split("\n").filter(_.nonEmpty).map(_.toInt).toSet
-              else Set.empty
+            val fed = tried.toSet
             vs.filterNot(fed).foreach { v =>
               // the st28 retention guard: an unread version vacuumed
               // from under the consumer fails loudly, never skips
@@ -111,23 +105,13 @@ object DvFeedStream {
               // between into a permanently skipped version — silent
               // feed loss
               feedVersion(s, base, v, feedDir)
-              java.nio.file.Files.write(attempts,
-                s"$v\n".getBytes(java.nio.charset.StandardCharsets.UTF_8),
-                java.nio.file.StandardOpenOption.CREATE,
-                java.nio.file.StandardOpenOption.APPEND)
+              attempts.add(v)
             }
             ()
           }
-          .option("checkpointLocation", cp)
-          .trigger(Trigger.AvailableNow())
-          .start()
-        CatchupConf.awaitBounded(q, "st27")
+          .option("checkpointLocation", run.dir.resolve("cp").toString))
       }
       runOnce()
-      def tried: Seq[Int] =
-        new String(java.nio.file.Files.readAllBytes(attempts),
-          java.nio.charset.StandardCharsets.UTF_8)
-          .split("\n").filter(_.nonEmpty).map(_.toInt).toSeq
       require(tried == Seq(1, 2),
         s"st27: run 1 must consume exactly v1,v2 in order — got $tried")
       // the second delete AND the optimize land after run 1 terminated;
@@ -162,8 +146,7 @@ object DvFeedStream {
       feed.select(col("version"), col("doc_id"), col("lang"),
           col("source"), col("change_type"))
         .orderBy("version", "doc_id")
-    } finally org.apache.commons.io.FileUtils.deleteDirectory(root.toFile)
-  }
+    }
 
   val st27Sql: String =
     """SELECT * FROM (

@@ -2,6 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.StreamingQuery
 import graft.Tables._
 
 /** Event-time window aggregations over `events` — the Structured
@@ -76,43 +77,22 @@ object EventWindows {
     * oracle recomputes it relationally: the hash certifies that the
     * streaming execution's terminal state equals the batch aggregate.
     *
-    * The memory sink is per-run-named and dropped in `finally`; it
-    * holds only the window aggregate (|windows| × |event types| rows),
-    * never raw events — a production run would `writeStream` to files
-    * with the identical plan.
+    * The memory sink holds only the window aggregate (|windows| ×
+    * |event types| rows), never raw events — a production run would
+    * `writeStream` to files with the identical plan.
     */
-  def st5AvailableNow(s: SparkSession, d: String): DataFrame =
-    CatchupConf.withBoundedStatePartitions(s) {
-    import org.apache.spark.sql.streaming.Trigger
-    val rawSchema = eventsRaw(s, d).schema
-    val dir = java.nio.file.Files.createTempDirectory("graft_st5_")
-    val sink = "st5_out_" +
-      java.util.UUID.randomUUID().toString.replace("-", "").take(12)
-    try {
-      java.nio.file.Files.copy(
-        java.nio.file.Paths.get(s"$d/events.parquet"),
-        dir.resolve("events.parquet"))
+  def st5AvailableNow(caller: SparkSession, d: String): DataFrame =
+    StreamRun(caller, "st5") { run =>
+      val s = run.session
+      val rawSchema = eventsRaw(s, d).schema
+      run.stageEvents(d)
       val streamEv = normalizeTs(s.readStream
           .schema(rawSchema)
-          .parquet(dir.toString))
+          .parquet(run.dir.toString))
         .withWatermark("ts", "10 minutes")
-      val q = tumbling(streamEv)
-        .writeStream
-        .format("memory")
-        .queryName(sink)
-        .outputMode("complete")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      CatchupConf.awaitBounded(q, "st5")
-      // materialize before the view is dropped and scratch deleted
-      s.table(sink).localCheckpoint()
+      run.snapshot(run.memory(tumbling(streamEv), "complete"))
         .orderBy("window_start", "event_type")
-    } finally {
-      s.catalog.dropTempView(sink)
-      graft.Tables.listDir(dir).foreach(java.nio.file.Files.delete)
-      java.nio.file.Files.delete(dir)
     }
-  }
 
   /** Same relational answer as st1 — the point: the streaming terminal
     * state and the batch aggregate are one result. (Deliberate, r8
@@ -135,46 +115,24 @@ object EventWindows {
     * certifies both halves of production streaming at once: no
     * reprocessing of seen files, no loss of checkpointed state.
     */
-  def st8CheckpointResume(s: SparkSession, d: String): DataFrame =
-    CatchupConf.withBoundedStatePartitions(s) {
-    import org.apache.spark.sql.streaming.Trigger
-    val rawSchema = eventsRaw(s, d).schema
-    val root = java.nio.file.Files.createTempDirectory("graft_st8_")
-    val data = root.resolve("data"); java.nio.file.Files.createDirectory(data)
-    val cp = root.resolve("cp").toString
-    val runId = java.util.UUID.randomUUID().toString.replace("-", "").take(12)
-
-    def runOnce(sink: String): Unit = {
-      val streamEv = normalizeTs(s.readStream
-          .schema(rawSchema)
-          .parquet(data.toString))
-        .withWatermark("ts", "10 minutes")
-      val q = tumbling(streamEv)
-        .writeStream
-        .format("memory")
-        .queryName(sink)
-        .outputMode("complete")
-        .option("checkpointLocation", cp)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      CatchupConf.awaitBounded(q, "st8")
+  def st8CheckpointResume(caller: SparkSession, d: String): DataFrame =
+    StreamRun(caller, "st8") { run =>
+      val s = run.session
+      val rawSchema = eventsRaw(s, d).schema
+      val data = run.dir.resolve("data")
+      def runOnce(): StreamingQuery = {
+        val streamEv = normalizeTs(s.readStream
+            .schema(rawSchema)
+            .parquet(data.toString))
+          .withWatermark("ts", "10 minutes")
+        run.memory(tumbling(streamEv), "complete",
+          "checkpointLocation" -> run.dir.resolve("cp").toString)
+      }
+      run.stageEvents(d, "data/a.parquet")
+      runOnce()
+      run.stageEvents(d, "data/b.parquet")
+      run.snapshot(runOnce()).orderBy("window_start", "event_type")
     }
-
-    try {
-      java.nio.file.Files.copy(
-        java.nio.file.Paths.get(s"$d/events.parquet"), data.resolve("a.parquet"))
-      runOnce(s"st8_run1_$runId")
-      java.nio.file.Files.copy(
-        java.nio.file.Paths.get(s"$d/events.parquet"), data.resolve("b.parquet"))
-      runOnce(s"st8_run2_$runId")
-      s.table(s"st8_run2_$runId").localCheckpoint()
-        .orderBy("window_start", "event_type")
-    } finally {
-      s.catalog.dropTempView(s"st8_run1_$runId")
-      s.catalog.dropTempView(s"st8_run2_$runId")
-      org.apache.commons.io.FileUtils.deleteDirectory(root.toFile)
-    }
-  }
 
   /** T2/T3 — source-commit protocol: the reference's row-count
     * stabilization gate and download-completion watch
@@ -199,58 +157,36 @@ object EventWindows {
     * not been picked up (or state been lost), `n_after_commit` would not
     * be exactly double.
     */
-  def st9CommitProtocol(s: SparkSession, d: String): DataFrame =
-    CatchupConf.withBoundedStatePartitions(s) {
-    import org.apache.spark.sql.streaming.Trigger
-    val rawSchema = eventsRaw(s, d).schema
-    val root = java.nio.file.Files.createTempDirectory("graft_st9_")
-    val data = root.resolve("data"); java.nio.file.Files.createDirectory(data)
-    val cp = root.resolve("cp").toString
-    val runId = java.util.UUID.randomUUID().toString.replace("-", "").take(12)
-
-    def runOnce(sink: String): Unit = {
-      val streamEv = normalizeTs(s.readStream
-          .schema(rawSchema)
-          .option("pathGlobFilter", "*.parquet")
-          .parquet(data.toString))
-        .withWatermark("ts", "10 minutes")
-      val q = tumbling(streamEv)
-        .writeStream
-        .format("memory")
-        .queryName(sink)
-        .outputMode("complete")
-        .option("checkpointLocation", cp)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      CatchupConf.awaitBounded(q, "st9")
-    }
-
-    try {
-      val src = java.nio.file.Paths.get(s"$d/events.parquet")
-      java.nio.file.Files.copy(src, data.resolve("a.parquet"))
+  def st9CommitProtocol(caller: SparkSession, d: String): DataFrame =
+    StreamRun(caller, "st9") { run =>
+      val s = run.session
+      val rawSchema = eventsRaw(s, d).schema
+      val data = run.dir.resolve("data")
+      def runOnce(): StreamingQuery = {
+        val streamEv = normalizeTs(s.readStream
+            .schema(rawSchema)
+            .option("pathGlobFilter", "*.parquet")
+            .parquet(data.toString))
+          .withWatermark("ts", "10 minutes")
+        run.memory(tumbling(streamEv), "complete",
+          "checkpointLocation" -> run.dir.resolve("cp").toString)
+      }
+      run.stageEvents(d, "data/a.parquet")
       // producer starts writing b: in-progress name, outside the glob
-      java.nio.file.Files.copy(src, data.resolve("_b.parquet.inprogress"))
-      runOnce(s"st9_run1_$runId")
+      run.stageEvents(d, "data/_b.parquet.inprogress")
+      val run1 = runOnce()
       // producer commits b: atomic rename into the watched glob
       java.nio.file.Files.move(
         data.resolve("_b.parquet.inprogress"), data.resolve("b.parquet"),
         java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-      runOnce(s"st9_run2_$runId")
-      s.table(s"st9_run1_$runId").select(
-          col("window_start"), col("event_type"), col("n").as("n_committed"))
-        .join(
-          s.table(s"st9_run2_$runId").select(
-            col("window_start"), col("event_type"),
-            col("n").as("n_after_commit")),
-          Seq("window_start", "event_type"))
-        .localCheckpoint()
+      run.snapshot(runOnce(), run2 =>
+          s.table(run1.name).select(col("window_start"), col("event_type"),
+              col("n").as("n_committed"))
+            .join(run2.select(col("window_start"), col("event_type"),
+                col("n").as("n_after_commit")),
+              Seq("window_start", "event_type")))
         .orderBy("window_start", "event_type")
-    } finally {
-      s.catalog.dropTempView(s"st9_run1_$runId")
-      s.catalog.dropTempView(s"st9_run2_$runId")
-      org.apache.commons.io.FileUtils.deleteDirectory(root.toFile)
     }
-  }
 
   val st9Sql: String =
     """SELECT time_bucket(INTERVAL '5 minutes', ts) AS window_start,
@@ -288,71 +224,49 @@ object EventWindows {
     * txn version) — the parquet-directory form is the
     * filesystem-native instance.
     */
-  def st14ExactlyOnce(s: SparkSession, d: String): DataFrame =
-    CatchupConf.withBoundedStatePartitions(s) {
-    import org.apache.spark.sql.streaming.Trigger
-    val rawSchema = eventsRaw(s, d).schema
-    val root = java.nio.file.Files.createTempDirectory("graft_st14_")
-    val data = root.resolve("data"); java.nio.file.Files.createDirectory(data)
-    val sink = root.resolve("sink").toString
-    val commits = root.resolve("commits").toString
-    val attempts = root.resolve("attempts")
-    val failFlag = root.resolve("fail_once")
-    val cp = root.resolve("cp").toString
-    val hconf = s.sparkContext.hadoopConfiguration
-    val fs = new org.apache.hadoop.fs.Path(sink).getFileSystem(hconf)
-    fs.mkdirs(new org.apache.hadoop.fs.Path(commits))
+  def st14ExactlyOnce(caller: SparkSession, d: String): DataFrame =
+    StreamRun(caller, "st14") { run =>
+      val s = run.session
+      val rawSchema = eventsRaw(s, d).schema
+      val data = run.dir.resolve("data")
+      val sink = run.dir.resolve("sink").toString
+      val commits = run.dir.resolve("commits").toString
+      val attempts = run.ledger("attempts")
+      val failFlag = run.dir.resolve("fail_once")
+      val hconf = s.sparkContext.hadoopConfiguration
+      val fs = new org.apache.hadoop.fs.Path(sink).getFileSystem(hconf)
+      fs.mkdirs(new org.apache.hadoop.fs.Path(commits))
 
-    def marker(bid: Long) = new org.apache.hadoop.fs.Path(s"$commits/$bid.committed")
+      def marker(bid: Long) = new org.apache.hadoop.fs.Path(s"$commits/$bid.committed")
 
-    def writeBatch(bdf: DataFrame, bid: Long): Unit = {
-      if (fs.exists(marker(bid))) return // replayed AND committed: skip
-      java.nio.file.Files.write(attempts,
-        s"$bid\n".getBytes(java.nio.charset.StandardCharsets.UTF_8),
-        java.nio.file.StandardOpenOption.CREATE,
-        java.nio.file.StandardOpenOption.APPEND)
-      val dir = new org.apache.hadoop.fs.Path(s"$sink/batch_id=$bid")
-      fs.delete(dir, true) // orphaned output of a crashed attempt
-      bdf.write.mode("overwrite").parquet(dir.toString)
-      if (java.nio.file.Files.deleteIfExists(failFlag))
-        sys.error("st14: injected crash between batch write and commit marker")
-      val out = fs.create(marker(bid)); out.close()
-    }
+      def writeBatch(bdf: DataFrame, bid: Long): Unit = {
+        if (fs.exists(marker(bid))) return // replayed AND committed: skip
+        attempts.add(bid)
+        val dir = new org.apache.hadoop.fs.Path(s"$sink/batch_id=$bid")
+        fs.delete(dir, true) // orphaned output of a crashed attempt
+        bdf.write.mode("overwrite").parquet(dir.toString)
+        if (java.nio.file.Files.deleteIfExists(failFlag))
+          sys.error("st14: injected crash between batch write and commit marker")
+        val out = fs.create(marker(bid)); out.close()
+      }
 
-    def runOnce(): Unit = {
-      val streamEv = normalizeTs(s.readStream
-          .schema(rawSchema)
-          .option("maxFilesPerTrigger", "1")
-          .parquet(data.toString))
-        .select(col("ts"), col("event_type"), col("value"))
-      val q = streamEv.writeStream
-        .foreachBatch((bdf: DataFrame, bid: Long) => writeBatch(bdf, bid))
-        .option("checkpointLocation", cp)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      CatchupConf.awaitBounded(q, "st14")
-    }
+      def runOnce(): Unit = {
+        val streamEv = normalizeTs(s.readStream
+            .schema(rawSchema)
+            .option("maxFilesPerTrigger", "1")
+            .parquet(data.toString))
+          .select(col("ts"), col("event_type"), col("value"))
+        run.catchUp(streamEv.writeStream
+          .foreachBatch((bdf: DataFrame, bid: Long) => writeBatch(bdf, bid))
+          .option("checkpointLocation", run.dir.resolve("cp").toString))
+      }
 
-    try {
-      val src = java.nio.file.Paths.get(s"$d/events.parquet")
-      java.nio.file.Files.copy(src, data.resolve("a.parquet"))
+      run.stageEvents(d, "data/a.parquet")
       java.nio.file.Files.createFile(failFlag)
-      val crashed =
-        try { runOnce(); false }
-        catch {
-          case e: org.apache.spark.sql.streaming.StreamingQueryException =>
-            def chain(t: Throwable): Seq[String] =
-              if (t == null) Seq.empty
-              else Option(t.getMessage).toSeq ++ chain(t.getCause)
-            require(chain(e).exists(_.contains("injected crash")),
-              s"st14: run 1 failed for the wrong reason: ${e.getMessage}")
-            true
-        }
-      require(crashed, "st14: injected crash did not fire - harness lost its failure path")
-      java.nio.file.Files.copy(src, data.resolve("b.parquet"))
+      run.expectInjectedCrash(runOnce())
+      run.stageEvents(d, "data/b.parquet")
       runOnce()
-      val tries = new String(java.nio.file.Files.readAllBytes(attempts),
-        java.nio.charset.StandardCharsets.UTF_8).split("\n").filter(_.nonEmpty)
+      val tries = attempts.entries
       require(tries.count(_ == "0") == 2,
         s"st14: batch 0 write path ran ${tries.count(_ == "0")} times, expected 2 " +
           "(crashed attempt + committed replay)")
@@ -365,10 +279,7 @@ object EventWindows {
           dsum(col("value")).as("total_value"))
         .localCheckpoint()
         .orderBy("event_type")
-    } finally {
-      org.apache.commons.io.FileUtils.deleteDirectory(root.toFile)
     }
-  }
 
   val st14Sql: String =
     """SELECT event_type, 2 * count(*) AS n, CAST(2 AS BIGINT) AS n_batches,
@@ -396,44 +307,27 @@ object EventWindows {
     * inner joins need no watermark-state for the static side — state is
     * only the window aggregate, bounded as in st5.
     */
-  def st10StreamStaticEnrich(s: SparkSession, d: String): DataFrame =
-    CatchupConf.withBoundedStatePartitions(s) {
-    import org.apache.spark.sql.streaming.Trigger
-    val rawSchema = eventsRaw(s, d).schema
-    val dim = customer(s, d)
-      .select(col("c_custkey").as("user_id"),
-        col("c_mktsegment").as("segment"))
-    val dir = java.nio.file.Files.createTempDirectory("graft_st10_")
-    val sink = "st10_out_" +
-      java.util.UUID.randomUUID().toString.replace("-", "").take(12)
-    try {
-      java.nio.file.Files.copy(
-        java.nio.file.Paths.get(s"$d/events.parquet"),
-        dir.resolve("events.parquet"))
+  def st10StreamStaticEnrich(caller: SparkSession, d: String): DataFrame =
+    StreamRun(caller, "st10") { run =>
+      val s = run.session
+      val rawSchema = eventsRaw(s, d).schema
+      val dim = customer(s, d)
+        .select(col("c_custkey").as("user_id"),
+          col("c_mktsegment").as("segment"))
+      run.stageEvents(d)
       val enriched = normalizeTs(s.readStream
           .schema(rawSchema)
-          .parquet(dir.toString))
+          .parquet(run.dir.toString))
         .withWatermark("ts", "10 minutes")
         .join(broadcast(dim), "user_id")
-      val q = enriched
+      val agg = enriched
         .groupBy(window(col("ts"), "5 minutes").as("win"), col("segment"))
         .agg(count(lit(1)).as("n"), dsum(col("value")).as("total_value"))
         .select(col("win.start").as("window_start"), col("segment"),
           col("n"), col("total_value"))
-        .writeStream
-        .format("memory")
-        .queryName(sink)
-        .outputMode("complete")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      CatchupConf.awaitBounded(q, "st10")
-      s.table(sink).localCheckpoint()
+      run.snapshot(run.memory(agg, "complete"))
         .orderBy("window_start", "segment")
-    } finally {
-      s.catalog.dropTempView(sink)
-      org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)
     }
-  }
 
   val st10Sql: String =
     """SELECT time_bucket(INTERVAL '5 minutes', ts) AS window_start,
@@ -463,37 +357,21 @@ object EventWindows {
     * cumulative over all time by design (a windowed variant would
     * compose this groupBy with st1's event-time window).
     */
-  def st13StreamHistogram(s: SparkSession, d: String): DataFrame =
-    CatchupConf.withBoundedStatePartitions(s) {
-    import org.apache.spark.sql.streaming.Trigger
-    val rawSchema = eventsRaw(s, d).schema
-    val dir = java.nio.file.Files.createTempDirectory("graft_st13_")
-    val sink = "st13_out_" +
-      java.util.UUID.randomUUID().toString.replace("-", "").take(12)
-    try {
-      java.nio.file.Files.copy(
-        java.nio.file.Paths.get(s"$d/events.parquet"),
-        dir.resolve("events.parquet"))
+  def st13StreamHistogram(caller: SparkSession, d: String): DataFrame =
+    StreamRun(caller, "st13") { run =>
+      val s = run.session
+      val rawSchema = eventsRaw(s, d).schema
+      run.stageEvents(d)
       val binned = s.readStream
         .schema(rawSchema)
-        .parquet(dir.toString)
+        .parquet(run.dir.toString)
         .select(greatest(lit(0), least(lit(histBins - 1),
           floor(col("value") / lit(histRangeMax / histBins)).cast("int")))
           .as("bin"))
-      val q = binned.groupBy(col("bin")).agg(count(lit(1)).as("cnt"))
-        .writeStream
-        .format("memory")
-        .queryName(sink)
-        .outputMode("complete")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      CatchupConf.awaitBounded(q, "st13")
-      s.table(sink).localCheckpoint().orderBy("bin")
-    } finally {
-      s.catalog.dropTempView(sink)
-      org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)
+      run.snapshot(run.memory(
+          binned.groupBy(col("bin")).agg(count(lit(1)).as("cnt")), "complete"))
+        .orderBy("bin")
     }
-  }
 
   val st13Sql: String =
     s"""SELECT GREATEST(0, LEAST(${histBins - 1},
@@ -540,13 +418,9 @@ object EventWindows {
     * alarm sized in "events lost" must divide by the late rows' group
     * fan-in; the in-query `require` pins the group-unit contract.
     */
-  def st17LateDataDrop(s: SparkSession, d: String): DataFrame =
-    CatchupConf.withBoundedStatePartitions(s) {
-    import org.apache.spark.sql.streaming.Trigger
-    val dir = java.nio.file.Files.createTempDirectory("graft_st17_")
-    val sink = "st17_out_" +
-      java.util.UUID.randomUUID().toString.replace("-", "").take(12)
-    try {
+  def st17LateDataDrop(caller: SparkSession, d: String): DataFrame =
+    StreamRun(caller, "st17") { run =>
+      val s = run.session
       val ev = events(s, d).select(col("event_id"), col("ts"),
         col("event_type"), col("value"))
       val Array(minUs, maxUs) = ev.agg(min(unix_micros(col("ts"))),
@@ -557,11 +431,11 @@ object EventWindows {
 
       // one clustered staging job for all three arrival waves (was one
       // write job per wave — same files, same mtime order)
-      CatchupConf.stageTagged(ev,
+      run.stageTagged(ev,
         when(isAdvancer, lit("b_advance"))
           .when(isStraggler, lit("c_stragglers"))
           .otherwise(lit("a_ontime")),
-        dir, Seq("a_ontime", "b_advance", "c_stragglers"))
+        Seq("a_ontime", "b_advance", "c_stragglers"), run.dir)
       // straggler row AND group counts in ONE aggregate action: the
       // drop counter's TRUE unit (measured, see scaladoc) is late
       // GROUPS — the watermark filter sits behind the pre-shuffle
@@ -576,13 +450,10 @@ object EventWindows {
 
       val stream = s.readStream.schema(ev.schema)
         .option("maxFilesPerTrigger", "1")
-        .parquet(dir.toString)
+        .parquet(run.dir.toString)
         .withWatermark("ts", "10 minutes")
-      val q = tumbling(stream.select(col("ts"), col("event_type"),
-          col("value")))
-        .writeStream.format("memory").queryName(sink)
-        .outputMode("append").trigger(Trigger.AvailableNow()).start()
-      CatchupConf.awaitBounded(q, "st17")
+      val q = run.memory(tumbling(stream.select(col("ts"), col("event_type"),
+          col("value"))), "append")
       val dropped = q.recentProgress
         .flatMap(p => p.stateOperators.map(_.numRowsDroppedByWatermark))
         .sum
@@ -597,14 +468,8 @@ object EventWindows {
         s"st17: engine dropped $dropped late partial-agg rows, outside " +
           s"the contract [$nStragglerGroups late groups, $nStragglers " +
           "late input rows] - the loss accounting is the contract")
-      s.table(sink)
-        .localCheckpoint()
-        .orderBy("window_start", "event_type")
-    } finally {
-      s.catalog.dropTempView(sink)
-      org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)
+      run.snapshot(q).orderBy("window_start", "event_type")
     }
-  }
 
   /** Windows sealed by the final watermark (max ts − 10 min), aggregated
     * without the first-second stragglers the stream provably dropped.

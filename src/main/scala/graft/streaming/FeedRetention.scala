@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 import graft.Tables._
 import graft.queries.Warehouse
 
@@ -57,16 +56,14 @@ object FeedRetention {
 
   private val cols = Seq("doc_id", "lang", "source")
 
-  def st28FeedAcrossVacuum(s: SparkSession, d: String): DataFrame =
-    CatchupConf.withBoundedStatePartitions(s) {
-    val root = java.nio.file.Files.createTempDirectory("graft_st28_")
-    val table = root.resolve("table")
-    java.nio.file.Files.createDirectory(table)
-    val base = table.toString
-    val feedDir = root.resolve("feed").toString
-    val attempts = root.resolve("attempts")
-    val cp = root.resolve("cp").toString
-    try {
+  def st28FeedAcrossVacuum(caller: SparkSession, d: String): DataFrame =
+    StreamRun(caller, "st28") { run =>
+      val s = run.session
+      val table = run.dir.resolve("table")
+      java.nio.file.Files.createDirectory(table)
+      val base = table.toString
+      val feedDir = run.dir.resolve("feed").toString
+      val attempts = run.ledger("attempts")
       val docs = documents(s, d).select(col("doc_id"), col("lang"),
         col("source"))
       def stamp(v: Int): Unit =
@@ -81,19 +78,14 @@ object FeedRetention {
       require(Warehouse.o22Delete(s, base, col("doc_id") % 9 === 4, "a") == 2,
         "st28: v2 delete landed at the wrong version")
       stamp(2)
-      def fedSet(): Set[Int] =
-        if (java.nio.file.Files.exists(attempts))
-          new String(java.nio.file.Files.readAllBytes(attempts),
-            java.nio.charset.StandardCharsets.UTF_8)
-            .split("\n").filter(_.nonEmpty).map(_.toInt).toSet
-        else Set.empty
+      def fedSet(): Set[Int] = attempts.entries.map(_.toInt).toSet
       def runOnce(): Unit = {
         val manifests = s.readStream
           .option("pathGlobFilter", "manifest-*")
           .option("maxFilesPerTrigger", "1")
           .text(base)
           .select(col("_metadata.file_path").as("path"))
-        val q = manifests.writeStream
+        run.catchUp(manifests.writeStream
           .foreachBatch { (bdf: DataFrame, _: Long) =>
             val vs = bdf.collect().map(_.getString(0)
               .replaceAll(".*manifest-", "").toInt).distinct.sorted
@@ -104,17 +96,11 @@ object FeedRetention {
               // feed FIRST (idempotent per-version overwrite), ledger
               // SECOND — the st26/st27 crash-window discipline
               DvFeedStream.feedVersion(s, base, v, feedDir)
-              java.nio.file.Files.write(attempts,
-                s"$v\n".getBytes(java.nio.charset.StandardCharsets.UTF_8),
-                java.nio.file.StandardOpenOption.CREATE,
-                java.nio.file.StandardOpenOption.APPEND)
+              attempts.add(v)
             }
             ()
           }
-          .option("checkpointLocation", cp)
-          .trigger(Trigger.AvailableNow())
-          .start()
-        CatchupConf.awaitBounded(q, "st28")
+          .option("checkpointLocation", run.dir.resolve("cp").toString))
       }
       runOnce()
       require(fedSet() == Set(1, 2),
@@ -180,8 +166,7 @@ object FeedRetention {
       feed.select(col("version"), col("doc_id"), col("lang"),
           col("source"), col("change_type"))
         .orderBy("version", "doc_id")
-    } finally org.apache.commons.io.FileUtils.deleteDirectory(root.toFile)
-  }
+    }
 
   val st28Sql: String =
     """SELECT * FROM (

@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import graft.Tables._
 
 /** ST20 — streaming funnel detection (the CEP/sequence-matching
@@ -108,37 +108,23 @@ object FunnelDetect {
   /** The registered st20 query: events staged and re-read as a real
     * AvailableNow stream, completed funnels hash-compared against the
     * two-stage windowed-max-join batch formulation. */
-  def st20FunnelDetect(s: SparkSession, d: String): DataFrame =
-    CatchupConf.withBoundedStatePartitions(s) {
+  def st20FunnelDetect(caller: SparkSession, d: String): DataFrame =
+    StreamRun(caller, "st20") { run =>
+      val s = run.session
       import s.implicits._
       val rawSchema = eventsRaw(s, d).schema
-      val dir = java.nio.file.Files.createTempDirectory("graft_st20_")
-      val sink = "st20_out_" +
-        java.util.UUID.randomUUID().toString.replace("-", "").take(12)
-      try {
-        java.nio.file.Files.copy(
-          java.nio.file.Paths.get(s"$d/events.parquet"),
-          dir.resolve("events.parquet"))
-        val raw = s.readStream.schema(rawSchema).parquet(dir.toString)
-        val evs = normalizeTs(raw)
-          .withWatermark("ts", "10 minutes")
-          .select(col("event_id"), col("user_id"), col("ts"),
-            col("event_type"))
-          .as[EvF]
-        val q = funnelStream(evs)
-          .writeStream.format("memory").queryName(sink)
-          .outputMode("update").trigger(Trigger.AvailableNow()).start()
-        CatchupConf.awaitBounded(q, "st20")
-        s.table(sink)
+      run.stageEvents(d)
+      val raw = s.readStream.schema(rawSchema).parquet(run.dir.toString)
+      val evs = normalizeTs(raw)
+        .withWatermark("ts", "10 minutes")
+        .select(col("event_id"), col("user_id"), col("ts"),
+          col("event_type"))
+        .as[EvF]
+      run.snapshot(run.memory(funnelStream(evs).toDF(), "update"), _
           .select(col("user_id"), col("view_us"), col("click_us"),
             col("purchase_us"),
-            (col("purchase_us") - col("view_us")).as("funnel_us"))
-          .localCheckpoint()
-          .orderBy("user_id", "purchase_us")
-      } finally {
-        s.sql(s"DROP VIEW IF EXISTS $sink")
-        org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)
-      }
+            (col("purchase_us") - col("view_us")).as("funnel_us")))
+        .orderBy("user_id", "purchase_us")
     }
 
   val st20Sql: String =

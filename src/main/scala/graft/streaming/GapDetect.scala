@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import graft.Tables._
 
 /** ST19 — streaming silence/gap detection: per user, surface every
@@ -83,36 +83,22 @@ object GapDetect {
   /** The registered st19 query: events staged and re-read as a real
     * stream (AvailableNow), closed gaps hash-compared against the
     * batch lag formulation. */
-  def st19GapDetect(s: SparkSession, d: String): DataFrame =
-    CatchupConf.withBoundedStatePartitions(s) {
+  def st19GapDetect(caller: SparkSession, d: String): DataFrame =
+    StreamRun(caller, "st19") { run =>
+      val s = run.session
       import s.implicits._
       val rawSchema = eventsRaw(s, d).schema
-      val dir = java.nio.file.Files.createTempDirectory("graft_st19_")
-      val sink = "st19_out_" +
-        java.util.UUID.randomUUID().toString.replace("-", "").take(12)
-      try {
-        java.nio.file.Files.copy(
-          java.nio.file.Paths.get(s"$d/events.parquet"),
-          dir.resolve("events.parquet"))
-        val raw = s.readStream.schema(rawSchema).parquet(dir.toString)
-        val evs = normalizeTs(raw)
-          .withWatermark("ts", "10 minutes")
-          .select(col("event_id"), col("user_id"), col("ts"), col("value"))
-          .as[Sessionize.EvT]
-        val q = gapStream(evs)
-          .writeStream.format("memory").queryName(sink)
-          .outputMode("update").trigger(Trigger.AvailableNow()).start()
-        CatchupConf.awaitBounded(q, "st19")
-        s.table(sink)
+      run.stageEvents(d)
+      val raw = s.readStream.schema(rawSchema).parquet(run.dir.toString)
+      val evs = normalizeTs(raw)
+        .withWatermark("ts", "10 minutes")
+        .select(col("event_id"), col("user_id"), col("ts"), col("value"))
+        .as[Sessionize.EvT]
+      run.snapshot(run.memory(gapStream(evs).toDF(), "update"), _
           .filter(!col("open"))
           .select(col("user_id"), col("gap_start_us"), col("gap_end_us"),
-            (col("gap_end_us") - col("gap_start_us")).as("gap_us"))
-          .localCheckpoint()
-          .orderBy("user_id", "gap_start_us")
-      } finally {
-        s.sql(s"DROP VIEW IF EXISTS $sink")
-        org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)
-      }
+            (col("gap_end_us") - col("gap_start_us")).as("gap_us")))
+        .orderBy("user_id", "gap_start_us")
     }
 
   val st19Sql: String =

@@ -105,44 +105,29 @@ object IntervalJoin {
     * result is the complete, deterministic pair set regardless of how
     * the trigger slices batches.
     */
-  def st4sStreamIntervalJoin(s: SparkSession, d: String): DataFrame =
+  def st4sStreamIntervalJoin(caller: SparkSession, d: String): DataFrame =
     // the stream-stream join is the heaviest state holder (FOUR stores
     // per partition: keyWithIndex + keyToNumValues, each side) — the
-    // bounded-catch-up partition scope cut this row 2.5× (see
-    // [[CatchupConf]])
-    CatchupConf.withBoundedStatePartitions(s) {
-    import org.apache.spark.sql.streaming.Trigger
-    val rawSchema = eventsRaw(s, d).schema
-    val dir = java.nio.file.Files.createTempDirectory("graft_st4s_")
-    val sink = "st4s_out_" +
-      java.util.UUID.randomUUID().toString.replace("-", "").take(12)
-    try {
-      java.nio.file.Files.copy(
-        java.nio.file.Paths.get(s"$d/events.parquet"),
-        dir.resolve("events.parquet"))
+    // bounded-catch-up state partitions cut this row 2.5× (see
+    // [[StreamRun.statePartitions]])
+    StreamRun(caller, "st4s") { run =>
+      val s = run.session
+      val rawSchema = eventsRaw(s, d).schema
+      run.stageEvents(d)
       // two independent sources over the same staged directory — at
       // scale these are two topics/directories; the join state is what
       // matters, not the scan
       def stagedEvents(): DataFrame = normalizeTs(s.readStream
         .schema(rawSchema)
-        .parquet(dir.toString))
+        .parquet(run.dir.toString))
       val clicks = clicksOf(stagedEvents())
         .withWatermark("click_ts", s"$intervalHours hours")
       val buys = buysOf(stagedEvents())
         .withWatermark("buy_ts", s"$intervalHours hours")
-      val q = streamJoin(clicks, buys)
-        .writeStream.format("memory").queryName(sink)
-        .outputMode("append").trigger(Trigger.AvailableNow()).start()
-      CatchupConf.awaitBounded(q, "st4s")
-      s.table(sink)
-        .select(col("click_id"), col("buy_id"), col("user_id"), col("lag_us"))
-        .localCheckpoint()
+      run.snapshot(run.memory(streamJoin(clicks, buys), "append"),
+          _.select(col("click_id"), col("buy_id"), col("user_id"), col("lag_us")))
         .orderBy("click_id", "buy_id")
-    } finally {
-      s.catalog.dropTempView(sink)
-      org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)
     }
-  }
 
   /** ST11 — the stream-stream LEFT OUTER interval join, run for real:
     * the abandonment query (clicks with NO purchase in the following
@@ -163,63 +148,32 @@ object IntervalJoin {
     * differ across engines) and the oracle replays the exact batch
     * left join.
     */
-  def st11sStreamOuterJoin(s: SparkSession, d: String): DataFrame =
-    CatchupConf.withBoundedStatePartitions(s) {
-    import org.apache.spark.sql.streaming.Trigger
-    val raw = eventsRaw(s, d)
-    val rawSchema = raw.schema
-    val dir = java.nio.file.Files.createTempDirectory("graft_st11_")
-    val sink = "st11_out_" +
-      java.util.UUID.randomUUID().toString.replace("-", "").take(12)
-    try {
-      val eventsFile = dir.resolve("a_events.parquet")
-      java.nio.file.Files.copy(
-        java.nio.file.Paths.get(s"$d/events.parquet"), eventsFile)
+  def st11sStreamOuterJoin(caller: SparkSession, d: String): DataFrame =
+    StreamRun(caller, "st11") { run =>
+      val s = run.session
       // sentinel pair 100 days past the corpus: joins only itself
-      val maxUs = SentinelFile.maxTsMicrosFromFooter(
-        s"$d/events.parquet", rawSchema)
-        .getOrElse(raw.agg(max(tsMicros(raw))).head().getLong(0))
-      val sentinelTs = tsRawValue(rawSchema, maxUs + 100L * 24 * 3600 * 1000000L)
-      val sentinelFile = dir.resolve("b_sentinel.parquet")
-      SentinelFile.write(rawSchema, Seq(
-          org.apache.spark.sql.Row(-101L, sentinelTs, -1L, "click", 0.0, ""),
-          org.apache.spark.sql.Row(-102L, sentinelTs, -1L, "purchase", 0.0, "")),
-        sentinelFile)
-      // the sentinel must arrive in a LATER micro-batch: a real click
-      // arriving after the watermark passed it would be dropped as late
-      java.nio.file.Files.setLastModifiedTime(sentinelFile,
-        java.nio.file.attribute.FileTime.fromMillis(
-          java.nio.file.Files.getLastModifiedTime(eventsFile).toMillis + 60000))
-
+      val rawSchema = run.stageWithSentinel(d, "click", "purchase")
       def staged(): DataFrame = normalizeTs(s.readStream
         .schema(rawSchema)
         .option("maxFilesPerTrigger", "1")
-        .parquet(dir.toString))
+        .parquet(run.dir.toString))
       val clicks = clicksOf(staged())
         .withWatermark("click_ts", s"$intervalHours hours")
       val buys = buysOf(staged())
         .withWatermark("buy_ts", s"$intervalHours hours")
-      val q = clicks.join(buys,
+      val q = run.memory(clicks.join(buys,
           col("user_id") === col("buy_user_id") &&
             withinInterval(col("click_ts"), col("buy_ts")),
-          "left_outer")
-        .writeStream.format("memory").queryName(sink)
-        .outputMode("append").trigger(Trigger.AvailableNow()).start()
-      CatchupConf.awaitBounded(q, "st11")
-      s.table(sink)
-        .filter(col("user_id") =!= -1L) // drop the sentinel's own rows
-        .select(col("click_id"),
-          coalesce(col("buy_id"), lit(-1L)).as("buy_id"),
-          col("user_id"),
-          coalesce(unix_micros(col("buy_ts")) - unix_micros(col("click_ts")),
-            lit(-1L)).as("lag_us"))
-        .localCheckpoint()
+          "left_outer"), "append")
+      run.snapshot(q, _
+          .filter(col("user_id") =!= -1L) // drop the sentinel's own rows
+          .select(col("click_id"),
+            coalesce(col("buy_id"), lit(-1L)).as("buy_id"),
+            col("user_id"),
+            coalesce(unix_micros(col("buy_ts")) - unix_micros(col("click_ts")),
+              lit(-1L)).as("lag_us")))
         .orderBy("click_id", "buy_id")
-    } finally {
-      s.catalog.dropTempView(sink)
-      org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)
     }
-  }
 
   /** ST12 — the FULL OUTER stream-stream interval join, completing the
     * outer family: both the abandonment rows (clicks without purchase,
@@ -229,61 +183,32 @@ object IntervalJoin {
     * state must now drain, and the oracle replays the exact batch FULL
     * join. Unmatched slots surface as −1 (cross-engine null rules).
     */
-  def st12sStreamFullOuterJoin(s: SparkSession, d: String): DataFrame =
-    CatchupConf.withBoundedStatePartitions(s) {
-    import org.apache.spark.sql.streaming.Trigger
-    val raw = eventsRaw(s, d)
-    val rawSchema = raw.schema
-    val dir = java.nio.file.Files.createTempDirectory("graft_st12_")
-    val sink = "st12_out_" +
-      java.util.UUID.randomUUID().toString.replace("-", "").take(12)
-    try {
-      val eventsFile = dir.resolve("a_events.parquet")
-      java.nio.file.Files.copy(
-        java.nio.file.Paths.get(s"$d/events.parquet"), eventsFile)
-      val maxUs = SentinelFile.maxTsMicrosFromFooter(
-        s"$d/events.parquet", rawSchema)
-        .getOrElse(raw.agg(max(tsMicros(raw))).head().getLong(0))
-      val sentinelTs = tsRawValue(rawSchema, maxUs + 100L * 24 * 3600 * 1000000L)
-      val sentinelFile = dir.resolve("b_sentinel.parquet")
-      SentinelFile.write(rawSchema, Seq(
-          org.apache.spark.sql.Row(-101L, sentinelTs, -1L, "click", 0.0, ""),
-          org.apache.spark.sql.Row(-102L, sentinelTs, -1L, "purchase", 0.0, "")),
-        sentinelFile)
-      java.nio.file.Files.setLastModifiedTime(sentinelFile,
-        java.nio.file.attribute.FileTime.fromMillis(
-          java.nio.file.Files.getLastModifiedTime(eventsFile).toMillis + 60000))
-
+  def st12sStreamFullOuterJoin(caller: SparkSession, d: String): DataFrame =
+    StreamRun(caller, "st12") { run =>
+      val s = run.session
+      val rawSchema = run.stageWithSentinel(d, "click", "purchase")
       def staged(): DataFrame = normalizeTs(s.readStream
         .schema(rawSchema)
         .option("maxFilesPerTrigger", "1")
-        .parquet(dir.toString))
+        .parquet(run.dir.toString))
       val clicks = clicksOf(staged())
         .withWatermark("click_ts", s"$intervalHours hours")
       val buys = buysOf(staged())
         .withWatermark("buy_ts", s"$intervalHours hours")
-      val q = clicks.join(buys,
+      val q = run.memory(clicks.join(buys,
           col("user_id") === col("buy_user_id") &&
             withinInterval(col("click_ts"), col("buy_ts")),
-          "full_outer")
-        .writeStream.format("memory").queryName(sink)
-        .outputMode("append").trigger(Trigger.AvailableNow()).start()
-      CatchupConf.awaitBounded(q, "st12")
-      s.table(sink)
-        // drop the sentinel pair's own rows (either side)
-        .filter(coalesce(col("user_id"), col("buy_user_id")) =!= -1L)
-        .select(coalesce(col("click_id"), lit(-1L)).as("click_id"),
-          coalesce(col("buy_id"), lit(-1L)).as("buy_id"),
-          coalesce(col("user_id"), col("buy_user_id")).as("user_id"),
-          coalesce(unix_micros(col("buy_ts")) - unix_micros(col("click_ts")),
-            lit(-1L)).as("lag_us"))
-        .localCheckpoint()
+          "full_outer"), "append")
+      run.snapshot(q, _
+          // drop the sentinel pair's own rows (either side)
+          .filter(coalesce(col("user_id"), col("buy_user_id")) =!= -1L)
+          .select(coalesce(col("click_id"), lit(-1L)).as("click_id"),
+            coalesce(col("buy_id"), lit(-1L)).as("buy_id"),
+            coalesce(col("user_id"), col("buy_user_id")).as("user_id"),
+            coalesce(unix_micros(col("buy_ts")) - unix_micros(col("click_ts")),
+              lit(-1L)).as("lag_us")))
         .orderBy("click_id", "buy_id", "user_id")
-    } finally {
-      s.catalog.dropTempView(sink)
-      org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)
     }
-  }
 
   val st12Sql: String =
     s"""WITH c AS (
@@ -436,38 +361,19 @@ object IntervalJoin {
     * batching-independent and the oracle replays the exact
     * first-purchase-per-click relation.
     */
-  def st24StreamFirstTouch(s: SparkSession, d: String): DataFrame =
-    CatchupConf.withBoundedStatePartitions(s) {
-    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
-    import s.implicits._
-    val raw = eventsRaw(s, d)
-    val rawSchema = raw.schema
-    val dir = java.nio.file.Files.createTempDirectory("graft_st24_")
-    val sink = "st24_out_" +
-      java.util.UUID.randomUUID().toString.replace("-", "").take(12)
-    try {
-      val eventsFile = dir.resolve("a_events.parquet")
-      java.nio.file.Files.copy(
-        java.nio.file.Paths.get(s"$d/events.parquet"), eventsFile)
+  def st24StreamFirstTouch(caller: SparkSession, d: String): DataFrame =
+    StreamRun(caller, "st24") { run =>
+      import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+      val s = run.session
+      import s.implicits._
       // sentinel click 100 days past the corpus (user −1): drags the
       // watermark past every real click's seal point; its own click
       // never resolves and is filtered below
-      val maxUs = SentinelFile.maxTsMicrosFromFooter(
-        s"$d/events.parquet", rawSchema)
-        .getOrElse(raw.agg(max(tsMicros(raw))).head().getLong(0))
-      val sentinelTs = tsRawValue(rawSchema, maxUs + 100L * 24 * 3600 * 1000000L)
-      val sentinelFile = dir.resolve("b_sentinel.parquet")
-      SentinelFile.write(rawSchema, Seq(
-          org.apache.spark.sql.Row(-101L, sentinelTs, -1L, "click", 0.0, "")),
-        sentinelFile)
-      java.nio.file.Files.setLastModifiedTime(sentinelFile,
-        java.nio.file.attribute.FileTime.fromMillis(
-          java.nio.file.Files.getLastModifiedTime(eventsFile).toMillis + 60000))
-
+      val rawSchema = run.stageWithSentinel(d, "click")
       val staged = normalizeTs(s.readStream
         .schema(rawSchema)
         .option("maxFilesPerTrigger", "1")
-        .parquet(dir.toString))
+        .parquet(run.dir.toString))
       val evs = staged
         .filter(col("event_type").isin("click", "purchase"))
         .select(col("event_id"), col("user_id"), col("ts"),
@@ -492,20 +398,11 @@ object IntervalJoin {
             }
             out.iterator
         }
-      val q = attributed
-        .writeStream.format("memory").queryName(sink)
-        .outputMode("append").trigger(Trigger.AvailableNow()).start()
-      CatchupConf.awaitBounded(q, "st24")
-      s.table(sink)
-        .filter(col("user_id") >= 0) // the sentinel click never resolves
-        .select(col("click_id"), col("buy_id"), col("user_id"), col("lag_us"))
-        .localCheckpoint()
+      run.snapshot(run.memory(attributed.toDF(), "append"), _
+          .filter(col("user_id") >= 0) // the sentinel click never resolves
+          .select(col("click_id"), col("buy_id"), col("user_id"), col("lag_us")))
         .orderBy("click_id")
-    } finally {
-      s.catalog.dropTempView(sink)
-      org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)
     }
-  }
 
   /** ST24's batch twin (spec parity + scale-headroom counterpart): the
     * st4 binned equi-join capped to first-touch by a per-click min —

@@ -225,43 +225,30 @@ object Sessionize {
     * is exactly one micro-batch, so the collapse is 1:1 and the output
     * deterministic.
     */
-  def st7StreamSessionize(s: SparkSession, d: String): DataFrame =
-    CatchupConf.withBoundedStatePartitions(s) {
-    import org.apache.spark.sql.streaming.Trigger
-    import s.implicits._
-    val rawSchema = eventsRaw(s, d).schema
-    val dir = java.nio.file.Files.createTempDirectory("graft_st7_")
-    val sink = "st7_out_" +
-      java.util.UUID.randomUUID().toString.replace("-", "").take(12)
-    try {
-      java.nio.file.Files.copy(
-        java.nio.file.Paths.get(s"$d/events.parquet"),
-        dir.resolve("events.parquet"))
+  def st7StreamSessionize(caller: SparkSession, d: String): DataFrame =
+    StreamRun(caller, "st7") { run =>
+      val s = run.session
+      import s.implicits._
+      val rawSchema = eventsRaw(s, d).schema
+      run.stageEvents(d)
       val rawStream = s.readStream
         .schema(rawSchema)
-        .parquet(dir.toString)
+        .parquet(run.dir.toString)
       val streamEvs = rawStream
         .select(col("event_id"), col("user_id"),
           tsMicros(rawStream).as("tsMicros"), col("value"))
         .as[Ev]
-      val q = sessionizeStream(streamEvs, idleTimeout = None)
-        .writeStream.format("memory").queryName(sink)
-        .outputMode("update").trigger(Trigger.AvailableNow()).start()
-      CatchupConf.awaitBounded(q, "st7")
-      s.table(sink)
-        .groupBy(col("user_id"), col("session_start"))
-        .agg(max(struct(col("session_end"), col("n_events"))).as("s"))
-        .select(col("user_id"),
-          col("session_start").as("session_start_us"),
-          col("s.session_end").as("session_end_us"),
-          col("s.n_events").as("n_events"))
-        .localCheckpoint()
+      val q = run.memory(sessionizeStream(streamEvs, idleTimeout = None).toDF(),
+        "update")
+      run.snapshot(q, _
+          .groupBy(col("user_id"), col("session_start"))
+          .agg(max(struct(col("session_end"), col("n_events"))).as("s"))
+          .select(col("user_id"),
+            col("session_start").as("session_start_us"),
+            col("s.session_end").as("session_end_us"),
+            col("s.n_events").as("n_events")))
         .orderBy("user_id", "session_start_us")
-    } finally {
-      s.catalog.dropTempView(sink)
-      org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)
     }
-  }
 
   val st7Sql: String =
     """SELECT user_id, epoch_us(min(ts)) AS session_start_us,
@@ -317,58 +304,30 @@ object Sessionize {
         col("user_id"))
       .agg(count(lit(1)).as("n_events"))
 
-  def st15SessionWindow(s: SparkSession, d: String): DataFrame =
-    CatchupConf.withBoundedStatePartitions(s) {
-    import org.apache.spark.sql.streaming.Trigger
-    val raw = eventsRaw(s, d)
-    val rawSchema = raw.schema
-    val dir = java.nio.file.Files.createTempDirectory("graft_st15_")
-    val sink = "st15_out_" +
-      java.util.UUID.randomUUID().toString.replace("-", "").take(12)
-    try {
-      val eventsFile = dir.resolve("a_events.parquet")
-      java.nio.file.Files.copy(
-        java.nio.file.Paths.get(s"$d/events.parquet"), eventsFile)
-      val maxUs = SentinelFile.maxTsMicrosFromFooter(
-        s"$d/events.parquet", rawSchema)
-        .getOrElse(raw.agg(max(tsMicros(raw))).head().getLong(0))
-      val sentinelTs = tsRawValue(rawSchema, maxUs + 100L * 24 * 3600 * 1000000L)
-      val sentinelFile = dir.resolve("b_sentinel.parquet")
-      SentinelFile.write(rawSchema, Seq(
-          org.apache.spark.sql.Row(-101L, sentinelTs, -1L, "click", 0.0, "")),
-        sentinelFile)
-      java.nio.file.Files.setLastModifiedTime(sentinelFile,
-        java.nio.file.attribute.FileTime.fromMillis(
-          java.nio.file.Files.getLastModifiedTime(eventsFile).toMillis + 60000))
-
+  def st15SessionWindow(caller: SparkSession, d: String): DataFrame =
+    StreamRun(caller, "st15") { run =>
+      val s = run.session
+      val rawSchema = run.stageWithSentinel(d, "click")
       val streamEv = normalizeTs(s.readStream
           .schema(rawSchema)
           .option("maxFilesPerTrigger", "1")
-          .parquet(dir.toString))
+          .parquet(run.dir.toString))
         .withWatermark("ts", s"$gapMinutes minutes")
-      val q = streamEv
+      val q = run.memory(streamEv
         .groupBy(session_window(col("ts"), s"$gapMinutes minutes"),
           col("user_id"))
-        .agg(count(lit(1)).as("n_events"))
-        .writeStream.format("memory").queryName(sink)
-        .outputMode("append").trigger(Trigger.AvailableNow()).start()
-      CatchupConf.awaitBounded(q, "st15")
-      s.table(sink)
-        .filter(col("user_id") >= 0) // drop the sentinel's open session
-        .select(col("user_id"),
-          unix_micros(col("session_window.start")).as("session_start_us"),
-          // session_window.end = last event + gap; surface the last
-          // event time so the oracle compares max(ts) directly
-          (unix_micros(col("session_window.end")) -
-            gapMinutes * 60000000L).as("session_end_us"),
-          col("n_events"))
-        .localCheckpoint()
+        .agg(count(lit(1)).as("n_events")), "append")
+      run.snapshot(q, _
+          .filter(col("user_id") >= 0) // drop the sentinel's open session
+          .select(col("user_id"),
+            unix_micros(col("session_window.start")).as("session_start_us"),
+            // session_window.end = last event + gap; surface the last
+            // event time so the oracle compares max(ts) directly
+            (unix_micros(col("session_window.end")) -
+              gapMinutes * 60000000L).as("session_end_us"),
+            col("n_events")))
         .orderBy("user_id", "session_start_us")
-    } finally {
-      s.catalog.dropTempView(sink)
-      org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)
     }
-  }
 
   val st15Sql: String = st7Sql
 

@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
 /** ST21 — streaming benchmark decontamination: c11's exact
   * [[graft.queries.Curation.C11K]]-gram collision gate executed as a
@@ -37,48 +36,44 @@ import org.apache.spark.sql.streaming.Trigger
   */
 object StreamDecontam {
 
-  def st21StreamDecontam(s: SparkSession, d: String): DataFrame =
-    CatchupConf.withBoundedStatePartitions(s) {
-    import graft.queries.Curation
-    // materialized once: the quote-injected corpus (a union with two
-    // joins) otherwise derives twice — once under the bench-gram build,
-    // once under the train staging write
-    val corpus = Curation.c11Corpus(
-      graft.Tables.documents(s, d).select("doc_id", "text"))
-      .localCheckpoint()
-    val isBench = col("doc_id") % 25 === 0 && col("doc_id") < 1000000L
-    // the fixed eval side: distinct bench grams, built once up front
-    val benchGrams = Curation.c11GramsOf(corpus.filter(isBench))
-      .select("gram").distinct().localCheckpoint()
-    val train = corpus.filter(!isBench)
+  def st21StreamDecontam(caller: SparkSession, d: String): DataFrame =
+    StreamRun(caller, "st21") { run =>
+      import graft.queries.Curation
+      val s = run.session
+      // materialized once: the quote-injected corpus (a union with two
+      // joins) otherwise derives twice — once under the bench-gram build,
+      // once under the train staging write
+      val corpus = Curation.c11Corpus(
+        graft.Tables.documents(s, d).select("doc_id", "text"))
+        .localCheckpoint()
+      val isBench = col("doc_id") % 25 === 0 && col("doc_id") < 1000000L
+      // the fixed eval side: distinct bench grams, built once up front
+      val benchGrams = Curation.c11GramsOf(corpus.filter(isBench))
+        .select("gram").distinct().localCheckpoint()
+      val train = corpus.filter(!isBench)
 
-    val dir = java.nio.file.Files.createTempDirectory("graft_st21_")
-    val inDir = dir.resolve("in")
-    java.nio.file.Files.createDirectories(inDir)
-    val sinkDir = dir.resolve("flagged").toString
-    try {
+      val inDir = run.dir.resolve("in")
+      java.nio.file.Files.createDirectories(inDir)
+      val sinkDir = run.dir.resolve("flagged").toString
       // two mtime-ordered arrival waves in ONE clustered staging job;
       // the split is id-parity so both waves carry planted contaminated
       // docs
-      CatchupConf.stageTagged(train,
+      run.stageTagged(train,
         when(col("doc_id") % 2 === 0, lit("a_even")).otherwise(lit("b_odd")),
-        inDir, Seq("a_even", "b_odd"))
+        Seq("a_even", "b_odd"), inDir)
 
       val stream = s.readStream.schema(train.schema)
         .option("maxFilesPerTrigger", "1")
         .parquet(inDir.toString)
-      val q = stream.writeStream
+      val q = run.catchUp(stream.writeStream
         .foreachBatch { (batch: DataFrame, _: Long) =>
           gateBatch(s, benchGrams, sinkDir, batch)
-        }
-        .trigger(Trigger.AvailableNow()).start()
-      CatchupConf.awaitBounded(q, "st21")
+        })
       require(q.recentProgress.count(_.numInputRows > 0) >= 2,
         "st21: the staged waves collapsed into one micro-batch — the " +
           "cross-batch claim would be untested")
       s.read.parquet(sinkDir).localCheckpoint().orderBy("train_doc")
-    } finally org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)
-  }
+    }
 
   /** The foreachBatch body, factored for `StreamDecontamSpec`: explode
     * the batch's grams map-side, count collisions against the broadcast

@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
 /** Streaming exact dedup — the D1 content-hash dedup as a crawl-stream
   * operator, registered under the oracle with a REAL streaming
@@ -30,18 +29,15 @@ import org.apache.spark.sql.streaming.Trigger
   */
 object StreamDedup {
 
-  def st6StreamDedup(s: SparkSession, d: String): DataFrame =
-    CatchupConf.withBoundedStatePartitions(s) {
-    val injected = graft.Tables.documents(s, d).select("doc_id", "text")
-      .unionByName(
-        graft.Tables.documents(s, d).select("doc_id", "text")
-          .filter(col("doc_id") % 20 === 0)
-          .withColumn("doc_id", col("doc_id") + lit(1000000000L)))
-    val dir = java.nio.file.Files.createTempDirectory("graft_st6_")
-    val stage = dir.resolve("stage").toString
-    val sink = "st6_out_" +
-      java.util.UUID.randomUUID().toString.replace("-", "").take(12)
-    try {
+  def st6StreamDedup(caller: SparkSession, d: String): DataFrame =
+    StreamRun(caller, "st6") { run =>
+      val s = run.session
+      val injected = graft.Tables.documents(s, d).select("doc_id", "text")
+        .unionByName(
+          graft.Tables.documents(s, d).select("doc_id", "text")
+            .filter(col("doc_id") % 20 === 0)
+            .withColumn("doc_id", col("doc_id") + lit(1000000000L)))
+      val stage = run.dir.resolve("stage").toString
       // ONE staged file -> one micro-batch (see determinism note above)
       injected.coalesce(1).write.parquet(stage)
       val stream = s.readStream
@@ -55,19 +51,8 @@ object StreamDedup {
         .withWatermark("ts", "1 hour")
         .dropDuplicatesWithinWatermark("text_hash")
         .select(col("text_hash"))
-      val q = stream.writeStream
-        .format("memory")
-        .queryName(sink)
-        .outputMode("append")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      CatchupConf.awaitBounded(q, "st6")
-      s.table(sink).localCheckpoint().orderBy("text_hash")
-    } finally {
-      s.catalog.dropTempView(sink)
-      org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)
+      run.snapshot(run.memory(stream, "append")).orderBy("text_hash")
     }
-  }
 
   val st6Sql: String =
     """SELECT DISTINCT md5(text) AS text_hash

@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 import graft.Tables._
 
 /** ST23 — the streaming DSIR gate: c13's discriminative importance-
@@ -44,45 +43,41 @@ import graft.Tables._
 object StreamDsir {
   import graft.queries.Curation
 
-  def st23StreamDsirGate(s: SparkSession, d: String): DataFrame =
-    CatchupConf.withBoundedStatePartitions(s) {
-    val docs = documentsSpread(s, d)
-      .select(col("doc_id"), col("lang"), col("text"))
-    val isCalib = col("doc_id") % 2 === 0
-    // frozen model: target + raw distributions, envelope, and cut all
-    // from the calibration slice, never recomputed per batch
-    val (model0, _) = Curation.c13Freeze(docs.filter(isCalib),
-      col("lang") === "en")
-    val model = model0.copy(weights = model0.weights.localCheckpoint())
-    val crawl = docs.filter(!isCalib)
+  def st23StreamDsirGate(caller: SparkSession, d: String): DataFrame =
+    StreamRun(caller, "st23") { run =>
+      val s = run.session
+      val docs = documentsSpread(s, d)
+        .select(col("doc_id"), col("lang"), col("text"))
+      val isCalib = col("doc_id") % 2 === 0
+      // frozen model: target + raw distributions, envelope, and cut all
+      // from the calibration slice, never recomputed per batch
+      val (model0, _) = Curation.c13Freeze(docs.filter(isCalib),
+        col("lang") === "en")
+      val model = model0.copy(weights = model0.weights.localCheckpoint())
+      val crawl = docs.filter(!isCalib)
 
-    val dir = java.nio.file.Files.createTempDirectory("graft_st23_")
-    val inDir = dir.resolve("in")
-    java.nio.file.Files.createDirectories(inDir)
-    val sinkDir = dir.resolve("gated").toString
-    try {
+      val inDir = run.dir.resolve("in")
+      java.nio.file.Files.createDirectories(inDir)
+      val sinkDir = run.dir.resolve("gated").toString
       // two mtime-ordered arrival waves over the odd-id crawl in ONE
       // clustered staging job (parity is spent on the calibration
       // split, so waves split on doc_id%4)
-      CatchupConf.stageTagged(crawl,
+      run.stageTagged(crawl,
         when(col("doc_id") % 4 === 1, lit("a_wave")).otherwise(lit("b_wave")),
-        inDir, Seq("a_wave", "b_wave"))
+        Seq("a_wave", "b_wave"), inDir)
 
       val stream = s.readStream.schema(crawl.schema)
         .option("maxFilesPerTrigger", "1")
         .parquet(inDir.toString)
-      val q = stream.writeStream
+      val q = run.catchUp(stream.writeStream
         .foreachBatch { (batch: DataFrame, _: Long) =>
           gateBatch(model, sinkDir, batch)
-        }
-        .trigger(Trigger.AvailableNow()).start()
-      CatchupConf.awaitBounded(q, "st23")
+        })
       require(q.recentProgress.count(_.numInputRows > 0) >= 2,
         "st23: the staged waves collapsed into one micro-batch — the " +
           "cross-batch claim would be untested")
       s.read.parquet(sinkDir).localCheckpoint().orderBy("doc_id")
-    } finally org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)
-  }
+    }
 
   /** The foreachBatch body, factored for `StreamDsirSpec`'s batch
     * twin. */

@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 import graft.queries.Dedup
 
 /** ST18 — streaming NEAR-dup admission against a persisted MinHash
@@ -35,39 +34,35 @@ import graft.queries.Dedup
   */
 object StreamNearDup {
 
-  def st18StreamNearDup(s: SparkSession, d: String): DataFrame =
-    CatchupConf.withBoundedStatePartitions(s) {
-    val docs = graft.Tables.documents(s, d).select("doc_id", "text")
-    val b0 = docs.filter(col("doc_id") < 250)
-    val b1 = docs.filter(col("doc_id") >= 250)
-      .unionByName(docs.filter(col("doc_id") % 20 === 0)
-        .withColumn("doc_id", col("doc_id") + lit(1000000000L)))
-    val dir = java.nio.file.Files.createTempDirectory("graft_st18_")
-    val inDir = dir.resolve("in")
-    java.nio.file.Files.createDirectories(inDir)
-    val indexRoot = dir.resolve("index").toString
-    val sinkDir = dir.resolve("admitted").toString
-    try {
+  def st18StreamNearDup(caller: SparkSession, d: String): DataFrame =
+    StreamRun(caller, "st18") { run =>
+      val s = run.session
+      val docs = graft.Tables.documents(s, d).select("doc_id", "text")
+      val b0 = docs.filter(col("doc_id") < 250)
+      val b1 = docs.filter(col("doc_id") >= 250)
+        .unionByName(docs.filter(col("doc_id") % 20 === 0)
+          .withColumn("doc_id", col("doc_id") + lit(1000000000L)))
+      val inDir = run.dir.resolve("in")
+      java.nio.file.Files.createDirectories(inDir)
+      val indexRoot = run.dir.resolve("index").toString
+      val sinkDir = run.dir.resolve("admitted").toString
       // both arrival batches staged in ONE clustered job (the batches
       // are not a predicate split of one frame — b1 carries minted
       // clone ids — so the tag rides the union)
-      CatchupConf.stageTagged(
+      run.stageTagged(
         b0.withColumn("__tag", lit("a_batch0"))
           .unionByName(b1.withColumn("__tag", lit("b_batch1"))),
-        col("__tag"), inDir, Seq("a_batch0", "b_batch1"))
+        col("__tag"), Seq("a_batch0", "b_batch1"), inDir)
 
       val stream = s.readStream.schema(b0.schema)
         .option("maxFilesPerTrigger", "1")
         .parquet(inDir.toString)
-      val q = stream.writeStream
+      run.catchUp(stream.writeStream
         .foreachBatch { (batch: DataFrame, batchId: Long) =>
           admitBatch(s, indexRoot, sinkDir, batch, batchId)
-        }
-        .trigger(Trigger.AvailableNow()).start()
-      CatchupConf.awaitBounded(q, "st18")
+        })
       s.read.parquet(sinkDir).localCheckpoint().orderBy("doc_id")
-    } finally org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)
-  }
+    }
 
   /** The foreachBatch body, factored for `StreamNearDupSpec`: sign the
     * batch, reject against index ∪ lower-id batch docs, emit admissions

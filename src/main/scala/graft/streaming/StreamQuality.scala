@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 import graft.Tables._
 
 /** ST22 — the streaming quality gate: t15's FROZEN-reference CCNet
@@ -44,49 +43,45 @@ import graft.Tables._
 object StreamQuality {
   import graft.queries.TextAnalysis
 
-  def st22StreamQualityGate(s: SparkSession, d: String): DataFrame =
-    CatchupConf.withBoundedStatePartitions(s) {
-    val docs = documentsSpread(s, d)
-      .select(col("doc_id"), col("lang"), col("text"))
-    val isRef = col("lang") === "en" && col("doc_id") % 2 === 0
-    // frozen model + frozen cuts: trained/cut ONCE, never per batch;
-    // the cut derivation scores the reference slice from the SAME pair
-    // relation the training materialized (was a second tokenize pass)
-    val (refPairs, cab0, ca0, v) = TextAnalysis.lmTrainWithPairs(docs, isRef)
-    val cab = cab0.localCheckpoint()
-    val ca = ca0.localCheckpoint()
-    val refScored = TextAnalysis.lmScorePairs(refPairs, cab, ca, v)
-      .localCheckpoint()
-    val (qmin, width, cut1, cut2) = TextAnalysis.tercileCutsOf(refScored)
-    val crawl = docs.filter(!isRef)
+  def st22StreamQualityGate(caller: SparkSession, d: String): DataFrame =
+    StreamRun(caller, "st22") { run =>
+      val s = run.session
+      val docs = documentsSpread(s, d)
+        .select(col("doc_id"), col("lang"), col("text"))
+      val isRef = col("lang") === "en" && col("doc_id") % 2 === 0
+      // frozen model + frozen cuts: trained/cut ONCE, never per batch;
+      // the cut derivation scores the reference slice from the SAME pair
+      // relation the training materialized (was a second tokenize pass)
+      val (refPairs, cab0, ca0, v) = TextAnalysis.lmTrainWithPairs(docs, isRef)
+      val cab = cab0.localCheckpoint()
+      val ca = ca0.localCheckpoint()
+      val refScored = TextAnalysis.lmScorePairs(refPairs, cab, ca, v)
+        .localCheckpoint()
+      val (qmin, width, cut1, cut2) = TextAnalysis.tercileCutsOf(refScored)
+      val crawl = docs.filter(!isRef)
 
-    val dir = java.nio.file.Files.createTempDirectory("graft_st22_")
-    val inDir = dir.resolve("in")
-    java.nio.file.Files.createDirectories(inDir)
-    val sinkDir = dir.resolve("scored").toString
-    try {
+      val inDir = run.dir.resolve("in")
+      java.nio.file.Files.createDirectories(inDir)
+      val sinkDir = run.dir.resolve("scored").toString
       // two mtime-ordered arrival waves in ONE clustered staging job;
       // id-parity split so every lang and both quality extremes arrive
       // in both waves
-      CatchupConf.stageTagged(crawl,
+      run.stageTagged(crawl,
         when(col("doc_id") % 2 === 0, lit("a_even")).otherwise(lit("b_odd")),
-        inDir, Seq("a_even", "b_odd"))
+        Seq("a_even", "b_odd"), inDir)
 
       val stream = s.readStream.schema(crawl.schema)
         .option("maxFilesPerTrigger", "1")
         .parquet(inDir.toString)
-      val q = stream.writeStream
+      val q = run.catchUp(stream.writeStream
         .foreachBatch { (batch: DataFrame, _: Long) =>
           gateBatch(cab, ca, v, qmin, width, cut1, cut2, sinkDir, batch)
-        }
-        .trigger(Trigger.AvailableNow()).start()
-      CatchupConf.awaitBounded(q, "st22")
+        })
       require(q.recentProgress.count(_.numInputRows > 0) >= 2,
         "st22: the staged waves collapsed into one micro-batch — the " +
           "cross-batch claim would be untested")
       s.read.parquet(sinkDir).localCheckpoint().orderBy("doc_id")
-    } finally org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)
-  }
+    }
 
   /** The foreachBatch body, factored for `StreamQualitySpec`'s batch
     * twin: score the batch under the broadcast frozen model, label

@@ -1,19 +1,50 @@
-// Dev tool: dump formatted physical plans of headline queries to
-// PLANS.md. Run: sbt "runMain graft.tools.DumpPlans"
 package graft.tools
 
 import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.FormattedMode
 
+/** Dev tool: formatted physical plans. Not part of the driver contract.
+  *
+  *  - `runMain graft.tools.DumpPlans [sfDir]` regenerates PLANS.md:
+  *    the headline queries plus the mechanism-stage plans, on local[4]
+  *    at sf0.001 unless `sfDir` is given.
+  *  - `runMain graft.tools.DumpPlans <outDir> <tag> <name>[,<name>...]`
+  *    writes each named registered query's plan to
+  *    `<outDir>/<name>_<tag>.txt`, at `SPARK_GRAFT_SF_DIR` (default
+  *    sf0.1) on `SPARK_GRAFT_CPUS` cores (default 32). Multi-stage
+  *    operators (stage→commit→read ladders) truncate their public plan
+  *    at a localCheckpoint scan; the file still pins the final frame's
+  *    shape.
+  */
 object DumpPlans {
-  def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+  def main(args: Array[String]): Unit =
+    if (args.length >= 3)
+      dumpQueries(args(0), args(1),
+        args(2).split(",").map(_.trim).filter(_.nonEmpty).toSeq)
+    else writePlansMd(args.headOption.getOrElse("/root/testdata/sf0.001"))
+
+  private def formatted(df: DataFrame): String =
+    df.queryExecution.explainString(FormattedMode)
+
+  private def dumpQueries(outDir: String, tag: String,
+      names: Seq[String]): Unit = {
+    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    val spark = graft.GraftSession.local(
+      sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
     spark.sparkContext.setLogLevel("ERROR")
-    val sf = args.headOption.getOrElse("/root/testdata/sf0.001")
+    Files.createDirectories(Paths.get(outDir))
+    names.foreach { name =>
+      val out = Paths.get(outDir, s"${name}_$tag.txt")
+      Files.writeString(out, formatted(graft.SparkEntry.queries(name)(spark, sfDir)))
+      println(s"DUMPED $name -> $out")
+    }
+    spark.stop()
+  }
+
+  private def writePlansMd(sf: String): Unit = {
+    val spark = graft.GraftSession.local(4)
+    spark.sparkContext.setLogLevel("ERROR")
     val headline = Seq(
       "q2_revenue_by_nation", "q3_top_orders", "d2_ngram_jaccard",
       "d3_minhash_lsh", "d5_simhash_neardup", "d9_simhash64_neardup",
@@ -86,9 +117,7 @@ object DumpPlans {
     out ++= "Generated by `graft.tools.DumpPlans` at sf0.001 (plan shape is\n"
     out ++= "scale-invariant; AQE may re-plan exchanges at runtime).\n"
     headline.foreach { name =>
-      val plan = qs(name)(spark, sf).queryExecution.explainString(
-        org.apache.spark.sql.execution.FormattedMode)
-      out ++= s"\n## $name\n\n```\n$plan```\n"
+      out ++= s"\n## $name\n\n```\n${formatted(qs(name)(spark, sf))}```\n"
     }
 
     // ---- mechanism-stage plans (r16 verdict ask #5) -------------------
@@ -106,7 +135,7 @@ object DumpPlans {
     // while building any mechanism stage leaked stageDir)
     var nStages = 0
     try {
-    val stages: Seq[(String, org.apache.spark.sql.DataFrame)] = {
+    val stages: Seq[(String, DataFrame)] = {
         // i10 / e2e_ingest stage 1: the one-pass permissive parse +
         // split over a real staged fixture (schema supplied, no
         // inference scan; the landing write this plan feeds is where
@@ -224,9 +253,7 @@ object DumpPlans {
     out ++= "load-bearing internal stage is dumped here, built exactly as\n"
     out ++= "the operator builds it.\n"
     stages.foreach { case (name, df) =>
-      val plan = df.queryExecution.explainString(
-        org.apache.spark.sql.execution.FormattedMode)
-      out ++= s"\n## $name\n\n```\n$plan```\n"
+      out ++= s"\n## $name\n\n```\n${formatted(df)}```\n"
     }
     nStages = stages.size
     } finally org.apache.commons.io.FileUtils.deleteDirectory(stageDir.toFile)

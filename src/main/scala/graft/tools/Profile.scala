@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev profiling harness: time named `SparkEntry.queries` repeatedly and
   * optionally dump the formatted physical plan.
   *
@@ -14,20 +12,17 @@ object Profile {
     val sfDir = args(0)
     val reps = args(1).toInt
     val names = args(2).split(",").map(_.trim).toSeq
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
     // A/B knobs for optimization experiments, e.g.
     // GRAFT_PROFILE_CONF="spark.foo=1;spark.bar=2"
-    sys.env.get("GRAFT_PROFILE_CONF").foreach(_.split(";").foreach { kv =>
-      kv.split("=", 2) match {
-        case Array(k, v) if k.trim.nonEmpty => builder.config(k.trim, v.trim)
-        case _ => () // tolerate empty/malformed entries (e.g. CONF="")
+    val extra = sys.env.get("GRAFT_PROFILE_CONF").toSeq
+      .flatMap(_.split(";")).flatMap { kv =>
+        kv.split("=", 2) match {
+          case Array(k, v) if k.trim.nonEmpty => Some(k.trim -> v.trim)
+          case _ => None // tolerate empty/malformed entries (e.g. CONF="")
+        }
       }
-    })
-    val spark = builder.getOrCreate()
+    val spark = graft.GraftSession.local(
+      sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt, extra)
     spark.sparkContext.setLogLevel("WARN")
     // GRAFT_PROFILE_JOBS=1: print one line per Spark job (duration +
     // call site) so an operator's per-action cost is visible without

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.clean.Clean
 import graft.enrich.Teams
@@ -23,13 +22,8 @@ object ReplayPipeline {
   def main(args: Array[String]): Unit = {
     val outDir = args.headOption.getOrElse("/tmp/replay_out")
     val runTs = sys.env.getOrElse("GRAFT_RUN_TS", "2026-01-01T00:00:00")
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.GraftSession.local(
+      sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt)
     spark.sparkContext.setLogLevel("WARN")
     val fixtures = "src/test/resources/fixtures"
     val ledger = scala.collection.mutable.ArrayBuffer.empty[(String, String)]

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.plans.GraftExtensions
@@ -90,12 +90,8 @@ object ScaleHeadroom {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val copies = args.lift(1).map(_.toInt).getOrElse(10)
     val reps = args.lift(2).map(_.toInt).getOrElse(2)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.GraftSession.local(
+      sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
     spark.sparkContext.setLogLevel("WARN")
     GraftExtensions.ensureRegistered(spark)
     val par = spark.sparkContext.defaultParallelism
@@ -558,8 +554,7 @@ object ScaleHeadroom {
         // Snapshot BEFORE mutating: a blanket conf.unset on exit would
         // revert to engine hard defaults, not the session's startup
         // values — losing e.g. an autoBroadcastJoinThreshold set at
-        // session build for any op that runs after this harness
-        // (same restore contract as CatchupConf).
+        // session build for any op that runs after this harness.
         val touched = Seq("spark.sql.autoBroadcastJoinThreshold",
           "spark.sql.adaptive.skewJoin.enabled",
           "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes",

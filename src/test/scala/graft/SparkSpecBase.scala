@@ -14,13 +14,7 @@ trait SparkSpecBase extends AnyFunSuite with BeforeAndAfterAll {
 
 object SparkSpecBase {
   lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val s = GraftSession.local(4, Seq("spark.app.name" -> "graft-test"))
     s.sparkContext.setLogLevel("WARN")
     s
   }

@@ -96,15 +96,13 @@ class FirstTouchSpec extends SparkSpecBase {
   }
 
   test("two-wave arrival: clicks buffered across micro-batches still attribute exactly like the batch twin") {
-    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
+    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
     import graft.Tables._
     val s = spark
     import s.implicits._
     val raw = eventsRaw(s, sf)
     val rawSchema = raw.schema
     val dir = java.nio.file.Files.createTempDirectory("graft_st24s_")
-    val sink = "st24s_" + java.util.UUID.randomUUID().toString
-      .replace("-", "").take(12)
     try {
       // TIME-ordered waves (not id-parity): wave 2 must stay above the
       // watermark wave 1 advances, or its events would be dropped as
@@ -136,8 +134,8 @@ class FirstTouchSpec extends SparkSpecBase {
           -101L, sentinelTs, -1L, "click", 0.0, "")), rawSchema),
         "c_sentinel", 120000L)
 
-      CatchupConf.withBoundedStatePartitions(s) {
-        val staged = normalizeTs(s.readStream.schema(rawSchema)
+      val streamed = StreamRun(s, "st24_spec") { run =>
+        val staged = normalizeTs(run.session.readStream.schema(rawSchema)
           .option("maxFilesPerTrigger", "1").parquet(dir.toString))
         val evs = staged
           .filter(col("event_type").isin("click", "purchase"))
@@ -145,7 +143,7 @@ class FirstTouchSpec extends SparkSpecBase {
             (col("event_type") === "purchase").as("is_buy"))
           .withWatermark("ts", s"${IntervalJoin.intervalHours} hours")
           .as[IntervalJoin.AttEv]
-        val q = evs.groupByKey(_.user_id)
+        val attributed = evs.groupByKey(_.user_id)
           .flatMapGroupsWithState[IntervalJoin.AttState, IntervalJoin.AttOut](
             OutputMode.Append(), GroupStateTimeout.EventTimeTimeout()) {
             case (user: Long, it: Iterator[IntervalJoin.AttEv],
@@ -163,25 +161,19 @@ class FirstTouchSpec extends SparkSpecBase {
               }
               out.iterator
           }
-          .writeStream.format("memory").queryName(sink)
-          .outputMode("append").trigger(Trigger.AvailableNow()).start()
-        CatchupConf.awaitBounded(q, "st24-spec")
+        val q = run.memory(attributed.toDF(), "append")
         assert(q.recentProgress.count(_.numInputRows > 0) >= 2,
           "the waves collapsed into one micro-batch — the cross-batch " +
             "claim would be untested")
-      }
-      val streamed = s.table(sink).filter(col("user_id") >= 0)
-        .select("click_id", "buy_id", "user_id", "lag_us")
-        .orderBy("click_id").collect().map(_.toSeq).toSeq
+        run.snapshot(q, _.filter(col("user_id") >= 0)
+          .select("click_id", "buy_id", "user_id", "lag_us"))
+      }.orderBy("click_id").collect().map(_.toSeq).toSeq
       val batch = IntervalJoin
         .st24FirstTouchBatchOf(graft.Tables.events(s, sf))
         .orderBy("click_id").collect().map(_.toSeq).toSeq
       assert(streamed == batch,
         "cross-batch arrival must reproduce the batch twin exactly")
-    } finally {
-      spark.catalog.dropTempView(sink)
-      org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)
-    }
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)
   }
 
   test("st24 streaming == batch twin on the corpus, and output is linear in clicks") {

@@ -76,7 +76,7 @@ class StateFormatRecoverySpec extends SparkSpecBase {
       java.nio.file.Files.copy(src, data.resolve("b.parquet"))
       // run 2: the session asks for RocksDB; the checkpoint was written
       // under the HDFS-backed provider
-      runOnce(s"stfmt_run2_$runId", CatchupConf.rocksDbProvider)
+      runOnce(s"stfmt_run2_$runId", StreamRun.rocksDbProvider)
 
       // state survived: every (window, type) count doubled exactly
       val run2 = spark.table(s"stfmt_run2_$runId")
