@@ -610,10 +610,10 @@ object Similarity {
     * the cell's min/max vec_id members; parity fallback if an
     * iteration degenerates, the guard real systems ship for duplicate-
     * heavy cells), two sub-files replace the cell's entries in the
-    * file manifest, and the manifest swaps through the o16 createLink
-    * CAS — so s27's manifest routing stays valid at every version and
-    * a concurrent probe reads either the old or the new layout, never
-    * a mix.
+    * file manifest, and the manifest swaps through the o16
+    * create-if-absent CAS ([[graft.table.TableLog.create]]) — so s27's
+    * manifest routing stays valid at every version and a concurrent
+    * probe reads either the old or the new layout, never a mix.
     *
     * Like o15/o22's OPTIMIZE, the split is a PHYSICAL rewrite with no
     * logical change: the quantizer stays frozen, sub-files still carry
@@ -632,10 +632,10 @@ object Similarity {
     *
     * Scale shape: the split reads and writes ONE cell (O(cell), not
     * O(index)); the manifest rewrite is O(cells) driver metadata; the
-    * CAS is one createLink. Probe I/O stays O(cells probed) as the
+    * CAS is one metadata create. Probe I/O stays O(cells probed) as the
     * index grows — the property the split exists to preserve. */
   def s28IvfCellSplit(s: SparkSession, d: String): DataFrame = {
-    import scala.jdk.CollectionConverters._
+    import graft.table.TableLog
     val e = withNorm(s, d)
     val dir = java.nio.file.Files.createTempDirectory("graft_s28_")
     val base = dir.toString
@@ -644,20 +644,13 @@ object Similarity {
         .select(col("vec_id").as("cent_id"), col("embedding").as("ce"),
           col("nrm").as("cnrm"))
       // one manifest entry per (cell, dir, rows); CAS-committed
-      def commit(v: Int, entries: Seq[(Long, String, Long)]): Unit = {
-        import java.nio.file.{Files, Paths}
-        val body = entries.sortBy(x => (x._1, x._2))
-          .map { case (c, p, n) => s"$c:$p:$n" }.mkString("\n")
-        val scratch = Paths.get(base, s".m28-$v")
-        Files.writeString(scratch, body)
-        try Files.createLink(Paths.get(base, s"manifest-$v"), scratch)
-        catch { case ex: java.nio.file.FileAlreadyExistsException =>
-          throw new IllegalStateException(s"s28: lost the CAS at $v", ex) }
-        finally Files.deleteIfExists(scratch)
-      }
+      def commit(v: Int, entries: Seq[(Long, String, Long)]): Unit =
+        if (!TableLog.create(base, TableLog.manifest(v),
+            entries.sortBy(x => (x._1, x._2))
+              .map { case (c, p, n) => s"$c:$p:$n" }.mkString("\n")))
+          throw new IllegalStateException(s"s28: lost the CAS at $v")
       def entriesOf(v: Int): Seq[(Long, String, Long)] =
-        java.nio.file.Files.readString(
-            java.nio.file.Paths.get(base, s"manifest-$v"))
+        TableLog.read(base, TableLog.manifest(v))
           .linesIterator.filter(_.nonEmpty).map { l =>
             val Array(c, p, n) = l.split(":", 3)
             (c.toLong, p, n.toLong)
@@ -700,10 +693,8 @@ object Similarity {
           s.read.parquet(s"$base/$p").withColumn("cent_id", lit(c)) }
           .reduce(_ unionByName _)
         val expect = sel.flatMap { case (_, p, _) =>
-          java.nio.file.Files.walk(java.nio.file.Paths.get(base, p))
-            .iterator().asScala
-            .filter(f => f.toString.endsWith(".parquet"))
-            .map(_.toString) }.toSet
+          TableLog.files(java.nio.file.Paths.get(base, p),
+            _.toString.endsWith(".parquet")).map(_._1) }.toSet
         require(index.inputFiles
             .map(f => new java.net.URI(f).getPath).toSet == expect,
           "s28: the executed scan must open exactly the routed files")
@@ -719,11 +710,7 @@ object Similarity {
       require(splitRows.toDouble > sizes.values.sum.toDouble / sizes.size,
         s"s28: the ladder must grow a cell past the bound " +
           s"(max $splitRows, mean ${sizes.values.sum / sizes.size})")
-      val preFiles = java.nio.file.Files.walk(dir).iterator().asScala
-        .filter(p => java.nio.file.Files.isRegularFile(p) &&
-          p.toString.contains("/seg-"))
-        .map(p => (p.toString, java.nio.file.Files.size(p)))
-        .toSeq.sortBy(_._1)
+      val preFiles = TableLog.files(dir, _.toString.contains("/seg-"))
       // local 2-means over ONLY the split cell's rows
       val cellVecs = entriesOf(2).filter(_._1 == splitCell)
         .map(x => s.read.parquet(s"$base/${x._2}"))
@@ -755,12 +742,8 @@ object Similarity {
           s"of $splitRows")
       commit(3, entriesOf(2).filterNot(_._1 == splitCell) ++ subEntries)
       // only the split cell moved: every pre-split file byte-identical
-      require(java.nio.file.Files.walk(dir).iterator().asScala
-          .filter(p => java.nio.file.Files.isRegularFile(p) &&
-            p.toString.contains("/seg-") &&
-            !p.toString.contains("/seg-s3/"))
-          .map(p => (p.toString, java.nio.file.Files.size(p)))
-          .toSeq.sortBy(_._1) == preFiles,
+      require(TableLog.files(dir, p => p.toString.contains("/seg-") &&
+            !p.toString.contains("/seg-s3/")) == preFiles,
         "s28: the split must rewrite only the split cell's storage")
       // the OPTIMIZE contract: the probe answer is unchanged across
       // the swap

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.Tables._
+import graft.table.TableLog
 
 /** Warehouse maintenance operators: the two change-data shapes every
   * large dimensional pipeline runs — building a type-2 slowly-changing
@@ -237,16 +238,9 @@ object Warehouse {
 
   // ---- O12: snapshot versioning + time travel -----------------------
 
-  private def o12Manifest(base: String): java.nio.file.Path =
-    java.nio.file.Paths.get(base, "manifest")
-
-  private[graft] def o12Versions(base: String): Seq[Int] = {
-    val m = o12Manifest(base)
-    if (java.nio.file.Files.exists(m))
-      java.nio.file.Files.readString(m).trim.split(",")
-        .filter(_.nonEmpty).map(_.toInt).toSeq
-    else Seq.empty
-  }
+  private[graft] def o12Versions(base: String): Seq[Int] =
+    TableLog.get(base, "manifest").toSeq
+      .flatMap(_.trim.split(",")).filter(_.nonEmpty).map(_.toInt)
 
   /** Monotonic version high-water mark: the largest version ever
     * SUCCESSFULLY committed at `base` (persisted in a sibling file,
@@ -255,15 +249,8 @@ object Warehouse {
     * reused — a post-vacuum `VERSION AS OF n` either fails loudly or
     * returns the data n always named, the immutability contract o12
     * documents (reference table formats never reuse snapshot ids). */
-  private def o12HwmFile(base: String): java.nio.file.Path =
-    java.nio.file.Paths.get(base, "highwater")
-
-  private[graft] def o12Hwm(base: String): Option[Int] = {
-    val f = o12HwmFile(base)
-    if (java.nio.file.Files.exists(f))
-      Some(java.nio.file.Files.readString(f).trim.toInt)
-    else None
-  }
+  private[graft] def o12Hwm(base: String): Option[Int] =
+    TableLog.get(base, "highwater").map(_.trim.toInt)
 
   /** Commit `df` as version `v` of the snapshot table at `base`: data
     * lands in a dot-prefixed staging dir (invisible to readers), is
@@ -290,7 +277,7 @@ object Warehouse {
     * formats document. */
   private[graft] def o12Commit(base: String, v: Int, df: DataFrame,
       keepLayout: Boolean = false): Unit = {
-    import java.nio.file.{Files, Paths, StandardCopyOption}
+    import java.nio.file.{Files, Paths}
     // the effective mark is max(hwm file, live manifest): a crash
     // between the manifest swap and the hwm swap leaves the FILE one
     // commit stale, but the manifest still names the newer version —
@@ -318,16 +305,10 @@ object Warehouse {
       org.apache.commons.io.FileUtils.deleteDirectory(dataDir.toFile)
     require(staging.toFile.renameTo(dataDir.toFile),
       s"o12: data rename failed for version $v")
-    val mStage = Paths.get(base, ".manifest.staging")
-    Files.writeString(mStage, (o12Versions(base) :+ v).mkString(","))
-    Files.move(mStage, o12Manifest(base),
-      StandardCopyOption.REPLACE_EXISTING, StandardCopyOption.ATOMIC_MOVE)
+    TableLog.replace(base, "manifest", (o12Versions(base) :+ v).mkString(","))
     // hwm AFTER the swap: writing it first would let a crash mark a
     // never-committed version as used and reject its own re-run
-    val hStage = Paths.get(base, ".highwater.staging")
-    Files.writeString(hStage, math.max(v, hwm).toString)
-    Files.move(hStage, o12HwmFile(base),
-      StandardCopyOption.REPLACE_EXISTING, StandardCopyOption.ATOMIC_MOVE)
+    TableLog.replace(base, "highwater", math.max(v, hwm).toString)
   }
 
   /** Read the snapshot as of `v` — strictly through the manifest: a
@@ -531,16 +512,10 @@ object Warehouse {
     * crash debris.
     */
   private[graft] def o13Vacuum(base: String, retain: Int): Seq[Int] = {
-    import java.nio.file.{Files, Paths, StandardCopyOption}
     val vs = o12Versions(base)
     val keep = vs.sorted.takeRight(retain)
     val expired = vs.filterNot(keep.contains)
-    if (expired.nonEmpty) {
-      val mStage = Paths.get(base, ".manifest.staging")
-      Files.writeString(mStage, keep.mkString(","))
-      Files.move(mStage, o12Manifest(base),
-        StandardCopyOption.REPLACE_EXISTING, StandardCopyOption.ATOMIC_MOVE)
-    }
+    if (expired.nonEmpty) TableLog.replace(base, "manifest", keep.mkString(","))
     val live = o12Versions(base).toSet
     val debris = Option(new java.io.File(base).listFiles()).toSeq.flatten
       .filter(f => f.isDirectory && f.getName.startsWith("v="))
@@ -718,8 +693,8 @@ object Warehouse {
   /** The o16 table layout: `data-<token>` dirs (immutable, uniquely
     * named per writer — staging never races) + numbered `manifest-N`
     * files, each naming the data token version N resolves to. The
-    * COMMIT POINT is the atomic CREATE-IF-ABSENT of `manifest-N` —
-    * `Files.createLink` (link(2) → EEXIST) is the one POSIX primitive
+    * COMMIT POINT is the atomic CREATE-IF-ABSENT of `manifest-N`
+    * ([[TableLog.create]]) — link(2) → EEXIST is the one POSIX primitive
     * that creates a name atomically and FAILS LOUDLY if it already
     * exists, unlike rename(2) which last-writer-wins over files. This
     * is exactly the public Iceberg HDFS commit protocol (and the
@@ -730,13 +705,7 @@ object Warehouse {
     * assumption o12/o13/o15 document (`o12Commit`'s manifest swap is
     * last-writer-wins by construction).
     */
-  private[graft] def o16Latest(base: String): Int = {
-    val names = new java.io.File(base).list()
-    if (names == null) 0
-    else names.filter(_.startsWith("manifest-"))
-      .map(_.stripPrefix("manifest-").toInt)
-      .foldLeft(0)(math.max)
-  }
+  private[graft] def o16Latest(base: String): Int = TableLog.latest(base)
 
   /** Stage a writer's data under its unique token — no race possible
     * (tokens are writer-chosen and unique); invisible to readers until
@@ -769,30 +738,26 @@ object Warehouse {
       .isEmpty
 
   /** One optimistic publish attempt: CAS `manifest-(expected+1)` to
-    * the staged token. Returns true iff THIS writer created the
-    * manifest (won the race); false iff another commit landed first —
-    * the conflict signal the caller retries on. The manifest content
-    * lands via a token-unique scratch file hardlinked into place, so
-    * a winning manifest is always complete (never a partial write). */
+    * the staged token ([[TableLog.create]]). Returns true iff THIS
+    * writer created the manifest (won the race); false iff another
+    * commit landed first — the conflict signal the caller retries on.
+    * A winning manifest is always complete (never a partial write). */
   private[graft] def o16TryPublish(base: String, token: String,
-      expected: Int): Boolean = {
-    import java.nio.file.{Files, Paths}
-    val scratch = Paths.get(base, s".m-$token")
-    Files.writeString(scratch, token)
-    val target = Paths.get(base, s"manifest-${expected + 1}")
-    try { Files.createLink(target, scratch); true }
-    catch { case _: java.nio.file.FileAlreadyExistsException => false }
-    finally Files.deleteIfExists(scratch)
-  }
+      expected: Int): Boolean =
+    TableLog.create(base, TableLog.manifest(expected + 1), token)
 
   /** Read version `v` strictly through its manifest (absent manifest =
-    * uncommitted version, loud failure — the o12 read discipline). */
+    * uncommitted version, loud failure — the o12 read discipline). The
+    * manifest names either a LOCAL data token or an ABSOLUTE data path
+    * (a shallow clone's manifest references the SOURCE table's files
+    * by path — the public Delta SHALLOW CLONE mechanism). */
   private[graft] def o16Read(s: SparkSession, base: String,
-      v: Int): DataFrame = {
-    val m = java.nio.file.Paths.get(base, s"manifest-$v")
-    require(java.nio.file.Files.exists(m),
-      s"o16: version $v is not committed (no manifest-$v)")
-    s.read.parquet(s"$base/data-${java.nio.file.Files.readString(m).trim}")
+      v: Int): DataFrame =
+    s.read.parquet(o16DataDir(base, v))
+
+  private def o16DataDir(base: String, v: Int): String = {
+    val token = TableLog.read(base, TableLog.manifest(v)).trim
+    if (token.startsWith("/")) token else s"$base/data-$token"
   }
 
   /** O16 — optimistic commit-conflict detection, driven through a
@@ -830,7 +795,6 @@ object Warehouse {
     * writers never coordinate except at the single atomic name.
     */
   def o16CommitConflict(s: SparkSession, d: String): DataFrame = {
-    import org.apache.hadoop.fs.Path
     val dir = java.nio.file.Files.createTempDirectory("graft_o16_")
     val base = dir.toString
     try {
@@ -845,15 +809,12 @@ object Warehouse {
         "o16: uncontended v1 commit failed")
       // B (OPTIMIZE) reads latest=1 and stages its rewrite of v1
       val bSeen = o16Latest(base)
-      val fs = new Path(base).getFileSystem(s.sparkContext.hadoopConfiguration)
       def files(token: String): Seq[(String, Long)] =
-        fs.listStatus(new Path(s"$base/data-$token"))
-          .filter(st => st.isFile && !st.getPath.getName.startsWith("_") &&
-            !st.getPath.getName.startsWith("."))
-          .map(st => (st.getPath.getName, st.getLen)).sortBy(_._1).toSeq
+        TableLog.files(java.nio.file.Paths.get(base, s"data-$token"),
+          p => TableLog.noMarkers(p) &&
+            !p.getFileName.toString.startsWith("."))
       def packedRewriteOf(v: Int): (DataFrame, Int) = {
-        val token = java.nio.file.Files.readString(
-          java.nio.file.Paths.get(base, s"manifest-$v")).trim
+        val token = TableLog.read(base, TableLog.manifest(v)).trim
         val bound = graft.sink.Compact.targetFileCount(
           files(token).map(_._2).sum, O15TargetBytes)
         (o16Read(s, base, v).repartitionByRange(bound, col("doc_id"))
@@ -969,20 +930,6 @@ object Warehouse {
 
   // ---- O21: zero-copy shallow clone ------------------------------------
 
-  /** Read version `v` of an o16-protocol table whose manifest may name
-    * either a LOCAL data token or an ABSOLUTE data path (a shallow
-    * clone's manifest references the SOURCE table's files by path —
-    * the public Delta SHALLOW CLONE mechanism). */
-  private[graft] def o21Read(s: SparkSession, base: String,
-      v: Int): DataFrame = {
-    val m = java.nio.file.Paths.get(base, s"manifest-$v")
-    require(java.nio.file.Files.exists(m),
-      s"o21: version $v is not committed (no manifest-$v)")
-    val token = java.nio.file.Files.readString(m).trim
-    val dataDir = if (token.startsWith("/")) token else s"$base/data-$token"
-    s.read.parquet(dataDir)
-  }
-
   /** Create `dstBase` as a zero-copy shallow clone of `srcBase`'s
     * version `srcV`: the clone's v1 manifest is ONE metadata create
     * naming the source's data directory by absolute path — no byte of
@@ -990,19 +937,8 @@ object Warehouse {
     * as the clone's OWN tokens through the ordinary CAS, never
     * touching the source. */
   private[graft] def o21ShallowCloneOf(srcBase: String, srcV: Int,
-      dstBase: String): Boolean = {
-    val srcToken = java.nio.file.Files.readString(
-      java.nio.file.Paths.get(srcBase, s"manifest-$srcV")).trim
-    val srcData =
-      if (srcToken.startsWith("/")) srcToken else s"$srcBase/data-$srcToken"
-    import java.nio.file.{Files, Paths}
-    val scratch = Paths.get(dstBase, ".m-clone")
-    Files.writeString(scratch, srcData)
-    val target = Paths.get(dstBase, "manifest-1")
-    try { Files.createLink(target, scratch); true }
-    catch { case _: java.nio.file.FileAlreadyExistsException => false }
-    finally Files.deleteIfExists(scratch)
-  }
+      dstBase: String): Boolean =
+    TableLog.create(dstBase, TableLog.manifest(1), o16DataDir(srcBase, srcV))
 
   /** O21 — SHALLOW CLONE (zero-copy table fork), the public Delta
     * `CREATE TABLE ... SHALLOW CLONE` shape: an experiment/dev fork of
@@ -1032,21 +968,13 @@ object Warehouse {
   def o21ShallowClone(s: SparkSession, d: String): DataFrame = {
     val dirA = java.nio.file.Files.createTempDirectory("graft_o21a_")
     val dirB = java.nio.file.Files.createTempDirectory("graft_o21b_")
-    import scala.jdk.CollectionConverters._
     try {
       val docs = documents(s, d).select(col("doc_id"), col("lang"),
         col("source"))
       o16Stage(dirA.toString, "a0", docs.repartition(4))
       require(o16TryPublish(dirA.toString, "a0", 0),
         "o21: source v1 commit failed")
-      def listing(dir: java.nio.file.Path): Seq[(String, Long)] = {
-        java.nio.file.Files.walk(dir).iterator().asScala
-          .filter(p => java.nio.file.Files.isRegularFile(p) &&
-            !p.getFileName.toString.startsWith("_"))
-          .map(p => (p.toString, java.nio.file.Files.size(p)))
-          .toSeq.sortBy(_._1)
-      }
-      val aBefore = listing(dirA)
+      val aBefore = TableLog.files(dirA, TableLog.noMarkers)
       // the clone: one metadata create, zero data bytes in B's dir
       require(o21ShallowCloneOf(dirA.toString, 1, dirB.toString),
         "o21: clone manifest create failed")
@@ -1055,21 +983,21 @@ object Warehouse {
         "o21: a SHALLOW clone must not copy data")
       // copy-on-write divergence: the clone's v2 edits a slice
       o16Stage(dirB.toString, "b-edit",
-        o21Read(s, dirB.toString, 1).withColumn("source",
+        o16Read(s, dirB.toString, 1).withColumn("source",
           when(col("doc_id") % 5 === 0, lit("edited"))
             .otherwise(col("source"))))
       require(o16TryPublish(dirB.toString, "b-edit", 1),
         "o21: clone edit commit failed")
       // the source never moved
-      require(listing(dirA) == aBefore,
+      require(TableLog.files(dirA, TableLog.noMarkers) == aBefore,
         "o21: editing the clone touched the source's files")
-      o21Read(s, dirA.toString, 1)
+      o16Read(s, dirA.toString, 1)
         .select(lit("A").as("tbl"), lit(1).as("version"), col("doc_id"),
           col("lang"), col("source"))
-        .unionByName(o21Read(s, dirB.toString, 1)
+        .unionByName(o16Read(s, dirB.toString, 1)
           .select(lit("B").as("tbl"), lit(1).as("version"), col("doc_id"),
             col("lang"), col("source")))
-        .unionByName(o21Read(s, dirB.toString, 2)
+        .unionByName(o16Read(s, dirB.toString, 2)
           .select(lit("B").as("tbl"), lit(2).as("version"), col("doc_id"),
             col("lang"), col("source")))
         .orderBy("tbl", "version", "doc_id")
@@ -1219,14 +1147,13 @@ object Warehouse {
       .coalesce(1)
       .write.mode("overwrite").parquet(s"$base/data-$token")
 
-  /** Commit version `v`: an atomically-created (createLink → EEXIST,
+  /** Commit version `v`: an atomically-created ([[TableLog.create]],
     * the o16 CAS primitive) `schema-v` file carrying BOTH the data
     * token and the field-id → name mapping — schema travels with the
     * version, and a metadata-only change (rename/drop/add) commits the
     * SAME token under a new mapping, rewriting nothing. */
   private[graft] def o18Commit(base: String, v: Int, token: String,
       fields: Seq[O18Field]): Boolean = {
-    import java.nio.file.{Files, Paths}
     // one field per line (token owns line 1): the dtype may itself
     // contain commas/parens (decimal(10,2)); the only reserved
     // characters are the line break and, in the name, the `:` field
@@ -1238,14 +1165,8 @@ object Warehouse {
         s"o18: field name/dtype may not contain ':' or newline " +
           s"(got ${f.id}:${f.name}:${f.dtype})")
     }
-    val body = token + "\n" +
-      fields.map(f => s"${f.id}:${f.name}:${f.dtype}").mkString("\n")
-    val scratch = Paths.get(base, s".s-$v-$token")
-    Files.writeString(scratch, body)
-    val target = Paths.get(base, s"schema-$v")
-    try { Files.createLink(target, scratch); true }
-    catch { case _: java.nio.file.FileAlreadyExistsException => false }
-    finally Files.deleteIfExists(scratch)
+    TableLog.create(base, s"schema-$v", token + "\n" +
+      fields.map(f => s"${f.id}:${f.name}:${f.dtype}").mkString("\n"))
   }
 
   /** Read version `v` strictly through its schema file: each field
@@ -1257,11 +1178,8 @@ object Warehouse {
     * projected — its bytes stay in the files, unreachable. */
   private[graft] def o18Read(s: SparkSession, base: String,
       v: Int): DataFrame = {
-    val f = java.nio.file.Paths.get(base, s"schema-$v")
-    require(java.nio.file.Files.exists(f),
-      s"o18: version $v is not committed (no schema-$v)")
     val Array(token, fieldSpec) =
-      java.nio.file.Files.readString(f).split("\n", 2)
+      TableLog.read(base, s"schema-$v").split("\n", 2)
     // one field per line; dtype is the 3rd segment and may contain any
     // character but a newline (split limit 3 keeps decimal(10,2) whole)
     val fields = fieldSpec.split("\n").toSeq.filter(_.nonEmpty).map { e =>
@@ -1377,36 +1295,25 @@ object Warehouse {
   // ---- O19: partition evolution through snapshot commits --------------
 
   /** Commit version `v` of an o19 table: an atomically-created
-    * (createLink CAS) `layout-v` manifest listing the version's data
-    * SEGMENTS, each with the partition spec it was written under
+    * ([[TableLog.create]] CAS) `layout-v` manifest listing the
+    * version's data SEGMENTS, each with the partition spec it was written under
     * (`token:specCol` lines). Partition evolution = a new manifest
     * listing the old segments UNCHANGED plus new segments under the new
     * spec — never a rewrite. This is the public Iceberg
     * partition-spec-id mechanism: the spec travels with the FILES (per
     * segment), not with the table. */
   private[graft] def o19Commit(base: String, v: Int,
-      segments: Seq[(String, String)]): Boolean = {
-    import java.nio.file.{Files, Paths}
-    val body = segments.map { case (t, spec) => s"$t:$spec" }.mkString("\n")
-    val scratch = Paths.get(base, s".l-$v")
-    Files.writeString(scratch, body)
-    val target = Paths.get(base, s"layout-$v")
-    try { Files.createLink(target, scratch); true }
-    catch { case _: java.nio.file.FileAlreadyExistsException => false }
-    finally Files.deleteIfExists(scratch)
-  }
+      segments: Seq[(String, String)]): Boolean =
+    TableLog.create(base, s"layout-$v",
+      segments.map { case (t, spec) => s"$t:$spec" }.mkString("\n"))
 
   /** The segments (token, specCol) version `v` resolves to. */
-  private[graft] def o19Segments(base: String, v: Int): Seq[(String, String)] = {
-    val f = java.nio.file.Paths.get(base, s"layout-$v")
-    require(java.nio.file.Files.exists(f),
-      s"o19: version $v is not committed (no layout-$v)")
-    java.nio.file.Files.readString(f).split("\n").filter(_.nonEmpty).toSeq
+  private[graft] def o19Segments(base: String, v: Int): Seq[(String, String)] =
+    TableLog.read(base, s"layout-$v").split("\n").filter(_.nonEmpty).toSeq
       .map { line =>
         val Array(t, spec) = line.split(":", 2)
         (t, spec)
       }
-  }
 
   /** Read version `v` across its segments: each segment scans under ITS
     * OWN partition layout (`basePath` resurfaces the Hive-style
@@ -1444,7 +1351,6 @@ object Warehouse {
     * spec instead of repartitioning the table.
     */
   def o19PartitionEvolution(s: SparkSession, d: String): DataFrame = {
-    import org.apache.hadoop.fs.Path
     val dir = java.nio.file.Files.createTempDirectory("graft_o19_")
     val base = dir.toString
     try {
@@ -1456,17 +1362,9 @@ object Warehouse {
       // v1: ingest-era layout — partitioned by lang
       docs.write.partitionBy("lang").parquet(s"$base/seg-a")
       require(o19Commit(base, 1, Seq("a" -> "lang")), "o19: v1 commit failed")
-      val fs = new Path(base).getFileSystem(s.sparkContext.hadoopConfiguration)
-      def files(seg: String): Seq[(String, Long)] = {
-        val it = fs.listFiles(new Path(s"$base/seg-$seg"), true)
-        val b = Seq.newBuilder[(String, Long)]
-        while (it.hasNext) {
-          val st = it.next()
-          if (st.isFile && !st.getPath.getName.startsWith("_"))
-            b += ((st.getPath.toString.stripPrefix(base), st.getLen))
-        }
-        b.result().sortBy(_._1)
-      }
+      def files(seg: String): Seq[(String, Long)] =
+        TableLog.files(java.nio.file.Paths.get(base, s"seg-$seg"),
+          TableLog.noMarkers)
       val aBefore = files("a")
       // partition evolution: appends land under the NEW spec; v2 lists
       // both segments, old one untouched
@@ -1475,8 +1373,8 @@ object Warehouse {
         "o19: v2 commit failed")
       require(files("a") == aBefore,
         "o19: partition evolution rewrote pre-evolution files")
-      require(fs.listStatus(new Path(s"$base/seg-b"))
-        .exists(_.getPath.getName.startsWith("source=")),
+      require(graft.Tables.listDir(java.nio.file.Paths.get(base, "seg-b"))
+        .exists(_.getFileName.toString.startsWith("source=")),
         "o19: the new segment must carry the NEW spec's directories")
       o19Read(s, base, 1, cols).withColumn("version", lit(1))
         .unionByName(o19Read(s, base, 2, cols).withColumn("version", lit(2)))
@@ -1541,18 +1439,16 @@ object Warehouse {
     * whose consumers are v2 by construction.) */
   private[graft] val O22ReaderVersion = 2
 
-  /** CAS-commit version `v` (the o16 createLink primitive): line 1 is
-    * the primary data token; optional `add:`/`dv:`/`eq:`/`rewriteOf:`
-    * lines follow (see [[O22Manifest]]). The scratch name carries a
-    * per-attempt nonce — DV commits REUSE the shared data token, so
-    * (version, token) alone is not writer-unique and two concurrent
-    * deleters racing one version would otherwise share a scratch inode
-    * (the o25 lesson applied here too). */
+  /** CAS-commit version `v` ([[TableLog.create]], the o16 primitive):
+    * line 1 is the primary data token; optional
+    * `add:`/`dv:`/`eq:`/`rewriteOf:` lines follow (see [[O22Manifest]]).
+    * DV commits REUSE the shared data token, so two concurrent deleters
+    * may race one version with near-identical bodies — the per-attempt
+    * scratch keeps each racer's body its own. */
   private[graft] def o22Commit(base: String, v: Int, token: String,
       dv: Option[String], adds: Seq[String] = Nil,
       eqs: Seq[(String, Seq[String])] = Nil,
       rewriteOf: Option[Int] = None): Boolean = {
-    import java.nio.file.{Files, Paths}
     require((token +: adds).forall(t => !t.exists(":=,\n".contains(_))) &&
       eqs.forall { case (t, ap) =>
         !t.exists(":=,\n".contains(_)) &&
@@ -1568,21 +1464,12 @@ object Warehouse {
       dv.map(t => s"dv:$t").toSeq ++
       eqs.map { case (t, ap) => s"eq:$t=${ap.mkString(",")}" } ++
       rewriteOf.map(pv => s"rewriteOf:$pv").toSeq).mkString("\n")
-    val nonce = java.util.UUID.randomUUID().toString.take(8)
-    val scratch = Paths.get(base, s".m22-$v-$nonce")
-    Files.writeString(scratch, body)
-    val target = Paths.get(base, s"manifest-$v")
-    try { Files.createLink(target, scratch); true }
-    catch { case _: java.nio.file.FileAlreadyExistsException => false }
-    finally Files.deleteIfExists(scratch)
+    TableLog.create(base, TableLog.manifest(v), body)
   }
 
   private[graft] def o22ManifestOf(base: String, v: Int,
       maxReader: Int = O22ReaderVersion): O22Manifest = {
-    val m = java.nio.file.Paths.get(base, s"manifest-$v")
-    require(java.nio.file.Files.exists(m),
-      s"o22: version $v is not committed (no manifest-$v)")
-    val lines = java.nio.file.Files.readString(m).split("\n").toSeq
+    val lines = TableLog.read(base, TableLog.manifest(v)).split("\n").toSeq
       .map(_.trim).filter(_.nonEmpty)
     val minReader = lines.find(_.startsWith("minReader:"))
       .map(_.stripPrefix("minReader:").toInt).getOrElse(1)
@@ -1731,7 +1618,6 @@ object Warehouse {
     * data bytes, exactly when a background job chooses to.
     */
   def o22DeletionVectors(s: SparkSession, d: String): DataFrame = {
-    import scala.jdk.CollectionConverters._
     val dir = java.nio.file.Files.createTempDirectory("graft_o22_")
     val base = dir.toString
     try {
@@ -1742,13 +1628,8 @@ object Warehouse {
       // require below, which otherwise re-scanned the corpus
       val fullN = o16StageCounted(base, "w0", docs.repartition(4))
       require(o22Commit(base, 1, "w0", None), "o22: v1 commit failed")
-      def dataFiles(): Seq[(String, Long)] =
-        java.nio.file.Files.walk(dir).iterator().asScala
-          .filter(p => java.nio.file.Files.isRegularFile(p) &&
-            p.toString.contains("/data-") &&
-            !p.getFileName.toString.startsWith("_"))
-          .map(p => (p.toString, java.nio.file.Files.size(p)))
-          .toSeq.sortBy(_._1)
+      def dataFiles(): Seq[(String, Long)] = TableLog.files(dir,
+        p => p.toString.contains("/data-") && TableLog.noMarkers(p))
       val before = dataFiles()
       val v2 = o22Delete(s, base, col("doc_id") % 10 === 3, "a")
       val v3 = o22Delete(s, base, col("lang") === "de", "b")
@@ -1824,39 +1705,28 @@ object Warehouse {
     * never depends on the pointer. */
   private[graft] def o23Versions(base: String,
       opens: O23Opens = new O23Opens): Seq[(Int, String)] = {
-    import java.nio.file.{Files, Paths}
-    val ptr = Paths.get(base, "_last_checkpoint")
+    // pointer + the checkpoint it names: two opens when present
     val fromCp: Seq[(Int, String)] =
-      if (Files.exists(ptr)) {
-        opens.n += 1
-        val cpV = Files.readString(ptr).trim.toInt
-        opens.n += 1
-        o23ParseCp(Files.readString(Paths.get(base, s"checkpoint-$cpV")))
-      } else Seq.empty
-    var v = fromCp.lastOption.map(_._1).getOrElse(0) + 1
-    val tail = Seq.newBuilder[(Int, String)]
-    var more = true
-    while (more) {
-      val m = Paths.get(base, s"manifest-$v")
+      TableLog.get(base, TableLog.LastCheckpoint).toSeq.flatMap { ptr =>
+        opens.n += 2
+        o23ParseCp(TableLog.read(base, s"checkpoint-${ptr.trim.toInt}"))
+      }
+    val firstTail = fromCp.lastOption.map(_._1).getOrElse(0) + 1
+    // one probe per tail commit, plus the miss that ends the scan
+    val tail = Iterator.from(firstTail).map { v =>
       opens.n += 1
-      if (Files.exists(m)) { tail += ((v, Files.readString(m).trim)); v += 1 }
-      else more = false
-    }
-    fromCp ++ tail.result()
+      TableLog.get(base, TableLog.manifest(v)).map(t => (v, t.trim))
+    }.takeWhile(_.isDefined).flatten.toSeq
+    fromCp ++ tail
   }
 
   /** The O(commits) resolution o23 replaces — a full directory listing
     * plus one read per manifest. Kept ONLY so requires/specs can pin
     * checkpoint-read ≡ full-replay-read; production readers never call
     * it. */
-  private[graft] def o23VersionsByListing(base: String): Seq[(Int, String)] = {
-    val names = new java.io.File(base).list()
-    if (names == null) Seq.empty
-    else names.filter(_.startsWith("manifest-"))
-      .map(_.stripPrefix("manifest-").toInt).sorted.toSeq
-      .map(v => (v, java.nio.file.Files.readString(
-        java.nio.file.Paths.get(base, s"manifest-$v")).trim))
-  }
+  private[graft] def o23VersionsByListing(base: String): Seq[(Int, String)] =
+    TableLog.versions(base)
+      .map(v => (v, TableLog.read(base, TableLog.manifest(v)).trim))
 
   private[graft] def o23Latest(base: String): Int =
     o23Versions(base).lastOption.map(_._1).getOrElse(0)
@@ -1864,34 +1734,20 @@ object Warehouse {
   /** Fold the chain through `upTo` into `checkpoint-<upTo>`, then swap
     * the `_last_checkpoint` pointer. The checkpoint file is
     * content-deterministic (any writer folding the same chain writes
-    * the same bytes), so the createLink CAS ignores an EEXIST twin; the
-    * pointer swap is an atomic rename, last-writer-wins but MONOTONE
-    * (a stale checkpointer never moves it backward). `crashBeforePointer`
+    * the same bytes), so the create-if-absent ignores an existing twin;
+    * the pointer swap is [[TableLog.advancePointer]]'s atomic rename,
+    * MONOTONE (a stale checkpointer never moves it backward). `crashBeforePointer`
     * is the harness's injection point for the crash window between the
     * two steps — recovery is the reader's forward probe, pinned in
     * `ManifestCheckpointSpec`. */
   private[graft] def o23Checkpoint(base: String, upTo: Int,
       crashBeforePointer: Boolean = false): Unit = {
-    import java.nio.file.{Files, Paths, StandardCopyOption}
     val chain = o23Versions(base).takeWhile(_._1 <= upTo)
     require(chain.lastOption.exists(_._1 == upTo),
       s"o23: cannot checkpoint uncommitted version $upTo")
-    val body = chain.map { case (v, t) => s"$v:$t" }.mkString("\n")
-    val scratch = Paths.get(base, s".cp-$upTo")
-    Files.writeString(scratch, body)
-    try Files.createLink(Paths.get(base, s"checkpoint-$upTo"), scratch)
-    catch { case _: java.nio.file.FileAlreadyExistsException => () }
-    finally Files.deleteIfExists(scratch)
-    if (crashBeforePointer) return
-    val ptr = Paths.get(base, "_last_checkpoint")
-    val current =
-      if (Files.exists(ptr)) Files.readString(ptr).trim.toInt else 0
-    if (upTo > current) {
-      val pStage = Paths.get(base, s".ptr-$upTo")
-      Files.writeString(pStage, upTo.toString)
-      Files.move(pStage, ptr, StandardCopyOption.REPLACE_EXISTING,
-        StandardCopyOption.ATOMIC_MOVE)
-    }
+    TableLog.create(base, s"checkpoint-$upTo",
+      chain.map { case (v, t) => s"$v:$t" }.mkString("\n"))
+    if (!crashBeforePointer) TableLog.advancePointer(base, upTo)
   }
 
   /** Append one batch to an o23 log table (table = union of all
@@ -1985,11 +1841,10 @@ object Warehouse {
         val v = o23Publish(base, s"b$i")
         require(v == i, s"o23: append $i landed at version $v")
       }
-      import java.nio.file.{Files, Paths}
-      require(Files.readString(Paths.get(base, "_last_checkpoint")).trim == "15",
+      require(TableLog.read(base, TableLog.LastCheckpoint).trim == "15",
         "o23: the pointer must name the newest checkpoint")
       require(Seq(5, 10, 15).forall(v =>
-          Files.exists(Paths.get(base, s"checkpoint-$v"))),
+          TableLog.get(base, s"checkpoint-$v").isDefined),
         "o23: a checkpoint must fold every O23Interval commits")
       val opens = new O23Opens
       val chain = o23Versions(base, opens)
@@ -2218,33 +2073,18 @@ object Warehouse {
     df.write.mode("overwrite").parquet(s"$base/p-$part-$token")
   }
 
-  /** CAS-commit version `v` (the o16 createLink primitive): line 1 is
-    * `touched:<csv>`, each following line one `part=token` entry. The
-    * scratch name carries a per-attempt nonce — (version, touched)
-    * alone is NOT writer-unique: two writers with the SAME footprint
-    * racing the same version would share one scratch inode, and the
-    * loser's rewrite could hand the winner's hardlinked manifest a
-    * half-written or foreign body (the o16TryPublish completeness
-    * guarantee, kept here the same way: a name no other writer can
-    * touch). */
+  /** CAS-commit version `v` ([[TableLog.create]], the o16 primitive):
+    * line 1 is `touched:<csv>`, each following line one `part=token`
+    * entry. Two writers with the SAME footprint may race one version;
+    * each lands its own body or none. */
   private[graft] def o25Commit(base: String, v: Int, touched: Set[String],
-      entries: Map[String, String]): Boolean = {
-    import java.nio.file.{Files, Paths}
-    val body = s"touched:${touched.toSeq.sorted.mkString(",")}\n" +
-      entries.toSeq.sorted.map { case (p, t) => s"$p=$t" }.mkString("\n")
-    val nonce = java.util.UUID.randomUUID().toString.take(8)
-    val scratch = Paths.get(base, s".m25-$v-$nonce")
-    Files.writeString(scratch, body)
-    try { Files.createLink(Paths.get(base, s"manifest-$v"), scratch); true }
-    catch { case _: java.nio.file.FileAlreadyExistsException => false }
-    finally Files.deleteIfExists(scratch)
-  }
+      entries: Map[String, String]): Boolean =
+    TableLog.create(base, TableLog.manifest(v),
+      s"touched:${touched.toSeq.sorted.mkString(",")}\n" +
+        entries.toSeq.sorted.map { case (p, t) => s"$p=$t" }.mkString("\n"))
 
   private[graft] def o25SnapshotOf(base: String, v: Int): O25Snapshot = {
-    val m = java.nio.file.Paths.get(base, s"manifest-$v")
-    require(java.nio.file.Files.exists(m),
-      s"o25: version $v is not committed (no manifest-$v)")
-    val lines = java.nio.file.Files.readString(m).split("\n").toSeq
+    val lines = TableLog.read(base, TableLog.manifest(v)).split("\n").toSeq
     val touched = lines.head.stripPrefix("touched:").split(",")
       .filter(_.nonEmpty).toSet
     O25Snapshot(touched, lines.tail.filter(_.nonEmpty).map { l =>
@@ -2331,7 +2171,6 @@ object Warehouse {
     * semantic conflict re-pays derivation, and only for the
     * conflicted partitions. */
   def o25PartitionConflicts(s: SparkSession, d: String): DataFrame = {
-    import scala.jdk.CollectionConverters._
     val dir = java.nio.file.Files.createTempDirectory("graft_o25_")
     val base = dir.toString
     try {
@@ -2351,12 +2190,8 @@ object Warehouse {
         .withColumn("source", lit("requeued"))
       o25Stage(base, "fr", "b", bDf)
       def staged(part: String, token: String): Seq[(String, Long)] =
-        graft.Tables.listDir(
-            java.nio.file.Paths.get(base, s"p-$part-$token"))
-          .filter(p => java.nio.file.Files.isRegularFile(p) &&
-            !p.getFileName.toString.startsWith("_"))
-          .map(p => (p.toString, java.nio.file.Files.size(p)))
-          .sortBy(_._1)
+        TableLog.files(java.nio.file.Paths.get(base, s"p-$part-$token"),
+          TableLog.noMarkers)
       val bStaged = staged("fr", "b")
       // A wins v2; B's first CAS loses, classifies disjoint, rebases
       require(o25CommitDelta(base, 1, Set("de"), Map("de" -> "a"))
@@ -2437,13 +2272,12 @@ object Warehouse {
   private[graft] def o26Vacuum(base: String, retain: Int,
       minAgeMs: Long = 0L): (Seq[Int], Seq[String]) = {
     import java.nio.file.{Files, Paths}
-    val vs = Option(new java.io.File(base).list()).toSeq.flatten
-      .filter(_.startsWith("manifest-"))
-      .map(_.stripPrefix("manifest-").toInt).sorted
+    val vs = TableLog.versions(base)
     val keep = vs.takeRight(retain)
     val expired = vs.filterNot(keep.contains)
     // step 1: expired versions become unreadable BEFORE bytes move
-    expired.foreach(v => Files.deleteIfExists(Paths.get(base, s"manifest-$v")))
+    expired.foreach(v =>
+      Files.deleteIfExists(Paths.get(base, TableLog.manifest(v))))
     // step 2: live = every token a retained manifest names — data
     // tokens (primary + adds), the vector, every equality key file
     val live: Set[String] = keep.flatMap { v =>

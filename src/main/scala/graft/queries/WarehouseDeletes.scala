@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables._
+import graft.table.TableLog
 
 /** The two delete/write shapes that complete the o22 table's public
   * mechanism set (round-20 verdict asks #1 and #2):
@@ -33,16 +34,9 @@ object WarehouseDeletes {
 
   /** Every (path, size) under the table's data-* dirs — the
     * byte-identity probe the in-op requires compare. */
-  private def dataFiles(base: String): Seq[(String, Long)] = {
-    import scala.jdk.CollectionConverters._
-    java.nio.file.Files.walk(java.nio.file.Paths.get(base))
-      .iterator().asScala
-      .filter(p => java.nio.file.Files.isRegularFile(p) &&
-        p.toString.contains("/data-") &&
-        !p.getFileName.toString.startsWith("_"))
-      .map(p => (p.toString, java.nio.file.Files.size(p)))
-      .toSeq.sortBy(_._1)
-  }
+  private def dataFiles(base: String): Seq[(String, Long)] =
+    TableLog.files(java.nio.file.Paths.get(base),
+      p => p.toString.contains("/data-") && TableLog.noMarkers(p))
 
   // ---- O27: equality deletes (Iceberg v2, the CDC delete path) --------
 

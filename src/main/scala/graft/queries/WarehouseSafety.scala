@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables._
+import graft.table.TableLog
 
 /** The two safety compositions the round-19 verdict named (round-20
   * asks #3 and #4): retention must not strand the structures OTHER
@@ -66,7 +67,7 @@ object WarehouseSafety {
     *    pointer backward. */
   private[graft] def o29CheckpointVacuum(base: String,
       retain: Int, minAgeMs: Long = 0L): (Seq[Int], Seq[String]) = {
-    import java.nio.file.{Files, Paths, StandardCopyOption}
+    import java.nio.file.{Files, Paths}
     val floor = System.currentTimeMillis() - minAgeMs
     val chain = Warehouse.o23VersionsByListing(base)
     val keep = chain.takeRight(retain)
@@ -74,32 +75,17 @@ object WarehouseSafety {
     if (expired.nonEmpty) {
       // step 1: the checkpoint path flips to retained-only FIRST
       val m = keep.last._1
-      val body = keep.map { case (v, t) => s"$v:$t" }.mkString("\n")
-      val scratch = Paths.get(base, s".cp29-$m")
-      Files.writeString(scratch, body)
-      Files.move(scratch, Paths.get(base, s"checkpoint-$m"),
-        StandardCopyOption.REPLACE_EXISTING, StandardCopyOption.ATOMIC_MOVE)
+      TableLog.replace(base, s"checkpoint-$m",
+        keep.map { case (v, t) => s"$v:$t" }.mkString("\n"))
       // monotone pointer swap: never move _last_checkpoint backward
-      // past a concurrent appender's newer fold
-      val ptr = Paths.get(base, "_last_checkpoint")
-      val cur = if (Files.exists(ptr))
-        scala.util.Try(Files.readString(ptr).trim.toInt).getOrElse(0)
-      else 0
-      if (m >= cur) {
-        val pStage = Paths.get(base, s".ptr29-$m")
-        Files.writeString(pStage, m.toString)
-        Files.move(pStage, ptr,
-          StandardCopyOption.REPLACE_EXISTING, StandardCopyOption.ATOMIC_MOVE)
-      }
-      // retirement exempts BOTH this vacuum's fold (m) and whatever
-      // checkpoint `_last_checkpoint` resolves to right now: when the
-      // monotone guard above skipped the swap (a concurrent fold already
-      // advanced the pointer past m), deleting checkpoint-<cur> would
-      // leave the pointer dangling at a deleted file — the exact
-      // concurrency hole the three guards exist to close.
-      val ptrTarget = if (Files.exists(ptr))
-        scala.util.Try(Files.readString(ptr).trim.toInt).getOrElse(m)
-      else m
+      // past a concurrent appender's newer fold. Retirement exempts
+      // BOTH this vacuum's fold (m) and whatever checkpoint the pointer
+      // resolves to after the swap: when the monotone guard skipped it
+      // (a concurrent fold already advanced the pointer past m),
+      // deleting that checkpoint would leave the pointer dangling at a
+      // deleted file — the exact concurrency hole the three guards
+      // exist to close.
+      val ptrTarget = TableLog.advancePointer(base, m)
       Option(new java.io.File(base).listFiles()).toSeq.flatten
         .filter { f =>
           val nm = f.getName
@@ -111,7 +97,7 @@ object WarehouseSafety {
         .foreach(f => Files.deleteIfExists(f.toPath))
       // step 2: expired versions become unreadable
       expired.foreach { case (v, _) =>
-        Files.deleteIfExists(Paths.get(base, s"manifest-$v")) }
+        Files.deleteIfExists(Paths.get(base, TableLog.manifest(v))) }
     }
     // step 3: unreferenced tokens delete — age-floored (see scaladoc)
     val live = keep.map { case (_, t) => s"data-$t" }.toSet
@@ -150,7 +136,6 @@ object WarehouseSafety {
     val dir = java.nio.file.Files.createTempDirectory("graft_o29_")
     val base = dir.toString
     try {
-      import java.nio.file.{Files, Paths}
       val docs = documents(s, d).select(col("doc_id"), col("lang"))
       val n = 17
       // one clustered staging job for all 17 slices (the o23 harness
@@ -166,7 +151,7 @@ object WarehouseSafety {
         s"o29: expected to expire 1..12 and their tokens, " +
           s"got $expired / $debris")
       // no resolution path names an expired version
-      require(Files.readString(Paths.get(base, "_last_checkpoint")).trim
+      require(TableLog.read(base, TableLog.LastCheckpoint).trim
           == "17", "o29: the pointer must advance to the rewritten " +
           "checkpoint")
       val cps = Option(new java.io.File(base).list()).toSeq.flatten
@@ -174,7 +159,7 @@ object WarehouseSafety {
       require(cps == Seq("checkpoint-17"),
         s"o29: stale checkpoints must retire with their versions, " +
           s"got $cps")
-      require(Files.readString(Paths.get(base, "checkpoint-17"))
+      require(TableLog.read(base, "checkpoint-17")
           .linesIterator.toSeq.map(_.takeWhile(_ != ':').toInt)
           == (13 to 17),
         "o29: the rewritten checkpoint must fold exactly the retained " +
@@ -199,9 +184,9 @@ object WarehouseSafety {
             docs.filter(col("doc_id") % 3 === j)) == 18 + j,
           s"o29: post-vacuum append $j landed at the wrong version")
       }
-      require(Files.readString(Paths.get(base, "_last_checkpoint")).trim
+      require(TableLog.read(base, TableLog.LastCheckpoint).trim
           == "20", "o29: the post-vacuum fold must advance the pointer")
-      require(Files.readString(Paths.get(base, "checkpoint-20"))
+      require(TableLog.read(base, "checkpoint-20")
           .linesIterator.toSeq.map(_.takeWhile(_ != ':').toInt)
           == (13 to 20),
         "o29: the post-vacuum checkpoint must fold retained + new")
@@ -235,15 +220,10 @@ object WarehouseSafety {
   }
 
   /** The part files of one data token, as fileKeys. */
-  private def filesOf(base: String, token: String): Set[String] = {
-    import scala.jdk.CollectionConverters._
-    java.nio.file.Files.walk(java.nio.file.Paths.get(base, s"data-$token"))
-      .iterator().asScala
-      .filter(p => java.nio.file.Files.isRegularFile(p) &&
-        !p.getFileName.toString.startsWith("_") &&
-        p.toString.endsWith(".parquet"))
-      .map(p => fileKey(p.toString)).toSet
-  }
+  private def filesOf(base: String, token: String): Set[String] =
+    TableLog.files(java.nio.file.Paths.get(base, s"data-$token"),
+        p => TableLog.noMarkers(p) && p.toString.endsWith(".parquet"))
+      .map { case (p, _) => fileKey(p) }.toSet
 
   /** The FILE set commit `v` invalidated, derived from the commit
     * metadata alone (never a data scan):
@@ -446,12 +426,8 @@ object WarehouseSafety {
             col("__dv_pos").as("pos"))
           .coalesce(1).write.parquet(s"$base/dvdelta-$tok")
       def deltaBytes(tok: String): Seq[(String, Long)] =
-        graft.Tables.listDir(
-            java.nio.file.Paths.get(base, s"dvdelta-$tok"))
-          .filter(p => java.nio.file.Files.isRegularFile(p) &&
-            !p.getFileName.toString.startsWith("_"))
-          .map(p => (p.toString, java.nio.file.Files.size(p)))
-          .sortBy(_._1)
+        TableLog.files(java.nio.file.Paths.get(base, s"dvdelta-$tok"),
+          TableLog.noMarkers)
       val p1 = col("doc_id") % 4 === 0 && col("doc_id") % 5 === 0
       val p2 = col("doc_id") % 4 === 1 && col("doc_id") % 5 === 0
       val p3 = col("doc_id") % 4 === 2 && col("doc_id") % 7 === 0
@@ -569,7 +545,6 @@ object WarehouseSafety {
     val dir = java.nio.file.Files.createTempDirectory("graft_o32_")
     val base = dir.toString
     try {
-      import java.nio.file.{Files, Paths}
       val cust = customer(s, d).select(col("c_custkey").as("cust_id"),
         col("c_mktsegment").as("segment"), col("c_acctbal").as("bal"))
       Warehouse.o16Stage(base, "w0", cust.repartition(4))
@@ -602,7 +577,7 @@ object WarehouseSafety {
       // the corruption the gate prevents: the legacy grammar sees only
       // (token, dv) in v3's manifest — its read IS v2's row set, every
       // eq-deleted row resurrected
-      val legacyLines = Files.readString(Paths.get(base, "manifest-3"))
+      val legacyLines = TableLog.read(base, TableLog.manifest(3))
         .split("\n").map(_.trim).filter(_.nonEmpty)
       val legacyScan = Warehouse.o22ScanWithPos(s, base, legacyLines.head)
       val legacyDv = s.read.parquet(s"$base/dv-" + legacyLines
@@ -619,8 +594,8 @@ object WarehouseSafety {
         "o32: the legacy grammar must demonstrably resurrect the " +
           "eq-deleted rows — the silent corruption the gate prevents")
       // forward-compat: a future feature refuses against THIS reader
-      Files.writeString(Paths.get(base, "manifest-4"),
-        "w0\nminReader:3\nfutureFeature:x")
+      require(TableLog.create(base, TableLog.manifest(4),
+        "w0\nminReader:3\nfutureFeature:x"), "o32: the forged v4 create lost")
       val future = scala.util.Try(Warehouse.o22ManifestOf(base, 4))
       require(future.isFailure &&
           future.failed.get.getMessage.contains("protocol 3"),

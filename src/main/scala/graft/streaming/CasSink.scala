@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables._
 import graft.queries.Warehouse
+import graft.table.TableLog
 
 /** ST25 — exactly-once streaming INTO the o16 CAS snapshot table: the
   * public Delta-Lake streaming-sink shape (idempotent writes keyed by
@@ -33,19 +34,6 @@ import graft.queries.Warehouse
   */
 object CasSink {
 
-  /** The committed manifest versions of an o16 table (metadata-only:
-    * one directory listing). */
-  private def versions(base: String): Seq[Int] = {
-    val names = new java.io.File(base).list()
-    if (names == null) Seq.empty
-    else names.filter(_.startsWith("manifest-"))
-      .map(_.stripPrefix("manifest-").toInt).sorted.toSeq
-  }
-
-  private def tokenOf(base: String, v: Int): String =
-    java.nio.file.Files.readString(
-      java.nio.file.Paths.get(base, s"manifest-$v")).trim
-
   /** Is this stream's batch `bid` already committed? Tokens carry the
     * STREAM identity (`batch-<appId>-<bid>` — Delta's SetTransaction
     * (appId, version) keying), so N shards sharing one table never
@@ -57,7 +45,8 @@ object CasSink {
     * non-batch writers, malformed suffixes — are skipped, never
     * matched and never terminators. */
   private def committed(base: String, appId: String, bid: Long): Boolean =
-    versions(base).reverseIterator.map(v => tokenOf(base, v))
+    TableLog.versions(base).reverseIterator
+      .map(v => TableLog.read(base, TableLog.manifest(v)).trim)
       .collectFirst {
         case t if t == s"batch-$appId-$bid" => true
         case t if t.startsWith(s"batch-$appId-") &&
@@ -91,7 +80,7 @@ object CasSink {
   /** Read the table through the manifest chain: union of every
     * committed version's data, tagged with its version. */
   private[graft] def readLog(s: SparkSession, base: String): DataFrame =
-    versions(base)
+    TableLog.versions(base)
       .map(v => Warehouse.o16Read(s, base, v).withColumn("version", lit(v)))
       .reduce(_ unionByName _)
 
@@ -141,10 +130,10 @@ object CasSink {
           "(crashed-after-commit attempt + skipped replay)")
       // the log holds EXACTLY one version per batch — the replayed
       // batch 0 detected its own prior commit in the manifest chain
-      require(versions(base) == Seq(1, 2),
-        s"st25: expected versions {1,2}, got ${versions(base)}")
-      require(tokenOf(base, 1) == "batch-st25-0" &&
-          tokenOf(base, 2) == "batch-st25-1",
+      require(TableLog.versions(base) == Seq(1, 2),
+        s"st25: expected versions {1,2}, got ${TableLog.versions(base)}")
+      require(Seq(1, 2).map(v => TableLog.read(base, TableLog.manifest(v))
+          .trim) == Seq("batch-st25-0", "batch-st25-1"),
         "st25: version chain must map 1:1 onto (appId, batch) tokens")
       readLog(s, base)
         .groupBy(col("event_type"))

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables._
 import graft.queries.{Warehouse, WarehouseDeletes}
+import graft.table.TableLog
 
 /** ST29 — the streaming CDC DELETE writer (the o27×st16 composition the
   * r19 verdict motivated equality deletes with: "a streaming CDC writer
@@ -54,14 +55,8 @@ object CdcEqDelete {
       Warehouse.o16Stage(base, "w0", cust.repartition(4))
       require(Warehouse.o22Commit(base, 1, "w0", None),
         "st29: v1 commit failed")
-      def dataFiles(): Seq[(String, Long)] = {
-        import scala.jdk.CollectionConverters._
-        Files.walk(table).iterator().asScala
-          .filter(p => Files.isRegularFile(p) &&
-            p.toString.contains("/data-") &&
-            !p.getFileName.toString.startsWith("_"))
-          .map(p => (p.toString, Files.size(p))).toSeq.sortBy(_._1)
-      }
+      def dataFiles(): Seq[(String, Long)] = TableLog.files(table,
+        p => p.toString.contains("/data-") && TableLog.noMarkers(p))
       val before = dataFiles()
 
       val ev = events(s, d).select(col("event_id"), col("ts"),

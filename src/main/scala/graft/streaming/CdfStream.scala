@@ -74,43 +74,14 @@ object CdfStream {
         require(Warehouse.o16TryPublish(base, s"w$v", v - 1),
           s"st26: v$v commit failed")
         // manifests arrive as distinct micro-batches in commit order
-        java.nio.file.Files.setLastModifiedTime(
-          java.nio.file.Paths.get(base, s"manifest-$v"),
-          java.nio.file.attribute.FileTime.fromMillis(
-            System.currentTimeMillis() + v * 60000L))
+        ManifestFeed.stamp(base, v)
       }
       commit(1, v1)
       commit(2, graft.queries.Warehouse.o10Apply(
         Warehouse.o16Read(s, base, 1), o10ChangesFor(s, d)))
-      def runOnce(): Unit = {
-        val manifests = s.readStream
-          .option("pathGlobFilter", "manifest-*")
-          .option("maxFilesPerTrigger", "1")
-          .text(base)
-          .select(col("_metadata.file_path").as("path"))
-        run.catchUp(manifests.writeStream
-          .foreachBatch { (bdf: DataFrame, _: Long) =>
-            // driver-sized by construction: one row per LINE of a new
-            // manifest — single-line today, but `.distinct` keeps the
-            // version list one-per-commit if the format ever grows a
-            // line (the st27 discipline)
-            val vs = bdf.collect().map(_.getString(0)
-              .replaceAll(".*manifest-", "").toInt).distinct.sorted
-            // replay idempotence: a batch re-fired after a crash between
-            // the feed write and the checkpoint commit must not re-diff —
-            // the attempts ledger doubles as the processed-version set
-            val fed = tried.toSet
-            vs.filterNot(fed).foreach { v =>
-              // feed FIRST (idempotent per-version overwrite), ledger
-              // SECOND: ledger-first turned a crash in between into a
-              // permanently skipped version — silent feed loss
-              diffVersion(s, base, v, feedDir)
-              attempts.add(v)
-            }
-            ()
-          }
-          .option("checkpointLocation", run.dir.resolve("cp").toString))
-      }
+      def runOnce(): Unit =
+        ManifestFeed.consume(run, base, attempts)(
+          diffVersion(s, base, _, feedDir))
       runOnce()
       require(tried == Seq(1, 2),
         s"st26: run 1 must consume exactly v1,v2 in order — got $tried")

@@ -67,11 +67,7 @@ object DvFeedStream {
       def tried: Seq[Int] = attempts.entries.map(_.toInt)
       val docs = documents(s, d).select(col("doc_id"), col("lang"),
         col("source"))
-      def stamp(v: Int): Unit =
-        java.nio.file.Files.setLastModifiedTime(
-          java.nio.file.Paths.get(base, s"manifest-$v"),
-          java.nio.file.attribute.FileTime.fromMillis(
-            System.currentTimeMillis() + v * 60000L))
+      def stamp(v: Int): Unit = ManifestFeed.stamp(base, v)
       Warehouse.o16Stage(base, "w0", docs.repartition(4))
       require(Warehouse.o22Commit(base, 1, "w0", None),
         "st27: v1 commit failed")
@@ -79,38 +75,9 @@ object DvFeedStream {
       require(Warehouse.o22Delete(s, base, col("doc_id") % 10 === 3, "a") == 2,
         "st27: v2 delete landed at the wrong version")
       stamp(2)
-      def runOnce(): Unit = {
-        val manifests = s.readStream
-          .option("pathGlobFilter", "manifest-*")
-          .option("maxFilesPerTrigger", "1")
-          .text(base)
-          .select(col("_metadata.file_path").as("path"))
-        run.catchUp(manifests.writeStream
-          .foreachBatch { (bdf: DataFrame, _: Long) =>
-            // driver-sized by construction: one row per LINE of a new
-            // manifest — an o22 DV manifest is two lines, so the path
-            // list must dedupe or the version would feed twice
-            val vs = bdf.collect().map(_.getString(0)
-              .replaceAll(".*manifest-", "").toInt).distinct.sorted
-            // replay idempotence: a batch re-fired after a crash between
-            // the feed write and the checkpoint commit must not re-feed —
-            // the attempts ledger doubles as the processed-version set
-            val fed = tried.toSet
-            vs.filterNot(fed).foreach { v =>
-              // the st28 retention guard: an unread version vacuumed
-              // from under the consumer fails loudly, never skips
-              FeedRetention.requireNoGap(base, fed, v)
-              // feed FIRST (idempotent per-version overwrite), ledger
-              // SECOND: the old ledger-first order turned a crash in
-              // between into a permanently skipped version — silent
-              // feed loss
-              feedVersion(s, base, v, feedDir)
-              attempts.add(v)
-            }
-            ()
-          }
-          .option("checkpointLocation", run.dir.resolve("cp").toString))
-      }
+      def runOnce(): Unit =
+        ManifestFeed.consume(run, base, attempts)(
+          feedVersion(s, base, _, feedDir))
       runOnce()
       require(tried == Seq(1, 2),
         s"st27: run 1 must consume exactly v1,v2 in order — got $tried")

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables._
 import graft.queries.Warehouse
+import graft.table.TableLog
 
 /** ST28 — feed consumption ACROSS retention vacuums (round-20 verdict
   * ask #3b, the o26×st27 composition): a CDF consumer's unread tail
@@ -46,8 +47,8 @@ object FeedRetention {
       v: Int): Unit = {
     val maxFed = if (fed.isEmpty) 0 else fed.max
     ((maxFed + 1) until v).foreach { w =>
-      require(fed.contains(w) || java.nio.file.Files.exists(
-          java.nio.file.Paths.get(base, s"manifest-$w")),
+      require(fed.contains(w) ||
+          TableLog.get(base, TableLog.manifest(w)).isDefined,
         s"feed consumer: version $w was vacuumed before it was read — " +
           s"cannot resume at version $v; retention must outlast " +
           "consumer lag")
@@ -66,11 +67,7 @@ object FeedRetention {
       val attempts = run.ledger("attempts")
       val docs = documents(s, d).select(col("doc_id"), col("lang"),
         col("source"))
-      def stamp(v: Int): Unit =
-        java.nio.file.Files.setLastModifiedTime(
-          java.nio.file.Paths.get(base, s"manifest-$v"),
-          java.nio.file.attribute.FileTime.fromMillis(
-            System.currentTimeMillis() + v * 60000L))
+      def stamp(v: Int): Unit = ManifestFeed.stamp(base, v)
       Warehouse.o16Stage(base, "w0", docs.repartition(4))
       require(Warehouse.o22Commit(base, 1, "w0", None),
         "st28: v1 commit failed")
@@ -79,29 +76,10 @@ object FeedRetention {
         "st28: v2 delete landed at the wrong version")
       stamp(2)
       def fedSet(): Set[Int] = attempts.entries.map(_.toInt).toSet
-      def runOnce(): Unit = {
-        val manifests = s.readStream
-          .option("pathGlobFilter", "manifest-*")
-          .option("maxFilesPerTrigger", "1")
-          .text(base)
-          .select(col("_metadata.file_path").as("path"))
-        run.catchUp(manifests.writeStream
-          .foreachBatch { (bdf: DataFrame, _: Long) =>
-            val vs = bdf.collect().map(_.getString(0)
-              .replaceAll(".*manifest-", "").toInt).distinct.sorted
-            val fed = fedSet()
-            vs.filterNot(fed).foreach { v =>
-              // the retention guard — BEFORE the ledger or feed move
-              requireNoGap(base, fedSet(), v)
-              // feed FIRST (idempotent per-version overwrite), ledger
-              // SECOND — the st26/st27 crash-window discipline
-              DvFeedStream.feedVersion(s, base, v, feedDir)
-              attempts.add(v)
-            }
-            ()
-          }
-          .option("checkpointLocation", run.dir.resolve("cp").toString))
-      }
+      // the retention guard runs BEFORE the feed or ledger move
+      def runOnce(): Unit =
+        ManifestFeed.consume(run, base, attempts)(
+          DvFeedStream.feedVersion(s, base, _, feedDir))
       runOnce()
       require(fedSet() == Set(1, 2),
         s"st28: run 1 must consume v1,v2 — got ${fedSet()}")

@@ -33,7 +33,7 @@ class ShallowCloneSpec extends SparkSpecBase {
       Warehouse.o16Stage(a.toString, "a1",
         Seq((1L, "CHANGED"), (2L, "CHANGED")).toDF("doc_id", "lang"))
       assert(Warehouse.o16TryPublish(a.toString, "a1", 1))
-      val cloneLangs = Warehouse.o21Read(spark, b.toString, 1)
+      val cloneLangs = Warehouse.o16Read(spark, b.toString, 1)
         .orderBy("doc_id").collect().map(_.getString(1)).toSeq
       assert(cloneLangs == Seq("x", "y"),
         "the clone must keep serving the version it was cloned from")
@@ -53,7 +53,7 @@ class ShallowCloneSpec extends SparkSpecBase {
       org.apache.commons.io.FileUtils
         .deleteDirectory(a.resolve("data-a0").toFile)
       val failed =
-        try { Warehouse.o21Read(spark, b.toString, 1).count(); false }
+        try { Warehouse.o16Read(spark, b.toString, 1).count(); false }
         catch { case _: Exception => true }
       assert(failed,
         "a clone over vacuumed source data must fail loudly, not serve partial data")
