@@ -238,89 +238,35 @@ object Warehouse {
 
   // ---- O12: snapshot versioning + time travel -----------------------
 
-  private[graft] def o12Versions(base: String): Seq[Int] =
-    TableLog.get(base, "manifest").toSeq
-      .flatMap(_.trim.split(",")).filter(_.nonEmpty).map(_.toInt)
-
-  /** Monotonic version high-water mark: the largest version ever
-    * SUCCESSFULLY committed at `base` (persisted in a sibling file,
-    * swapped atomically after the manifest). o13's vacuum never
-    * touches it, so an expired version id can never be silently
-    * reused — a post-vacuum `VERSION AS OF n` either fails loudly or
-    * returns the data n always named, the immutability contract o12
-    * documents (reference table formats never reuse snapshot ids). */
-  private[graft] def o12Hwm(base: String): Option[Int] =
-    TableLog.get(base, "highwater").map(_.trim.toInt)
-
-  /** Commit `df` as version `v` of the snapshot table at `base`: data
-    * lands in a dot-prefixed staging dir (invisible to readers), is
-    * renamed to `v=N`, and becomes READABLE only when the manifest —
-    * swapped atomically, the a13/st9 discipline — lists N. A crash
-    * between data rename and manifest swap leaves debris a reader can
-    * never see; re-running the commit overwrites it. Version ids are
-    * MONOTONIC: `v` must exceed the effective high-water mark —
-    * max of the persisted [[o12Hwm]] and the live manifest's largest
-    * version — so a vacuum-expired id is never reused. The hwm file
-    * is written AFTER the manifest swap (writing it first would let a
-    * crash mark a never-committed version as used); the manifest max
-    * in the guard covers the crash window where the file lags one
-    * commit behind.
-    *
-    * SINGLE-WRITER assumption (commit + vacuum): the debris sweep
-    * below and o13Vacuum's manifest-absent directory deletion treat
-    * any unlisted `v=N` dir as crash debris. A CONCURRENT committer
-    * sitting between its data rename and manifest swap is
-    * indistinguishable from that debris and could have its dir
-    * deleted; the manifest swap itself is last-writer-wins, not CAS.
-    * One writer at a time (or an external lock around commit/vacuum)
-    * is the contract — the same discipline single-writer table
-    * formats document. */
+  /** Commit `df` as version `v` of the snapshot table at `base`, in the
+    * o16 layout: the data lands in a `data-<token>` dir whose token is
+    * new for every attempt (invisible to readers until a manifest names
+    * it), and the COMMIT POINT is the put-if-absent of `manifest-v`
+    * naming the token ([[o16TryPublish]]). Version ids are MONOTONIC:
+    * `v` must be above the newest committed manifest (the high-water
+    * mark; -1 for an empty table) when the commit starts. [[vacuum]]
+    * always keeps the newest manifest, so the mark never moves back
+    * and an expired id is never silently reused — a post-vacuum
+    * `VERSION AS OF n` either fails loudly or returns the data n always
+    * named (reference table formats never reuse snapshot ids).
+    * Concurrent committers are safe:
+    * racers at one version each stage their own token, exactly one
+    * create wins, and every loser fails loudly with a conflict. A crash
+    * anywhere leaves at most a token no manifest names — a re-run
+    * stages afresh and [[vacuum]] sweeps the orphan. */
   private[graft] def o12Commit(base: String, v: Int, df: DataFrame,
       keepLayout: Boolean = false): Unit = {
-    import java.nio.file.{Files, Paths}
-    // the effective mark is max(hwm file, live manifest): a crash
-    // between the manifest swap and the hwm swap leaves the FILE one
-    // commit stale, but the manifest still names the newer version —
-    // taking the max closes that window, so a subsequently vacuumed id
-    // is rejected even when the hwm file lags
-    val hwm = math.max(o12Hwm(base).getOrElse(-1),
-      (-1 +: o12Versions(base)).max)
-    require(v > hwm,
-      s"o12: version $v is not above the high-water mark $hwm — " +
-        "expired/committed ids are never reused")
-    val staging = Paths.get(base, s".v$v.staging")
+    val hwm = TableLog.versions(base).lastOption.getOrElse(-1)
+    require(v > hwm, s"o12: version $v is not above the high-water " +
+      s"mark $hwm — expired/committed ids are never reused")
+    val token = s"v$v-${java.util.UUID.randomUUID()}"
     // keepLayout preserves the frame's file layout (o15's OPTIMIZE
     // commits a deliberately-packed layout; the default single file
     // keeps the small verification snapshots tidy)
-    (if (keepLayout) df else df.coalesce(1))
-      .write.mode("overwrite").parquet(staging.toString)
-    val dataDir = Paths.get(base, s"v=$v")
-    // Crash window 2 recovery: a crash BETWEEN the data rename and the
-    // manifest swap leaves a `v=N` dir that no manifest lists. rename(2)
-    // onto a non-empty dir fails (ENOTEMPTY), so without this sweep the
-    // version could never be re-committed. A dataDir whose version is
-    // absent from the manifest is unreadable debris by construction
-    // (readers go strictly through the manifest) — delete and proceed.
-    if (Files.exists(dataDir) && !o12Versions(base).contains(v))
-      org.apache.commons.io.FileUtils.deleteDirectory(dataDir.toFile)
-    require(staging.toFile.renameTo(dataDir.toFile),
-      s"o12: data rename failed for version $v")
-    TableLog.replace(base, "manifest", (o12Versions(base) :+ v).mkString(","))
-    // hwm AFTER the swap: writing it first would let a crash mark a
-    // never-committed version as used and reject its own re-run
-    TableLog.replace(base, "highwater", math.max(v, hwm).toString)
-  }
-
-  /** Read the snapshot as of `v` — strictly through the manifest: a
-    * staged, half-renamed, or crashed-mid-commit version is invisible,
-    * and asking for it fails loudly instead of returning partial data. */
-  private[graft] def o12ReadAsOf(s: SparkSession, base: String,
-      v: Int): DataFrame = {
-    val committed = o12Versions(base)
-    require(committed.contains(v),
-      s"o12: version $v is not committed (manifest: " +
-        s"${committed.mkString(",")})")
-    s.read.parquet(s"$base/v=$v")
+    o16Stage(base, token, if (keepLayout) df else df.coalesce(1))
+    require(o16TryPublish(base, token, expected = v - 1),
+      s"o12: commit conflict at version $v — another writer committed " +
+        "it first")
   }
 
   /** O12 — snapshot time travel: the read-side contract the o10 merge
@@ -332,10 +278,11 @@ object Warehouse {
     * the oracle certifies immutability (v0 rows unchanged post-v1) and
     * lineage (v1 = merge(v0, changes)) in one hash. This is the
     * Delta/Iceberg `VERSION AS OF` mechanism built from primitives:
-    * version-addressed immutable data dirs + an atomically-swapped
-    * manifest as the commit point. `TimeTravelSpec` pins the
-    * operational edges (uncommitted reads fail loudly, staged debris
-    * is invisible, commits append monotonically).
+    * immutable token-named data dirs + one put-if-absent numbered
+    * manifest per version as the commit point. `TimeTravelSpec` pins
+    * the operational edges (uncommitted reads fail loudly, staged
+    * debris is invisible, commits append monotonically, racing
+    * commits at one version leave exactly one winner).
     *
     * Scale shape: at 100 TB time travel is what makes reprocessing and
     * audit possible without copying the table — a version is METADATA
@@ -351,10 +298,10 @@ object Warehouse {
         col("c_mktsegment").as("segment"), col("c_acctbal").as("bal"))
       o12Commit(dir.toString, 0, base)
       o12Commit(dir.toString, 1,
-        o10Apply(o12ReadAsOf(s, dir.toString, 0), o10Changes(s, d)))
-      o12ReadAsOf(s, dir.toString, 0).withColumn("version", lit(0))
+        o10Apply(o16Read(s, dir.toString, 0), o10Changes(s, d)))
+      o16Read(s, dir.toString, 0).withColumn("version", lit(0))
         .unionByName(
-          o12ReadAsOf(s, dir.toString, 1).withColumn("version", lit(1)))
+          o16Read(s, dir.toString, 1).withColumn("version", lit(1)))
         .orderBy("version", "cust_id")
         .localCheckpoint()
     } finally org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)
@@ -384,8 +331,8 @@ object Warehouse {
     * loop a13 + o12 leave open: a13 compacts a live directory IN
     * PLACE (its retire/rename dance exists because readers share the
     * path), while a snapshot table never needs that dance — the
-    * rewrite lands as ordinary committed data (`o12Commit`'s staging →
-    * rename → manifest swap), concurrent readers keep resolving the
+    * rewrite lands as ordinary committed data (`o12Commit`'s token
+    * staging → manifest create), concurrent readers keep resolving the
     * OLD version through the manifest for as long as retention keeps
     * it, and the optimized version is bit-identical in CONTENT (the
     * oracle certifies both versions under one hash; only the file
@@ -404,7 +351,8 @@ object Warehouse {
     * safe to run WHILE readers stream — the exact reason production
     * table formats fold OPTIMIZE into the snapshot log instead of
     * rewriting paths in place. File-count bounds are driver-side
-    * metadata (listStatus on one version dir), never a data scan.
+    * metadata (listStatus on the dir one manifest names), never a data
+    * scan.
     */
   def o15OptimizeSnapshot(s: SparkSession, d: String): DataFrame = {
     import org.apache.hadoop.fs.Path
@@ -421,9 +369,10 @@ object Warehouse {
     try {
       val fs = new Path(dir.toString)
         .getFileSystem(s.sparkContext.hadoopConfiguration)
-      def dataFiles(v: Int) = fs.listStatus(new Path(s"$dir/v=$v"))
-        .filter(st => st.isFile && !st.getPath.getName.startsWith("_") &&
-          !st.getPath.getName.startsWith("."))
+      def dataFiles(v: Int) =
+        fs.listStatus(new Path(o16DataDir(dir.toString, v)))
+          .filter(st => st.isFile && !st.getPath.getName.startsWith("_") &&
+            !st.getPath.getName.startsWith("."))
       def packBound(files: Array[org.apache.hadoop.fs.FileStatus]) =
         graft.sink.Compact.targetFileCount(
           files.map(_.getLen).sum, O15TargetBytes)
@@ -461,7 +410,7 @@ object Warehouse {
       // OPTIMIZE: read v0 strictly THROUGH the manifest, range-cluster
       // + bin-pack, commit as v1 — v0 stays readable and untouched
       o12Commit(dir.toString, 1,
-        o12ReadAsOf(s, dir.toString, 0)
+        o16Read(s, dir.toString, 0)
           .repartitionByRange(bound, col("doc_id"))
           .sortWithinPartitions("doc_id"),
         keepLayout = true)
@@ -471,9 +420,9 @@ object Warehouse {
       require(after.length < before.length,
         s"o15: optimize did not reduce files (${before.length} -> " +
           s"${after.length})")
-      o12ReadAsOf(s, dir.toString, 0).withColumn("version", lit(0))
+      o16Read(s, dir.toString, 0).withColumn("version", lit(0))
         .unionByName(
-          o12ReadAsOf(s, dir.toString, 1).withColumn("version", lit(1)))
+          o16Read(s, dir.toString, 1).withColumn("version", lit(1)))
         .orderBy("version", "doc_id")
         .localCheckpoint()
     } finally org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)
@@ -484,44 +433,100 @@ object Warehouse {
       |FROM (VALUES (0), (1)) AS v(version) CROSS JOIN documents d
       |ORDER BY version, doc_id""".stripMargin
 
-  // ---- O13: snapshot retention / vacuum ------------------------------
+  // ---- The one vacuum: retention for the whole table family ----------
 
-  /** Expire every version of the o12 snapshot table at `base` except
-    * the newest `retain`, returning the expired version ids. The
-    * deletion protocol is the o12 commit discipline INVERTED:
+  /** Expire every version at `base` except the newest `retain`, then
+    * delete what no retained version references. Returns (expired
+    * versions, deleted dirs), both ascending. This is the family's ONE
+    * vacuum — o12's per-version tokens, o22's shared tokens with
+    * vectors and equality files, o23's checkpointed logs — because the
+    * retained manifests are read through [[o22ManifestOf]], whose
+    * grammar accepts every body the family commits. The retained set is
+    * computed once; then, in the order that keeps every reader safe:
     *
-    *  1. swap the manifest down to the retained set FIRST (atomic
-    *     move) — from that instant a live-manifest reader can neither
-    *     resolve an expired version (o12ReadAsOf fails loudly) nor
-    *     observe its files mid-delete, because readers address files
-    *     only through the manifest;
-    *  2. physically delete expired `v=N` dirs AFTER the swap — a crash
-    *     anywhere in this phase leaves only manifest-absent debris;
-    *  3. sweep any other manifest-absent `v=N` dir (a crashed earlier
-    *     vacuum or commit), which makes re-running a crashed vacuum a
-    *     complete recovery and the whole operation idempotent.
+    *  1. if the table has a checkpoint, the checkpoint path flips to
+    *     retained-only FIRST: rewrite the checkpoint at the newest
+    *     retained version to fold only retained versions, advance the
+    *     pointer onto it ([[TableLog.advancePointer]]: never backward
+    *     past a concurrent appender's newer fold), and retire every
+    *     other checkpoint except the one the pointer names — all before
+    *     a manifest or a byte goes away (a stale checkpoint is an
+    *     alternate resolution path that would still name expired
+    *     versions);
+    *  2. unlink the expired manifests — from that instant an expired
+    *     version fails loudly on every path, before any byte moves;
+    *  3. delete every `data-`/`dv-`/`eq-` dir no retained manifest
+    *     names. Versions may SHARE a token (a DV delete commits a
+    *     vector, not a copy), so the live set is the union over the
+    *     retained manifests, never "the expired version's dir".
     *
-    * Scale shape: vacuum is metadata work + unlinks — one manifest
-    * write and O(expired) directory deletes; no data is read or
-    * rewritten, so retention on a 100 TB table costs the same as on a
-    * 100 MB one (modulo the object-store delete calls). The
-    * high-water mark file is deliberately NOT touched: expired ids
-    * stay burned forever ([[o12Commit]] rejects them). Step 3's sweep
-    * shares o12Commit's SINGLE-WRITER assumption (see there) — a
-    * concurrent mid-commit writer's dir is indistinguishable from
-    * crash debris.
-    */
-  private[graft] def o13Vacuum(base: String, retain: Int): Seq[Int] = {
-    val vs = o12Versions(base)
-    val keep = vs.sorted.takeRight(retain)
-    val expired = vs.filterNot(keep.contains)
-    if (expired.nonEmpty) TableLog.replace(base, "manifest", keep.mkString(","))
-    val live = o12Versions(base).toSet
-    val debris = Option(new java.io.File(base).listFiles()).toSeq.flatten
-      .filter(f => f.isDirectory && f.getName.startsWith("v="))
-      .filterNot(f => live.contains(f.getName.stripPrefix("v=").toInt))
-    debris.foreach(org.apache.commons.io.FileUtils.deleteDirectory)
-    expired.sorted
+    * A crash between any two steps completes on re-run; a completed
+    * run's re-run is a no-op. `retain` must be at least 1: the newest
+    * manifest always survives, so o12's high-water mark never moves
+    * back.
+    *
+    * `minAgeMs` is the retention window against CONCURRENT writers: a
+    * token staged but not yet committed is named by no manifest, and a
+    * fresh checkpoint may be an appender's fold the pointer is about to
+    * name; steps 1 and 3 leave candidates younger than the floor alone
+    * (Delta's `deletedFileRetentionDuration`, Iceberg's `older_than`),
+    * so an in-flight writer is safe while its stage → commit fits in
+    * the window. `DvVacuumSpec` (tokens) and `RetentionCheckpointSpec`
+    * (tokens and checkpoints) pin the floor; callers with provably no
+    * concurrent writers pass 0. Two vacuums of one table at once are
+    * out of scope (one maintenance job per table).
+    *
+    * The o21 caveat: a shallow clone references the SOURCE's tokens by
+    * path and this vacuum counts only THIS table's manifests, so
+    * vacuuming a cloned-from table can break its clones (the caveat
+    * Delta ships).
+    *
+    * Scale shape: expiry is O(expired) unlinks, the live set
+    * O(retained) manifest reads plus one listing, deletion the
+    * garbage's size — no data is read or rewritten, so retention on a
+    * 100 TB table costs the same as on a 100 MB one (modulo the
+    * object-store delete calls). */
+  private[graft] def vacuum(base: String, retain: Int,
+      minAgeMs: Long = 0L): (Seq[Int], Seq[String]) = {
+    import java.nio.file.{Files, Path, Paths}
+    require(retain >= 1, s"vacuum: retain must be at least 1, got " +
+      s"$retain — the newest version always stays")
+    val floor = System.currentTimeMillis() - minAgeMs
+    def aged(p: Path) = Files.getLastModifiedTime(p).toMillis <= floor
+    val vs = TableLog.versions(base)
+    val (expired, keep) = vs.splitAt(vs.length - retain)
+    val kept = keep.map(o22ManifestOf(base, _))
+    // step 1: the checkpoint path flips to retained-only first
+    val cps = TableLog.checkpoints(base)
+    if (expired.nonEmpty && cps.nonEmpty) {
+      TableLog.replace(base, TableLog.checkpoint(keep.last),
+        keep.zip(kept).map { case (v, m) => s"$v:${m.token}" }
+          .mkString("\n"))
+      // the pointer may name a concurrent appender's newer fold instead:
+      // retiring that one would leave the pointer dangling
+      val pointed = TableLog.advancePointer(base, keep.last)
+      cps.filterNot(Set(keep.last, pointed))
+        .map(c => Paths.get(base, TableLog.checkpoint(c))).filter(aged)
+        .foreach(Files.deleteIfExists)
+    }
+    // step 2: expired versions become unreadable before bytes move
+    expired.foreach(v =>
+      Files.deleteIfExists(Paths.get(base, TableLog.manifest(v))))
+    // step 3: live = every token a retained manifest names — data
+    // tokens (primary + adds), the vector, every equality key file
+    val live = kept.flatMap(m => m.dataTokens.map(t => s"data-$t") ++
+      m.dv.map(t => s"dv-$t") ++ m.eqs.map { case (t, _) => s"eq-$t" })
+      .toSet
+    val debris = graft.Tables.listDir(Paths.get(base))
+      .filter { p =>
+        val n = p.getFileName.toString
+        Seq("data-", "dv-", "eq-").exists(n.startsWith) && !live(n) &&
+          Files.isDirectory(p) && aged(p)
+      }
+      .sortBy(_.getFileName.toString)
+    debris.foreach(p =>
+      org.apache.commons.io.FileUtils.deleteDirectory(p.toFile))
+    (expired, debris.map(_.getFileName.toString))
   }
 
   /** O13 — retention/vacuum over the o12 snapshot table: build three
@@ -533,7 +538,7 @@ object Warehouse {
     * {0}, the manifest is exactly {1,2}, a `VERSION AS OF 0` read
     * fails loudly post-expiry, v0's files are physically gone, and an
     * immediate re-run expires nothing. `VacuumSpec` drives the crash
-    * windows (manifest swapped but files undeleted → reader already
+    * windows (manifest unlinked but files undeleted → reader already
     * fails loudly, re-run completes the delete) and the
     * retention-boundary edges.
     */
@@ -544,25 +549,26 @@ object Warehouse {
         col("c_mktsegment").as("segment"), col("c_acctbal").as("bal"))
       o12Commit(dir.toString, 0, base)
       o12Commit(dir.toString, 1,
-        o10Apply(o12ReadAsOf(s, dir.toString, 0), o10Changes(s, d)))
+        o10Apply(o16Read(s, dir.toString, 0), o10Changes(s, d)))
       o12Commit(dir.toString, 2,
-        o12ReadAsOf(s, dir.toString, 1)
+        o16Read(s, dir.toString, 1)
           .withColumn("bal", col("bal") + lit(1)))
-      val expired = o13Vacuum(dir.toString, 2)
+      val v0Dir = java.nio.file.Paths.get(o16DataDir(dir.toString, 0))
+      val (expired, _) = vacuum(dir.toString, 2)
       require(expired == Seq(0), s"o13: expected to expire {0}, got $expired")
-      require(o12Versions(dir.toString) == Seq(1, 2),
+      require(TableLog.versions(dir.toString) == Seq(1, 2),
         s"o13: manifest must retain exactly {1,2}")
       val stale =
-        try { o12ReadAsOf(s, dir.toString, 0); false }
+        try { o16Read(s, dir.toString, 0); false }
         catch { case _: IllegalArgumentException => true }
       require(stale, "o13: expired VERSION AS OF must fail loudly")
-      require(!java.nio.file.Files.exists(dir.resolve("v=0")),
+      require(!java.nio.file.Files.exists(v0Dir),
         "o13: expired version files must be physically deleted")
-      require(o13Vacuum(dir.toString, 2).isEmpty,
+      require(vacuum(dir.toString, 2)._1.isEmpty,
         "o13: immediate vacuum re-run must expire nothing")
-      o12ReadAsOf(s, dir.toString, 1).withColumn("version", lit(1))
+      o16Read(s, dir.toString, 1).withColumn("version", lit(1))
         .unionByName(
-          o12ReadAsOf(s, dir.toString, 2).withColumn("version", lit(2)))
+          o16Read(s, dir.toString, 2).withColumn("version", lit(2)))
         .orderBy("version", "cust_id")
         .localCheckpoint()
     } finally org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)
@@ -701,9 +707,8 @@ object Warehouse {
     * object-store PUT-if-absent shape): N racing writers all compute
     * "next version = latest + 1" and race the create; exactly one
     * wins, every loser gets a thrown conflict AT COMMIT TIME and can
-    * retry against the new table state. Closes the single-writer
-    * assumption o12/o13/o15 document (`o12Commit`'s manifest swap is
-    * last-writer-wins by construction).
+    * retry against the new table state. o12 (and with it o13, o15,
+    * o17, o20 and the e2e chains) commits through the same create.
     */
   private[graft] def o16Latest(base: String): Int = TableLog.latest(base)
 
@@ -755,13 +760,13 @@ object Warehouse {
       v: Int): DataFrame =
     s.read.parquet(o16DataDir(base, v))
 
-  private def o16DataDir(base: String, v: Int): String = {
+  private[graft] def o16DataDir(base: String, v: Int): String = {
     val token = TableLog.read(base, TableLog.manifest(v)).trim
     if (token.startsWith("/")) token else s"$base/data-$token"
   }
 
   /** O16 — optimistic commit-conflict detection, driven through a
-    * deterministic interleave of the race the o12 scaladoc forbids:
+    * deterministic interleave of a commit race:
     * an OPTIMIZE (o15's rewrite) racing an ingest append on the same
     * table.
     *
@@ -774,12 +779,12 @@ object Warehouse {
     *  4. B attempts its CAS at `manifest-2` → `EEXIST` → conflict
     *     DETECTED at commit time (required false below — a silent
     *     last-writer-wins here would have erased A's appends, the
-    *     exact lost-update the o12 contract warns about).
+    *     exact lost update a manifest swap would allow).
     *  5. B retries AGAINST THE NEW STATE: re-reads latest (2),
     *     re-derives the rewrite from v2's content — appends included —
     *     and commits v3. Nothing is lost; B's stale first staging
     *     (`data-optimize-1`) is unreachable orphan debris no manifest
-    *     names (production GC = o13's vacuum discipline).
+    *     names (production GC = [[vacuum]]).
     *
     * In-op requires: B's first publish fails, the retry wins, v3's
     * layout is at or under the bin-pack bound (strictly fewer files
@@ -905,8 +910,8 @@ object Warehouse {
       // ordinary data — v0 is untouched
       o12Commit(dir.toString, 1,
         documents(s, d).select(col("doc_id"), col("lang"), col("source")))
-      val v0 = o12ReadAsOf(s, dir.toString, 0)
-      val v1 = o12ReadAsOf(s, dir.toString, 1)
+      val v0 = o16Read(s, dir.toString, 0)
+      val v1 = o16Read(s, dir.toString, 1)
       require(v0.schema.fieldNames.toSeq == Seq("doc_id", "lang"),
         s"o17: time travel must be schema-faithful - v0 reads as " +
           s"(${v0.schema.fieldNames.mkString(",")})")
@@ -962,8 +967,8 @@ object Warehouse {
     * storage is shared until rows actually diverge — the entire reason
     * production teams clone instead of copy. (Delta documents the
     * operational caveat this inherits: vacuuming the SOURCE can orphan
-    * shallow clones — o13's manifest-absent sweep must never run on a
-    * table that has live clones, the same public caveat.)
+    * shallow clones — [[vacuum]] must never run on a table that has
+    * live clones, the same public caveat.)
     */
   def o21ShallowClone(s: SparkSession, d: String): DataFrame = {
     val dirA = java.nio.file.Files.createTempDirectory("graft_o21a_")
@@ -1085,9 +1090,9 @@ object Warehouse {
         col("c_mktsegment").as("segment"), col("c_acctbal").as("bal"))
       o12Commit(dir.toString, 0, base)
       o12Commit(dir.toString, 1,
-        o10Apply(o12ReadAsOf(s, dir.toString, 0), o10Changes(s, d)))
-      val v0 = o12ReadAsOf(s, dir.toString, 0)
-      val v1 = o12ReadAsOf(s, dir.toString, 1)
+        o10Apply(o16Read(s, dir.toString, 0), o10Changes(s, d)))
+      val v0 = o16Read(s, dir.toString, 0)
+      val v1 = o16Read(s, dir.toString, 1)
       val feed = o20Diff(v0, v1, "cust_id", Seq("segment", "bal"))
         .localCheckpoint()
       // the defining algebra: v0 + feed == v1, exactly
@@ -1698,20 +1703,24 @@ object Warehouse {
     * names (1 open) — the folded `v:token` map for every version up to
     * it — then probe FORWARD manifest-by-manifest for the tail
     * (1 open per commit since the checkpoint, +1 for the miss that
-    * ends the scan). Never a directory listing, so 10⁶ historical
-    * commits cost a reader exactly as much as 10. A missing/stale
-    * pointer (crash between checkpoint write and pointer swap, or a
-    * brand-new table) just lengthens the forward probe — correctness
-    * never depends on the pointer. */
+    * ends the scan). Past the first fold never a directory listing,
+    * so 10⁶ historical commits cost a reader exactly as much as 10. A
+    * stale pointer (crash between checkpoint write and pointer swap)
+    * just lengthens the forward probe. A table with no pointer yet
+    * (fewer than [[O23Interval]] commits) starts the probe at its
+    * oldest listed manifest: a [[vacuum]] before the first fold has
+    * unlinked `manifest-1`, and a probe from 1 would resolve an EMPTY
+    * chain and let [[o23Publish]] reuse an expired id. */
   private[graft] def o23Versions(base: String,
       opens: O23Opens = new O23Opens): Seq[(Int, String)] = {
     // pointer + the checkpoint it names: two opens when present
     val fromCp: Seq[(Int, String)] =
       TableLog.get(base, TableLog.LastCheckpoint).toSeq.flatMap { ptr =>
         opens.n += 2
-        o23ParseCp(TableLog.read(base, s"checkpoint-${ptr.trim.toInt}"))
+        o23ParseCp(TableLog.read(base, TableLog.checkpoint(ptr.trim.toInt)))
       }
-    val firstTail = fromCp.lastOption.map(_._1).getOrElse(0) + 1
+    val firstTail = fromCp.lastOption.map(_._1 + 1)
+      .getOrElse(TableLog.versions(base).headOption.getOrElse(1))
     // one probe per tail commit, plus the miss that ends the scan
     val tail = Iterator.from(firstTail).map { v =>
       opens.n += 1
@@ -1745,7 +1754,7 @@ object Warehouse {
     val chain = o23Versions(base).takeWhile(_._1 <= upTo)
     require(chain.lastOption.exists(_._1 == upTo),
       s"o23: cannot checkpoint uncommitted version $upTo")
-    TableLog.create(base, s"checkpoint-$upTo",
+    TableLog.create(base, TableLog.checkpoint(upTo),
       chain.map { case (v, t) => s"$v:$t" }.mkString("\n"))
     if (!crashBeforePointer) TableLog.advancePointer(base, upTo)
   }
@@ -1844,7 +1853,7 @@ object Warehouse {
       require(TableLog.read(base, TableLog.LastCheckpoint).trim == "15",
         "o23: the pointer must name the newest checkpoint")
       require(Seq(5, 10, 15).forall(v =>
-          TableLog.get(base, s"checkpoint-$v").isDefined),
+          TableLog.get(base, TableLog.checkpoint(v)).isDefined),
         "o23: a checkpoint must fold every O23Interval commits")
       val opens = new O23Opens
       val chain = o23Versions(base, opens)
@@ -2236,77 +2245,13 @@ object Warehouse {
       |WHERE NOT (lang = 'de' AND doc_id % 3 = 0)
       |ORDER BY doc_id""".stripMargin
 
-  // ---- O26: reference-counted vacuum for shared-token (DV) tables ------
-
-  /** Expire all but the newest `retain` versions, then delete exactly
-    * the files NO retained version references. Returns
-    * (expired versions, deleted token dirs).
-    *
-    * o13's vacuum unlinks per-VERSION directories — correct for o12
-    * layouts where each version owns its files, and silently wrong for
-    * o22 layouts where versions SHARE a data token (a DV delete commits
-    * a vector, not a copy): unlinking an expired version's "directory"
-    * would tear bytes out from under every retained read of the same
-    * token. The public semantics (Delta VACUUM / Iceberg
-    * expire_snapshots + remove_orphan_files): the live set is the
-    * union over RETAINED manifests of {data token, dv token};
-    * everything else is debris. Ordering is o13's: expired manifests
-    * unlink FIRST (a reader of an expired version fails loudly before
-    * any byte moves), then unreferenced tokens delete; a crash between
-    * the two completes on re-run — both steps are idempotent.
-    *
-    * The o21 caveat applies unchanged: a shallow clone references the
-    * SOURCE's tokens by path, and this vacuum counts only THIS table's
-    * manifests — vacuuming a cloned-from table can break clones, which
-    * is why o21 documents clone-then-vacuum as the loud operational
-    * hazard (the same caveat Delta ships).
-    *
-    * `minAgeMs` is the retention window against CONCURRENT writers: a
-    * token staged but not yet committed is named by NO manifest and
-    * would otherwise be classified as debris; skipping candidates
-    * younger than the floor (Delta's `deletedFileRetentionDuration` /
-    * Iceberg's `older_than` shape) keeps an in-flight writer's staging
-    * safe as long as stage→commit completes within the window.
-    * `VacuumRetentionSpec` pins the guard; callers with provably no
-    * concurrent writers may pass 0. */
-  private[graft] def o26Vacuum(base: String, retain: Int,
-      minAgeMs: Long = 0L): (Seq[Int], Seq[String]) = {
-    import java.nio.file.{Files, Paths}
-    val vs = TableLog.versions(base)
-    val keep = vs.takeRight(retain)
-    val expired = vs.filterNot(keep.contains)
-    // step 1: expired versions become unreadable BEFORE bytes move
-    expired.foreach(v =>
-      Files.deleteIfExists(Paths.get(base, TableLog.manifest(v))))
-    // step 2: live = every token a retained manifest names — data
-    // tokens (primary + adds), the vector, every equality key file
-    val live: Set[String] = keep.flatMap { v =>
-      val m = o22ManifestOf(base, v)
-      m.dataTokens.map(t => s"data-$t") ++ m.dv.map(t => s"dv-$t").toSeq ++
-        m.eqs.map { case (t, _) => s"eq-$t" }
-    }.toSet
-    // the age floor protects a CONCURRENT writer's staged-but-
-    // uncommitted token (the o16 protocol stages data before any
-    // manifest names it — a zero-floor vacuum racing an in-flight
-    // writer would destroy its staging and let the later CAS commit a
-    // manifest naming missing data; the public Delta/Iceberg
-    // retention-window guard)
-    val floor = System.currentTimeMillis() - minAgeMs
-    val debris = Option(new java.io.File(base).listFiles()).toSeq.flatten
-      .filter(f => f.isDirectory &&
-        (f.getName.startsWith("data-") || f.getName.startsWith("dv-") ||
-          f.getName.startsWith("eq-")) &&
-        !live.contains(f.getName) && f.lastModified() <= floor)
-      .sortBy(_.getName)
-    debris.foreach(org.apache.commons.io.FileUtils.deleteDirectory)
-    (expired, debris.map(_.getName))
-  }
+  // ---- O26: vacuum over a shared-token (DV) table --------------------
 
   /** O26 — retention vacuum over the deletion-vector table, reference-
     * counted (the o22×o13 composition): drives the o22 ladder (v1 =
     * corpus under token w0; v2/v3 = DV deletes SHARING w0; v4 =
-    * OPTIMIZE into w1), vacuums down to the newest two, and pins the
-    * shared-token contract o13 cannot express:
+    * OPTIMIZE into w1), vacuums down to the newest two through
+    * [[vacuum]], and pins the shared-token contract:
     *
     *  - expired versions (v1, v2) become unreadable, manifests-first;
     *  - **data-w0 SURVIVES** — v3 (retained) still references it; a
@@ -2338,7 +2283,7 @@ object Warehouse {
       o22Optimize(s, base, "w1")
       def dirExists(n: String) =
         java.nio.file.Files.isDirectory(dir.resolve(n))
-      val (expired, debris) = o26Vacuum(base, retain = 2)
+      val (expired, debris) = vacuum(base, retain = 2)
       require(expired == Seq(1, 2) && debris == Seq("dv-a"),
         s"o26: expected to expire {1,2} and delete only dv-a, " +
           s"got $expired / $debris")
@@ -2348,7 +2293,7 @@ object Warehouse {
       // expired versions fail loudly
       intercept22(s, base, 1); intercept22(s, base, 2)
       // idempotent: an immediate re-run finds nothing
-      require(o26Vacuum(base, retain = 2) == ((Seq(), Seq())),
+      require(vacuum(base, retain = 2) == ((Seq(), Seq())),
         "o26: a repeat vacuum must be a no-op")
       val out = Seq(3, 4).map(v =>
           o22Read(s, base, v).withColumn("version", lit(v)))
@@ -2357,7 +2302,7 @@ object Warehouse {
         .orderBy("version", "doc_id")
         .localCheckpoint()
       // retiring v3 retires the shared token and its vector together
-      val (e2, d2) = o26Vacuum(base, retain = 1)
+      val (e2, d2) = vacuum(base, retain = 1)
       require(e2 == Seq(3) && d2 == Seq("data-w0", "dv-b"),
         s"o26: expected v3's retirement to free w0+dv-b, got $e2 / $d2")
       require(o22Read(s, base, 4).count() == out.filter(col("version") === 4).count(),

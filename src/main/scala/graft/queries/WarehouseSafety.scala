@@ -10,13 +10,13 @@ import graft.table.TableLog
   * machinery resolves through, and conflict classification must reach
   * FILE granularity.
   *
-  *  - **o29 checkpoint-aware vacuum** — o26's vacuum over an
+  *  - **o29 checkpoint-aware vacuum** — a manifest-only vacuum over an
   *    o23-checkpointed log would unlink manifests and tokens while
   *    `checkpoint-N` / `_last_checkpoint` still resolve the expired
-  *    versions; the fix rewrites/advances the checkpoint BEFORE
-  *    anything becomes unreadable (the checkpoint is an alternate
-  *    resolution path — vacuuming data from under a stale one lets a
-  *    reader resolve missing tokens).
+  *    versions; [[Warehouse.vacuum]] rewrites/advances the checkpoint
+  *    BEFORE anything becomes unreadable (the checkpoint is an
+  *    alternate resolution path — vacuuming data from under a stale
+  *    one lets a reader resolve missing tokens).
   *  - **o30 file-level conflict classification** — o25 classifies at
   *    partition granularity; two DV deletes on DIFFERENT FILES of one
   *    unpartitioned table are disjoint work o25 cannot see. Each
@@ -29,85 +29,6 @@ import graft.table.TableLog
 object WarehouseSafety {
 
   // ---- O29: vacuum × checkpoint (retention safety, rung a) ------------
-
-  /** Vacuum an o23-checkpointed o16 LOG table (table = union of all
-    * committed versions) down to the newest `retain` versions, keeping
-    * every resolution path consistent at every step. Ordering:
-    *
-    *  1. REWRITE the checkpoint to fold only retained versions, swap
-    *     the pointer onto it, retire stale checkpoints — all BEFORE a
-    *     single manifest or byte goes away. A crash here leaves both
-    *     paths readable (listing still resolves everything; the new
-    *     checkpoint resolves the retained suffix).
-    *  2. Unlink expired manifests — expired versions become unreadable
-    *     by BOTH paths before bytes move (the o13/o26 discipline).
-    *  3. Delete the tokens no retained version references.
-    *
-    * A crash between any two steps completes on re-run; a completed
-    * run's re-run is a no-op. Single-maintenance-job semantics (like
-    * o26): concurrent vacuums are out of scope, concurrent readers and
-    * appenders are IN scope — an o23Append during any step keeps
-    * working because its CAS targets latest+1, its checkpoint fold
-    * reads through the (always-consistent) checkpoint path, and three
-    * race guards protect its artifacts (the o26 `minAgeMs` discipline,
-    * threaded through here per the r20 verdict — o23Append STAGES its
-    * token before its CAS, so a floorless sweep could destroy an
-    * in-flight writer's staging and let the later CAS commit a
-    * manifest naming missing data):
-    *
-    *  - step 3's debris sweep skips unreferenced tokens younger than
-    *    `minAgeMs` (a staged-but-uncommitted token is younger than any
-    *    sane retention window; real debris is old by definition);
-    *  - stale-checkpoint retirement keeps checkpoints younger than the
-    *    floor (a concurrent appender's fresh fold landing mid-step-1
-    *    must not vanish while the appender swaps the pointer onto it);
-    *  - the pointer swap is MONOTONE like o23Checkpoint's: if a
-    *    concurrent fold already advanced `_last_checkpoint` past this
-    *    vacuum's fold, the swap is skipped instead of moving the
-    *    pointer backward. */
-  private[graft] def o29CheckpointVacuum(base: String,
-      retain: Int, minAgeMs: Long = 0L): (Seq[Int], Seq[String]) = {
-    import java.nio.file.{Files, Paths}
-    val floor = System.currentTimeMillis() - minAgeMs
-    val chain = Warehouse.o23VersionsByListing(base)
-    val keep = chain.takeRight(retain)
-    val expired = chain.dropRight(retain)
-    if (expired.nonEmpty) {
-      // step 1: the checkpoint path flips to retained-only FIRST
-      val m = keep.last._1
-      TableLog.replace(base, s"checkpoint-$m",
-        keep.map { case (v, t) => s"$v:$t" }.mkString("\n"))
-      // monotone pointer swap: never move _last_checkpoint backward
-      // past a concurrent appender's newer fold. Retirement exempts
-      // BOTH this vacuum's fold (m) and whatever checkpoint the pointer
-      // resolves to after the swap: when the monotone guard skipped it
-      // (a concurrent fold already advanced the pointer past m),
-      // deleting that checkpoint would leave the pointer dangling at a
-      // deleted file — the exact concurrency hole the three guards
-      // exist to close.
-      val ptrTarget = TableLog.advancePointer(base, m)
-      Option(new java.io.File(base).listFiles()).toSeq.flatten
-        .filter { f =>
-          val nm = f.getName
-          nm.startsWith("checkpoint-") && {
-            val v = nm.stripPrefix("checkpoint-").toInt
-            v != m && v != ptrTarget && f.lastModified() <= floor
-          }
-        }
-        .foreach(f => Files.deleteIfExists(f.toPath))
-      // step 2: expired versions become unreadable
-      expired.foreach { case (v, _) =>
-        Files.deleteIfExists(Paths.get(base, TableLog.manifest(v))) }
-    }
-    // step 3: unreferenced tokens delete — age-floored (see scaladoc)
-    val live = keep.map { case (_, t) => s"data-$t" }.toSet
-    val debris = Option(new java.io.File(base).listFiles()).toSeq.flatten
-      .filter(f => f.isDirectory && f.getName.startsWith("data-") &&
-        !live.contains(f.getName) && f.lastModified() <= floor)
-      .sortBy(_.getName)
-    debris.foreach(org.apache.commons.io.FileUtils.deleteDirectory)
-    (expired.map(_._1), debris.map(_.getName))
-  }
 
   /** O29 — retention safety over the checkpointed log (round-20 verdict
     * ask #3a, the o26×o23 composition): drives 17 appends through the
@@ -145,7 +66,7 @@ object WarehouseSafety {
         require(Warehouse.o23Publish(base, s"b$i") == i,
           s"o29: append $i landed at the wrong version")
       }
-      val (expired, debris) = o29CheckpointVacuum(base, retain = 5)
+      val (expired, debris) = Warehouse.vacuum(base, retain = 5)
       require(expired == (1 to 12) &&
           debris.toSet == (1 to 12).map(i => s"data-b$i").toSet,
         s"o29: expected to expire 1..12 and their tokens, " +
@@ -154,9 +75,8 @@ object WarehouseSafety {
       require(TableLog.read(base, TableLog.LastCheckpoint).trim
           == "17", "o29: the pointer must advance to the rewritten " +
           "checkpoint")
-      val cps = Option(new java.io.File(base).list()).toSeq.flatten
-        .filter(_.startsWith("checkpoint-")).sorted
-      require(cps == Seq("checkpoint-17"),
+      val cps = TableLog.checkpoints(base)
+      require(cps == Seq(17),
         s"o29: stale checkpoints must retire with their versions, " +
           s"got $cps")
       require(TableLog.read(base, "checkpoint-17")
@@ -175,7 +95,7 @@ object WarehouseSafety {
       // expired fails loudly; idempotent re-run
       require(scala.util.Try(Warehouse.o16Read(s, base, 12)).isFailure,
         "o29: an expired version must be unreadable")
-      require(o29CheckpointVacuum(base, retain = 5) == ((Seq(), Seq())),
+      require(Warehouse.vacuum(base, retain = 5) == ((Seq(), Seq())),
         "o29: a repeat vacuum must be a no-op")
       // the log LIVES ON: three more appends, the writer's own fold
       // lands checkpoint-20 covering 13..20

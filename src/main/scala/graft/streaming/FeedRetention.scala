@@ -32,8 +32,8 @@ import graft.table.TableLog
   * under one hash.
   *
   * Scale shape: the guard is O(gap) metadata existence probes per
-  * batch — nothing rescans; the vacuum/feed costs are o26's and
-  * st27's unchanged.
+  * batch — nothing rescans; the vacuum/feed costs are
+  * `Warehouse.vacuum`'s and st27's unchanged.
   */
 object FeedRetention {
 
@@ -95,7 +95,7 @@ object FeedRetention {
       require(Warehouse.o22Optimize(s, base, "w1") == 4,
         "st28: v4 optimize landed at the wrong version")
       stamp(4)
-      val (expired, _) = Warehouse.o26Vacuum(base, retain = 3)
+      val (expired, _) = Warehouse.vacuum(base, retain = 3)
       require(expired == Seq(1),
         s"st28: the lag-safe vacuum must expire exactly v1 — " +
           s"got $expired")
@@ -128,7 +128,7 @@ object FeedRetention {
       require(Warehouse.o22Delete(s, base, col("doc_id") % 13 === 8, "e")
           == 6, "st28: v6 delete landed at the wrong version")
       stamp(6)
-      val (expired2, _) = Warehouse.o26Vacuum(base, retain = 1)
+      val (expired2, _) = Warehouse.vacuum(base, retain = 1)
       require(expired2 == Seq(2, 3, 4, 5),
         s"st28: the outrun vacuum must expire v2..v5 — got $expired2")
       val outrun = scala.util.Try(runOnce())

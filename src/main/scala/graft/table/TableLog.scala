@@ -35,10 +35,14 @@ object TableLog {
     * manifests (the streaming feed consumers' notification channel). */
   val ManifestGlob = "manifest-*"
 
+  /** The checkpoint folding the chain through version `v`. */
+  def checkpoint(v: Int): String = s"checkpoint-$v"
+
   /** The monotone pointer to the newest checkpoint. */
   val LastCheckpoint = "_last_checkpoint"
 
   private val Numbered = """manifest-(\d+)""".r
+  private val Checkpointed = """checkpoint-(\d+)""".r
 
   /** The version a numbered manifest's file name or path names. */
   def manifestVersion(path: String): Option[Int] =
@@ -112,14 +116,22 @@ object TableLog {
       s"requirement failed: version ${name.split('-').last} is not " +
         s"committed (no $name)"))
 
-  /** The committed numbered-manifest versions at `base`, ascending
-    * (one closed directory listing; empty if `base` does not exist). */
-  def versions(base: String): Seq[Int] = {
+  /** The versions of the files at `base` whose names match `named`,
+    * ascending (one closed directory listing; empty if `base` does not
+    * exist). */
+  private def numbered(base: String, named: scala.util.matching.Regex)
+      : Seq[Int] = {
     val dir = Paths.get(base)
     if (!Files.isDirectory(dir)) Seq.empty
-    else graft.Tables.listDir(dir)
-      .flatMap(p => manifestVersion(p.getFileName.toString)).sorted
+    else graft.Tables.listDir(dir).map(_.getFileName.toString)
+      .collect { case named(v) => v.toInt }.sorted
   }
+
+  /** The committed numbered-manifest versions at `base`, ascending. */
+  def versions(base: String): Seq[Int] = numbered(base, Numbered)
+
+  /** The versions the checkpoint files at `base` fold up to, ascending. */
+  def checkpoints(base: String): Seq[Int] = numbered(base, Checkpointed)
 
   /** The newest committed version, 0 for an empty table. */
   def latest(base: String): Int = versions(base).lastOption.getOrElse(0)

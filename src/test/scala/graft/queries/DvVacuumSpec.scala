@@ -3,7 +3,7 @@ package graft.queries
 import graft.SparkSpecBase
 import org.apache.spark.sql.functions._
 
-/** o26 — reference-counted vacuum for shared-token (DV) tables. The
+/** o26 — [[Warehouse.vacuum]] over shared-token (DV) tables. The
   * registered query drives the corpus ladder; this spec pins the
   * mechanism edges in isolation:
   *
@@ -14,7 +14,10 @@ import org.apache.spark.sql.functions._
   *    survives the crash and a re-run completes the delete, while the
   *    expired version already fails loudly (manifests-first ordering);
   *  - retention window edges: retain ≥ #versions is a no-op; retain=1
-  *    frees everything the last version doesn't name.
+  *    frees everything the last version doesn't name;
+  *  - the age floor: unreferenced `dv-`/`eq-` tokens younger than
+  *    `minAgeMs` (a concurrent writer's staging) survive, aged debris
+  *    goes.
   */
 class DvVacuumSpec extends SparkSpecBase {
 
@@ -34,13 +37,13 @@ class DvVacuumSpec extends SparkSpecBase {
     try {
       ladder(base)
       // retain {2,3}: v1 expires but v2 still names t0 — t0 must live
-      val (expired, debris) = Warehouse.o26Vacuum(base, 2)
+      val (expired, debris) = Warehouse.vacuum(base, 2)
       assert(expired == Seq(1) && debris == Seq())
       assert(java.nio.file.Files.isDirectory(dir.resolve("data-t0")))
       assert(Warehouse.o22Read(spark, base, 2).orderBy("k")
         .collect().map(_.getLong(0)).toSeq == Seq(1L, 3L))
       // retain {3}: now t0 AND dv0 are unreferenced
-      val (e2, d2) = Warehouse.o26Vacuum(base, 1)
+      val (e2, d2) = Warehouse.vacuum(base, 1)
       assert(e2 == Seq(2) && d2 == Seq("data-t0", "dv-dv0"))
       assert(Warehouse.o22Read(spark, base, 3).count() == 2)
     } finally org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)
@@ -59,7 +62,7 @@ class DvVacuumSpec extends SparkSpecBase {
       assert(scala.util.Try(Warehouse.o22Read(spark, base, 2)).isFailure,
         "an expired version must fail loudly even before bytes move")
       // the re-run finds no manifests to expire but completes the delete
-      val (expired, debris) = Warehouse.o26Vacuum(base, 1)
+      val (expired, debris) = Warehouse.vacuum(base, 1)
       assert(expired == Seq() && debris == Seq("data-t0", "dv-dv0"))
       assert(!java.nio.file.Files.exists(dir.resolve("data-t0")))
       assert(Warehouse.o22Read(spark, base, 3).count() == 2)
@@ -71,9 +74,35 @@ class DvVacuumSpec extends SparkSpecBase {
     val base = dir.toString
     try {
       ladder(base)
-      assert(Warehouse.o26Vacuum(base, 5) == ((Seq(), Seq())))
+      assert(Warehouse.vacuum(base, 5) == ((Seq(), Seq())))
       (1 to 3).foreach(v =>
         assert(scala.util.Try(Warehouse.o22Read(spark, base, v)).isSuccess))
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)
+  }
+
+  test("the age floor keeps fresh unreferenced dv- and eq- tokens, deletes aged debris") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graft_o26s_")
+    val base = dir.toString
+    try {
+      ladder(base)
+      // a concurrent deleter's staged vector and equality-key file: no
+      // manifest names them yet, and they are fresh
+      Seq(("f", 0L)).toDF("file_path", "pos").write
+        .parquet(s"$base/dv-fresh")
+      Seq(Tuple1(1L)).toDF("k").write.parquet(s"$base/eq-fresh")
+      // an orphan past the floor, and the tokens v1/v2 stop naming
+      Warehouse.o16Stage(base, "orphan", Seq(Tuple1(9L)).toDF("k"))
+      val old = System.currentTimeMillis() - 120000L
+      Seq("data-t0", "dv-dv0", "data-orphan")
+        .foreach(n => dir.resolve(n).toFile.setLastModified(old))
+      val (expired, debris) = Warehouse.vacuum(base, 1, minAgeMs = 60000L)
+      assert(expired == Seq(1, 2))
+      assert(debris == Seq("data-orphan", "data-t0", "dv-dv0"))
+      assert(java.nio.file.Files.isDirectory(dir.resolve("dv-fresh")) &&
+        java.nio.file.Files.isDirectory(dir.resolve("eq-fresh")),
+        "a fresh unreferenced token must survive the sweep")
+      assert(Warehouse.o22Read(spark, base, 3).count() == 2)
     } finally org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)
   }
 }

@@ -15,7 +15,8 @@ import graft.SparkSpecBase
   *    however many commits the checkpoint folded;
   *  - the pointer is monotone (a stale checkpointer never moves it
   *    backward);
-  *  - a brand-new table (no pointer) resolves by pure forward probing.
+  *  - a brand-new table (no pointer) resolves by forward probing from
+  *    its oldest manifest.
   */
 class ManifestCheckpointSpec extends SparkSpecBase {
 

@@ -3,15 +3,18 @@ package graft.queries
 import graft.SparkSpecBase
 import org.apache.spark.sql.functions._
 
-/** o29 — checkpoint-aware vacuum (the o26×o23 composition). The
-  * registered query drives the 17-append / vacuum / 3-append ladder;
-  * this spec pins the ordering and crash edges on a controlled log:
+/** o29 — [[Warehouse.vacuum]] over a checkpointed log (the o26×o23
+  * composition). The registered query drives the 17-append / vacuum /
+  * 3-append ladder; this spec pins the ordering and crash edges on a
+  * controlled log:
   *
   *  - after a vacuum NO resolution path (pointer, checkpoint, listing)
   *    names an expired version, and checkpoint-read ≡ listing-read;
   *  - the checkpoint rewrite happens BEFORE manifests unlink — a
   *    reader mid-vacuum never resolves a version whose data is gone;
   *  - a vacuum that expires nothing is a no-op;
+  *  - a vacuum before the first fold leaves the retained chain
+  *    resolvable, so no expired id is committed again;
   *  - the log keeps appending and checkpointing after a vacuum.
   */
 class RetentionCheckpointSpec extends SparkSpecBase {
@@ -31,7 +34,7 @@ class RetentionCheckpointSpec extends SparkSpecBase {
         assert(Warehouse.o23Append(base, s"t$i", slice(i)) == i))
       assert(Files.readString(Paths.get(base, "_last_checkpoint")).trim
         == "5")
-      val (expired, debris) = WarehouseSafety.o29CheckpointVacuum(base, 3)
+      val (expired, debris) = Warehouse.vacuum(base, 3)
       assert(expired == Seq(1, 2, 3, 4))
       assert(debris.toSet == Set("data-t1", "data-t2", "data-t3", "data-t4"))
       // the one remaining checkpoint covers exactly the retained chain
@@ -46,7 +49,7 @@ class RetentionCheckpointSpec extends SparkSpecBase {
       assert(opens.n == 3, "pointer + checkpoint + the probe miss")
       // expired fails loudly; repeat vacuum is a no-op
       assert(scala.util.Try(Warehouse.o16Read(spark, base, 2)).isFailure)
-      assert(WarehouseSafety.o29CheckpointVacuum(base, 3)
+      assert(Warehouse.vacuum(base, 3)
         == ((Seq(), Seq())))
       // the log lives on: append 8, 9, 10 — fold lands checkpoint-10
       (8 to 10).foreach(i =>
@@ -56,6 +59,29 @@ class RetentionCheckpointSpec extends SparkSpecBase {
       assert(Files.readString(Paths.get(base, "checkpoint-10"))
         .linesIterator.toSeq.map(_.takeWhile(_ != ':').toInt)
         == (5 to 10))
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)
+  }
+
+  test("a vacuum before the first fold keeps the retained chain resolvable and its ids unreused") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_o29s_")
+    val base = dir.toString
+    try {
+      // 3 appends: below O23Interval, so no checkpoint and no pointer
+      (1 to 3).foreach(i =>
+        assert(Warehouse.o23Append(base, s"t$i", slice(i)) == i))
+      assert(graft.table.TableLog.checkpoints(base).isEmpty)
+      val (expired, debris) = Warehouse.vacuum(base, 1)
+      assert(expired == Seq(1, 2))
+      assert(debris.toSet == Set("data-t1", "data-t2"))
+      // manifest-1 is gone: the reader must still find the retained
+      // chain, and the next append must not re-commit an expired id
+      assert(Warehouse.o23Versions(base) == Seq(3 -> "t3"))
+      assert(Warehouse.o23Versions(base) ==
+        Warehouse.o23VersionsByListing(base))
+      Warehouse.o16Stage(base, "t4", slice(4))
+      assert(Warehouse.o23Publish(base, "t4") == 4)
+      assert(Warehouse.o23VersionsByListing(base)
+        == Seq(3 -> "t3", 4 -> "t4"))
     } finally org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)
   }
 
@@ -78,7 +104,7 @@ class RetentionCheckpointSpec extends SparkSpecBase {
       Seq("data-t1", "data-t2", "data-t3", "data-t4", "data-orphan")
         .foreach(n => Paths.get(base, n).toFile.setLastModified(old))
       val (expired, debris) =
-        WarehouseSafety.o29CheckpointVacuum(base, 3, minAgeMs = 60000L)
+        Warehouse.vacuum(base, 3, minAgeMs = 60000L)
       assert(expired == Seq(1, 2, 3, 4))
       // old unreferenced tokens sweep; the fresh staging survives
       assert(debris.toSet == Set("data-t1", "data-t2", "data-t3",
@@ -110,7 +136,7 @@ class RetentionCheckpointSpec extends SparkSpecBase {
       Files.writeString(Paths.get(base, "checkpoint-11"),
         (1 to 7).map(v => s"$v:t$v").mkString("\n"))
       val (expired, _) =
-        WarehouseSafety.o29CheckpointVacuum(base, 5, minAgeMs = 60000L)
+        Warehouse.vacuum(base, 5, minAgeMs = 60000L)
       assert(expired == Seq(1, 2))
       assert(Files.readString(Paths.get(base, "_last_checkpoint")).trim
         == "11", "the pointer swap must be monotone")
@@ -133,7 +159,7 @@ class RetentionCheckpointSpec extends SparkSpecBase {
         java.nio.file.Paths.get(base, "checkpoint-5"))
       assert(cp5.linesIterator.toSeq.map(_.takeWhile(_ != ':').toInt)
         == (1 to 5), "precondition: the fold covers versions 1..5")
-      WarehouseSafety.o29CheckpointVacuum(base, 2)
+      Warehouse.vacuum(base, 2)
       // checkpoint-5 is gone; the new checkpoint names retained only
       assert(!java.nio.file.Files.exists(
         java.nio.file.Paths.get(base, "checkpoint-5")))

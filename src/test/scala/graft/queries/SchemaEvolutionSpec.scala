@@ -26,11 +26,11 @@ class SchemaEvolutionSpec extends SparkSpecBase {
         Seq((1L, "en", "cc")).toDF("doc_id", "lang", "source"))
       // the column is dropped again - narrowing is just another commit
       Warehouse.o12Commit(base, 2, Seq(Tuple1(1L)).toDF("doc_id"))
-      assert(Warehouse.o12ReadAsOf(spark, base, 0)
+      assert(Warehouse.o16Read(spark, base, 0)
         .schema.fieldNames.toSeq == Seq("doc_id", "lang"))
-      assert(Warehouse.o12ReadAsOf(spark, base, 1)
+      assert(Warehouse.o16Read(spark, base, 1)
         .schema.fieldNames.toSeq == Seq("doc_id", "lang", "source"))
-      assert(Warehouse.o12ReadAsOf(spark, base, 2)
+      assert(Warehouse.o16Read(spark, base, 2)
         .schema.fieldNames.toSeq == Seq("doc_id"))
     } finally org.apache.commons.io.FileUtils
       .deleteDirectory(new java.io.File(base))
@@ -43,12 +43,12 @@ class SchemaEvolutionSpec extends SparkSpecBase {
         Seq((1L, "en")).toDF("doc_id", "lang"))
       Warehouse.o12Commit(base, 1,
         Seq((1L, "en", "cc")).toDF("doc_id", "lang", "source"))
-      val expired = Warehouse.o13Vacuum(base, retain = 1)
+      val (expired, _) = Warehouse.vacuum(base, retain = 1)
       assert(expired == Seq(0))
-      val v1 = Warehouse.o12ReadAsOf(spark, base, 1)
+      val v1 = Warehouse.o16Read(spark, base, 1)
       assert(v1.schema.fieldNames.contains("source") && v1.count() == 1)
       val thrown = intercept[IllegalArgumentException] {
-        Warehouse.o12ReadAsOf(spark, base, 0)
+        Warehouse.o16Read(spark, base, 0)
       }
       assert(thrown.getMessage.contains("not committed"),
         "an expired pre-evolution version must fail loudly, never " +

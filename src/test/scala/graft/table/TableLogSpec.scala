@@ -25,26 +25,8 @@ class TableLogSpec extends AnyFunSuite {
     finally org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)
   }
 
-  /** Run `attempt(i)` for racers 0..n-1 on their own threads, released
-    * at once; returns each racer's result. A racer that throws fails
-    * the test. */
-  private def race[A](attempt: Int => A): Map[Int, A] = {
-    val gate = new CountDownLatch(1)
-    val results = new ConcurrentHashMap[Int, A]()
-    val failures = new ConcurrentLinkedQueue[Throwable]()
-    val threads = (0 until racers).map { i =>
-      new Thread(() => {
-        try { gate.await(); results.put(i, attempt(i)) }
-        catch { case t: Throwable => failures.add(t) }
-      })
-    }
-    threads.foreach(_.start())
-    gate.countDown()
-    threads.foreach(_.join(30000))
-    assert(failures.isEmpty, s"a racer threw: ${failures.peek()}")
-    assert(results.size == racers)
-    (0 until racers).map(i => i -> results.get(i)).toMap
-  }
+  private def race[A](attempt: Int => A): Map[Int, A] =
+    TableLogSpec.race(racers)(attempt)
 
   private def scratchLeft(dir: Path): Seq[String] =
     graft.Tables.listDir(dir).map(_.getFileName.toString)
@@ -155,5 +137,29 @@ class TableLogSpec extends AnyFunSuite {
       assert(TableLog.advancePointer(base, 15) == 15)
       assert(scratchLeft(dir).isEmpty)
     }
+  }
+}
+
+object TableLogSpec extends org.scalatest.Assertions {
+
+  /** Run `attempt(i)` for racers 0..n-1 on their own threads, released
+    * at once; returns each racer's result. A racer that throws fails
+    * the test (wrap an attempt that is meant to fail in a `Try`). */
+  def race[A](racers: Int)(attempt: Int => A): Map[Int, A] = {
+    val gate = new CountDownLatch(1)
+    val results = new ConcurrentHashMap[Int, A]()
+    val failures = new ConcurrentLinkedQueue[Throwable]()
+    val threads = (0 until racers).map { i =>
+      new Thread(() => {
+        try { gate.await(); results.put(i, attempt(i)) }
+        catch { case t: Throwable => failures.add(t) }
+      })
+    }
+    threads.foreach(_.start())
+    gate.countDown()
+    threads.foreach(_.join(30000))
+    assert(failures.isEmpty, s"a racer threw: ${failures.peek()}")
+    assert(results.size == racers)
+    (0 until racers).map(i => i -> results.get(i)).toMap
   }
 }
