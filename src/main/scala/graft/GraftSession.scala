@@ -6,6 +6,17 @@ import org.apache.spark.sql.SparkSession
   * uses, so their settings cannot drift apart. */
 object GraftSession {
 
+  /** Spark's generated-class cache size (`spark.sql.codegen.cache.maxEntries`,
+    * default 100): a JVM-wide static, read once from the active
+    * session's conf when the first class compiles. Entries are keyed by
+    * class loader and code, so a class compiled on the driver and in
+    * tasks takes two. One pass over all registered rows (`count()`,
+    * sf0.01) compiles 4,316 distinct classes and a second pass 1,083
+    * more (plans that embed per-run values); under 100 entries the
+    * second pass compiled 5,781 again. This size holds a whole pass
+    * plus its churn, at about 45 KB of heap per entry. */
+  val CodegenCacheEntries = 8192
+
   /** `local[cpus]` with:
     *  - `cpus` shuffle partitions;
     *  - UTC session time zone: the events TIMESTAMP_NTZ→TIMESTAMP
@@ -19,6 +30,7 @@ object GraftSession {
     *    visible on job failure) is irrelevant for these scratch-dir
     *    stagings and the standard choice for HDFS-like stores (object
     *    stores use dedicated committers instead);
+    *  - a generated-class cache of [[CodegenCacheEntries]] entries;
     *  - no UI.
     * `extra` settings are applied last and win.
     */
@@ -29,6 +41,8 @@ object GraftSession {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.hadoop.mapreduce.fileoutputcommitter.algorithm.version",
         "2")
+      .config("spark.sql.codegen.cache.maxEntries",
+        CodegenCacheEntries.toString)
       .config("spark.ui.enabled", "false")
     extra.foreach { case (k, v) => b.config(k, v) }
     b.getOrCreate()

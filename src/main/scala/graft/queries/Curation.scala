@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables._
 
@@ -323,8 +323,7 @@ object Curation {
     * predicate, unordered — used by the registered query and the
     * scale-headroom measurement.
     */
-  def decontaminateOf(sets: DataFrame,
-      isBench: org.apache.spark.sql.Column): DataFrame = {
+  def decontaminateOf(sets: DataFrame, isBench: Column): DataFrame = {
     val bench = sets.filter(isBench)
       .select(col("doc_id").as("bench_doc"),
         size(col("shingles")).as("bench_n"),
@@ -406,29 +405,36 @@ object Curation {
     * stitching).
     *
     * Spark-first shape: d14's positional-gram machinery two-sided —
-    * one K-gram generator pass per doc, a broadcast SEMI-JOIN against
-    * the bench gram set FIRST (a train gram absent from the bounded
-    * bench side can never collide, so everything downstream sees only
-    * the tiny surviving stream), then df-capped TRAIN postings over
-    * the survivors (a boilerplate gram must not pair every training
-    * doc with every bench doc containing it — the d2 cap-and-forfeit
-    * discipline, here df = distinct training DOCS), broadcast bench
-    * side (eval sets are thousands of docs, not billions), diagonal
-    * run stitching (gaps-and-islands per (train, bench, pt−pb) —
-    * thousands of small window partitions, never a global sort).
+    * the eval side built once ([[C11Bench]]: eval sets are thousands of
+    * docs, not billions), one K-gram pass over the train stream, a
+    * broadcast SEMI-JOIN against the bench gram set FIRST (a train gram
+    * absent from the bench side can never collide), then df-capped
+    * TRAIN postings over the survivors (a boilerplate gram must not
+    * pair every training doc with every bench doc containing it — the
+    * d2 cap-and-forfeit discipline, here df = distinct training DOCS),
+    * diagonal run stitching (gaps-and-islands per (train, bench, pt−pb)
+    * — thousands of small window partitions, never a global sort).
     *
-    * Scale shape: grams are corpus-linear and the bench semi-join is
-    * map-side, so the FULL train gram stream is never shuffled — the
-    * only exchanges key the post-semi-join survivors (df cap, run
-    * stitching, per-pair aggregation; all map-side combined or
-    * candidate-sized). At 100 TB the gram string becomes a 64-bit
+    * Scale shape: the FULL train gram stream is never shuffled — the
+    * only exchanges key the semi-join survivors (df cap, run stitching,
+    * per-pair aggregation). At 100 TB the gram string becomes a 64-bit
     * fingerprint (the d14 note — cross-engine-exact hashing is the
     * only reason the string survives here).
     */
   def c11SubstringDecontam(s: SparkSession, d: String): DataFrame = {
-    val corpus = c11Corpus(documents(s, d).select(col("doc_id"), col("text")))
-    c11Of(corpus, col("doc_id") % 25 === 0 && col("doc_id") < 1000000L)
-      .orderBy("train_doc", "bench_doc")
+    val (bench, train) = c11Sides(s, d)
+    c11Of(bench, train).orderBy("train_doc", "bench_doc")
+  }
+
+  private[graft] val C11IsBench =
+    col("doc_id") % 25 === 0 && col("doc_id") < 1000000L
+
+  /** The eval side and the train stream of the quote-injected corpus
+    * over `d`'s documents. Plants carry ids ≥ 2,000,000, never bench,
+    * so only the train stream runs [[c11Corpus]]'s plant joins. */
+  private[graft] def c11Sides(s: SparkSession, d: String): (C11Bench, DataFrame) = {
+    val docs = documents(s, d).select(col("doc_id"), col("text"))
+    (new C11Bench(docs.filter(C11IsBench)), c11Corpus(docs).filter(!C11IsBench))
   }
 
   /** The quote-injected corpus: base docs ∪ host-doc-plus-bench-quote
@@ -453,60 +459,66 @@ object Curation {
       .unionByName(planted(48, 20, 3000000L))
   }
 
+  /** The eval side of the collision family, built eagerly and once:
+    * the bench docs, their positional grams `(bench_doc, pb, gram)`
+    * and the distinct gram set. Each is eval-set-sized, so each is a
+    * small localCheckpoint, and a frame built on them reaches no plan
+    * of the corpus. Shared by c11, c12 and st21's streaming gate. */
+  private[graft] final class C11Bench(bench: DataFrame) {
+    val docs: DataFrame = bench.select("doc_id", "text").localCheckpoint()
+    val grams: DataFrame = c11GramsOf(docs)
+      .select(col("doc_id").as("bench_doc"), col("pos").as("pb"), col("gram"))
+      .localCheckpoint()
+    val gramSet: DataFrame = grams.select("gram").distinct().localCheckpoint()
+  }
+
   /** The c11 collision core over any (doc_id, text) corpus and bench
     * predicate — d14's diagonal stitching with the two-sided split. */
-  private[graft] def c11Of(corpus: DataFrame,
-      isBench: org.apache.spark.sql.Column): DataFrame =
-    c11RunsOf(corpus, isBench)
+  private[graft] def c11Of(corpus: DataFrame, isBench: Column): DataFrame =
+    c11Of(new C11Bench(corpus.filter(isBench)), corpus.filter(!isBench))
+
+  private[graft] def c11Of(bench: C11Bench, train: DataFrame): DataFrame =
+    c11RunsOf(c11CandOf(train, bench), bench)
       .groupBy("train_doc", "bench_doc")
       .agg(count(lit(1)).as("n_runs"), max(col("run_len")).as("max_run"),
         sum(col("run_len") - lit(C11K - 1)).cast("long").as("n_hits"))
 
   /** The positional [[C11K]]-gram generator alone — shared with st21's
     * streaming membership gate (one map-side pass, no exchange). */
-  private[graft] def c11GramsOf(corpus: DataFrame): DataFrame = {
-    val k = C11K
+  private[graft] def c11GramsOf(corpus: DataFrame): DataFrame =
     corpus
       .select(col("doc_id"), split(col("text"), "\\s+").as("w"))
-      .filter(size(col("w")) >= k)
+      .filter(size(col("w")) >= C11K)
       .select(col("doc_id"), posexplode(expr(
-        s"transform(sequence(1, size(w) - ${k - 1}), " +
-          s"i -> array_join(slice(w, i, $k), ' '))"))
+        s"transform(sequence(1, size(w) - ${C11K - 1}), " +
+          s"i -> array_join(slice(w, i, $C11K), ' '))"))
         .as(Seq("pos", "gram")))
-  }
+
+  /** The collision candidates `(train_doc, pt, gram)`: the train gram
+    * stream pruned map-side by the broadcast bench gram set. */
+  private[graft] def c11CandOf(train: DataFrame, bench: C11Bench): DataFrame =
+    c11GramsOf(train)
+      .select(col("doc_id").as("train_doc"), col("pos").as("pt"), col("gram"))
+      .join(broadcast(bench.gramSet), Seq("gram"), "left_semi")
 
   /** The stitched-run relation under c11's collision machinery: one row
     * per maximal shared ≥[[C11K]]-token run, with the run's length and
     * its starting gram position on the BENCH side (`pb_start` — what
     * [[c12Of]]'s coverage merge consumes; positions are engine-internal
     * 0-/1-based and only ever used shift-invariantly). */
-  private[graft] def c11RunsOf(corpus: DataFrame,
-      isBench: org.apache.spark.sql.Column): DataFrame = {
+  private[graft] def c11RunsOf(cand: DataFrame, bench: C11Bench): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val k = C11K
-    val grams = c11GramsOf(corpus)
-    val benchG = grams.filter(isBench)
-      .select(col("doc_id").as("bench_doc"), col("pos").as("pb"), col("gram"))
-    val trainG = grams.filter(!isBench)
-      .select(col("doc_id").as("train_doc"), col("pos").as("pt"), col("gram"))
-    // bench semi-join FIRST: the bench gram set is bounded (eval-set
-    // sized), so broadcasting it prunes the corpus-sized train stream
-    // map-side BEFORE any train-keyed exchange — the df cap then
-    // aggregates only the surviving grams (per-gram counts are
-    // unchanged by the pruning: dropping grams that appear in no
-    // bench doc cannot change any surviving gram's df)
-    val cand = trainG.join(broadcast(benchG.select("gram").distinct()),
-      Seq("gram"), "left_semi")
+    // the df cap counts only semi-join survivors: dropping grams that
+    // appear in no bench doc cannot change any surviving gram's df
     val keep = cand.groupBy("gram")
       .agg(countDistinct(col("train_doc")).as("df"))
       .filter(col("df") <= 100).select("gram")
-    val hits = cand.join(keep, "gram").join(broadcast(benchG), "gram")
-    hits
+    cand.join(keep, "gram").join(broadcast(bench.grams), "gram")
       .withColumn("diag", col("pt") - col("pb"))
       .withColumn("grp", col("pt") - row_number().over(
         Window.partitionBy("train_doc", "bench_doc", "diag").orderBy("pt")))
       .groupBy("train_doc", "bench_doc", "diag", "grp")
-      .agg((count(lit(1)) + lit(k - 1)).cast("long").as("run_len"),
+      .agg((count(lit(1)) + lit(C11K - 1)).cast("long").as("run_len"),
         min(col("pb")).cast("long").as("pb_start"))
   }
 
@@ -596,27 +608,30 @@ object Curation {
     * all-clear, not an absence. `contam_ppm` stays in integers
     * (floor parts-per-million) — the c8/uq6 cross-engine discipline.
     *
-    * Scale shape: everything data-sized is inherited from c11 (the
-    * broadcast bench semi-join bounds the collision work map-side);
-    * the merge windows partition by bench doc over the candidate-sized
-    * run relation — thousands of small partitions, never a global
-    * sort. Output is eval-set-sized by construction.
+    * Scale shape: c11's collision work, with its candidates and runs
+    * (two consumers each) localCheckpointed: the corpus is gram-exploded
+    * once per call and the returned frame reaches no gram-keyed
+    * broadcast. The merge windows partition by bench doc over the
+    * candidate-sized run relation — thousands of small partitions,
+    * never a global sort. Output is eval-set-sized by construction.
     */
   def c12ContaminationReport(s: SparkSession, d: String): DataFrame = {
-    val corpus = c11Corpus(documents(s, d).select(col("doc_id"), col("text")))
-    c12Of(corpus, col("doc_id") % 25 === 0 && col("doc_id") < 1000000L)
-      .orderBy("bench_doc")
+    val (bench, train) = c11Sides(s, d)
+    c12Of(bench, train).orderBy("bench_doc")
   }
 
   /** The c12 coverage core over any (doc_id, text) corpus and bench
     * predicate — c11's run relation merged into per-bench-doc token
     * coverage. */
-  private[graft] def c12Of(corpus: DataFrame,
-      isBench: org.apache.spark.sql.Column): DataFrame = {
+  private[graft] def c12Of(corpus: DataFrame, isBench: Column): DataFrame =
+    c12Of(new C11Bench(corpus.filter(isBench)), corpus.filter(!isBench))
+
+  private[graft] def c12Of(bench: C11Bench, train: DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val runs = c11RunsOf(corpus, isBench)
+    val runs = c11RunsOf(c11CandOf(train, bench).localCheckpoint(), bench)
       .select(col("train_doc"), col("bench_doc"), col("run_len"),
         col("pb_start"), (col("pb_start") + col("run_len")).as("pb_end"))
+      .localCheckpoint()
     val w = Window.partitionBy("bench_doc")
       .orderBy(col("pb_start"), col("pb_end"))
     val islanded = runs
@@ -633,10 +648,9 @@ object Curation {
     val stats = runs.groupBy(col("bench_doc"))
       .agg(countDistinct(col("train_doc")).as("n_train_docs"),
         count(lit(1)).as("n_runs"), max(col("run_len")).as("max_run"))
-    val bench = corpus.filter(isBench)
-      .select(col("doc_id").as("bench_doc"),
+    bench.docs.select(col("doc_id").as("bench_doc"),
         size(split(col("text"), "\\s+")).cast("long").as("bench_tokens"))
-    bench.join(stats, Seq("bench_doc"), "left")
+      .join(stats, Seq("bench_doc"), "left")
       .join(cov, Seq("bench_doc"), "left")
       .select(col("bench_doc"),
         coalesce(col("n_train_docs"), lit(0L)).as("n_train_docs"),
@@ -776,7 +790,7 @@ object Curation {
   /** The corpus → hashed-bucket feature stream ([[c13ScoredStage]]'s
     * data side; exposed with it for the plan pin). */
   private[graft] def c13FeatureStream(docs: DataFrame,
-      isTarget: org.apache.spark.sql.Column): DataFrame = {
+      isTarget: Column): DataFrame = {
     val toks = docs.select(col("doc_id"), col("lang"),
         expr("filter(split(trim(text), '\\\\s+'), x -> length(x) > 0)")
           .as("w"), isTarget.as("is_target"))
@@ -797,8 +811,7 @@ object Curation {
     * predicate — also the scale-headroom entry point (a frozen target
     * slice keeps the p-side counts constant under enlargement, the t15
     * reasoning). */
-  private[graft] def c13Of(docs: DataFrame,
-      isTarget: org.apache.spark.sql.Column): DataFrame = {
+  private[graft] def c13Of(docs: DataFrame, isTarget: Column): DataFrame = {
     val (model, scoredCalib) = c13Freeze(docs, isTarget)
     c13LabelScored(scoredCalib, model).orderBy("doc_id")
   }
@@ -814,7 +827,7 @@ object Curation {
     * calibration relation so the batch path labels it without a second
     * scoring pass. */
   private[graft] def c13Freeze(docs: DataFrame,
-      isTarget: org.apache.spark.sql.Column): (C13Model, DataFrame) = {
+      isTarget: Column): (C13Model, DataFrame) = {
     val b = C13Buckets
     val fb = c13FeatureStream(docs, isTarget)
     // BOTH distributions from ONE map-side-combined corpus scan (the
@@ -858,8 +871,7 @@ object Curation {
     * own envelope the score never sits below qmin and the clamp is a
     * no-op — [[c13Of]]'s results are bit-identical to the pre-factored
     * form. */
-  private[graft] def c13Bin(logw: org.apache.spark.sql.Column,
-      qmin: Long, width: Double): org.apache.spark.sql.Column =
+  private[graft] def c13Bin(logw: Column, qmin: Long, width: Double): Column =
     least(lit(C13Bins - 1), greatest(lit(0),
       floor((logw - lit(qmin)) / lit(width)).cast("int")))
 
@@ -962,7 +974,7 @@ object Curation {
     * thousands-of-strata table would add nothing here).
     */
   def c5StratifiedSample(s: SparkSession, d: String): DataFrame = {
-    val rate = sampleRates.foldRight(lit(defaultRate): org.apache.spark.sql.Column) {
+    val rate = sampleRates.foldRight(lit(defaultRate): Column) {
       case ((l, r), acc) => when(col("lang") === l, lit(r)).otherwise(acc)
     }
     documents(s, d)

@@ -25,32 +25,19 @@ import org.apache.spark.sql.functions._
   * lesson: state in files, not stream state — here there is no state
   * at all).
   *
-  * Scale shape per batch: gram explosion is map-side; the membership
-  * join is a broadcast hash semi-join (bench grams are eval-set
-  * bounded); the per-doc count is a doc-keyed map-side-combinable
-  * aggregation within the batch. At 100 TB of crawl this is the same
-  * per-batch plan at any history length — the contrast with c11's
-  * batch run is WHEN the gate runs, not what it costs. At production
-  * eval-set sizes the broadcast gram set is the d14 note's 64-bit
-  * fingerprint, not the string.
+  * Scale shape per batch: [[gateRelation]]'s map-side plan, the same
+  * at any history length — the contrast with c11's batch run is WHEN
+  * the gate runs, not what it costs. At production eval-set sizes the
+  * broadcast gram set is the d14 note's 64-bit fingerprint.
   */
 object StreamDecontam {
 
   def st21StreamDecontam(caller: SparkSession, d: String): DataFrame =
     StreamRun(caller, "st21") { run =>
-      import graft.queries.Curation
       val s = run.session
-      // materialized once: the quote-injected corpus (a union with two
-      // joins) otherwise derives twice — once under the bench-gram build,
-      // once under the train staging write
-      val corpus = Curation.c11Corpus(
-        graft.Tables.documents(s, d).select("doc_id", "text"))
-        .localCheckpoint()
-      val isBench = col("doc_id") % 25 === 0 && col("doc_id") < 1000000L
-      // the fixed eval side: distinct bench grams, built once up front
-      val benchGrams = Curation.c11GramsOf(corpus.filter(isBench))
-        .select("gram").distinct().localCheckpoint()
-      val train = corpus.filter(!isBench)
+      // the fixed eval side, built once up front; the train stream is
+      // read once, by the staging write
+      val (bench, train) = graft.queries.Curation.c11Sides(s, d)
 
       val inDir = run.dir.resolve("in")
       java.nio.file.Files.createDirectories(inDir)
@@ -67,7 +54,7 @@ object StreamDecontam {
         .parquet(inDir.toString)
       val q = run.catchUp(stream.writeStream
         .foreachBatch { (batch: DataFrame, _: Long) =>
-          gateBatch(s, benchGrams, sinkDir, batch)
+          gateBatch(s, bench.gramSet, sinkDir, batch)
         })
       require(q.recentProgress.count(_.numInputRows > 0) >= 2,
         "st21: the staged waves collapsed into one micro-batch — the " +

@@ -1,8 +1,15 @@
 package graft.tools
 
 import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.execution.FormattedMode
+import org.apache.spark.sql.{DataFrame, GraftSessions, SparkSession}
+import org.apache.spark.sql.execution.{FormattedMode, GenerateExec,
+  QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec,
+  ShuffleExchangeExec}
+import org.apache.spark.sql.execution.window.WindowExec
+import org.apache.spark.sql.util.QueryExecutionListener
+import scala.jdk.CollectionConverters._
 
 /** Dev tool: formatted physical plans. Not part of the driver contract.
   *
@@ -15,7 +22,10 @@ import org.apache.spark.sql.execution.FormattedMode
   *    sf0.1) on `SPARK_GRAFT_CPUS` cores (default 32). Multi-stage
   *    operators (stage→commit→read ladders) truncate their public plan
   *    at a localCheckpoint scan; the file still pins the final frame's
-  *    shape.
+  *    shape. It also prints one `SHAPE` line per query: its plan node
+  *    counts, summed over every query the row ran while building its
+  *    frame (its eager localCheckpoints) and the frame itself, each as
+  *    planned before adaptive execution.
   */
 object DumpPlans {
   def main(args: Array[String]): Unit =
@@ -36,10 +46,48 @@ object DumpPlans {
     Files.createDirectories(Paths.get(outDir))
     names.foreach { name =>
       val out = Paths.get(outDir, s"${name}_$tag.txt")
-      Files.writeString(out, formatted(graft.SparkEntry.queries(name)(spark, sfDir)))
+      val (df, ran) = executionsOf(spark)(
+        graft.SparkEntry.queries(name)(spark, sfDir))
+      Files.writeString(out, formatted(df))
       println(s"DUMPED $name -> $out")
+      val nodes = (ran.map(_.executedPlan) :+ df.queryExecution.executedPlan)
+        .flatMap(nodesOf)
+      def n(p: SparkPlan => Boolean) = nodes.count(p)
+      println(s"SHAPE $name plans=${ran.size + 1}" +
+        s" scan=${n(_.nodeName.contains("Scan"))}" +
+        s" exchange=${n(_.isInstanceOf[ShuffleExchangeExec])}" +
+        s" broadcast=${n(_.isInstanceOf[BroadcastExchangeExec])}" +
+        s" generate=${n(_.isInstanceOf[GenerateExec])}" +
+        s" window=${n(_.isInstanceOf[WindowExec])}")
     }
     spark.stop()
+  }
+
+  /** Every node of `p` as planned before adaptive execution re-plans
+    * it (an adaptive plan contributes its initial plan: exchanges
+    * inserted, none reused), with the plans of its subqueries. */
+  private[graft] def nodesOf(p: SparkPlan): Seq[SparkPlan] = p match {
+    case a: AdaptiveSparkPlanExec => nodesOf(a.initialPlan)
+    case n => n +: (n.children ++ n.subqueries).flatMap(nodesOf)
+  }
+
+  /** `build`'s frame with every query execution `s` ran while building
+    * it (eager localCheckpoints, staging writes, micro-batches). */
+  private[graft] def executionsOf(s: SparkSession)(
+      build: => DataFrame): (DataFrame, Seq[QueryExecution]) = {
+    val ran = new java.util.concurrent.ConcurrentLinkedQueue[QueryExecution]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        ran.add(qe)
+      override def onFailure(f: String, qe: QueryExecution,
+          e: Exception): Unit = ran.add(qe)
+    }
+    s.listenerManager.register(listener)
+    try {
+      val df = build
+      GraftSessions.drainListeners(s)
+      (df, ran.asScala.toSeq)
+    } finally s.listenerManager.unregister(listener)
   }
 
   private def writePlansMd(sf: String): Unit = {
@@ -98,7 +146,9 @@ object DumpPlans {
       // evidence is pinned in FuzzyJoinSpec/WriteConstraintsSpec/
       // FunnelDetectSpec)
       "d16_paragraph_dedup", "c10_temperature_mix",
-      // round 15/16 additions (c11/c12/d17/t15/f23 fully declarative;
+      // round 15/16 additions (c11/d17/t15/f23 declarative over
+      // checkpointed eval sides; c12 merges checkpointed runs — the
+      // collision stage under them is c11's;
       // s25 composes the same localCheckpoint-truncated centroid side
       // as s19; e8's mechanism evidence is pinned in FuzzyJoinSpec;
       // c13 computes its histogram cut driver-side — its scoring-stage
@@ -148,11 +198,7 @@ object DumpPlans {
           .option("columnNameOfCorruptRecord", "_corrupt_record")
           .json(s"$stageDir/in")
         // st21 per-batch gate over a static batch (the foreachBatch body)
-        val corpus = Curation.c11Corpus(
-          graft.Tables.documents(spark, sf).select("doc_id", "text"))
-        val isBench = col("doc_id") % 25 === 0 && col("doc_id") < 1000000L
-        val benchGrams = Curation.c11GramsOf(corpus.filter(isBench))
-          .select("gram").distinct().localCheckpoint()
+        val (st21Bench, st21Train) = Curation.c11Sides(spark, sf)
         // st22 per-batch gate: frozen model + frozen cuts, then the
         // batch-local scoring/labeling relation
         val isRef = col("lang") === "en" && col("doc_id") % 2 === 0
@@ -177,8 +223,8 @@ object DumpPlans {
               .repartitionByRange(2, col("doc_id"))
               .sortWithinPartitions("doc_id"),
           "st21_stream_decontam :: per-batch gate (foreachBatch body)" ->
-            graft.streaming.StreamDecontam.gateRelation(benchGrams,
-              corpus.filter(!isBench)),
+            graft.streaming.StreamDecontam.gateRelation(st21Bench.gramSet,
+              st21Train),
           "st22_stream_quality :: per-batch gate (foreachBatch body)" ->
             graft.streaming.StreamQuality.gateRelation(cab, ca, v,
               qmin, width, cut1, cut2, docs.filter(!isRef)),

@@ -405,11 +405,15 @@ object ScaleHeadroom {
       // the growing train gram stream MAP-SIDE — every downstream
       // exchange stays bench-bounded while the scan grows linearly
       "c11_substring_decontam" -> (n => Curation.c11Of(docsAt(n),
-        col("doc_id") % 25 === 0 && col("doc_id") < 1000000L)),
+        Curation.C11IsBench)),
       // c12 rides c11's run relation (same fixed-bench input model) and
-      // adds only eval-set-sized merge windows — expected growth ≡ c11's
-      "c12_contamination_report" -> (n => Curation.c12Of(docsAt(n),
-        col("doc_id") % 25 === 0 && col("doc_id") < 1000000L)),
+      // adds only eval-set-sized merge windows — expected growth ≡ c11's.
+      // The eval side is built from the base docs, off the enlarged
+      // corpus's repartition (the copies carry no bench ids)
+      "c12_contamination_report" -> (n => Curation.c12Of(
+        new Curation.C11Bench(Tables.documents(spark, sfDir)
+          .select("doc_id", "text").filter(Curation.C11IsBench)),
+        docsAt(n).filter(!Curation.C11IsBench))),
       // DSIR selection with a FROZEN target (the t15 reasoning: the
       // trusted/target slice does not grow with the crawl) — the
       // p-side bucket counts stay constant, the q-side and the scoring

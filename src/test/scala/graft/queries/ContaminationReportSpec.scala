@@ -7,7 +7,9 @@ import org.apache.spark.sql.functions._
   * (overlapping quotes from different training docs must not
   * double-count bench tokens), the all-clear contract (every bench doc
   * gets a row, zero coverage included), and per-bench-doc consistency
-  * with c11's pair relation on the injected sf0.01 corpus.
+  * with c11's pair relation on the injected sf0.01 corpus; and the
+  * plan shape: the corpus is scanned and gram-exploded once per call,
+  * and the returned frame reaches no gram-keyed broadcast.
   */
 class ContaminationReportSpec extends SparkSpecBase {
   import spark.implicits._
@@ -92,5 +94,55 @@ class ContaminationReportSpec extends SparkSpecBase {
           "coverage below the longest single run")
       } finally joined.unpersist()
     } finally corpus.unpersist()
+  }
+
+  test("c12 runs the corpus once and its frame reaches no gram broadcast") {
+    import org.apache.spark.sql.execution.{FileSourceScanExec, GenerateExec,
+      SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec,
+      QueryStageExec}
+    import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
+    import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
+    import graft.tools.DumpPlans.{executionsOf, nodesOf}
+    val (df, ran) = executionsOf(spark) {
+      val df = Curation.c12ContaminationReport(spark, sf)
+      df.collect()
+      df
+    }
+    def isDocScan(p: SparkPlan) = p match {
+      case f: FileSourceScanExec =>
+        f.relation.location.rootPaths.exists(_.toString.contains("documents"))
+      case _ => false
+    }
+    def isGramBroadcastJoin(p: SparkPlan) = p match {
+      case j: BroadcastHashJoinExec =>
+        j.leftKeys.exists(_.references.exists(_.name == "gram"))
+      case _ => false
+    }
+    val nodes = ran.flatMap(qe => nodesOf(qe.executedPlan))
+    val generates = nodes.collect { case g: GenerateExec => g }
+    // one 13-gram explode over the eval-side bench docs, one over the
+    // train stream (the corpus: base docs + two plant joins + the bench
+    // docs' own scan = 6 documents scans, against 55 before)
+    assert(generates.count(_.exists(isDocScan)) == 1,
+      "the corpus gram stream is produced more than once")
+    assert(generates.size == 2, s"${generates.size} gram explodes")
+    assert(nodes.count(isDocScan) == 6, s"${nodes.count(isDocScan)} scans")
+    // the semi-join and the hits join, each built once
+    assert(nodes.count(isGramBroadcastJoin) == 2)
+
+    // a collected frame keeps its whole plan alive: nothing corpus- or
+    // gram-sized may be reachable from it, in its initial or final plan
+    def reachable(p: SparkPlan): Seq[SparkPlan] = p match {
+      case a: AdaptiveSparkPlanExec =>
+        reachable(a.initialPlan) ++ reachable(a.executedPlan)
+      case q: QueryStageExec => q +: reachable(q.plan)
+      case r: ReusedExchangeExec => r +: reachable(r.child)
+      case n => n +: (n.children ++ n.subqueries).flatMap(reachable)
+    }
+    val held = reachable(df.queryExecution.executedPlan)
+    assert(!held.exists(isGramBroadcastJoin), "the frame holds a gram broadcast")
+    assert(!held.exists(isDocScan) && !held.exists(_.isInstanceOf[GenerateExec]),
+      s"the frame reaches the corpus plan: ${held.map(_.nodeName)}")
   }
 }
