@@ -253,8 +253,10 @@ object Dedup {
 
   def minhashLsh(sets: DataFrame): DataFrame = {
     // signature matrix feeds 4 branches (band self-join sides + the two
-    // est joins) — persist so it is computed once
-    val sig = sigOf(sets).persist()
+    // est joins) — materialized so it is computed once. Not persist():
+    // nothing would release that cache entry, and over a fresh input
+    // (e2e's stage 2) every call would add another.
+    val sig = sigOf(sets).localCheckpoint()
     val bands = bandsOf(sig)
     val cand = bands.as("a").join(bands.as("b"),
         col("a.band") === col("b.band") && col("a.key") === col("b.key") &&
@@ -1518,7 +1520,7 @@ object Dedup {
       bandsOf(histSig).write.parquet(s"$dir/bands")
       val histSigR = s.read.parquet(s"$dir/sig")
       val histBandsR = s.read.parquet(s"$dir/bands")
-      val bSig = sigOf(shingleSetsOf(batch)).persist()
+      val bSig = sigOf(shingleSetsOf(batch)).localCheckpoint()
       val bBands = bandsOf(bSig)
       val candHist = histBandsR.as("a").join(bBands.as("b"),
           col("a.band") === col("b.band") && col("a.key") === col("b.key"))
@@ -2315,9 +2317,14 @@ object Dedup {
       .repartition(s.sparkContext.defaultParallelism, col("doc_id")))
   }
 
-  /** The d16 core over any (doc_id, text) corpus — also the spec's
-    * alignment-contract harness and the scale-headroom entry point. */
-  def d16Of(corpus: DataFrame): DataFrame = {
+  /** The d16 core over any (doc_id, text) corpus, ordered by doc_id —
+    * also the spec's alignment-contract harness and the scale-headroom
+    * entry point. */
+  def d16Of(corpus: DataFrame): DataFrame = d16StatsOf(corpus).orderBy("doc_id")
+
+  /** [[d16Of]] unsorted: the per-document stats a caller materializes
+    * or joins by doc_id (e2e's stage 3), where a sort is wasted work. */
+  def d16StatsOf(corpus: DataFrame): DataFrame = {
     // One materialization of the segment relation: it feeds both the
     // first-occurrence aggregate and the verdict join (the d13 lesson —
     // two live references re-derive the split+slice generator chain).
@@ -2345,7 +2352,6 @@ object Dedup {
       .select(col("doc_id"), col("n_segs"), col("kept_segs"),
         (col("n_segs") - col("kept_segs")).as("dropped_segs"),
         col("kept_words"))
-      .orderBy("doc_id")
   }
 
   /** The d16 per-document paragraph-dedup stats as a CTE chain over

@@ -412,9 +412,13 @@ object EndToEnd {
       .localCheckpoint()
     val surv2 = surv1.join(nearDups.select(col("doc_id")),
       Seq("doc_id"), "left_anti")
-    // stage 3: paragraph-level edit over stage-2 survivors
-    val stats = Dedup.d16Of(surv2)
+    // stage 3: paragraph-level edit over stage-2 survivors, one row per
+    // document. Materialized so the returned frame does not keep d16's
+    // segment-hash broadcast join alive: a broadcast relation keyed on a
+    // string holds at least one Tungsten page however small its keys
+    val stats = Dedup.d16StatsOf(surv2)
       .select(col("doc_id"), col("kept_words"))
+      .localCheckpoint()
     corpus
       .select(col("doc_id"),
         size(split(trim(col("text")), "\\s+")).cast("long").as("n_words"))

@@ -2,11 +2,16 @@ package graft.tools
 
 import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.{DataFrame, GraftSessions, SparkSession}
+import org.apache.spark.sql.catalyst.optimizer.BuildLeft
 import org.apache.spark.sql.execution.{FormattedMode, GenerateExec,
   QueryExecution, SparkPlan}
-import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec,
+  QueryStageExec}
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
 import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec,
-  ShuffleExchangeExec}
+  ReusedExchangeExec, ShuffleExchangeExec}
+import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec, HashJoin}
+import org.apache.spark.sql.types.LongType
 import org.apache.spark.sql.execution.window.WindowExec
 import org.apache.spark.sql.util.QueryExecutionListener
 import scala.jdk.CollectionConverters._
@@ -25,7 +30,9 @@ import scala.jdk.CollectionConverters._
   *    shape. It also prints one `SHAPE` line per query: its plan node
   *    counts, summed over every query the row ran while building its
   *    frame (its eager localCheckpoints) and the frame itself, each as
-  *    planned before adaptive execution.
+  *    planned before adaptive execution; and `held_str_bcast`, the
+  *    string-keyed broadcast joins the frame keeps alive once collected
+  *    (see [[isStrBroadcastJoin]]).
   */
 object DumpPlans {
   def main(args: Array[String]): Unit =
@@ -53,12 +60,18 @@ object DumpPlans {
       val nodes = (ran.map(_.executedPlan) :+ df.queryExecution.executedPlan)
         .flatMap(nodesOf)
       def n(p: SparkPlan => Boolean) = nodes.count(p)
+      // collected as a caller would, so the count also sees the joins
+      // that adaptive execution turns into broadcasts at run time; read
+      // off the plan that ran (an initial plan would count them twice)
+      df.collect()
       println(s"SHAPE $name plans=${ran.size + 1}" +
         s" scan=${n(_.nodeName.contains("Scan"))}" +
         s" exchange=${n(_.isInstanceOf[ShuffleExchangeExec])}" +
         s" broadcast=${n(_.isInstanceOf[BroadcastExchangeExec])}" +
         s" generate=${n(_.isInstanceOf[GenerateExec])}" +
-        s" window=${n(_.isInstanceOf[WindowExec])}")
+        s" window=${n(_.isInstanceOf[WindowExec])}" +
+        s" held_str_bcast=${reachable(df.queryExecution.executedPlan,
+          initial = false).count(isStrBroadcastJoin)}")
     }
     spark.stop()
   }
@@ -69,6 +82,40 @@ object DumpPlans {
   private[graft] def nodesOf(p: SparkPlan): Seq[SparkPlan] = p match {
     case a: AdaptiveSparkPlanExec => nodesOf(a.initialPlan)
     case n => n +: (n.children ++ n.subqueries).flatMap(nodesOf)
+  }
+
+  /** Every node a frame keeps reachable, and so alive for as long as
+    * the frame is held: an adaptive plan's initial and current plans,
+    * query stages, reused exchanges, subqueries, and a cached relation's
+    * own physical plan. */
+  private[graft] def heldBy(df: DataFrame): Seq[SparkPlan] =
+    reachable(df.queryExecution.executedPlan, initial = true)
+
+  private def reachable(p: SparkPlan, initial: Boolean): Seq[SparkPlan] = {
+    def walk(p: SparkPlan): Seq[SparkPlan] = p match {
+      case a: AdaptiveSparkPlanExec =>
+        (if (initial) walk(a.initialPlan) else Nil) ++ walk(a.executedPlan)
+      case q: QueryStageExec => q +: walk(q.plan)
+      case r: ReusedExchangeExec => r +: walk(r.child)
+      case m: InMemoryTableScanExec => m +: walk(m.relation.cachedPlan)
+      case n => n +: (n.children ++ n.subqueries).flatMap(walk)
+    }
+    walk(p)
+  }
+
+  /** A broadcast hash join whose build keys do not pack into one long
+    * (a single integral key does): its relation is an
+    * `UnsafeHashedRelation`, which holds at least one Tungsten page (16
+    * MB at a 2 GB heap on 4 cores) however small its keys, for as long
+    * as a held frame reaches it. */
+  private[graft] def isStrBroadcastJoin(p: SparkPlan): Boolean = p match {
+    case j: BroadcastHashJoinExec =>
+      val keys = if (j.buildSide == BuildLeft) j.leftKeys else j.rightKeys
+      HashJoin.rewriteKeyExpr(keys) match {
+        case Seq(k) => k.dataType != LongType
+        case _ => true
+      }
+    case _ => false
   }
 
   /** `build`'s frame with every query execution `s` ran while building

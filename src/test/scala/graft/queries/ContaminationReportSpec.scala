@@ -99,11 +99,8 @@ class ContaminationReportSpec extends SparkSpecBase {
   test("c12 runs the corpus once and its frame reaches no gram broadcast") {
     import org.apache.spark.sql.execution.{FileSourceScanExec, GenerateExec,
       SparkPlan}
-    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec,
-      QueryStageExec}
-    import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
     import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
-    import graft.tools.DumpPlans.{executionsOf, nodesOf}
+    import graft.tools.DumpPlans.{executionsOf, heldBy, nodesOf}
     val (df, ran) = executionsOf(spark) {
       val df = Curation.c12ContaminationReport(spark, sf)
       df.collect()
@@ -133,14 +130,7 @@ class ContaminationReportSpec extends SparkSpecBase {
 
     // a collected frame keeps its whole plan alive: nothing corpus- or
     // gram-sized may be reachable from it, in its initial or final plan
-    def reachable(p: SparkPlan): Seq[SparkPlan] = p match {
-      case a: AdaptiveSparkPlanExec =>
-        reachable(a.initialPlan) ++ reachable(a.executedPlan)
-      case q: QueryStageExec => q +: reachable(q.plan)
-      case r: ReusedExchangeExec => r +: reachable(r.child)
-      case n => n +: (n.children ++ n.subqueries).flatMap(reachable)
-    }
-    val held = reachable(df.queryExecution.executedPlan)
+    val held = heldBy(df)
     assert(!held.exists(isGramBroadcastJoin), "the frame holds a gram broadcast")
     assert(!held.exists(isDocScan) && !held.exists(_.isInstanceOf[GenerateExec]),
       s"the frame reaches the corpus plan: ${held.map(_.nodeName)}")
