@@ -1,9 +1,11 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{GraftSessions, SparkSession}
 
-/** The one local session builder every entry point, tool and spec
-  * uses, so their settings cannot drift apart. */
+/** The one place that decides session settings: [[local]], the one
+  * session builder every entry point, tool and spec uses, holds the
+  * session-wide constants, and [[withConf]] scopes a setting to one
+  * query. No query writes a session's conf itself. */
 object GraftSession {
 
   /** Spark's generated-class cache size (`spark.sql.codegen.cache.maxEntries`,
@@ -31,6 +33,11 @@ object GraftSession {
     *    stagings and the standard choice for HDFS-like stores (object
     *    stores use dedicated committers instead);
     *  - a generated-class cache of [[CodegenCacheEntries]] entries;
+    *  - `nanosAsLong`: `events.ts` has shipped as parquet
+    *    TIMESTAMP(NANOS), which Spark 4 refuses as a timestamp; this
+    *    reads it as a raw long for `Tables.normalizeTs` (a no-op for
+    *    µs files). Spark reads it at schema inference and again at scan
+    *    planning, so it is set for every session, not in a scope;
     *  - no UI.
     * `extra` settings are applied last and win.
     */
@@ -43,8 +50,25 @@ object GraftSession {
         "2")
       .config("spark.sql.codegen.cache.maxEntries",
         CodegenCacheEntries.toString)
+      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
     extra.foreach { case (k, v) => b.config(k, v) }
     b.getOrCreate()
+  }
+
+  /** Run `body` on a clone of `s` that differs only in `kv`, the one
+    * way a query scopes a setting: `s`'s conf is never written, so
+    * queries planned on `s` meanwhile keep its settings. The body
+    * builds its frames on the clone (a frame of `s` enters through
+    * `GraftSessions.rehome`) and re-homes a frame it returns onto `s`,
+    * where it is planned again under `s`'s settings: materialize it
+    * first when the scoped setting must shape its execution. A scan
+    * keeps reading file-split settings from the session that built it.
+    */
+  def withConf[A](s: SparkSession, kv: Seq[(String, String)])(
+      body: SparkSession => A): A = {
+    val scoped = GraftSessions.cloneOf(s)
+    kv.foreach { case (k, v) => scoped.conf.set(k, v) }
+    body(scoped)
   }
 }

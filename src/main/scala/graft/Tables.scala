@@ -41,17 +41,13 @@ object Tables {
     * generator has shipped `ts` as BOTH parquet TIMESTAMP(NANOS) (rounds
     * ≤10) and plain TIMESTAMP µs (round 11+), so nothing may assume one
     * encoding (the round-11 regeneration silently broke every consumer
-    * that did). The legacy nanosAsLong conf makes a NANOS file read back
-    * as a raw long — Spark 4 refuses it as a timestamp — and is a no-op
-    * for µs files, which arrive as TIMESTAMP_NTZ. The conf is
-    * session-global by necessity (read at scan planning, not a per-read
-    * option). Consumers must stay encoding-agnostic via [[normalizeTs]]
-    * / [[tsMicros]] / [[tsRawValue]] — never hand-roll `ts div 1000`.
+    * that did). A NANOS file reads back as a raw long (the session's
+    * `nanosAsLong`, set in [[GraftSession.local]]); a µs file arrives
+    * as TIMESTAMP_NTZ. Consumers must stay encoding-agnostic via
+    * [[normalizeTs]] / [[tsMicros]] / [[tsRawValue]] — never hand-roll
+    * `ts div 1000`.
     */
-  def eventsRaw(s: SparkSession, d: String): DataFrame = {
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    table(s, d, "events")
-  }
+  def eventsRaw(s: SparkSession, d: String): DataFrame = table(s, d, "events")
 
   /** Normalize a raw events frame (batch OR streaming — only the schema
     * is consulted) so `ts` is a µs-precision TimestampType:

@@ -45,10 +45,6 @@ object Columns {
     else kept.mkString(sep)
   }
 
-  /** Flatten a full two-row (or n-row) header into one name per column. */
-  def flattenMultiIndex(headers: Seq[Seq[String]]): Seq[String] =
-    headers.map(flattenHeader(_))
-
   /** Canonical rename dictionary: raw header variant → stable name.
     * Matching is longest-variant-first substring containment on the
     * normalized (lowercased, separator-collapsed) header, with a final

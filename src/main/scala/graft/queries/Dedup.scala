@@ -222,8 +222,6 @@ object Dedup {
     * materialized (`localCheckpoint`) because a streaming micro-batch
     * reuses both several times (self-join sides, similarity joins,
     * index append) — the st18 building block. */
-  private[graft] def sigOfForProfile(sets: DataFrame): DataFrame = sigOf(sets)
-
   private[graft] def sigBandsOf(docs: DataFrame): (DataFrame, DataFrame) = {
     // Two measured pathologies on a fresh micro-batch, both fixed here:
     // the batch arrives as ONE input split (spread before the heavy

@@ -1,8 +1,9 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftSessions, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import graft.GraftSession.withConf
 import graft.Tables._
 
 /** Beyond-reference join operators (SURVEY §2.4 notes the reference has
@@ -257,21 +258,6 @@ object Joins {
       |JOIN customer ON cust_id = c_custkey
       |GROUP BY 1 ORDER BY 1""".stripMargin
 
-  /** Conf scope with set-or-unset restore, shared by the j6/j7/a17
-    * harnesses. It writes the caller's session conf, so it assumes
-    * nothing else runs on the session meanwhile.
-    */
-  private[queries] def withConfs[A](s: SparkSession, kv: Seq[(String, String)])(
-      body: => A): A = {
-    val prior = kv.map { case (k, _) => k -> s.conf.getOption(k) }
-    kv.foreach { case (k, v) => s.conf.set(k, v) }
-    try body
-    finally prior.foreach {
-      case (k, Some(v)) => s.conf.set(k, v)
-      case (k, None) => s.conf.unset(k)
-    }
-  }
-
   /** The j6 join core: the PLAIN (unsalted) shuffle join over the same
     * manufactured hot key as j5 — event_id carried through so the fact's
     * shuffle rows have realistic width.
@@ -292,25 +278,28 @@ object Joins {
     * `skew=true` marker or the query refuses: silently falling back to
     * one straggler task is exactly the failure mode this operator
     * exists to rule out. Factored so `AqeSkewJoinSpec` can run the
-    * identical plan with skew handling off as a control.
+    * identical plan with skew handling off as a control. `factM` and
+    * `dim` may be frames of any session: they are re-homed onto the
+    * scope's.
     */
   private[graft] def runAqeSkewJoinWithPlan(s: SparkSession,
       factM: DataFrame, dim: DataFrame,
       skewEnabled: Boolean): (DataFrame, String) =
-    withConfs(s, Seq(
+    withConf(s, Seq(
       "spark.sql.autoBroadcastJoinThreshold" -> "-1",
       "spark.sql.adaptive.enabled" -> "true",
       "spark.sql.adaptive.skewJoin.enabled" -> skewEnabled.toString,
       "spark.sql.adaptive.skewJoin.skewedPartitionFactor" -> "2.0",
       "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes" -> "2KB",
-      "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "1KB")) {
-      val out = j6Core(factM, dim)
+      "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "1KB")) { c =>
+      val out = j6Core(GraftSessions.rehome(c, factM),
+        GraftSessions.rehome(c, dim))
       val materialized = out.localCheckpoint() // executes under this scope
       val fin = out.queryExecution.executedPlan.toString
       if (skewEnabled) require(fin.contains("skew=true"),
         "j6: AQE did not split the skewed join partition - the hot key " +
           "would run as one straggler task")
-      (materialized.orderBy("segment"), fin)
+      (GraftSessions.rehome(s, materialized.orderBy("segment")), fin)
     }
 
   private[queries] def runAqeSkewJoin(s: SparkSession, factM: DataFrame,
@@ -399,42 +388,45 @@ object Joins {
     (materialized, plan)
   }
 
-  /** [[j7Core]] under the forced-bloom conf scope on ANY fact/dim pair,
-    * probe-required — the frame-parameterized core for
-    * [[graft.tools.ScaleHeadroom]]. */
+  /** The j7 scope: Bloom-filter injection on or off, the join forced
+    * to shuffle. */
+  private def bloomConf(enabled: Boolean): Seq[(String, String)] = Seq(
+    "spark.sql.autoBroadcastJoinThreshold" -> "-1",
+    "spark.sql.optimizer.runtime.bloomFilter.enabled" -> enabled.toString,
+    "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold" -> "0",
+    "spark.sql.optimizer.runtime.bloomFilter.creationSideThreshold" -> "100MB")
+
+  /** [[j7Core]] under the forced-bloom conf scope on ANY fact/dim pair
+    * (of any session), probe-required — the frame-parameterized core
+    * for [[graft.tools.ScaleHeadroom]]. */
   private[graft] def j7BloomOf(s: SparkSession, li: DataFrame,
       urgent: DataFrame): DataFrame =
-    withConfs(s, Seq(
-      "spark.sql.autoBroadcastJoinThreshold" -> "-1",
-      "spark.sql.optimizer.runtime.bloomFilter.enabled" -> "true",
-      "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold" -> "0",
-      "spark.sql.optimizer.runtime.bloomFilter.creationSideThreshold" -> "100MB")) {
-      val out = j7Core(li, urgent)
+    withConf(s, bloomConf(enabled = true)) { c =>
+      val out = j7Core(GraftSessions.rehome(c, li),
+        GraftSessions.rehome(c, urgent))
       val materialized = out.localCheckpoint()
       require(out.queryExecution.executedPlan.toString.contains("might_contain"),
         "j7: bloom probe did not inject at this scale")
-      materialized
+      GraftSessions.rehome(s, materialized)
     }
 
   /** [[runBloomFilterJoinWithPlan]] plus the EXECUTED (pre-checkpoint)
-    * frame, whose plan carries the scan/filter metrics the spec pins. */
+    * frame, whose plan carries the scan/filter metrics the spec pins.
+    * That frame stays on the scope's session: re-homed, it would be a
+    * new, unexecuted plan. */
   private[graft] def runBloomFilterJoinExecuted(s: SparkSession, d: String,
       bloomEnabled: Boolean): (DataFrame, String, DataFrame) =
-    withConfs(s, Seq(
-      "spark.sql.autoBroadcastJoinThreshold" -> "-1",
-      "spark.sql.optimizer.runtime.bloomFilter.enabled" -> bloomEnabled.toString,
-      "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold" -> "0",
-      "spark.sql.optimizer.runtime.bloomFilter.creationSideThreshold" -> "100MB")) {
-      val urgent = orders(s, d)
+    withConf(s, bloomConf(bloomEnabled)) { c =>
+      val urgent = orders(c, d)
         .filter(col("o_orderpriority") === "1-URGENT")
         .select(col("o_orderkey"))
-      val out = j7Core(lineitem(s, d), urgent)
+      val out = j7Core(lineitem(c, d), urgent)
       val materialized = out.localCheckpoint() // executes under this scope
       val plan = out.queryExecution.executedPlan.toString
       if (bloomEnabled) require(plan.contains("might_contain"),
         "j7: no bloom_filter_might_contain probe on the fact scan - " +
           "the full fact would flow into the shuffle unfiltered")
-      (materialized.orderBy("l_returnflag"), plan, out)
+      (GraftSessions.rehome(s, materialized.orderBy("l_returnflag")), plan, out)
     }
 
   /** J7 — runtime Bloom-filter join pruning: the NON-partition-column

@@ -1,7 +1,8 @@
 package graft.queries
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, GraftSessions, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.GraftSession.withConf
 import graft.Tables._
 
 /** Scan-elimination layouts (r12 verdict "next round" #2). j4 proved the
@@ -41,20 +42,22 @@ object Layout {
     // Spark's default parquet timestamp encoding is INT96 — a deprecated
     // type with unusable column statistics, which silently defeats BOTH
     // predicate pushdown and min/max skipping on ts. A clustering layout
-    // that exists FOR pruning must write INT64 micros. Set/restore
-    // around the write so the operator owns its file format instead of
-    // depending on ambient session state.
-    val key = "spark.sql.parquet.outputTimestampType"
-    val prior = s.conf.get(key)
-    s.conf.set(key, "TIMESTAMP_MICROS")
-    try events(s, d)
-      .select(col("event_id"), col("ts"), col("event_type"),
-        col("user_id"), col("value"))
-      .repartitionByRange(PruneFileCount, col("ts"))
-      .sortWithinPartitions("ts")
-      .write.parquet(path)
-    finally s.conf.set(key, prior)
+    // that exists FOR pruning must write INT64 micros, so the operator
+    // owns its file format instead of depending on ambient session state.
+    withConf(s, MicrosTs) { c =>
+      events(c, d)
+        .select(col("event_id"), col("ts"), col("event_type"),
+          col("user_id"), col("value"))
+        .repartitionByRange(PruneFileCount, col("ts"))
+        .sortWithinPartitions("ts")
+        .write.parquet(path)
+    }
   }
+
+  /** The layout writes' scope: parquet timestamps as INT64 micros
+    * ([[writeSortedLayout]] says why). */
+  private val MicrosTs =
+    Seq("spark.sql.parquet.outputTimestampType" -> "TIMESTAMP_MICROS")
 
   /** A14 — min-max data-skipping proof over the range-clustered layout:
     * a 3-day slice of a 30-day corpus is answered by scanning only the
@@ -131,20 +134,17 @@ object Layout {
     */
   private[queries] def writeDayPartitionedLayout(s: SparkSession, d: String,
       base: String): Unit = {
-    val key = "spark.sql.parquet.outputTimestampType"
-    val prior = s.conf.get(key)
-    s.conf.set(key, "TIMESTAMP_MICROS")
-    try {
-      events(s, d)
+    withConf(s, MicrosTs) { c =>
+      events(c, d)
         .withColumn("day", date_format(col("ts"), "yyyy-MM-dd"))
         .write.partitionBy("day").parquet(s"$base/fact")
-      s.range(0, 31)
-        .select(
-          date_format(date_add(to_date(lit("2024-01-01")),
-            col("id").cast("int")), "yyyy-MM-dd").as("day"),
-          (col("id") + 1).cast("int").as("dom"))
-        .write.parquet(s"$base/dim")
-    } finally s.conf.set(key, prior)
+    }
+    s.range(0, 31)
+      .select(
+        date_format(date_add(to_date(lit("2024-01-01")),
+          col("id").cast("int")), "yyyy-MM-dd").as("day"),
+        (col("id") + 1).cast("int").as("dom"))
+      .write.parquet(s"$base/dim")
   }
 
   /** The a15 join+aggregate over an already-written layout, factored so
@@ -289,21 +289,18 @@ object Layout {
   }
 
   private[queries] def writeZorderLayout(s: SparkSession, d: String,
-      path: String, maxUser: Long, maxDay: Long): Unit = {
-    val key = "spark.sql.parquet.outputTimestampType"
-    val prior = s.conf.get(key)
-    s.conf.set(key, "TIMESTAMP_MICROS")
-    try events(s, d)
-      .select(col("event_id"), col("ts"), col("event_type"),
-        col("user_id"), col("value"))
-      .withColumn("z", zValue(col("user_id"), col("ts"), maxUser, maxDay))
-      .withColumn("zoct", shiftright(col("z"), 13).bitwiseAND(lit(7)))
-      .repartition(8, col("zoct"))
-      .sortWithinPartitions("z")
-      .drop("z")
-      .write.partitionBy("zoct").parquet(path)
-    finally s.conf.set(key, prior)
-  }
+      path: String, maxUser: Long, maxDay: Long): Unit =
+    withConf(s, MicrosTs) { c =>
+      events(c, d)
+        .select(col("event_id"), col("ts"), col("event_type"),
+          col("user_id"), col("value"))
+        .withColumn("z", zValue(col("user_id"), col("ts"), maxUser, maxDay))
+        .withColumn("zoct", shiftright(col("z"), 13).bitwiseAND(lit(7)))
+        .repartition(8, col("zoct"))
+        .sortWithinPartitions("z")
+        .drop("z")
+        .write.partitionBy("zoct").parquet(path)
+    }
 
   /** A16 — z-order clustering: the multi-dimensional answer to a14's
     * one-dimensional sort. A ts-sorted layout prunes ts slices perfectly
@@ -390,12 +387,12 @@ object Layout {
         "cust", tCust)
       Seq(tLi, tOrd, tCust).foreach(t =>
         s.sql(s"ANALYZE TABLE $t COMPUTE STATISTICS FOR ALL COLUMNS"))
-      Joins.withConfs(s, Seq(
+      withConf(s, Seq(
         "spark.sql.cbo.enabled" -> cboEnabled.toString,
-        "spark.sql.cbo.joinReorder.enabled" -> cboEnabled.toString)) {
-        val q = s.table(tLi)
-          .join(s.table(tOrd), col("l_orderkey") === col("o_orderkey"))
-          .join(s.table(tCust), col("o_custkey") === col("c_custkey"))
+        "spark.sql.cbo.joinReorder.enabled" -> cboEnabled.toString)) { c =>
+        val q = c.table(tLi)
+          .join(c.table(tOrd), col("l_orderkey") === col("o_orderkey"))
+          .join(c.table(tCust), col("o_custkey") === col("c_custkey"))
           .filter(col("c_mktsegment") === "BUILDING" &&
             col("o_orderpriority") === "1-URGENT")
           .groupBy(col("c_mktsegment"))
@@ -403,7 +400,8 @@ object Layout {
             r6(dsum(col("l_extendedprice"))).as("revenue"))
         val leaves = q.queryExecution.optimizedPlan.collectLeaves()
           .map(_.toString.linesIterator.next())
-        (q.localCheckpoint().orderBy("c_mktsegment"), leaves.toSeq)
+        (GraftSessions.rehome(s, q.localCheckpoint().orderBy("c_mktsegment")),
+          leaves.toSeq)
       }
     } finally {
       Seq(tLi, tOrd, tCust).foreach(t => s.sql(s"DROP TABLE IF EXISTS $t"))
@@ -572,10 +570,10 @@ object Layout {
     val dir = java.nio.file.Files.createTempDirectory("graft_a19_")
     try {
       writeDayPartitionedLayout(s, d, dir.toString)
-      Joins.withConfs(s, Seq(
+      withConf(s, Seq(
         "spark.sql.sources.useV1SourceList" -> "avro,csv,json,kafka,orc,text",
-        "spark.sql.parquet.aggregatePushdown" -> "true")) {
-        val global = s.read.parquet(s"$d/lineitem.parquet")
+        "spark.sql.parquet.aggregatePushdown" -> "true")) { c =>
+        val global = c.read.parquet(s"$d/lineitem.parquet")
           .agg(count(col("l_orderkey")).as("n_rows"),
             min(col("l_orderkey")).as("min_v"),
             max(col("l_orderkey")).as("max_v"))
@@ -585,7 +583,7 @@ object Layout {
             .contains("PushedAggregation: [COUNT(l_orderkey)"),
           "a19: global COUNT/MIN/MAX must push to parquet footers - " +
             "a silent data-scan fallback defeats the operator")
-        val grouped = s.read.parquet(s"$dir/fact")
+        val grouped = c.read.parquet(s"$dir/fact")
           .groupBy(col("day"))
           .agg(count(col("event_id")).as("n_rows"),
             min(col("event_id")).as("min_v"),
@@ -597,7 +595,8 @@ object Layout {
             gPlan.contains("PushedGroupBy: [day]"),
           "a19: per-day stats must push BOTH the aggregate and the " +
             "partition-column group-by")
-        global.unionByName(grouped).orderBy("scope").localCheckpoint()
+        GraftSessions.rehome(s,
+          global.unionByName(grouped).orderBy("scope").localCheckpoint())
       }
     } finally org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)
   }

@@ -158,19 +158,18 @@ final class StreamRun private (val session: SparkSession, val dir: Path,
 object StreamRun {
 
   def apply(caller: SparkSession, tag: String)(
-      body: StreamRun => DataFrame): DataFrame = {
-    val child = GraftSessions.cloneOf(caller)
-    stateConf.foreach { case (k, v) => child.conf.set(k, v) }
-    val inheritedViews = GraftSessions.tempViewNames(child).toSet
-    // listeners Spark itself adds to every session are already there
-    val attached = child.streams.listListeners().toSet
-    val listeners = caller.streams.listListeners().toSeq.filterNot(attached)
-    listeners.foreach(child.streams.addListener)
-    val run = new StreamRun(child,
-      Files.createTempDirectory(s"graft_${tag}_"), tag)
-    try GraftSessions.rehome(caller, body(run))
-    finally run.close(inheritedViews, listeners)
-  }
+      body: StreamRun => DataFrame): DataFrame =
+    graft.GraftSession.withConf(caller, stateConf) { child =>
+      val inheritedViews = GraftSessions.tempViewNames(child).toSet
+      // listeners Spark itself adds to every session are already there
+      val attached = child.streams.listListeners().toSet
+      val listeners = caller.streams.listListeners().toSeq.filterNot(attached)
+      listeners.foreach(child.streams.addListener)
+      val run = new StreamRun(child,
+        Files.createTempDirectory(s"graft_${tag}_"), tag)
+      try GraftSessions.rehome(caller, body(run))
+      finally run.close(inheritedViews, listeners)
+    }
 
   /** State partitions of a bounded catch-up: a stateful streaming
     * query instantiates state stores per shuffle partition per stateful

@@ -1,8 +1,8 @@
 package graft.tools
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{GraftSession, Tables}
 import graft.plans.GraftExtensions
 import graft.queries.{Curation, Dedup, Similarity}
 
@@ -539,44 +539,33 @@ object ScaleHeadroom {
       // key holding HALF the rows, the head a real crawl's token
       // distribution has) against a 100k-key dimension, the t8
       // token×vocab join shape at the skew a web corpus produces.
-      def skewFrame(scale: Int): DataFrame = {
+      def skewFrame(ss: SparkSession, scale: Int): DataFrame = {
         val n = 200000L * scale
         // xxhash64 payloads: incompressible, so shuffle-partition BYTES
         // track row counts — regular sequences compress away the very
         // size signal the skew detector reads
-        val facts = spark.range(n).select(
+        val facts = ss.range(n).select(
           when(col("id") % 2 === 0, lit(0L))
             .otherwise(col("id") % 100000L).as("key"),
           pmod(xxhash64(col("id")), lit(1000000L)).as("value"))
-        val dim = spark.range(100000L).select(col("id").as("key"),
+        val dim = ss.range(100000L).select(col("id").as("key"),
           pmod(xxhash64(col("id"), lit(1)), lit(1000L)).as("weight"))
         facts.join(dim, "key") // no broadcast hint: deliberate shuffle
           .groupBy((col("key") % 32).as("g"))
           .agg(sum(col("value") * col("weight")).as("total"))
       }
-      def timedRun(scale: Int, skewOn: Boolean): (Double, Boolean) = {
-        // Snapshot BEFORE mutating: a blanket conf.unset on exit would
-        // revert to engine hard defaults, not the session's startup
-        // values — losing e.g. an autoBroadcastJoinThreshold set at
-        // session build for any op that runs after this harness.
-        val touched = Seq("spark.sql.autoBroadcastJoinThreshold",
-          "spark.sql.adaptive.skewJoin.enabled",
-          "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes",
-          "spark.sql.adaptive.skewJoin.skewedPartitionFactor",
-          "spark.sql.adaptive.advisoryPartitionSizeInBytes")
-        val prior = touched.map(k => k -> spark.conf.getOption(k)).toMap
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        spark.conf.set("spark.sql.adaptive.skewJoin.enabled", skewOn.toString)
-        // lowered thresholds: the default 256 MB skew floor is sized for
-        // production shuffles; the synthetic fact table skews at MBs
-        spark.conf.set(
-          "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes", "1m")
-        spark.conf.set("spark.sql.adaptive.skewJoin.skewedPartitionFactor", "2")
-        spark.conf.set("spark.sql.adaptive.advisoryPartitionSizeInBytes", "1m")
-        try {
+      def timedRun(scale: Int, skewOn: Boolean): (Double, Boolean) =
+        GraftSession.withConf(spark, Seq(
+          "spark.sql.autoBroadcastJoinThreshold" -> "-1",
+          "spark.sql.adaptive.skewJoin.enabled" -> skewOn.toString,
+          // lowered thresholds: the default 256 MB skew floor is sized
+          // for production shuffles; the synthetic fact table skews at MBs
+          "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes" -> "1m",
+          "spark.sql.adaptive.skewJoin.skewedPartitionFactor" -> "2",
+          "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "1m")) { c =>
           var skewed = false
           val t = (1 to reps).map { _ =>
-            val df = skewFrame(scale)
+            val df = skewFrame(c, scale)
             val t0 = System.nanoTime()
             // collect THIS frame (32-row aggregate): a .count() would
             // execute a different QueryExecution and leave df's own
@@ -587,13 +576,7 @@ object ScaleHeadroom {
             dt
           }.min
           (t, skewed)
-        } finally {
-          prior.foreach {
-            case (k, Some(v)) => spark.conf.set(k, v)
-            case (k, None) => spark.conf.unset(k)
-          }
         }
-      }
       val (tBase, _) = timedRun(1, skewOn = true)
       val (tOn, splitOn) = timedRun(copies, skewOn = true)
       val (tOff, _) = timedRun(copies, skewOn = false)

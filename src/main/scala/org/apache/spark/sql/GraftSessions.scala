@@ -1,9 +1,9 @@
 package org.apache.spark.sql
 
-/** The session internals `graft.streaming.StreamRun` needs that Spark
-  * keeps package-private: cloning a session with its listeners,
-  * re-homing a frame on another session, listing temp views, and
-  * waiting for the listener bus.
+/** The session internals `graft.GraftSession.withConf` and
+  * `graft.streaming.StreamRun` need that Spark keeps package-private:
+  * cloning a session with its listeners, re-homing a frame on another
+  * session, listing temp views, and waiting for the listener bus.
   */
 object GraftSessions {
 

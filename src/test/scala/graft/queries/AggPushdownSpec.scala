@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.{SparkSpecBase, Tables}
+import graft.{GraftSession, SparkSpecBase, Tables}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
@@ -28,10 +28,10 @@ class AggPushdownSpec extends SparkSpecBase {
     val nRows = li.count()
     val classic = li.agg(count(col("l_orderkey")),
       min(col("l_orderkey")), max(col("l_orderkey"))).head()
-    val pushedRow = Joins.withConfs(spark, Seq(
+    val pushedRow = GraftSession.withConf(spark, Seq(
       "spark.sql.sources.useV1SourceList" -> "avro,csv,json,kafka,orc,text",
-      "spark.sql.parquet.aggregatePushdown" -> "true")) {
-      val q = spark.read.parquet(s"$sf/lineitem.parquet")
+      "spark.sql.parquet.aggregatePushdown" -> "true")) { c =>
+      val q = c.read.parquet(s"$sf/lineitem.parquet")
         .agg(count(col("l_orderkey")).as("n"),
           min(col("l_orderkey")).as("mn"), max(col("l_orderkey")).as("mx"))
       assert(q.queryExecution.sparkPlan.toString

@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.{SparkSpecBase, Tables}
+import graft.{GraftSession, SparkSpecBase, Tables}
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.execution.joins.SortMergeJoinExec
 import org.apache.spark.sql.functions._
@@ -19,14 +19,13 @@ class BucketedJoinSpec extends SparkSpecBase {
     val dir = java.nio.file.Files.createTempDirectory("graft-j4spec")
     val t1 = "j4spec_li"
     val t2 = "j4spec_ord"
-    val saved = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      val li = Joins.writeBucketed(spark,
-        Tables.lineitem(spark, sf).select("l_orderkey", "l_quantity"),
+    try GraftSession.withConf(spark,
+        Seq("spark.sql.autoBroadcastJoinThreshold" -> "-1")) { c =>
+      val li = Joins.writeBucketed(c,
+        Tables.lineitem(c, sf).select("l_orderkey", "l_quantity"),
         "l_orderkey", 8, t1, dir.resolve("li").toString)
-      val ord = Joins.writeBucketed(spark,
-        Tables.orders(spark, sf).select("o_orderkey", "o_orderpriority"),
+      val ord = Joins.writeBucketed(c,
+        Tables.orders(c, sf).select("o_orderkey", "o_orderpriority"),
         "o_orderkey", 8, t2, dir.resolve("ord").toString)
       val joined = li.join(ord, col("l_orderkey") === col("o_orderkey"))
 
@@ -40,15 +39,14 @@ class BucketedJoinSpec extends SparkSpecBase {
         s"bucketed join still shuffles (${shuffles.length} exchanges):\n$plan")
 
       // and the co-located plan computes the same relation as a plain join
-      val expected = Tables.lineitem(spark, sf)
+      val expected = Tables.lineitem(c, sf)
         .select("l_orderkey", "l_quantity")
-        .join(Tables.orders(spark, sf).select("o_orderkey", "o_orderpriority"),
+        .join(Tables.orders(c, sf).select("o_orderkey", "o_orderpriority"),
           col("l_orderkey") === col("o_orderkey"))
       assert(joined.count() == expected.count())
       assert(joined.exceptAll(expected).isEmpty &&
         expected.exceptAll(joined).isEmpty)
     } finally {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", saved)
       spark.sql(s"DROP TABLE IF EXISTS $t1")
       spark.sql(s"DROP TABLE IF EXISTS $t2")
       org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)

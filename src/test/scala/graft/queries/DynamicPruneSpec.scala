@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.SparkSpecBase
+import graft.{GraftSession, SparkSpecBase}
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.DataFrame
 
@@ -35,19 +35,18 @@ class DynamicPruneSpec extends SparkSpecBase {
           s"$prunedScan vs $matching")
 
       val key = "spark.sql.optimizer.dynamicPartitionPruning.enabled"
-      val prior = spark.conf.get(key)
-      spark.conf.set(key, "false")
-      try {
-        val controlScan = factScanRows(Layout.dppQuery(spark, base))
+      val a = GraftSession.withConf(spark, Seq(key -> "false")) { c =>
+        val controlScan = factScanRows(Layout.dppQuery(c, base))
         assert(controlScan == total,
           s"without DPP the join must scan every partition: " +
             s"$controlScan vs $total")
-        // pruning changes the schedule, never the result
-        val a = Layout.dppQuery(spark, base).orderBy("event_type").collect().toSeq
-        spark.conf.set(key, "true")
-        val b = Layout.dppQuery(spark, base).orderBy("event_type").collect().toSeq
-        assert(a == b)
-      } finally spark.conf.set(key, prior)
+        Layout.dppQuery(c, base).orderBy("event_type").collect().toSeq
+      }
+      // pruning changes the schedule, never the result
+      val b = GraftSession.withConf(spark, Seq(key -> "true")) { c =>
+        Layout.dppQuery(c, base).orderBy("event_type").collect().toSeq
+      }
+      assert(a == b)
 
       // the mechanism marker the in-query require pins
       val plan = Layout.dppQuery(spark, base)

@@ -1,6 +1,6 @@
 package graft.sink
 
-import graft.{SparkSpecBase, Tables}
+import graft.{GraftSession, SparkSpecBase, Tables}
 import org.apache.spark.sql.functions._
 
 /** Co-located joins via bucketing: pre-bucketing both join sides on the
@@ -14,18 +14,17 @@ class BucketingSpec extends SparkSpecBase {
     spark.sql("DROP TABLE IF EXISTS b_orders")
     spark.sql("DROP TABLE IF EXISTS b_lineitem")
     // disable broadcast so the join type is genuinely size-driven SMJ
-    val prevThreshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      Tables.orders(spark, sf)
+    try GraftSession.withConf(spark,
+        Seq("spark.sql.autoBroadcastJoinThreshold" -> "-1")) { c =>
+      Tables.orders(c, sf)
         .write.bucketBy(8, "o_orderkey").sortBy("o_orderkey")
         .mode("overwrite").saveAsTable("b_orders")
-      Tables.lineitem(spark, sf)
+      Tables.lineitem(c, sf)
         .write.bucketBy(8, "l_orderkey").sortBy("l_orderkey")
         .mode("overwrite").saveAsTable("b_lineitem")
 
-      val joined = spark.table("b_lineitem")
-        .join(spark.table("b_orders"),
+      val joined = c.table("b_lineitem")
+        .join(c.table("b_orders"),
           col("l_orderkey") === col("o_orderkey"))
         .groupBy(col("o_orderpriority"))
         .agg(Tables.dsum(col("l_extendedprice")).as("total"))
@@ -38,14 +37,13 @@ class BucketingSpec extends SparkSpecBase {
         s"bucketed join still shuffles:\n$plan")
 
       // and it computes the right thing vs the unbucketed plan
-      val expected = Tables.lineitem(spark, sf)
-        .join(Tables.orders(spark, sf), col("l_orderkey") === col("o_orderkey"))
+      val expected = Tables.lineitem(c, sf)
+        .join(Tables.orders(c, sf), col("l_orderkey") === col("o_orderkey"))
         .groupBy(col("o_orderpriority"))
         .agg(Tables.dsum(col("l_extendedprice")).as("total"))
         .orderBy("o_orderpriority").collect().toSeq
       assert(joined.orderBy("o_orderpriority").collect().toSeq == expected)
     } finally {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevThreshold)
       spark.sql("DROP TABLE IF EXISTS b_orders")
       spark.sql("DROP TABLE IF EXISTS b_lineitem")
     }

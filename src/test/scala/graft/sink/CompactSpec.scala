@@ -1,8 +1,8 @@
 package graft.sink
 
-import graft.SparkSpecBase
-import graft.Tables
+import graft.{GraftSession, SparkSpecBase, Tables}
 import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Pins the a13 compaction contract (r12 verdict #1):
@@ -25,8 +25,8 @@ class CompactSpec extends SparkSpecBase {
     (base, fs)
   }
 
-  private def fragmentedLayout(base: String): Unit = {
-    val docs = Tables.documents(spark, sf)
+  private def fragmentedLayout(base: String, s: SparkSession = spark): Unit = {
+    val docs = Tables.documents(s, sf)
       .select(col("doc_id"), col("source"), col("lang"))
     Sinks.writePartitioned(docs.repartition(8, col("doc_id")), base,
       Seq("source"), compact = false)
@@ -68,20 +68,18 @@ class CompactSpec extends SparkSpecBase {
     // file-grouping costs, which would make every compaction a
     // coalesce-to-1 regardless of target. Pin the grouping down so the
     // scan sees one partition per file — the shape a 100 TB directory
-    // has naturally — then restore.
-    val oldMax = spark.conf.get("spark.sql.files.maxPartitionBytes")
-    val oldCost = spark.conf.get("spark.sql.files.openCostInBytes")
-    spark.conf.set("spark.sql.files.maxPartitionBytes", "2048")
-    spark.conf.set("spark.sql.files.openCostInBytes", "0")
-    try {
-      fragmentedLayout(base)
+    // has naturally — on a scoped session.
+    try GraftSession.withConf(spark, Seq(
+        "spark.sql.files.maxPartitionBytes" -> "2048",
+        "spark.sql.files.openCostInBytes" -> "0")) { c =>
+      fragmentedLayout(base, c)
       val dirs = Compact.leafDataDirs(fs, new Path(base))
       val maxBytes = dirs.map(d => fs.listStatus(d)
         .filter(st => st.isFile && !st.getPath.getName.startsWith("_") &&
           !st.getPath.getName.startsWith("."))
         .map(_.getLen).sum).max
       val target = math.max(1L, maxBytes / 3) // largest dir needs 3-4 files
-      val results = Compact.compactPartitioned(spark, base, target)
+      val results = Compact.compactPartitioned(c, base, target)
       results.foreach { r =>
         assert(r.filesAfter <= Compact.targetFileCount(r.bytesBefore, target))
       }
@@ -91,11 +89,7 @@ class CompactSpec extends SparkSpecBase {
         "no fragmented directory needed >1 output file — harness too small")
       multi.foreach(r => assert(r.filesAfter > 1,
         s"${r.dir}: bin-pack collapsed to one file despite a ${r.bytesBefore}-byte dir"))
-    } finally {
-      spark.conf.set("spark.sql.files.maxPartitionBytes", oldMax)
-      spark.conf.set("spark.sql.files.openCostInBytes", oldCost)
-      fs.delete(new Path(base), true)
-    }
+    } finally fs.delete(new Path(base), true)
   }
 
   test("compaction is idempotent and leaves no staging debris") {
