@@ -33,6 +33,13 @@ object GraftSession {
     *    stagings and the standard choice for HDFS-like stores (object
     *    stores use dedicated committers instead);
     *  - a generated-class cache of [[CodegenCacheEntries]] entries;
+    *  - no per-session artifact isolation: Spark 4 runs each session's
+    *    tasks under a class loader of its own, and the generated-class
+    *    cache is keyed by loader, so a [[withConf]] clone (every
+    *    `StreamRun` row, j6, j7, a17, a19) compiled its first query's
+    *    classes again — 16 classes, ~0.4 s for j6 at sf0.1. Isolation
+    *    exists to keep artifacts added to one session (Spark Connect
+    *    jars, REPL classes) from others; nothing here adds any;
     *  - `nanosAsLong`: `events.ts` has shipped as parquet
     *    TIMESTAMP(NANOS), which Spark 4 refuses as a timestamp; this
     *    reads it as a raw long for `Tables.normalizeTs` (a no-op for
@@ -51,6 +58,7 @@ object GraftSession {
       .config("spark.sql.codegen.cache.maxEntries",
         CodegenCacheEntries.toString)
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+      .config("spark.sql.artifact.isolation.enabled", "false")
       .config("spark.ui.enabled", "false")
     extra.foreach { case (k, v) => b.config(k, v) }
     b.getOrCreate()

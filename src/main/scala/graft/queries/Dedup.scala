@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables._
+import graft.table.{Snapshot, TableLog}
 
 /** Large-scale deduplication operators over the `documents` table — the
   * LLM-training-data extension surface (builder brief; SURVEY.md §7.3 #8).
@@ -1279,12 +1280,12 @@ object Dedup {
     try {
       // day 0: fingerprint history once, commit as index v1
       Warehouse.o16Stage(base, "index-0", d4Simhash64Of(hist))
-      require(Warehouse.o16TryPublish(base, "index-0", expected = 0),
+      require(Snapshot.commit(base, 1, Snapshot.Manifest("index-0")),
         "d18: uncontended index v1 commit failed")
       // day 1: the incremental step — index read through the manifest,
       // only the new batch's text scanned
-      val v1 = Warehouse.o16Latest(base)
-      val index = Warehouse.o16Read(s, base, v1)
+      val v1 = TableLog.latest(base)
+      val index = Snapshot.read(s, base, v1)
       // fingerprint the batch text ONCE: the fingerprint relation feeds
       // three consumers (index equi-join, in-batch self-join, index v2
       // union) — unchecked, each consumer re-tokenizes and re-hashes the
@@ -1305,12 +1306,12 @@ object Dedup {
       val out = pairs.localCheckpoint()
       // commit the updated index as v2 through the CAS
       Warehouse.o16Stage(base, "index-1", index.unionByName(newFp))
-      require(Warehouse.o16TryPublish(base, "index-1", expected = v1),
+      require(Snapshot.commit(base, v1 + 1, Snapshot.Manifest("index-1")),
         "d18: index v2 CAS commit failed")
-      require(Warehouse.o16Latest(base) == v1 + 1,
+      require(TableLog.latest(base) == v1 + 1,
         "d18: index version chain must advance to v2")
-      val n1 = Warehouse.o16Read(s, base, v1).count()
-      val n2 = Warehouse.o16Read(s, base, v1 + 1).count()
+      val n1 = Snapshot.read(s, base, v1).count()
+      val n2 = Snapshot.read(s, base, v1 + 1).count()
       // with |newFp| == |batch| proven above, v1 + nFp == v1 + |batch|:
       // the committed v2 grew by exactly the batch, no drops, no dups
       require(n2 == n1 + nFp,

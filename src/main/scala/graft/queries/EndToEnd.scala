@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables._
+import graft.table.Snapshot
 
 /** The reference's flagship §3.3 DvP lifecycle certified as ONE query
   * (r9 verdict ask #7): every stage is individually oracle-green
@@ -276,7 +277,7 @@ object EndToEnd {
         .select(col("cust_id"), col("op"),
           coalesce(col("cur_value"), col("new_bal")).as("new_bal"))
       val merged = Warehouse.o10Apply(
-        Warehouse.o16Read(s, dir.toString, 0), chg)
+        Snapshot.read(s, dir.toString, 0), chg)
       val mv = Warehouse.o11IncrementalAgg(s, d)
         .withColumnRenamed("user_id", "cust_id")
         .select(col("cust_id"), col("n_events"), col("total_value"),
@@ -293,7 +294,7 @@ object EndToEnd {
           coalesce(col("scd_versions"), lit(0L)).as("scd_versions"),
           coalesce(col("op"), lit("N")).as("chg_op"))
       Warehouse.o12Commit(dir.toString, 1, mart)
-      Warehouse.o16Read(s, dir.toString, 1)
+      Snapshot.read(s, dir.toString, 1)
         .orderBy("cust_id").localCheckpoint()
     } finally org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)
   }
@@ -590,7 +591,7 @@ object EndToEnd {
       val table = s"$dir/table"
       Files.createDirectories(Paths.get(table))
       Warehouse.o12Commit(table, 0, s.read.parquet(pubV.toString))
-      val published = Warehouse.o16Read(s, table, 0)
+      val published = Snapshot.read(s, table, 0)
         .select(col("doc_id"), col("lang"), col("n_chars"),
           lit("published").as("status"), lit("").as("violations"))
       val auditQ = s.read.parquet(pubQ.toString)

@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables._
+import graft.table.{Snapshot, TableLog}
 
 /** O31 — row tracking (round-20 verdict stretch #6, the public Delta
   * row-tracking shape): a stable per-row id that SURVIVES physical
@@ -47,7 +48,7 @@ object RowTracking {
     * conversion first). */
   private[graft] def o31Masked(s: SparkSession, base: String,
       v: Int): DataFrame = {
-    val m = Warehouse.o22ManifestOf(base, v)
+    val m = Snapshot.manifestOf(base, v)
     val scan = m.dataTokens.map(t => o31Scan(s, base, t))
       .reduce(_ unionByName _)
     m.dv match {
@@ -87,19 +88,17 @@ object RowTracking {
   private[graft] def o31Update(s: SparkSession, base: String,
       pred: org.apache.spark.sql.Column, set: (String, org.apache.spark.sql.Column),
       addToken: String, dvToken: String): Int = {
-    val v = Warehouse.o16Latest(base)
-    val m = Warehouse.o22ManifestOf(base, v)
+    val v = TableLog.latest(base)
+    val m = Snapshot.manifestOf(base, v)
     val victims = o31Masked(s, base, v).filter(pred).localCheckpoint()
     victims.withColumn(set._1, set._2)
       .drop("__file", "__pos")
       .coalesce(1).write.mode("overwrite").parquet(s"$base/data-$addToken")
     val addrs = victims.select(col("__file").as("file_path"),
       col("__pos").as("pos"))
-    val newDv = m.dv.map(t => s.read.parquet(s"$base/dv-$t"))
-      .fold(addrs)(p => p.unionByName(addrs))
-    newDv.coalesce(1).write.mode("overwrite").parquet(s"$base/dv-$dvToken")
-    require(Warehouse.o22Commit(base, v + 1, m.token, Some(dvToken),
-        m.adds :+ addToken, m.eqs),
+    Snapshot.writeVector(s, base, m, addrs, dvToken)
+    require(Snapshot.commit(base, v + 1,
+        m.copy(dv = Some(dvToken), adds = m.adds :+ addToken)),
       s"o31: update commit at version ${v + 1} lost the CAS race")
     v + 1
   }
@@ -110,11 +109,11 @@ object RowTracking {
     * across OPTIMIZE by physical materialization). */
   private[graft] def o31Optimize(s: SparkSession, base: String,
       newToken: String): Int = {
-    val v = Warehouse.o16Latest(base)
+    val v = TableLog.latest(base)
     o31Masked(s, base, v).drop("__file", "__pos")
       .coalesce(2).write.mode("overwrite").parquet(s"$base/data-$newToken")
-    require(Warehouse.o22Commit(base, v + 1, newToken, None,
-        rewriteOf = Some(v)),
+    require(Snapshot.commit(base, v + 1,
+        Snapshot.Manifest(newToken, rewriteOf = Some(v))),
       s"o31: optimize commit at version ${v + 1} lost the CAS race")
     v + 1
   }
@@ -127,17 +126,12 @@ object RowTracking {
     * a pre = insert. */
   private[graft] def o31FeedOf(s: SparkSession, base: String,
       v: Int, cols: Seq[String]): DataFrame = {
-    val prev = Warehouse.o22ManifestOf(base, v)
-    val next = Warehouse.o22ManifestOf(base, v + 1)
+    val prev = Snapshot.manifestOf(base, v)
+    val next = Snapshot.manifestOf(base, v + 1)
     require(next.token == prev.token && next.adds.startsWith(prev.adds) &&
-        next.dv.isDefined,
+        next.dv.exists(!prev.dv.contains(_)),
       s"o31: step $v->${v + 1} is not an update-shaped commit")
-    val newDv = s.read.parquet(s"$base/dv-${next.dv.get}")
-    val delta = prev.dv match {
-      case None => newDv
-      case Some(t) => newDv.join(s.read.parquet(s"$base/dv-$t"),
-        Seq("file_path", "pos"), "left_anti")
-    }
+    val delta = Snapshot.vectorDelta(s, base, prev, next).get
     val prevMasked = o31Masked(s, base, v)
     val pre = prevMasked.join(broadcast(delta),
         prevMasked("__file") === delta("file_path") &&
@@ -191,7 +185,7 @@ object RowTracking {
       // the staged row count rides o31Ingest's sidecar pass — the
       // uniqueness require below otherwise re-scanned the corpus twice
       val nDocs = o31Ingest(s, base, "w0", docs.repartition(4))
-      require(Warehouse.o22Commit(base, 1, "w0", None),
+      require(Snapshot.commit(base, 1, Snapshot.Manifest("w0")),
         "o31: v1 commit failed")
       // ONE materialization per version: the ladder's requires otherwise
       // re-derive each version's masked scan 2-4× (every isEmpty/count

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.Tables._
-import graft.table.TableLog
+import graft.table.{Snapshot, TableLog}
 
 /** Warehouse maintenance operators: the two change-data shapes every
   * large dimensional pipeline runs — building a type-2 slowly-changing
@@ -242,7 +242,7 @@ object Warehouse {
     * o16 layout: the data lands in a `data-<token>` dir whose token is
     * new for every attempt (invisible to readers until a manifest names
     * it), and the COMMIT POINT is the put-if-absent of `manifest-v`
-    * naming the token ([[o16TryPublish]]). Version ids are MONOTONIC:
+    * naming the token ([[Snapshot.commit]]). Version ids are MONOTONIC:
     * `v` must be above the newest committed manifest (the high-water
     * mark; -1 for an empty table) when the commit starts. [[vacuum]]
     * always keeps the newest manifest, so the mark never moves back
@@ -264,7 +264,7 @@ object Warehouse {
     // commits a deliberately-packed layout; the default single file
     // keeps the small verification snapshots tidy)
     o16Stage(base, token, if (keepLayout) df else df.coalesce(1))
-    require(o16TryPublish(base, token, expected = v - 1),
+    require(Snapshot.commit(base, v, Snapshot.Manifest(token)),
       s"o12: commit conflict at version $v — another writer committed " +
         "it first")
   }
@@ -298,10 +298,10 @@ object Warehouse {
         col("c_mktsegment").as("segment"), col("c_acctbal").as("bal"))
       o12Commit(dir.toString, 0, base)
       o12Commit(dir.toString, 1,
-        o10Apply(o16Read(s, dir.toString, 0), o10Changes(s, d)))
-      o16Read(s, dir.toString, 0).withColumn("version", lit(0))
+        o10Apply(Snapshot.read(s, dir.toString, 0), o10Changes(s, d)))
+      Snapshot.read(s, dir.toString, 0).withColumn("version", lit(0))
         .unionByName(
-          o16Read(s, dir.toString, 1).withColumn("version", lit(1)))
+          Snapshot.read(s, dir.toString, 1).withColumn("version", lit(1)))
         .orderBy("version", "cust_id")
         .localCheckpoint()
     } finally org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)
@@ -370,7 +370,8 @@ object Warehouse {
       val fs = new Path(dir.toString)
         .getFileSystem(s.sparkContext.hadoopConfiguration)
       def dataFiles(v: Int) =
-        fs.listStatus(new Path(o16DataDir(dir.toString, v)))
+        fs.listStatus(new Path(Snapshot.dataPath(dir.toString,
+            Snapshot.manifestOf(dir.toString, v).token)))
           .filter(st => st.isFile && !st.getPath.getName.startsWith("_") &&
             !st.getPath.getName.startsWith("."))
       def packBound(files: Array[org.apache.hadoop.fs.FileStatus]) =
@@ -410,7 +411,7 @@ object Warehouse {
       // OPTIMIZE: read v0 strictly THROUGH the manifest, range-cluster
       // + bin-pack, commit as v1 — v0 stays readable and untouched
       o12Commit(dir.toString, 1,
-        o16Read(s, dir.toString, 0)
+        Snapshot.read(s, dir.toString, 0)
           .repartitionByRange(bound, col("doc_id"))
           .sortWithinPartitions("doc_id"),
         keepLayout = true)
@@ -420,9 +421,9 @@ object Warehouse {
       require(after.length < before.length,
         s"o15: optimize did not reduce files (${before.length} -> " +
           s"${after.length})")
-      o16Read(s, dir.toString, 0).withColumn("version", lit(0))
+      Snapshot.read(s, dir.toString, 0).withColumn("version", lit(0))
         .unionByName(
-          o16Read(s, dir.toString, 1).withColumn("version", lit(1)))
+          Snapshot.read(s, dir.toString, 1).withColumn("version", lit(1)))
         .orderBy("version", "doc_id")
         .localCheckpoint()
     } finally org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)
@@ -440,9 +441,11 @@ object Warehouse {
     * versions, deleted dirs), both ascending. This is the family's ONE
     * vacuum — o12's per-version tokens, o22's shared tokens with
     * vectors and equality files, o23's checkpointed logs — because the
-    * retained manifests are read through [[o22ManifestOf]], whose
-    * grammar accepts every body the family commits. The retained set is
-    * computed once; then, in the order that keeps every reader safe:
+    * retained manifests are read through [[Snapshot.manifestOf]], the
+    * one grammar every numbered-manifest chain commits in. It does not
+    * accept o25's partition-map or s28's cell-entry bodies, so neither
+    * table is vacuumed here. The retained set is computed once; then,
+    * in the order that keeps every reader safe:
     *
     *  1. if the table has a checkpoint, the checkpoint path flips to
     *     retained-only FIRST: rewrite the checkpoint at the newest
@@ -495,13 +498,12 @@ object Warehouse {
     def aged(p: Path) = Files.getLastModifiedTime(p).toMillis <= floor
     val vs = TableLog.versions(base)
     val (expired, keep) = vs.splitAt(vs.length - retain)
-    val kept = keep.map(o22ManifestOf(base, _))
+    val kept = keep.map(Snapshot.manifestOf(base, _))
     // step 1: the checkpoint path flips to retained-only first
     val cps = TableLog.checkpoints(base)
     if (expired.nonEmpty && cps.nonEmpty) {
-      TableLog.replace(base, TableLog.checkpoint(keep.last),
-        keep.zip(kept).map { case (v, m) => s"$v:${m.token}" }
-          .mkString("\n"))
+      Snapshot.writeCheckpoint(base, keep.last, keep.zip(kept.map(_.token)),
+        replace = true)
       // the pointer may name a concurrent appender's newer fold instead:
       // retiring that one would leave the pointer dangling
       val pointed = TableLog.advancePointer(base, keep.last)
@@ -549,26 +551,27 @@ object Warehouse {
         col("c_mktsegment").as("segment"), col("c_acctbal").as("bal"))
       o12Commit(dir.toString, 0, base)
       o12Commit(dir.toString, 1,
-        o10Apply(o16Read(s, dir.toString, 0), o10Changes(s, d)))
+        o10Apply(Snapshot.read(s, dir.toString, 0), o10Changes(s, d)))
       o12Commit(dir.toString, 2,
-        o16Read(s, dir.toString, 1)
+        Snapshot.read(s, dir.toString, 1)
           .withColumn("bal", col("bal") + lit(1)))
-      val v0Dir = java.nio.file.Paths.get(o16DataDir(dir.toString, 0))
+      val v0Dir = java.nio.file.Paths.get(Snapshot.dataPath(dir.toString,
+        Snapshot.manifestOf(dir.toString, 0).token))
       val (expired, _) = vacuum(dir.toString, 2)
       require(expired == Seq(0), s"o13: expected to expire {0}, got $expired")
       require(TableLog.versions(dir.toString) == Seq(1, 2),
         s"o13: manifest must retain exactly {1,2}")
       val stale =
-        try { o16Read(s, dir.toString, 0); false }
+        try { Snapshot.read(s, dir.toString, 0); false }
         catch { case _: IllegalArgumentException => true }
       require(stale, "o13: expired VERSION AS OF must fail loudly")
       require(!java.nio.file.Files.exists(v0Dir),
         "o13: expired version files must be physically deleted")
       require(vacuum(dir.toString, 2)._1.isEmpty,
         "o13: immediate vacuum re-run must expire nothing")
-      o16Read(s, dir.toString, 1).withColumn("version", lit(1))
+      Snapshot.read(s, dir.toString, 1).withColumn("version", lit(1))
         .unionByName(
-          o16Read(s, dir.toString, 2).withColumn("version", lit(2)))
+          Snapshot.read(s, dir.toString, 2).withColumn("version", lit(2)))
         .orderBy("version", "cust_id")
         .localCheckpoint()
     } finally org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)
@@ -696,25 +699,13 @@ object Warehouse {
 
   // ---- O16: optimistic concurrency (CAS commit conflict) --------------
 
-  /** The o16 table layout: `data-<token>` dirs (immutable, uniquely
-    * named per writer — staging never races) + numbered `manifest-N`
-    * files, each naming the data token version N resolves to. The
-    * COMMIT POINT is the atomic CREATE-IF-ABSENT of `manifest-N`
-    * ([[TableLog.create]]) — link(2) → EEXIST is the one POSIX primitive
-    * that creates a name atomically and FAILS LOUDLY if it already
-    * exists, unlike rename(2) which last-writer-wins over files. This
-    * is exactly the public Iceberg HDFS commit protocol (and the
-    * object-store PUT-if-absent shape): N racing writers all compute
-    * "next version = latest + 1" and race the create; exactly one
-    * wins, every loser gets a thrown conflict AT COMMIT TIME and can
-    * retry against the new table state. o12 (and with it o13, o15,
-    * o17, o20 and the e2e chains) commits through the same create.
-    */
-  private[graft] def o16Latest(base: String): Int = TableLog.latest(base)
-
   /** Stage a writer's data under its unique token — no race possible
     * (tokens are writer-chosen and unique); invisible to readers until
-    * some manifest names the token. */
+    * some manifest names the token. This is the o16 table layout:
+    * immutable `data-<token>` dirs plus numbered `manifest-N` files
+    * ([[Snapshot]]), whose put-if-absent create ([[Snapshot.commit]])
+    * is the commit point o12 (and with it o13, o15, o17, o20 and the
+    * e2e chains) commits through. */
   private[graft] def o16Stage(base: String, token: String,
       df: DataFrame): Unit =
     df.write.mode("overwrite").parquet(s"$base/data-$token")
@@ -741,29 +732,6 @@ object Warehouse {
       keys: Seq[String]): Boolean =
     a.join(b, keys, "left_anti").unionByName(b.join(a, keys, "left_anti"))
       .isEmpty
-
-  /** One optimistic publish attempt: CAS `manifest-(expected+1)` to
-    * the staged token ([[TableLog.create]]). Returns true iff THIS
-    * writer created the manifest (won the race); false iff another
-    * commit landed first — the conflict signal the caller retries on.
-    * A winning manifest is always complete (never a partial write). */
-  private[graft] def o16TryPublish(base: String, token: String,
-      expected: Int): Boolean =
-    TableLog.create(base, TableLog.manifest(expected + 1), token)
-
-  /** Read version `v` strictly through its manifest (absent manifest =
-    * uncommitted version, loud failure — the o12 read discipline). The
-    * manifest names either a LOCAL data token or an ABSOLUTE data path
-    * (a shallow clone's manifest references the SOURCE table's files
-    * by path — the public Delta SHALLOW CLONE mechanism). */
-  private[graft] def o16Read(s: SparkSession, base: String,
-      v: Int): DataFrame =
-    s.read.parquet(o16DataDir(base, v))
-
-  private[graft] def o16DataDir(base: String, v: Int): String = {
-    val token = TableLog.read(base, TableLog.manifest(v)).trim
-    if (token.startsWith("/")) token else s"$base/data-$token"
-  }
 
   /** O16 — optimistic commit-conflict detection, driven through a
     * deterministic interleave of a commit race:
@@ -810,41 +778,44 @@ object Warehouse {
           lit("late-crawl").as("source"))
       // v1: initial fragmented commit (no contention yet)
       o16Stage(base, "ingest-0", docs.repartition(8))
-      require(o16TryPublish(base, "ingest-0", expected = 0),
+      require(Snapshot.commit(base, 1, Snapshot.Manifest("ingest-0")),
         "o16: uncontended v1 commit failed")
       // B (OPTIMIZE) reads latest=1 and stages its rewrite of v1
-      val bSeen = o16Latest(base)
+      val bSeen = TableLog.latest(base)
       def files(token: String): Seq[(String, Long)] =
         TableLog.files(java.nio.file.Paths.get(base, s"data-$token"),
           p => TableLog.noMarkers(p) &&
             !p.getFileName.toString.startsWith("."))
       def packedRewriteOf(v: Int): (DataFrame, Int) = {
-        val token = TableLog.read(base, TableLog.manifest(v)).trim
+        val token = Snapshot.manifestOf(base, v).token
         val bound = graft.sink.Compact.targetFileCount(
           files(token).map(_._2).sum, O15TargetBytes)
-        (o16Read(s, base, v).repartitionByRange(bound, col("doc_id"))
+        (Snapshot.read(s, base, v).repartitionByRange(bound, col("doc_id"))
           .sortWithinPartitions("doc_id"), bound)
       }
       val (bStale, _) = packedRewriteOf(bSeen)
       o16Stage(base, "optimize-1", bStale)
       // A (ingest) commits v2 = v1 ∪ appends between B's read and CAS
       o16Stage(base, "ingest-1",
-        o16Read(s, base, o16Latest(base)).unionByName(appends).repartition(8))
-      require(o16TryPublish(base, "ingest-1", expected = 1),
+        Snapshot.read(s, base, TableLog.latest(base)).unionByName(appends)
+          .repartition(8))
+      require(Snapshot.commit(base, 2, Snapshot.Manifest("ingest-1")),
         "o16: ingest commit failed — harness lost its interleave")
       val v1Files = files("ingest-0")
       val v2Files = files("ingest-1")
       // B's CAS at its stale expectation MUST lose — loudly, not
       // last-writer-wins
-      require(!o16TryPublish(base, "optimize-1", expected = bSeen),
+      require(!Snapshot.commit(base, bSeen + 1,
+          Snapshot.Manifest("optimize-1")),
         "o16: the stale OPTIMIZE commit did not conflict — the CAS " +
           "primitive is broken (lost update)")
       // retry against the new state: re-read, re-derive, commit v3
-      val latest = o16Latest(base)
+      val latest = TableLog.latest(base)
       require(latest == bSeen + 1, s"o16: expected v2 live, saw $latest")
       val (bFresh, bound) = packedRewriteOf(latest)
       o16Stage(base, "optimize-2", bFresh)
-      require(o16TryPublish(base, "optimize-2", expected = latest),
+      require(Snapshot.commit(base, latest + 1,
+          Snapshot.Manifest("optimize-2")),
         "o16: the retried OPTIMIZE commit failed against the new state")
       val v3Files = files("optimize-2")
       require(v3Files.length <= bound,
@@ -855,7 +826,7 @@ object Warehouse {
       // the earlier versions' data never moved under the whole dance
       require(files("ingest-0") == v1Files && files("ingest-1") == v2Files,
         "o16: a committed version's data files changed during the race")
-      (1 to 3).map(v => o16Read(s, base, v)
+      (1 to 3).map(v => Snapshot.read(s, base, v)
           .withColumn("version", lit(v)))
         .reduce(_ unionByName _)
         .select(col("version"), col("doc_id"), col("lang"), col("source"))
@@ -910,8 +881,8 @@ object Warehouse {
       // ordinary data — v0 is untouched
       o12Commit(dir.toString, 1,
         documents(s, d).select(col("doc_id"), col("lang"), col("source")))
-      val v0 = o16Read(s, dir.toString, 0)
-      val v1 = o16Read(s, dir.toString, 1)
+      val v0 = Snapshot.read(s, dir.toString, 0)
+      val v1 = Snapshot.read(s, dir.toString, 1)
       require(v0.schema.fieldNames.toSeq == Seq("doc_id", "lang"),
         s"o17: time travel must be schema-faithful - v0 reads as " +
           s"(${v0.schema.fieldNames.mkString(",")})")
@@ -943,7 +914,8 @@ object Warehouse {
     * touching the source. */
   private[graft] def o21ShallowCloneOf(srcBase: String, srcV: Int,
       dstBase: String): Boolean =
-    TableLog.create(dstBase, TableLog.manifest(1), o16DataDir(srcBase, srcV))
+    Snapshot.commit(dstBase, 1, Snapshot.Manifest(Snapshot.dataPath(srcBase,
+      Snapshot.manifestOf(srcBase, srcV).token)))
 
   /** O21 — SHALLOW CLONE (zero-copy table fork), the public Delta
     * `CREATE TABLE ... SHALLOW CLONE` shape: an experiment/dev fork of
@@ -977,7 +949,7 @@ object Warehouse {
       val docs = documents(s, d).select(col("doc_id"), col("lang"),
         col("source"))
       o16Stage(dirA.toString, "a0", docs.repartition(4))
-      require(o16TryPublish(dirA.toString, "a0", 0),
+      require(Snapshot.commit(dirA.toString, 1, Snapshot.Manifest("a0")),
         "o21: source v1 commit failed")
       val aBefore = TableLog.files(dirA, TableLog.noMarkers)
       // the clone: one metadata create, zero data bytes in B's dir
@@ -988,21 +960,21 @@ object Warehouse {
         "o21: a SHALLOW clone must not copy data")
       // copy-on-write divergence: the clone's v2 edits a slice
       o16Stage(dirB.toString, "b-edit",
-        o16Read(s, dirB.toString, 1).withColumn("source",
+        Snapshot.read(s, dirB.toString, 1).withColumn("source",
           when(col("doc_id") % 5 === 0, lit("edited"))
             .otherwise(col("source"))))
-      require(o16TryPublish(dirB.toString, "b-edit", 1),
+      require(Snapshot.commit(dirB.toString, 2, Snapshot.Manifest("b-edit")),
         "o21: clone edit commit failed")
       // the source never moved
       require(TableLog.files(dirA, TableLog.noMarkers) == aBefore,
         "o21: editing the clone touched the source's files")
-      o16Read(s, dirA.toString, 1)
+      Snapshot.read(s, dirA.toString, 1)
         .select(lit("A").as("tbl"), lit(1).as("version"), col("doc_id"),
           col("lang"), col("source"))
-        .unionByName(o16Read(s, dirB.toString, 1)
+        .unionByName(Snapshot.read(s, dirB.toString, 1)
           .select(lit("B").as("tbl"), lit(1).as("version"), col("doc_id"),
             col("lang"), col("source")))
-        .unionByName(o16Read(s, dirB.toString, 2)
+        .unionByName(Snapshot.read(s, dirB.toString, 2)
           .select(lit("B").as("tbl"), lit(2).as("version"), col("doc_id"),
             col("lang"), col("source")))
         .orderBy("tbl", "version", "doc_id")
@@ -1090,9 +1062,9 @@ object Warehouse {
         col("c_mktsegment").as("segment"), col("c_acctbal").as("bal"))
       o12Commit(dir.toString, 0, base)
       o12Commit(dir.toString, 1,
-        o10Apply(o16Read(s, dir.toString, 0), o10Changes(s, d)))
-      val v0 = o16Read(s, dir.toString, 0)
-      val v1 = o16Read(s, dir.toString, 1)
+        o10Apply(Snapshot.read(s, dir.toString, 0), o10Changes(s, d)))
+      val v0 = Snapshot.read(s, dir.toString, 0)
+      val v1 = Snapshot.read(s, dir.toString, 1)
       val feed = o20Diff(v0, v1, "cust_id", Seq("segment", "bal"))
         .localCheckpoint()
       // the defining algebra: v0 + feed == v1, exactly
@@ -1403,152 +1375,6 @@ object Warehouse {
 
   // ---- O22: row-level deletes via deletion vectors ---------------------
 
-  /** An o22 manifest: the version's PRIMARY immutable data token, any
-    * ADDITIONAL data tokens (`add:` lines — the delta files a MERGE or
-    * append commits next to the base without rewriting it), the
-    * OPTIONAL positional deletion-vector token masking the data
-    * (`dv:`), any EQUALITY-delete entries (`eq:<tok>=<dataTokCsv>` —
-    * a key file plus the data tokens it masks; recording the applies-to
-    * set per entry is the Iceberg v2 sequence-number rule made
-    * explicit, so a data file committed AFTER an equality delete is
-    * never masked by it and a re-inserted key survives), and the
-    * OPTIONAL `rewriteOf:<v>` marker stamping the commit as a pure
-    * physical rewrite of version v (OPTIMIZE — dataChange=false in the
-    * public Delta protocol). The marker is what lets o24 emit an EMPTY
-    * feed for a token-changing commit WITHOUT guessing: an unmarked
-    * token change is an ordinary overwrite and must be refused, not
-    * silently fed as zero changes.
-    *
-    * The DV — not a rewrite — is what makes a 100-row delete on a
-    * 100 TB table affordable: data files never move; the delete commits
-    * O(deleted rows) of metadata naming (file, position) pairs the read
-    * subtracts. Equality entries go one step further: O(deleted KEYS)
-    * of metadata with ZERO table scans — the CDC delete path. */
-  private[graft] case class O22Manifest(token: String, dv: Option[String],
-      adds: Seq[String] = Nil, eqs: Seq[(String, Seq[String])] = Nil,
-      rewriteOf: Option[Int] = None, minReader: Int = 1) {
-    /** Every data token the version reads, primary first. */
-    def dataTokens: Seq[String] = token +: adds
-  }
-
-  /** The protocol version THIS reader supports (the public Delta
-    * minReaderVersion / Iceberg format-version gate). Version 1 is the
-    * token+vector grammar; version 2 adds `add:`/`eq:` lines — lines a
-    * v1 parser would SILENTLY IGNORE, resurrecting equality-deleted
-    * rows and dropping merged delta files. A commit that uses a
-    * reader-impacting feature stamps `minReader:2` and every consumer
-    * gates on it in [[o22ManifestOf]], so an old reader fails LOUDLY
-    * naming the version gap instead of returning wrong rows.
-    * (`rewriteOf:` deliberately does NOT bump the gate — a v1 plain
-    * read that ignores it is still correct; it only informs the CDF,
-    * whose consumers are v2 by construction.) */
-  private[graft] val O22ReaderVersion = 2
-
-  /** CAS-commit version `v` ([[TableLog.create]], the o16 primitive):
-    * line 1 is the primary data token; optional
-    * `add:`/`dv:`/`eq:`/`rewriteOf:` lines follow (see [[O22Manifest]]).
-    * DV commits REUSE the shared data token, so two concurrent deleters
-    * may race one version with near-identical bodies — the per-attempt
-    * scratch keeps each racer's body its own. */
-  private[graft] def o22Commit(base: String, v: Int, token: String,
-      dv: Option[String], adds: Seq[String] = Nil,
-      eqs: Seq[(String, Seq[String])] = Nil,
-      rewriteOf: Option[Int] = None): Boolean = {
-    require((token +: adds).forall(t => !t.exists(":=,\n".contains(_))) &&
-      eqs.forall { case (t, ap) =>
-        !t.exists(":=,\n".contains(_)) &&
-          ap.nonEmpty && ap.forall(a => !a.exists(":=,\n".contains(_))) },
-      "o22: tokens may not carry manifest delimiters")
-    // reader-impacting features stamp the protocol gate: a v1 parser
-    // ignoring add:/eq: lines would read WRONG rows, so commits using
-    // them must be unreadable-by-refusal to v1 readers, never
-    // readable-and-wrong
-    val gate =
-      if (adds.nonEmpty || eqs.nonEmpty) Seq("minReader:2") else Seq.empty
-    val body = (Seq(token) ++ gate ++ adds.map(t => s"add:$t") ++
-      dv.map(t => s"dv:$t").toSeq ++
-      eqs.map { case (t, ap) => s"eq:$t=${ap.mkString(",")}" } ++
-      rewriteOf.map(pv => s"rewriteOf:$pv").toSeq).mkString("\n")
-    TableLog.create(base, TableLog.manifest(v), body)
-  }
-
-  private[graft] def o22ManifestOf(base: String, v: Int,
-      maxReader: Int = O22ReaderVersion): O22Manifest = {
-    val lines = TableLog.read(base, TableLog.manifest(v)).split("\n").toSeq
-      .map(_.trim).filter(_.nonEmpty)
-    val minReader = lines.find(_.startsWith("minReader:"))
-      .map(_.stripPrefix("minReader:").toInt).getOrElse(1)
-    // the protocol gate: refuse loudly BEFORE interpreting any feature
-    // line — a reader that ignored lines it doesn't know would return
-    // wrong rows, silently
-    require(minReader <= maxReader,
-      s"o22: version $v requires reader protocol $minReader, this " +
-        s"reader supports $maxReader — refusing (reading anyway would " +
-        "silently drop feature lines and return wrong rows)")
-    O22Manifest(
-      token = lines.head,
-      dv = lines.find(_.startsWith("dv:")).map(_.stripPrefix("dv:")),
-      adds = lines.filter(_.startsWith("add:")).map(_.stripPrefix("add:")),
-      eqs = lines.filter(_.startsWith("eq:")).map { l =>
-        val Array(t, ap) = l.stripPrefix("eq:").split("=", 2)
-        (t, ap.split(",").filter(_.nonEmpty).toSeq)
-      },
-      rewriteOf = lines.find(_.startsWith("rewriteOf:"))
-        .map(_.stripPrefix("rewriteOf:").toInt),
-      minReader = minReader)
-  }
-
-  /** The version's data scan CARRYING each row's physical address —
-    * (`__dv_file`, `__dv_pos`) from the parquet scan's own
-    * `_metadata.file_path`/`row_index` (Spark's native row-position
-    * metadata; positions are the row's ordinal in its immutable file,
-    * exactly Iceberg's positional-delete coordinates). */
-  private[graft] def o22ScanWithPos(s: SparkSession, base: String,
-      token: String): DataFrame =
-    s.read.parquet(s"$base/data-$token")
-      .withColumn("__dv_file", col("_metadata.file_path"))
-      .withColumn("__dv_pos", col("_metadata.row_index"))
-
-  /** The version's FULL data scan — every data token, each row carrying
-    * its physical address (`__dv_file`, `__dv_pos`) and source token
-    * (`__tok`) — with BOTH delete kinds applied: the positional vector
-    * masks (file, position) across all tokens (one broadcast
-    * anti-join; the DV is O(deleted rows) by construction, so the data
-    * side never shuffles and pushdown/pruning survive untouched); each
-    * equality entry key-anti-joins ONLY the data tokens it names — the
-    * Iceberg v2 sequence rule: a file committed after the equality
-    * delete is never masked by it. Callers that need the addresses
-    * (delete, conversion, CDF) keep the meta columns; [[o22Read]]
-    * drops them. */
-  private[graft] def o22MaskedWithPos(s: SparkSession, base: String,
-      v: Int): DataFrame = {
-    val m = o22ManifestOf(base, v)
-    val scan = m.dataTokens.map(t =>
-        o22ScanWithPos(s, base, t).withColumn("__tok", lit(t)))
-      .reduce(_ unionByName _)
-    val posMasked = m.dv match {
-      case None => scan
-      case Some(dvTok) =>
-        val dv = s.read.parquet(s"$base/dv-$dvTok")
-        scan.join(broadcast(dv),
-          scan("__dv_file") === dv("file_path") &&
-            scan("__dv_pos") === dv("pos"),
-          "left_anti")
-    }
-    m.eqs.foldLeft(posMasked) { case (acc, (eqTok, applies)) =>
-      val keys = s.read.parquet(s"$base/eq-$eqTok")
-      val cond = keys.columns.map(c => acc(c) === keys(c))
-        .reduce(_ && _) && acc("__tok").isin(applies: _*)
-      acc.join(broadcast(keys), cond, "left_anti")
-    }
-  }
-
-  /** Read version `v` strictly through its manifest, with every named
-    * mask (positional vector + equality entries) applied. */
-  private[graft] def o22Read(s: SparkSession, base: String,
-      v: Int): DataFrame =
-    o22MaskedWithPos(s, base, v).drop("__dv_file", "__dv_pos", "__tok")
-
   /** DELETE WHERE `pred` at the current version, WITHOUT rewriting a
     * data file: evaluate the predicate over the masked current read,
     * record the victims' (file, position) addresses, union them into
@@ -1560,14 +1386,12 @@ object Warehouse {
     * written — never O(table) bytes. */
   private[graft] def o22Delete(s: SparkSession, base: String,
       pred: org.apache.spark.sql.Column, dvToken: String): Int = {
-    val v = o16Latest(base)
-    val m = o22ManifestOf(base, v)
-    val victims = o22MaskedWithPos(s, base, v).filter(pred)
+    val v = TableLog.latest(base)
+    val m = Snapshot.manifestOf(base, v)
+    val victims = Snapshot.read(s, base, v, addresses = true).filter(pred)
       .select(col("__dv_file").as("file_path"), col("__dv_pos").as("pos"))
-    val newDv = m.dv.map(t => s.read.parquet(s"$base/dv-$t"))
-      .fold(victims)(p => p.unionByName(victims))
-    newDv.coalesce(1).write.mode("overwrite").parquet(s"$base/dv-$dvToken")
-    require(o22Commit(base, v + 1, m.token, Some(dvToken), m.adds, m.eqs),
+    Snapshot.writeVector(s, base, m, victims, dvToken)
+    require(Snapshot.commit(base, v + 1, m.copy(dv = Some(dvToken))),
       s"o22: delete commit at version ${v + 1} lost the CAS race")
     v + 1
   }
@@ -1582,9 +1406,10 @@ object Warehouse {
     * through its masks. */
   private[graft] def o22Optimize(s: SparkSession, base: String,
       newToken: String): Int = {
-    val v = o16Latest(base)
-    o16Stage(base, newToken, o22Read(s, base, v).coalesce(2))
-    require(o22Commit(base, v + 1, newToken, None, rewriteOf = Some(v)),
+    val v = TableLog.latest(base)
+    o16Stage(base, newToken, Snapshot.read(s, base, v).coalesce(2))
+    require(Snapshot.commit(base, v + 1,
+        Snapshot.Manifest(newToken, rewriteOf = Some(v))),
       s"o22: optimize commit at version ${v + 1} lost the CAS race")
     v + 1
   }
@@ -1632,7 +1457,8 @@ object Warehouse {
       // writeEnveloped discipline) — it feeds the physical-retention
       // require below, which otherwise re-scanned the corpus
       val fullN = o16StageCounted(base, "w0", docs.repartition(4))
-      require(o22Commit(base, 1, "w0", None), "o22: v1 commit failed")
+      require(Snapshot.commit(base, 1, Snapshot.Manifest("w0")),
+        "o22: v1 commit failed")
       def dataFiles(): Seq[(String, Long)] = TableLog.files(dir,
         p => p.toString.contains("/data-") && TableLog.noMarkers(p))
       val before = dataFiles()
@@ -1643,8 +1469,8 @@ object Warehouse {
       // immutable token
       require(dataFiles() == before,
         "o22: a deletion-vector delete must not touch data files")
-      require(o22ManifestOf(base, 2).token == "w0" &&
-          o22ManifestOf(base, 3).token == "w0",
+      require(Snapshot.manifestOf(base, 2).token == "w0" &&
+          Snapshot.manifestOf(base, 3).token == "w0",
         "o22: deletes must reuse the immutable data token")
       // the victims are PHYSICALLY present yet unreachable: the raw
       // dir scan still counts them, the masked read does not
@@ -1652,13 +1478,13 @@ object Warehouse {
       require(rawN == fullN,
         s"o22: deleted rows' bytes must stay in the files ($rawN/$fullN)")
       val v4 = o22Optimize(s, base, "w1")
-      require(o22ManifestOf(base, v4).dv.isEmpty,
+      require(Snapshot.manifestOf(base, v4).dv.isEmpty,
         "o22: OPTIMIZE must retire the vector")
       // the rewrite genuinely dropped the victims' bytes
       require(s.read.parquet(s"$base/data-w1").count() ==
-          o22Read(s, base, 3).count(),
+          Snapshot.read(s, base, 3).count(),
         "o22: the materialized token must carry exactly the masked rows")
-      (1 to 4).map(v => o22Read(s, base, v).withColumn("version", lit(v)))
+      (1 to 4).map(v => Snapshot.read(s, base, v).withColumn("version", lit(v)))
         .reduce(_ unionByName _)
         .select(col("version"), col("doc_id"), col("lang"), col("source"))
         .orderBy("version", "doc_id")
@@ -1691,12 +1517,6 @@ object Warehouse {
     * spec require on the count. */
   private[graft] final class O23Opens { var n: Int = 0 }
 
-  private def o23ParseCp(body: String): Seq[(Int, String)] =
-    body.split("\n").filter(_.nonEmpty).toSeq.map { line =>
-      val Array(v, t) = line.split(":", 2)
-      (v.toInt, t)
-    }
-
   /** Resolve the FULL committed version chain in O(1) metadata opens
     * past the last checkpoint (the public Delta `_last_checkpoint`
     * mechanism): read the pointer (1 open), read the checkpoint it
@@ -1717,14 +1537,14 @@ object Warehouse {
     val fromCp: Seq[(Int, String)] =
       TableLog.get(base, TableLog.LastCheckpoint).toSeq.flatMap { ptr =>
         opens.n += 2
-        o23ParseCp(TableLog.read(base, TableLog.checkpoint(ptr.trim.toInt)))
+        Snapshot.checkpointOf(base, ptr.trim.toInt)
       }
     val firstTail = fromCp.lastOption.map(_._1 + 1)
       .getOrElse(TableLog.versions(base).headOption.getOrElse(1))
     // one probe per tail commit, plus the miss that ends the scan
     val tail = Iterator.from(firstTail).map { v =>
       opens.n += 1
-      TableLog.get(base, TableLog.manifest(v)).map(t => (v, t.trim))
+      Snapshot.find(base, v).map(m => (v, m.token))
     }.takeWhile(_.isDefined).flatten.toSeq
     fromCp ++ tail
   }
@@ -1734,8 +1554,7 @@ object Warehouse {
     * checkpoint-read ≡ full-replay-read; production readers never call
     * it. */
   private[graft] def o23VersionsByListing(base: String): Seq[(Int, String)] =
-    TableLog.versions(base)
-      .map(v => (v, TableLog.read(base, TableLog.manifest(v)).trim))
+    TableLog.versions(base).map(v => (v, Snapshot.manifestOf(base, v).token))
 
   private[graft] def o23Latest(base: String): Int =
     o23Versions(base).lastOption.map(_._1).getOrElse(0)
@@ -1754,8 +1573,7 @@ object Warehouse {
     val chain = o23Versions(base).takeWhile(_._1 <= upTo)
     require(chain.lastOption.exists(_._1 == upTo),
       s"o23: cannot checkpoint uncommitted version $upTo")
-    TableLog.create(base, TableLog.checkpoint(upTo),
-      chain.map { case (v, t) => s"$v:$t" }.mkString("\n"))
+    Snapshot.writeCheckpoint(base, upTo, chain)
     if (!crashBeforePointer) TableLog.advancePointer(base, upTo)
   }
 
@@ -1781,7 +1599,7 @@ object Warehouse {
     var done = false
     while (!done) {
       v = o23Latest(base) + 1
-      done = o16TryPublish(base, token, expected = v - 1)
+      done = Snapshot.commit(base, v, Snapshot.Manifest(token))
     }
     if (v % O23Interval == 0) o23Checkpoint(base, v)
     v
@@ -1810,9 +1628,10 @@ object Warehouse {
     org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(scratch))
   }
 
-  /** O23 — manifest-log checkpointing (r18 verdict ask #2): `o16Latest`
-    * resolves the current version by LISTING every numbered manifest —
-    * at 10⁶ commits every reader pays an O(commits) directory scan.
+  /** O23 — manifest-log checkpointing (r18 verdict ask #2):
+    * `TableLog.latest` resolves the current version by LISTING every
+    * numbered manifest — at 10⁶ commits every reader pays an
+    * O(commits) directory scan.
     * The public Delta mechanism folded on here: every N commits the
     * writer materializes the version→token chain into `checkpoint-N`
     * and swaps a `_last_checkpoint` pointer; a reader opens the
@@ -1852,8 +1671,7 @@ object Warehouse {
       }
       require(TableLog.read(base, TableLog.LastCheckpoint).trim == "15",
         "o23: the pointer must name the newest checkpoint")
-      require(Seq(5, 10, 15).forall(v =>
-          TableLog.get(base, TableLog.checkpoint(v)).isDefined),
+      require(TableLog.checkpoints(base) == Seq(5, 10, 15),
         "o23: a checkpoint must fold every O23Interval commits")
       val opens = new O23Opens
       val chain = o23Versions(base, opens)
@@ -1864,7 +1682,8 @@ object Warehouse {
         s"o23: reader opened ${opens.n} metadata files, " +
           s"expected ${3 + (n - 15)} — O(1) past the checkpoint")
       chain.map { case (v, t) =>
-        s.read.parquet(s"$base/data-$t").withColumn("version", lit(v))
+        s.read.parquet(Snapshot.dataPath(base, t))
+          .withColumn("version", lit(v))
       }.reduce(_ unionByName _)
         .select(col("version"), col("doc_id"), col("lang"))
         .orderBy("doc_id")
@@ -1900,21 +1719,11 @@ object Warehouse {
     * require refuses loudly rather than guessing. */
   private[graft] def o24FeedOf(s: SparkSession, base: String,
       v: Int, cols: Seq[String], key: Option[String] = None): DataFrame = {
-    val prev = o22ManifestOf(base, v)
-    val next = o22ManifestOf(base, v + 1)
+    val prev = Snapshot.manifestOf(base, v)
+    val next = Snapshot.manifestOf(base, v + 1)
     // the new mask positions this commit added (next vector minus prev)
-    lazy val dvDelta: Option[DataFrame] = next.dv match {
-      case None => None
-      case Some(nd) if prev.dv.contains(nd) => None
-      case Some(nd) =>
-        val newDv = s.read.parquet(s"$base/dv-$nd")
-        Some(prev.dv match {
-          case None => newDv
-          case Some(t) => newDv.join(s.read.parquet(s"$base/dv-$t"),
-            Seq("file_path", "pos"), "left_anti")
-        })
-    }
-    lazy val prevMasked = o22MaskedWithPos(s, base, v)
+    lazy val dvDelta = Snapshot.vectorDelta(s, base, prev, next)
+    lazy val prevMasked = Snapshot.read(s, base, v, addresses = true)
     def leftViaDv(delta: DataFrame): DataFrame =
       prevMasked.join(broadcast(delta),
         prevMasked("__dv_file") === delta("file_path") &&
@@ -1933,12 +1742,8 @@ object Warehouse {
       require(dvDelta.isEmpty || newEqs.isEmpty,
         s"o24: step $v->${v + 1} introduces both a vector delta and " +
           "new equality entries — commit the two mask kinds separately")
-      val viaEq = newEqs.map { case (eqTok, applies) =>
-        val keys = s.read.parquet(s"$base/eq-$eqTok")
-        val cond = keys.columns.map(c => prevMasked(c) === keys(c))
-          .reduce(_ && _) && prevMasked("__tok").isin(applies: _*)
-        prevMasked.join(broadcast(keys), cond, "left_semi")
-      }
+      val viaEq =
+        newEqs.map(Snapshot.eqJoin(s, base, prevMasked, _, "left_semi"))
       (dvDelta.map(leftViaDv).toSeq ++ viaEq)
         .map(_.select(cols.map(col): _*))
         .reduce(_ unionByName _)
@@ -1956,7 +1761,7 @@ object Warehouse {
         s"o24: merge step $v->${v + 1} needs the merge key to classify " +
           "updates vs inserts"))
       val newRows = next.adds.drop(prev.adds.size)
-        .map(t => s.read.parquet(s"$base/data-$t"))
+        .map(t => s.read.parquet(Snapshot.dataPath(base, t)))
         .reduce(_ unionByName _).select(cols.map(col): _*)
       val preRows = dvDelta.map(leftViaDv)
         .getOrElse(prevMasked.limit(0)).select(cols.map(col): _*)
@@ -1973,7 +1778,7 @@ object Warehouse {
     } else {
       // a token-changing commit feeds EMPTY only when the writer
       // STAMPED it as a pure rewrite — an unmarked token change is an
-      // ordinary overwrite (constructible as o16Stage + o22Commit with
+      // ordinary overwrite (constructible as o16Stage + a commit with
       // a fresh token and no vector) and guessing "no change" for it
       // would silently feed nothing for a commit that changed
       // everything
@@ -1984,7 +1789,7 @@ object Warehouse {
       require(next.dv.isEmpty && next.eqs.isEmpty,
         s"o24: rewrite commit ${v + 1} must retire every mask")
       // OPTIMIZE: no visible change; an empty frame in the feed schema
-      o22Read(s, base, v + 1).select(cols.map(col): _*)
+      Snapshot.read(s, base, v + 1).select(cols.map(col): _*)
         .withColumn("change_type", lit("delete")).limit(0)
     }
   }
@@ -2021,7 +1826,8 @@ object Warehouse {
       val docs = documents(s, d).select(col("doc_id"), col("lang"),
         col("source"))
       o16Stage(base, "w0", docs.repartition(4))
-      require(o22Commit(base, 1, "w0", None), "o24: v1 commit failed")
+      require(Snapshot.commit(base, 1, Snapshot.Manifest("w0")),
+        "o24: v1 commit failed")
       o22Delete(s, base, col("doc_id") % 10 === 3, "a")
       o22Delete(s, base, col("lang") === "de", "b")
       o22Optimize(s, base, "w1")
@@ -2030,7 +1836,7 @@ object Warehouse {
       // up to 12× (every `isEmpty` action is its own pass) — at scale,
       // 12 table scans where 4 suffice
       val reads = (1 to 4).map(v =>
-        v -> o22Read(s, base, v).localCheckpoint()).toMap
+        v -> Snapshot.read(s, base, v).localCheckpoint()).toMap
       def diffOf(v: Int): DataFrame =
         o20Diff(reads(v), reads(v + 1), "doc_id", Seq("lang", "source"))
           .select((colsOut.map(col) :+ col("change_type")): _*)
@@ -2143,7 +1949,7 @@ object Warehouse {
           o25SnapshotOf(base, expect).entries ++ delta))
         return Right((expect + 1, attempts))
       // physical CAS loss: classify every commit this writer hasn't seen
-      val latest = o16Latest(base)
+      val latest = TableLog.latest(base)
       val overlap = ((seenV + 1) to latest).filter { i =>
         o25SnapshotOf(base, i).touched.intersect(touched).nonEmpty
       }
@@ -2277,7 +2083,8 @@ object Warehouse {
       val docs = documents(s, d).select(col("doc_id"), col("lang"),
         col("source"))
       o16Stage(base, "w0", docs.repartition(4))
-      require(o22Commit(base, 1, "w0", None), "o26: v1 commit failed")
+      require(Snapshot.commit(base, 1, Snapshot.Manifest("w0")),
+        "o26: v1 commit failed")
       o22Delete(s, base, col("doc_id") % 10 === 3, "a")
       o22Delete(s, base, col("lang") === "de", "b")
       o22Optimize(s, base, "w1")
@@ -2291,12 +2098,14 @@ object Warehouse {
       require(dirExists("data-w0") && dirExists("dv-b") && dirExists("data-w1"),
         "o26: a token referenced by a retained version was deleted")
       // expired versions fail loudly
-      intercept22(s, base, 1); intercept22(s, base, 2)
+      Seq(1, 2).foreach(v => require(
+        scala.util.Try(Snapshot.read(s, base, v)).isFailure,
+        s"o26: expired version $v is still readable"))
       // idempotent: an immediate re-run finds nothing
       require(vacuum(base, retain = 2) == ((Seq(), Seq())),
         "o26: a repeat vacuum must be a no-op")
       val out = Seq(3, 4).map(v =>
-          o22Read(s, base, v).withColumn("version", lit(v)))
+          Snapshot.read(s, base, v).withColumn("version", lit(v)))
         .reduce(_ unionByName _)
         .select(col("version"), col("doc_id"), col("lang"), col("source"))
         .orderBy("version", "doc_id")
@@ -2305,17 +2114,11 @@ object Warehouse {
       val (e2, d2) = vacuum(base, retain = 1)
       require(e2 == Seq(3) && d2 == Seq("data-w0", "dv-b"),
         s"o26: expected v3's retirement to free w0+dv-b, got $e2 / $d2")
-      require(o22Read(s, base, 4).count() == out.filter(col("version") === 4).count(),
+      require(Snapshot.read(s, base, 4).count() ==
+          out.filter(col("version") === 4).count(),
         "o26: the surviving version must read on after the deep vacuum")
       out
     } finally org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)
-  }
-
-  /** Loud-failure probe shared by o26's requires: reading an expired
-    * version must throw (manifest gone). */
-  private def intercept22(s: SparkSession, base: String, v: Int): Unit = {
-    val ok = scala.util.Try(o22Read(s, base, v)).isFailure
-    require(ok, s"o26: expired version $v is still readable")
   }
 
   val o26Sql: String =

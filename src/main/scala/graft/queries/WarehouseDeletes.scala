@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables._
-import graft.table.TableLog
+import graft.table.{Snapshot, TableLog}
 
 /** The two delete/write shapes that complete the o22 table's public
   * mechanism set (round-20 verdict asks #1 and #2):
@@ -55,11 +55,11 @@ object WarehouseDeletes {
     * force the very scan the format exists to avoid. */
   private[graft] def o27EqDelete(s: SparkSession, base: String,
       keys: DataFrame, eqToken: String): Int = {
-    val v = Warehouse.o16Latest(base)
-    val m = Warehouse.o22ManifestOf(base, v)
+    val v = TableLog.latest(base)
+    val m = Snapshot.manifestOf(base, v)
     keys.coalesce(1).write.mode("overwrite").parquet(s"$base/eq-$eqToken")
-    require(Warehouse.o22Commit(base, v + 1, m.token, m.dv, m.adds,
-        m.eqs :+ (eqToken -> m.dataTokens)),
+    require(Snapshot.commit(base, v + 1,
+        m.copy(eqs = m.eqs :+ (eqToken -> m.dataTokens))),
       s"o27: equality-delete commit at version ${v + 1} lost the CAS race")
     v + 1
   }
@@ -73,33 +73,21 @@ object WarehouseDeletes {
     * maintenance runs so eq masks never pile up on the read path). */
   private[graft] def o27ConvertEqToPos(s: SparkSession, base: String,
       dvToken: String): Int = {
-    val v = Warehouse.o16Latest(base)
-    val m = Warehouse.o22ManifestOf(base, v)
+    val v = TableLog.latest(base)
+    val m = Snapshot.manifestOf(base, v)
     require(m.eqs.nonEmpty, "o27: no equality entries to convert")
-    val scan = m.dataTokens.map(t =>
-        Warehouse.o22ScanWithPos(s, base, t).withColumn("__tok", lit(t)))
+    // the rows under the positional mask alone, then those an
+    // equality entry kills on its applies-to tokens
+    val posMasked = Snapshot.scan(s, base, m.copy(eqs = Nil),
+      addresses = true)
+    val victims = m.eqs
+      .map(Snapshot.eqJoin(s, base, posMasked, _, "left_semi"))
       .reduce(_ unionByName _)
-    val posMasked = m.dv match {
-      case None => scan
-      case Some(t) =>
-        val dv = s.read.parquet(s"$base/dv-$t")
-        scan.join(broadcast(dv),
-          scan("__dv_file") === dv("file_path") &&
-            scan("__dv_pos") === dv("pos"), "left_anti")
-    }
-    val victims = m.eqs.map { case (eqTok, applies) =>
-        val keys = s.read.parquet(s"$base/eq-$eqTok")
-        val cond = keys.columns.map(c => posMasked(c) === keys(c))
-          .reduce(_ && _) && posMasked("__tok").isin(applies: _*)
-        posMasked.join(broadcast(keys), cond, "left_semi")
-      }.reduce(_ unionByName _)
       .select(col("__dv_file").as("file_path"), col("__dv_pos").as("pos"))
       .distinct()
-    val newDv = m.dv.map(t => s.read.parquet(s"$base/dv-$t"))
-      .fold(victims)(p => p.unionByName(victims))
-    newDv.coalesce(1).write.mode("overwrite").parquet(s"$base/dv-$dvToken")
-    require(Warehouse.o22Commit(base, v + 1, m.token, Some(dvToken),
-        m.adds, eqs = Nil),
+    Snapshot.writeVector(s, base, m, victims, dvToken)
+    require(Snapshot.commit(base, v + 1,
+        m.copy(dv = Some(dvToken), eqs = Nil)),
       s"o27: conversion commit at version ${v + 1} lost the CAS race")
     v + 1
   }
@@ -151,7 +139,7 @@ object WarehouseDeletes {
     try {
       val cust = custBase(s, d)
       Warehouse.o16Stage(base, "w0", cust.repartition(4))
-      require(Warehouse.o22Commit(base, 1, "w0", None),
+      require(Snapshot.commit(base, 1, Snapshot.Manifest("w0")),
         "o27: v1 commit failed")
       require(Warehouse.o22Delete(s, base, col("cust_id") % 10 === 3, "a")
           == 2, "o27: v2 positional delete landed at the wrong version")
@@ -169,15 +157,15 @@ object WarehouseDeletes {
       require(v3 == 3, s"o27: key delete landed at version $v3")
       require(dataFiles(base) == before,
         "o27: the key delete must not touch a data byte")
-      val m3 = Warehouse.o22ManifestOf(base, 3)
+      val m3 = Snapshot.manifestOf(base, 3)
       require(m3.token == "w0" && m3.dv.contains("a") &&
           m3.eqs == Seq("k" -> Seq("w0")),
         s"o27: v3 must compose both delete kinds over w0, got $m3")
       // the equality commit is metadata-readable: o24's feed for the
       // step equals the o20 snapshot diff exactly
-      val v3Read = Warehouse.o22Read(s, base, 3).localCheckpoint()
+      val v3Read = Snapshot.read(s, base, 3).localCheckpoint()
       val feed = Warehouse.o24FeedOf(s, base, 2, custCols).localCheckpoint()
-      val diff = Warehouse.o20Diff(Warehouse.o22Read(s, base, 2), v3Read,
+      val diff = Warehouse.o20Diff(Snapshot.read(s, base, 2), v3Read,
           "cust_id", Seq("segment", "bal"))
         .select((custCols.map(col) :+ col("change_type")): _*)
       require(Warehouse.symEqual(feed, diff, custCols :+ "change_type"),
@@ -185,13 +173,13 @@ object WarehouseDeletes {
       // v4: convert equality → positional; read identical, eq retired
       require(o27ConvertEqToPos(s, base, "b") == 4,
         "o27: conversion landed at the wrong version")
-      val m4 = Warehouse.o22ManifestOf(base, 4)
+      val m4 = Snapshot.manifestOf(base, 4)
       require(m4.token == "w0" && m4.eqs.isEmpty && m4.dv.contains("b"),
         s"o27: conversion must keep the token and retire the eq entry, " +
           s"got $m4")
       require(dataFiles(base) == before,
         "o27: the conversion must not touch a data byte")
-      val v4Read = Warehouse.o22Read(s, base, 4).localCheckpoint()
+      val v4Read = Snapshot.read(s, base, 4).localCheckpoint()
       require(Warehouse.symEqual(v4Read, v3Read, custCols),
         "o27: equality→positional conversion changed the visible rows")
       // v5: OPTIMIZE retires both delete shapes into plain bytes
@@ -203,7 +191,7 @@ object WarehouseDeletes {
       // instead of re-deriving their masked scans
       val byV = Map(3 -> v3Read, 4 -> v4Read)
       (1 to 5).map(v =>
-          byV.getOrElse(v, Warehouse.o22Read(s, base, v))
+          byV.getOrElse(v, Snapshot.read(s, base, v))
             .withColumn("version", lit(v)))
         .reduce(_ unionByName _)
         .select(col("version"), col("cust_id"), col("segment"), col("bal"))
@@ -252,9 +240,9 @@ object WarehouseDeletes {
     * rides the same scan the matched join already pays. */
   private[graft] def o28Merge(s: SparkSession, base: String,
       chg: DataFrame, addToken: String, dvToken: String): Int = {
-    val v = Warehouse.o16Latest(base)
-    val m = Warehouse.o22ManifestOf(base, v)
-    val cur = Warehouse.o22MaskedWithPos(s, base, v)
+    val v = TableLog.latest(base)
+    val m = Snapshot.manifestOf(base, v)
+    val cur = Snapshot.read(s, base, v, addresses = true)
     val matched = cur.join(broadcast(chg), Seq("cust_id"), "inner")
     val victims = matched.filter(col("op") === "D" ||
         (col("op") === "U" && !(col("new_bal") <=> col("bal"))))
@@ -269,11 +257,9 @@ object WarehouseDeletes {
       .write.mode("overwrite").parquet(s"$base/data-$addToken")
     val addrs = victims.select(col("__dv_file").as("file_path"),
       col("__dv_pos").as("pos"))
-    val newDv = m.dv.map(t => s.read.parquet(s"$base/dv-$t"))
-      .fold(addrs)(p => p.unionByName(addrs))
-    newDv.coalesce(1).write.mode("overwrite").parquet(s"$base/dv-$dvToken")
-    require(Warehouse.o22Commit(base, v + 1, m.token, Some(dvToken),
-        m.adds :+ addToken, m.eqs),
+    Snapshot.writeVector(s, base, m, addrs, dvToken)
+    require(Snapshot.commit(base, v + 1,
+        m.copy(dv = Some(dvToken), adds = m.adds :+ addToken)),
       s"o28: merge commit at version ${v + 1} lost the CAS race")
     v + 1
   }
@@ -314,7 +300,7 @@ object WarehouseDeletes {
     try {
       val cust = custBase(s, d)
       Warehouse.o16Stage(base, "w0", cust.repartition(4))
-      require(Warehouse.o22Commit(base, 1, "w0", None),
+      require(Snapshot.commit(base, 1, Snapshot.Manifest("w0")),
         "o28: v1 commit failed")
       val before = dataFiles(base).filter(_._1.contains("/data-w0/"))
       val chg = Warehouse.o10ChangesOf(events(s, d))
@@ -324,15 +310,15 @@ object WarehouseDeletes {
       require(dataFiles(base).filter(_._1.contains("/data-w0/")) == before,
         "o28: a DV-aware merge must leave untouched data files " +
           "byte-identical")
-      val m2 = Warehouse.o22ManifestOf(base, 2)
+      val m2 = Snapshot.manifestOf(base, 2)
       require(m2.token == "w0" && m2.adds == Seq("m1") && m2.dv.contains("mv"),
         s"o28: v2 must be base + one delta file + one vector, got $m2")
       // (b) the update CDF from metadata == the o20 snapshot diff,
       // across insert / delete / update_preimage / update_postimage
       val feed = Warehouse.o24FeedOf(s, base, 1, custCols,
         key = Some("cust_id")).localCheckpoint()
-      val diff = Warehouse.o20Diff(Warehouse.o22Read(s, base, 1),
-          Warehouse.o22Read(s, base, 2), "cust_id", Seq("segment", "bal"))
+      val diff = Warehouse.o20Diff(Snapshot.read(s, base, 1),
+          Snapshot.read(s, base, 2), "cust_id", Seq("segment", "bal"))
         .select((custCols.map(col) :+ col("change_type")): _*)
       require(Warehouse.symEqual(feed, diff, custCols :+ "change_type"),
         "o28: the metadata-derived merge CDF must equal the o20 diff " +
@@ -346,7 +332,7 @@ object WarehouseDeletes {
       require(Warehouse.o24FeedOf(s, base, 2, custCols).isEmpty,
         "o28: the OPTIMIZE commit must feed no visible change")
       (1 to 3).map(v =>
-          Warehouse.o22Read(s, base, v).withColumn("version", lit(v)))
+          Snapshot.read(s, base, v).withColumn("version", lit(v)))
         .reduce(_ unionByName _)
         .select(col("version"), col("cust_id"), col("segment"), col("bal"))
         .orderBy("version", "cust_id")

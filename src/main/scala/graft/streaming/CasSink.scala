@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables._
 import graft.queries.Warehouse
-import graft.table.TableLog
+import graft.table.{Snapshot, TableLog}
 
 /** ST25 — exactly-once streaming INTO the o16 CAS snapshot table: the
   * public Delta-Lake streaming-sink shape (idempotent writes keyed by
@@ -46,7 +46,7 @@ object CasSink {
     * matched and never terminators. */
   private def committed(base: String, appId: String, bid: Long): Boolean =
     TableLog.versions(base).reverseIterator
-      .map(v => TableLog.read(base, TableLog.manifest(v)).trim)
+      .map(v => Snapshot.manifestOf(base, v).token)
       .collectFirst {
         case t if t == s"batch-$appId-$bid" => true
         case t if t.startsWith(s"batch-$appId-") &&
@@ -71,8 +71,8 @@ object CasSink {
     Warehouse.o16Stage(base, token, bdf)
     var done = false
     while (!done && !committed(base, appId, bid)) {
-      val latest = Warehouse.o16Latest(base)
-      done = Warehouse.o16TryPublish(base, token, latest)
+      val latest = TableLog.latest(base)
+      done = Snapshot.commit(base, latest + 1, Snapshot.Manifest(token))
     }
     if (done) afterCommitHook()
   }
@@ -81,7 +81,7 @@ object CasSink {
     * committed version's data, tagged with its version. */
   private[graft] def readLog(s: SparkSession, base: String): DataFrame =
     TableLog.versions(base)
-      .map(v => Warehouse.o16Read(s, base, v).withColumn("version", lit(v)))
+      .map(v => Snapshot.read(s, base, v).withColumn("version", lit(v)))
       .reduce(_ unionByName _)
 
   def st25StreamCasSink(caller: SparkSession, d: String): DataFrame =
@@ -132,8 +132,8 @@ object CasSink {
       // batch 0 detected its own prior commit in the manifest chain
       require(TableLog.versions(base) == Seq(1, 2),
         s"st25: expected versions {1,2}, got ${TableLog.versions(base)}")
-      require(Seq(1, 2).map(v => TableLog.read(base, TableLog.manifest(v))
-          .trim) == Seq("batch-st25-0", "batch-st25-1"),
+      require(Seq(1, 2).map(Snapshot.manifestOf(base, _).token) ==
+          Seq("batch-st25-0", "batch-st25-1"),
         "st25: version chain must map 1:1 onto (appId, batch) tokens")
       readLog(s, base)
         .groupBy(col("event_type"))

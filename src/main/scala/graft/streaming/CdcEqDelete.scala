@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables._
 import graft.queries.{Warehouse, WarehouseDeletes}
-import graft.table.TableLog
+import graft.table.{Snapshot, TableLog}
 
 /** ST29 — the streaming CDC DELETE writer (the o27×st16 composition the
   * r19 verdict motivated equality deletes with: "a streaming CDC writer
@@ -53,7 +53,7 @@ object CdcEqDelete {
       val cust = customer(s, d).select(col("c_custkey").as("cust_id"),
         col("c_mktsegment").as("segment"), col("c_acctbal").as("bal"))
       Warehouse.o16Stage(base, "w0", cust.repartition(4))
-      require(Warehouse.o22Commit(base, 1, "w0", None),
+      require(Snapshot.commit(base, 1, Snapshot.Manifest("w0")),
         "st29: v1 commit failed")
       def dataFiles(): Seq[(String, Long)] = TableLog.files(table,
         p => p.toString.contains("/data-") && TableLog.noMarkers(p))
@@ -86,9 +86,9 @@ object CdcEqDelete {
               // the batch — probing the latest manifest for this
               // batch's entry makes the replay a true no-op instead of
               // a duplicate eq entry shifting the version ladder
-              val latest = Warehouse.o16Latest(base)
+              val latest = TableLog.latest(base)
               val committed = latest > 0 &&
-                Warehouse.o22ManifestOf(base, latest).eqs
+                Snapshot.manifestOf(base, latest).eqs
                   .exists(_._1 == s"k$batchId")
               if (!committed) {
                 // the batch's delete keys: its own latest-per-user 'D'
@@ -112,7 +112,7 @@ object CdcEqDelete {
         runOnce()
         require(fedBatches() == Seq(0L),
           s"st29: run 1 must commit exactly batch 0 — got ${fedBatches()}")
-        require(Warehouse.o16Latest(base) == 2,
+        require(TableLog.latest(base) == 2,
           "st29: batch 1 must land as version 2")
         // batch 2 arrives AFTER run 1 terminated; the checkpointed
         // restart commits exactly it
@@ -122,20 +122,20 @@ object CdcEqDelete {
         require(fedBatches() == Seq(0L, 1L),
           s"st29: the restart must commit exactly batch 1 — got " +
             s"${fedBatches()}")
-        require(Warehouse.o16Latest(base) == 3,
+        require(TableLog.latest(base) == 3,
           "st29: batch 2 must land as version 3")
       } finally Files.move(Paths.get(base, "offline-w0"),
         Paths.get(base, "data-w0"))
       require(dataFiles() == before,
         "st29: the CDC delete pipeline must not touch a data byte")
-      val m2 = Warehouse.o22ManifestOf(base, 2)
-      val m3 = Warehouse.o22ManifestOf(base, 3)
+      val m2 = Snapshot.manifestOf(base, 2)
+      val m3 = Snapshot.manifestOf(base, 3)
       require(m2.eqs == Seq("k0" -> Seq("w0")) && m2.minReader == 2 &&
           m3.eqs == Seq("k0" -> Seq("w0"), "k1" -> Seq("w0")) &&
           m3.minReader == 2,
         s"st29: the eq ladder must accumulate per batch, got $m2 / $m3")
       (1 to 3).map(v =>
-          Warehouse.o22Read(s, base, v).withColumn("version", lit(v)))
+          Snapshot.read(s, base, v).withColumn("version", lit(v)))
         .reduce(_ unionByName _)
         .select(col("version"), col("cust_id"), col("segment"), col("bal"))
         .orderBy("version", "cust_id")

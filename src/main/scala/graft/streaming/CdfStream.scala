@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables._
 import graft.queries.Warehouse
+import graft.table.Snapshot
 
 /** ST26 — STREAMING the change data feed (r18 verdict ask #3; the
   * public Delta CDF-streaming shape): o20 derives the row-level diff
@@ -44,10 +45,10 @@ object CdfStream {
     * table (bootstrap inserts). */
   private def diffVersion(s: SparkSession, base: String, v: Int,
       feedDir: String): Unit = {
-    val cur = Warehouse.o16Read(s, base, v)
+    val cur = Snapshot.read(s, base, v)
     val prev =
       if (v == 1) cur.limit(0)
-      else Warehouse.o16Read(s, base, v - 1)
+      else Snapshot.read(s, base, v - 1)
     // idempotent per-version overwrite (see DvFeedStream.feedVersion):
     // a replay after a crash rewrites the same bytes, never duplicates
     Warehouse.o20Diff(prev, cur, "cust_id", feedCols.drop(1))
@@ -71,14 +72,14 @@ object CdfStream {
         col("c_mktsegment").as("segment"), col("c_acctbal").as("bal"))
       def commit(v: Int, df: DataFrame): Unit = {
         Warehouse.o16Stage(base, s"w$v", df)
-        require(Warehouse.o16TryPublish(base, s"w$v", v - 1),
+        require(Snapshot.commit(base, v, Snapshot.Manifest(s"w$v")),
           s"st26: v$v commit failed")
         // manifests arrive as distinct micro-batches in commit order
         ManifestFeed.stamp(base, v)
       }
       commit(1, v1)
       commit(2, graft.queries.Warehouse.o10Apply(
-        Warehouse.o16Read(s, base, 1), o10ChangesFor(s, d)))
+        Snapshot.read(s, base, 1), o10ChangesFor(s, d)))
       def runOnce(): Unit =
         ManifestFeed.consume(run, base, attempts)(
           diffVersion(s, base, _, feedDir))
@@ -87,7 +88,7 @@ object CdfStream {
         s"st26: run 1 must consume exactly v1,v2 in order — got $tried")
       // v3 lands AFTER the stream terminated; the checkpointed restart
       // must pick up ONLY it — the incremental contract
-      commit(3, Warehouse.o16Read(s, base, 2)
+      commit(3, Snapshot.read(s, base, 2)
         .filter(col("cust_id") % 101 =!= 0)
         .withColumn("bal",
           when(col("cust_id") % 5 === 0, col("bal") * 2)
@@ -111,7 +112,7 @@ object CdfStream {
                 .isin("insert", "update_postimage"))
               .select(feedCols.map(col): _*))
       }
-      val latest = Warehouse.o16Read(s, base, 3)
+      val latest = Snapshot.read(s, base, 3)
       require(Warehouse.symEqual(applied, latest, feedCols),
         "st26: folding the streamed feed over empty must reproduce v3")
       feed.select(col("version"), col("cust_id"), col("segment"),

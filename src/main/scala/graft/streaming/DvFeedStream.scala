@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables._
 import graft.queries.Warehouse
+import graft.table.Snapshot
 
 /** ST27 — STREAMING the deletion-vector change feed (the st26×o24
   * composition): st26 streams the o20 snapshot-diff feed, paying two
@@ -49,7 +50,7 @@ object DvFeedStream {
       feedDir: String): Unit = {
     val feed =
       if (v == 1)
-        Warehouse.o22Read(s, base, 1).select(cols.map(col): _*)
+        Snapshot.read(s, base, 1).select(cols.map(col): _*)
           .withColumn("change_type", lit("insert"))
       else Warehouse.o24FeedOf(s, base, v - 1, cols)
     feed.withColumn("version", lit(v))
@@ -69,7 +70,7 @@ object DvFeedStream {
         col("source"))
       def stamp(v: Int): Unit = ManifestFeed.stamp(base, v)
       Warehouse.o16Stage(base, "w0", docs.repartition(4))
-      require(Warehouse.o22Commit(base, 1, "w0", None),
+      require(Snapshot.commit(base, 1, Snapshot.Manifest("w0")),
         "st27: v1 commit failed")
       stamp(1)
       require(Warehouse.o22Delete(s, base, col("doc_id") % 10 === 3, "a") == 2,
@@ -107,7 +108,7 @@ object DvFeedStream {
           .unionByName(fv.filter(col("change_type") === "insert")
             .select(cols.map(col): _*))
       }
-      val latest = Warehouse.o22Read(s, base, 4)
+      val latest = Snapshot.read(s, base, 4)
       require(Warehouse.symEqual(applied, latest, cols),
         "st27: folding the streamed feed over empty must reproduce v4")
       feed.select(col("version"), col("doc_id"), col("lang"),

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables._
 import graft.queries.Warehouse
-import graft.table.TableLog
+import graft.table.Snapshot
 
 /** ST28 — feed consumption ACROSS retention vacuums (round-20 verdict
   * ask #3b, the o26×st27 composition): a CDF consumer's unread tail
@@ -48,7 +48,7 @@ object FeedRetention {
     val maxFed = if (fed.isEmpty) 0 else fed.max
     ((maxFed + 1) until v).foreach { w =>
       require(fed.contains(w) ||
-          TableLog.get(base, TableLog.manifest(w)).isDefined,
+          Snapshot.find(base, w).isDefined,
         s"feed consumer: version $w was vacuumed before it was read — " +
           s"cannot resume at version $v; retention must outlast " +
           "consumer lag")
@@ -69,7 +69,7 @@ object FeedRetention {
         col("source"))
       def stamp(v: Int): Unit = ManifestFeed.stamp(base, v)
       Warehouse.o16Stage(base, "w0", docs.repartition(4))
-      require(Warehouse.o22Commit(base, 1, "w0", None),
+      require(Snapshot.commit(base, 1, Snapshot.Manifest("w0")),
         "st28: v1 commit failed")
       stamp(1)
       require(Warehouse.o22Delete(s, base, col("doc_id") % 9 === 4, "a") == 2,
@@ -117,7 +117,7 @@ object FeedRetention {
           .unionByName(fv.filter(col("change_type") === "insert")
             .select(cols.map(col): _*))
       }
-      val latest = Warehouse.o22Read(s, base, 4)
+      val latest = Snapshot.read(s, base, 4)
       require(Warehouse.symEqual(applied, latest, cols),
         "st28: folding the fed prefix over empty must reproduce v4")
       // now retention OUTRUNS the consumer: v5 commits and is vacuumed

@@ -8,11 +8,16 @@ import scala.jdk.CollectionConverters._
 /** The metadata-file I/O of the hand-built table format: every
   * manifest, schema, layout and checkpoint file the table family
   * (o12–o32, the st25–st29 consumers, s28, d18) commits or resolves
-  * goes through here. The families keep their own body grammars; this
-  * object owns only how a named file under a table's `base` dir is
-  * created, swapped, read and listed — one place where the commit
-  * decision lives (the way the Delta log keeps commit and snapshot
-  * resolution in one module).
+  * goes through here. This object owns only how a named file under a
+  * table's `base` dir is created, swapped, read and listed — one place
+  * where the commit decision lives. What a body MEANS is decided once
+  * too: every `manifest-N` and `checkpoint-N` body of the
+  * numbered-manifest chain is encoded, decoded and read in [[Snapshot]]
+  * (the way the Delta log keeps commit and snapshot resolution in one
+  * module). The named exceptions keep a grammar of their own: o18's
+  * `schema-v` and o19's `layout-v` files, and the `manifest-N` bodies
+  * of o25's partition map and s28's cell entries (`TableLogGuardSpec`
+  * lists them with their reasons).
   *
   * Every write lands through a scratch file named per ATTEMPT
   * (`.<name>.<nonce>`, dot-prefixed so no reader or Spark file listing

@@ -15,6 +15,7 @@ import org.apache.spark.sql.types.LongType
 import org.apache.spark.sql.execution.window.WindowExec
 import org.apache.spark.sql.util.QueryExecutionListener
 import scala.jdk.CollectionConverters._
+import graft.table.Snapshot
 
 /** Dev tool: formatted physical plans. Not part of the driver contract.
   *
@@ -60,10 +61,11 @@ object DumpPlans {
       val nodes = (ran.map(_.executedPlan) :+ df.queryExecution.executedPlan)
         .flatMap(nodesOf)
       def n(p: SparkPlan => Boolean) = nodes.count(p)
-      // collected as a caller would, so the count also sees the joins
-      // that adaptive execution turns into broadcasts at run time; read
-      // off the plan that ran (an initial plan would count them twice)
+      // collected as a caller would, so the count sees the joins AQE makes
+      // broadcasts at run time (off the plan that ran: an initial plan
+      // would count them twice); drained, so the next row's listener misses it
       df.collect()
+      GraftSessions.drainListeners(spark)
       println(s"SHAPE $name plans=${ran.size + 1}" +
         s" scan=${n(_.nodeName.contains("Scan"))}" +
         s" exchange=${n(_.isInstanceOf[ShuffleExchangeExec])}" +
@@ -321,10 +323,10 @@ object DumpPlans {
               graft.Tables.documents(spark, sf)
                 .select(col("doc_id"), col("lang"), col("source"))
                 .repartition(2))
-            require(graft.queries.Warehouse.o22Commit(b, 1, "w0", None))
+            require(Snapshot.commit(b, 1, Snapshot.Manifest("w0")))
             graft.queries.Warehouse.o22Delete(spark, b,
               col("doc_id") % 10 === 3, "a")
-            graft.queries.Warehouse.o22Read(spark, b, 2)
+            Snapshot.read(spark, b, 2)
           },
           // a22's manifest build: ONE pass collecting per-file bloom
           // bitsets (the lookup side is driver bitmap probes, no plan)

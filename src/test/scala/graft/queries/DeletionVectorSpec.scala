@@ -2,6 +2,7 @@ package graft.queries
 
 import graft.SparkSpecBase
 import org.apache.spark.sql.functions._
+import graft.table.Snapshot
 
 /** o22 — row-level deletes via deletion vectors (the Delta
   * deletion-vector / Iceberg positional-delete mechanism). The
@@ -43,7 +44,7 @@ class DeletionVectorSpec extends SparkSpecBase {
       Warehouse.o16Stage(base, "t0",
         table(Seq(1L -> "a", 2L -> "b", 3L -> "c", 4L -> "d"))
           .repartition(2))
-      assert(Warehouse.o22Commit(base, 1, "t0", None))
+      assert(Snapshot.commit(base, 1, Snapshot.Manifest("t0")))
       val before = listing(dir)
       val v2 = Warehouse.o22Delete(spark, base, col("k") % 2 === 0, "dv0")
       assert(v2 == 2)
@@ -51,10 +52,10 @@ class DeletionVectorSpec extends SparkSpecBase {
         "a DV delete must not create, rewrite, or touch any data file")
       // physically present (raw scan), unreachable (masked read)
       assert(spark.read.parquet(s"$base/data-t0").count() == 4)
-      assert(Warehouse.o22Read(spark, base, 2).orderBy("k")
+      assert(Snapshot.read(spark, base, 2).orderBy("k")
         .collect().map(_.getLong(0)).toSeq == Seq(1L, 3L))
       // time travel: v1 reads the victims forever
-      assert(Warehouse.o22Read(spark, base, 1).count() == 4)
+      assert(Snapshot.read(spark, base, 1).count() == 4)
     } finally org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)
   }
 
@@ -64,29 +65,29 @@ class DeletionVectorSpec extends SparkSpecBase {
     try {
       Warehouse.o16Stage(base, "t0",
         table(Seq(1L -> "a", 2L -> "b", 3L -> "a", 4L -> "b", 5L -> "a")))
-      assert(Warehouse.o22Commit(base, 1, "t0", None))
+      assert(Snapshot.commit(base, 1, Snapshot.Manifest("t0")))
       Warehouse.o22Delete(spark, base, col("k") <= 2, "dv0")
       val v3 = Warehouse.o22Delete(spark, base, col("v") === "a", "dv1")
       // 1,2 gone at v2; of the REMAINING (3,4,5), the 'a' rows (3,5) go
-      assert(Warehouse.o22Read(spark, base, v3)
+      assert(Snapshot.read(spark, base, v3)
         .collect().map(_.getLong(0)).toSeq == Seq(4L),
         "the second delete must run over the already-masked view")
       // both deletes share the immutable token; the vector accumulated
-      assert(Warehouse.o22ManifestOf(base, 3).token == "t0")
+      assert(Snapshot.manifestOf(base, 3).token == "t0")
       assert(spark.read.parquet(s"$base/dv-dv1").count() == 4,
         "the cumulative vector must carry ALL masked positions")
       val v4 = Warehouse.o22Optimize(spark, base, "t1")
-      assert(Warehouse.o22ManifestOf(base, v4).dv.isEmpty,
+      assert(Snapshot.manifestOf(base, v4).dv.isEmpty,
         "OPTIMIZE must commit without a vector")
       // materialized: the victims' bytes are genuinely gone from v4's
       // files, and the read is unchanged
       assert(spark.read.parquet(s"$base/data-t1")
         .collect().map(_.getLong(0)).toSeq == Seq(4L))
-      assert(Warehouse.o22Read(spark, base, v4)
+      assert(Snapshot.read(spark, base, v4)
         .collect().map(_.getLong(0)).toSeq == Seq(4L))
       // every earlier version still time-travels through its own mask
-      assert(Warehouse.o22Read(spark, base, 1).count() == 5)
-      assert(Warehouse.o22Read(spark, base, 2).count() == 3)
+      assert(Snapshot.read(spark, base, 1).count() == 5)
+      assert(Snapshot.read(spark, base, 2).count() == 3)
     } finally org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)
   }
 
@@ -96,9 +97,9 @@ class DeletionVectorSpec extends SparkSpecBase {
     try {
       Warehouse.o16Stage(base, "t0",
         table((1L to 50L).map(i => i -> s"v$i")))
-      assert(Warehouse.o22Commit(base, 1, "t0", None))
+      assert(Snapshot.commit(base, 1, Snapshot.Manifest("t0")))
       Warehouse.o22Delete(spark, base, col("k") % 5 === 0, "dv0")
-      val plan = Warehouse.o22Read(spark, base, 2)
+      val plan = Snapshot.read(spark, base, 2)
         .queryExecution.executedPlan.toString
       assert(plan.contains("BroadcastHashJoin") && plan.contains("LeftAnti"),
         s"the DV mask must be a broadcast anti-join, got:\n$plan")
@@ -112,11 +113,11 @@ class DeletionVectorSpec extends SparkSpecBase {
     val base = dir.toString
     try {
       Warehouse.o16Stage(base, "t0", table(Seq(1L -> "a")))
-      assert(Warehouse.o22Commit(base, 1, "t0", None))
+      assert(Snapshot.commit(base, 1, Snapshot.Manifest("t0")))
       assertThrows[IllegalArgumentException] {
-        Warehouse.o22Read(spark, base, 7)
+        Snapshot.read(spark, base, 7)
       }
-      assert(!Warehouse.o22Commit(base, 1, "t0", Some("dvX")),
+      assert(!Snapshot.commit(base, 1, Snapshot.Manifest("t0", Some("dvX"))),
         "manifest create must be CAS, not last-writer-wins")
     } finally org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)
   }

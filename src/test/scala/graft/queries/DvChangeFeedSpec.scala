@@ -2,6 +2,7 @@ package graft.queries
 
 import graft.SparkSpecBase
 import org.apache.spark.sql.functions._
+import graft.table.Snapshot
 
 /** o24 — change feed derived from deletion-vector commit metadata (the
   * o20×o22 composition). The registered query pins metadata-feed ≡
@@ -29,7 +30,7 @@ class DvChangeFeedSpec extends SparkSpecBase {
     Warehouse.o16Stage(base, "t0",
       table(Seq(1L -> "a", 2L -> "b", 3L -> "c", 4L -> "d", 5L -> "e"))
         .repartition(2))
-    assert(Warehouse.o22Commit(base, 1, "t0", None))
+    assert(Snapshot.commit(base, 1, Snapshot.Manifest("t0")))
     assert(Warehouse.o22Delete(spark, base, col("k") % 2 === 0, "dv0") == 2)
     assert(Warehouse.o22Delete(spark, base, col("v") === "e", "dv1") == 3)
   }
@@ -65,8 +66,8 @@ class DvChangeFeedSpec extends SparkSpecBase {
       (1 to 2).foreach { v =>
         val feed = Warehouse.o24FeedOf(spark, base, v, Seq("k", "v"))
         val diff = Warehouse.o20Diff(
-          Warehouse.o22Read(spark, base, v),
-          Warehouse.o22Read(spark, base, v + 1), "k", Seq("v"))
+          Snapshot.read(spark, base, v),
+          Snapshot.read(spark, base, v + 1), "k", Seq("v"))
         assert(feed.join(diff, Seq("k", "v", "change_type"),
             "left_anti").isEmpty &&
           diff.join(feed, Seq("k", "v", "change_type"),
@@ -84,7 +85,7 @@ class DvChangeFeedSpec extends SparkSpecBase {
       // forge a non-metadata-readable step: fresh token AND a vector
       Warehouse.o16Stage(base, "t9",
         table(Seq(7L -> "z")).repartition(1))
-      assert(Warehouse.o22Commit(base, 4, "t9", Some("dv1")))
+      assert(Snapshot.commit(base, 4, Snapshot.Manifest("t9", Some("dv1"))))
       intercept[IllegalArgumentException] {
         Warehouse.o24FeedOf(spark, base, 3, Seq("k", "v")).collect()
       }

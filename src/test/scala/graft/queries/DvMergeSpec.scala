@@ -2,6 +2,7 @@ package graft.queries
 
 import graft.SparkSpecBase
 import org.apache.spark.sql.functions._
+import graft.table.Snapshot
 
 /** o28 — DV-aware MERGE (the Delta MERGE-with-deletion-vectors shape).
   * The registered query drives the real CDC change-set; this spec pins
@@ -50,7 +51,7 @@ class DvMergeSpec extends SparkSpecBase {
     val base = dir.toString
     try {
       Warehouse.o16Stage(base, "t0", base5.repartition(2))
-      assert(Warehouse.o22Commit(base, 1, "t0", None))
+      assert(Snapshot.commit(base, 1, Snapshot.Manifest("t0")))
       val before = listing(dir, "t0")
       // update 2 (real), update 3 (NO-OP: same bal), delete 4,
       // insert 9, delete 99 (absent — no-op)
@@ -59,7 +60,7 @@ class DvMergeSpec extends SparkSpecBase {
       assert(WarehouseDeletes.o28Merge(spark, base, chg, "m1", "mv") == 2)
       assert(listing(dir, "t0") == before,
         "a DV-aware merge must leave the base files byte-identical")
-      val got = Warehouse.o22Read(spark, base, 2).orderBy("cust_id")
+      val got = Snapshot.read(spark, base, 2).orderBy("cust_id")
         .collect().map(r => (r.getLong(0), r.getString(1), r.getDouble(2)))
         .toSeq
       assert(got == Seq((1L, "A", 10.0), (2L, "B", 21.0), (3L, "C", 30.0),
@@ -76,7 +77,7 @@ class DvMergeSpec extends SparkSpecBase {
     val base = dir.toString
     try {
       Warehouse.o16Stage(base, "t0", base5)
-      assert(Warehouse.o22Commit(base, 1, "t0", None))
+      assert(Snapshot.commit(base, 1, Snapshot.Manifest("t0")))
       val chg = chgOf((2L, "U", 21.0), (4L, "D", 0.0), (9L, "U", 90.0))
       assert(WarehouseDeletes.o28Merge(spark, base, chg, "m1", "mv") == 2)
       val feed = Warehouse.o24FeedOf(spark, base, 1,
@@ -87,8 +88,8 @@ class DvMergeSpec extends SparkSpecBase {
         (4L, "delete"), (9L, "insert")))
       // and it equals the o20 snapshot diff exactly
       val cols = Seq("cust_id", "segment", "bal")
-      val diff = Warehouse.o20Diff(Warehouse.o22Read(spark, base, 1),
-          Warehouse.o22Read(spark, base, 2), "cust_id",
+      val diff = Warehouse.o20Diff(Snapshot.read(spark, base, 1),
+          Snapshot.read(spark, base, 2), "cust_id",
           Seq("segment", "bal"))
         .select((cols.map(col) :+ col("change_type")): _*)
       val f2 = Warehouse.o24FeedOf(spark, base, 1, cols,
@@ -107,19 +108,19 @@ class DvMergeSpec extends SparkSpecBase {
     val base = dir.toString
     try {
       Warehouse.o16Stage(base, "t0", base5)
-      assert(Warehouse.o22Commit(base, 1, "t0", None))
+      assert(Snapshot.commit(base, 1, Snapshot.Manifest("t0")))
       assert(WarehouseDeletes.o28Merge(spark, base,
         chgOf((2L, "U", 21.0), (9L, "U", 90.0)), "m1", "v1") == 2)
       // the second merge updates a row the FIRST merge wrote (9 lives
       // in delta file m1) — its old position masks in m1, not t0
       assert(WarehouseDeletes.o28Merge(spark, base,
         chgOf((9L, "U", 91.0), (1L, "D", 0.0)), "m2", "v2") == 3)
-      val got = Warehouse.o22Read(spark, base, 3).orderBy("cust_id")
+      val got = Snapshot.read(spark, base, 3).orderBy("cust_id")
         .collect().map(r => (r.getLong(0), r.getDouble(2))).toSeq
       assert(got == Seq((2L, 21.0), (3L, 30.0), (4L, 40.0), (5L, 50.0),
         (9L, 91.0)))
       assert(Warehouse.o22Optimize(spark, base, "t1") == 4)
-      val m4 = Warehouse.o22ManifestOf(base, 4)
+      val m4 = Snapshot.manifestOf(base, 4)
       assert(m4.dataTokens == Seq("t1") && m4.dv.isEmpty &&
         m4.rewriteOf.contains(3))
       assert(Warehouse.o24FeedOf(spark, base, 3,

@@ -2,6 +2,7 @@ package graft.queries
 
 import graft.SparkSpecBase
 import org.apache.spark.sql.functions._
+import graft.table.Snapshot
 
 /** o26 — [[Warehouse.vacuum]] over shared-token (DV) tables. The
   * registered query drives the corpus ladder; this spec pins the
@@ -26,7 +27,7 @@ class DvVacuumSpec extends SparkSpecBase {
     Warehouse.o16Stage(base, "t0",
       Seq((1L, "a"), (2L, "b"), (3L, "c"), (4L, "d"))
         .toDF("k", "v").repartition(2))
-    assert(Warehouse.o22Commit(base, 1, "t0", None))
+    assert(Snapshot.commit(base, 1, Snapshot.Manifest("t0")))
     assert(Warehouse.o22Delete(spark, base, col("k") % 2 === 0, "dv0") == 2)
     assert(Warehouse.o22Optimize(spark, base, "t1") == 3)
   }
@@ -40,12 +41,12 @@ class DvVacuumSpec extends SparkSpecBase {
       val (expired, debris) = Warehouse.vacuum(base, 2)
       assert(expired == Seq(1) && debris == Seq())
       assert(java.nio.file.Files.isDirectory(dir.resolve("data-t0")))
-      assert(Warehouse.o22Read(spark, base, 2).orderBy("k")
+      assert(Snapshot.read(spark, base, 2).orderBy("k")
         .collect().map(_.getLong(0)).toSeq == Seq(1L, 3L))
       // retain {3}: now t0 AND dv0 are unreferenced
       val (e2, d2) = Warehouse.vacuum(base, 1)
       assert(e2 == Seq(2) && d2 == Seq("data-t0", "dv-dv0"))
-      assert(Warehouse.o22Read(spark, base, 3).count() == 2)
+      assert(Snapshot.read(spark, base, 3).count() == 2)
     } finally org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)
   }
 
@@ -59,13 +60,13 @@ class DvVacuumSpec extends SparkSpecBase {
       java.nio.file.Files.delete(dir.resolve("manifest-1"))
       java.nio.file.Files.delete(dir.resolve("manifest-2"))
       assert(java.nio.file.Files.isDirectory(dir.resolve("data-t0")))
-      assert(scala.util.Try(Warehouse.o22Read(spark, base, 2)).isFailure,
+      assert(scala.util.Try(Snapshot.read(spark, base, 2)).isFailure,
         "an expired version must fail loudly even before bytes move")
       // the re-run finds no manifests to expire but completes the delete
       val (expired, debris) = Warehouse.vacuum(base, 1)
       assert(expired == Seq() && debris == Seq("data-t0", "dv-dv0"))
       assert(!java.nio.file.Files.exists(dir.resolve("data-t0")))
-      assert(Warehouse.o22Read(spark, base, 3).count() == 2)
+      assert(Snapshot.read(spark, base, 3).count() == 2)
     } finally org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)
   }
 
@@ -76,7 +77,7 @@ class DvVacuumSpec extends SparkSpecBase {
       ladder(base)
       assert(Warehouse.vacuum(base, 5) == ((Seq(), Seq())))
       (1 to 3).foreach(v =>
-        assert(scala.util.Try(Warehouse.o22Read(spark, base, v)).isSuccess))
+        assert(scala.util.Try(Snapshot.read(spark, base, v)).isSuccess))
     } finally org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)
   }
 
@@ -102,7 +103,7 @@ class DvVacuumSpec extends SparkSpecBase {
       assert(java.nio.file.Files.isDirectory(dir.resolve("dv-fresh")) &&
         java.nio.file.Files.isDirectory(dir.resolve("eq-fresh")),
         "a fresh unreferenced token must survive the sweep")
-      assert(Warehouse.o22Read(spark, base, 3).count() == 2)
+      assert(Snapshot.read(spark, base, 3).count() == 2)
     } finally org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)
   }
 }

@@ -2,6 +2,7 @@ package graft.queries
 
 import graft.SparkSpecBase
 import org.apache.spark.sql.functions._
+import graft.table.Snapshot
 
 /** o27 — equality deletes (the Iceberg v2 CDC delete path). The
   * registered query drives the ladder on the customer snapshot with the
@@ -50,7 +51,7 @@ class EqualityDeleteSpec extends SparkSpecBase {
       Warehouse.o16Stage(base, "t0",
         table(Seq(1L -> "a", 2L -> "b", 3L -> "c", 4L -> "d", 5L -> "e"))
           .repartition(2))
-      assert(Warehouse.o22Commit(base, 1, "t0", None))
+      assert(Snapshot.commit(base, 1, Snapshot.Manifest("t0")))
       // v2: positional delete of k=4 — a live vector to compose with
       assert(Warehouse.o22Delete(spark, base, col("k") === 4, "dv0") == 2)
       val before = listing(dir)
@@ -69,10 +70,10 @@ class EqualityDeleteSpec extends SparkSpecBase {
           "data file")
       // both masks active in one read: 4 (positional) and 2 (equality)
       // gone, the absent key 99 a no-op
-      assert(ks(Warehouse.o22Read(spark, base, 3)) == Seq(1L, 3L, 5L))
+      assert(ks(Snapshot.read(spark, base, 3)) == Seq(1L, 3L, 5L))
       // time travel unaffected
-      assert(ks(Warehouse.o22Read(spark, base, 2)) == Seq(1L, 2L, 3L, 5L))
-      assert(Warehouse.o22Read(spark, base, 1).count() == 5)
+      assert(ks(Snapshot.read(spark, base, 2)) == Seq(1L, 2L, 3L, 5L))
+      assert(Snapshot.read(spark, base, 1).count() == 5)
     } finally org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)
   }
 
@@ -82,16 +83,15 @@ class EqualityDeleteSpec extends SparkSpecBase {
     try {
       Warehouse.o16Stage(base, "t0",
         table(Seq(1L -> "a", 2L -> "b", 3L -> "c")))
-      assert(Warehouse.o22Commit(base, 1, "t0", None))
+      assert(Snapshot.commit(base, 1, Snapshot.Manifest("t0")))
       assert(WarehouseDeletes.o27EqDelete(spark, base, keysOf(2L), "eq0") == 2)
-      assert(ks(Warehouse.o22Read(spark, base, 2)) == Seq(1L, 3L))
+      assert(ks(Snapshot.read(spark, base, 2)) == Seq(1L, 3L))
       // v3: k=2 RE-INSERTED via a delta file — the eq entry applies to
       // t0 only, so the new row survives while t0's original stays dead
       table(Seq(2L -> "b2")).write.parquet(s"$base/data-t1")
-      val m2 = Warehouse.o22ManifestOf(base, 2)
-      assert(Warehouse.o22Commit(base, 3, m2.token, m2.dv,
-        m2.adds :+ "t1", m2.eqs))
-      val v3 = Warehouse.o22Read(spark, base, 3)
+      val m2 = Snapshot.manifestOf(base, 2)
+      assert(Snapshot.commit(base, 3, m2.copy(adds = m2.adds :+ "t1")))
+      val v3 = Snapshot.read(spark, base, 3)
       assert(ks(v3) == Seq(1L, 2L, 3L))
       assert(v3.filter(col("k") === 2).collect().map(_.getString(1)).toSeq
           == Seq("b2"),
@@ -105,19 +105,19 @@ class EqualityDeleteSpec extends SparkSpecBase {
     try {
       Warehouse.o16Stage(base, "t0",
         table(Seq(1L -> "a", 2L -> "b", 3L -> "c", 4L -> "d")))
-      assert(Warehouse.o22Commit(base, 1, "t0", None))
+      assert(Snapshot.commit(base, 1, Snapshot.Manifest("t0")))
       assert(Warehouse.o22Delete(spark, base, col("k") === 1, "dv0") == 2)
       assert(WarehouseDeletes.o27EqDelete(spark, base, keysOf(3L), "eq0") == 3)
       val before = listing(dir)
       // equality → positional: same token, eq retired, read identical
       assert(WarehouseDeletes.o27ConvertEqToPos(spark, base, "dv1") == 4)
-      val m4 = Warehouse.o22ManifestOf(base, 4)
+      val m4 = Snapshot.manifestOf(base, 4)
       assert(m4.token == "t0" && m4.eqs.isEmpty && m4.dv.contains("dv1"))
       assert(listing(dir) == before, "conversion must not touch data bytes")
-      assert(ks(Warehouse.o22Read(spark, base, 4)) == Seq(2L, 4L))
+      assert(ks(Snapshot.read(spark, base, 4)) == Seq(2L, 4L))
       // positional → materialized: fresh token, no masks, marker set
       assert(Warehouse.o22Optimize(spark, base, "t1") == 5)
-      val m5 = Warehouse.o22ManifestOf(base, 5)
+      val m5 = Snapshot.manifestOf(base, 5)
       assert(m5.dv.isEmpty && m5.eqs.isEmpty && m5.rewriteOf.contains(4))
       assert(spark.read.parquet(s"$base/data-t1").count() == 2,
         "the materialized token must carry exactly the masked rows")
@@ -130,7 +130,7 @@ class EqualityDeleteSpec extends SparkSpecBase {
     try {
       Warehouse.o16Stage(base, "t0",
         table(Seq(1L -> "a", 2L -> "b", 3L -> "c", 4L -> "d")))
-      assert(Warehouse.o22Commit(base, 1, "t0", None))
+      assert(Snapshot.commit(base, 1, Snapshot.Manifest("t0")))
       assert(WarehouseDeletes.o27EqDelete(spark, base, keysOf(2L, 4L),
         "eq0") == 2)
       val feed = Warehouse.o24FeedOf(spark, base, 1, Seq("k", "v"))

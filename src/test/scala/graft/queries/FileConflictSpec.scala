@@ -2,6 +2,7 @@ package graft.queries
 
 import graft.SparkSpecBase
 import org.apache.spark.sql.functions._
+import graft.table.Snapshot
 
 /** o30 — file-level conflict classification (o25's next rung, the
   * Delta ConflictChecker shape at file granularity). The registered
@@ -24,17 +25,17 @@ class FileConflictSpec extends SparkSpecBase {
       .coalesce(1).write.mode("append").parquet(s"$base/data-w0")
     Seq(11L, 12L, 13L, 14L).toDF("k").withColumn("v", lit("b"))
       .coalesce(1).write.mode("append").parquet(s"$base/data-w0")
-    assert(Warehouse.o22Commit(base, 1, "w0", None))
+    assert(Snapshot.commit(base, 1, Snapshot.Manifest("w0")))
   }
 
   private def stageDelta(base: String, pred: org.apache.spark.sql.Column,
       tok: String, atV: Int): Unit =
-    Warehouse.o22MaskedWithPos(spark, base, atV).filter(pred)
+    Snapshot.read(spark, base, atV, addresses = true).filter(pred)
       .select(col("__dv_file").as("file_path"), col("__dv_pos").as("pos"))
       .coalesce(1).write.parquet(s"$base/dvdelta-$tok")
 
   private def ks(v: Int, base: String): Seq[Long] =
-    Warehouse.o22Read(spark, base, v).orderBy("k")
+    Snapshot.read(spark, base, v).orderBy("k")
       .collect().map(_.getLong(0)).toSeq
 
   test("disjoint files: the losing deleter rebases without re-deriving") {
@@ -79,17 +80,16 @@ class FileConflictSpec extends SparkSpecBase {
       stage(base)
       // an optimize stages at v1; an append commits v2 first
       Warehouse.o16Stage(base, "wStale",
-        Warehouse.o22Read(spark, base, 1).coalesce(1))
+        Snapshot.read(spark, base, 1).coalesce(1))
       Seq(21L -> "x").toDF("k", "v").write.parquet(s"$base/data-a1")
-      val m1 = Warehouse.o22ManifestOf(base, 1)
-      assert(Warehouse.o22Commit(base, 2, m1.token, m1.dv,
-        m1.adds :+ "a1", m1.eqs))
+      val m1 = Snapshot.manifestOf(base, 1)
+      assert(Snapshot.commit(base, 2, m1.copy(adds = m1.adds :+ "a1")))
       // the append invalidated nothing, but the stale materialization
       // does not CARRY it — blind-committing would silently drop row 21
       assert(WarehouseSafety.o30CommitOptimize(spark, base, 1, "wStale")
         == Left(Seq(2)))
       Warehouse.o16Stage(base, "w1",
-        Warehouse.o22Read(spark, base, 2).coalesce(1))
+        Snapshot.read(spark, base, 2).coalesce(1))
       assert(WarehouseSafety.o30CommitOptimize(spark, base, 2, "w1")
         == Right((3, 1)))
       assert(ks(3, base) == Seq(1L, 2L, 3L, 4L, 11L, 12L, 13L, 14L, 21L),
@@ -105,12 +105,12 @@ class FileConflictSpec extends SparkSpecBase {
       // delete commits first
       assert(Warehouse.o22Delete(spark, base, col("k") === 2, "dA") == 2)
       Warehouse.o16Stage(base, "wStale",
-        Warehouse.o22Read(spark, base, 1).coalesce(1))
+        Snapshot.read(spark, base, 1).coalesce(1))
       assert(WarehouseSafety.o30CommitOptimize(spark, base, 1, "wStale")
         == Left(Seq(2)), "the optimize folded a file the delete " +
           "invalidated — it must re-derive")
       Warehouse.o16Stage(base, "w1",
-        Warehouse.o22Read(spark, base, 2).coalesce(1))
+        Snapshot.read(spark, base, 2).coalesce(1))
       assert(WarehouseSafety.o30CommitOptimize(spark, base, 2, "w1")
         == Right((3, 1)))
       // optimize commits first: a delta derived pre-rewrite is orphaned
@@ -119,7 +119,7 @@ class FileConflictSpec extends SparkSpecBase {
         == Left(Seq(3)), "the rewrite invalidated every file the " +
           "stale addresses point into")
       val stale = spark.read.parquet(s"$base/dvdelta-dB")
-      val scan = Warehouse.o22MaskedWithPos(spark, base, 3)
+      val scan = Snapshot.read(spark, base, 3, addresses = true)
       assert(scan.join(stale,
           scan("__dv_file") === stale("file_path") &&
             scan("__dv_pos") === stale("pos"), "left_semi").isEmpty,

@@ -2,6 +2,7 @@ package graft.queries
 
 import graft.SparkSpecBase
 import org.apache.spark.sql.functions._
+import graft.table.{Snapshot, TableLog}
 
 /** d18 — incremental dedup against a COMMITTED fingerprint snapshot.
   * Pins the two mechanism claims the registered query's oracle hash
@@ -34,7 +35,7 @@ class IncrementalSnapshotDedupSpec extends SparkSpecBase {
       // day 0: fingerprint history FROM ITS FILES, commit index v1
       Warehouse.o16Stage(tableDir.toString, "idx0",
         Dedup.d4Simhash64Of(spark.read.parquet(s"$histDir/docs")))
-      assert(Warehouse.o16TryPublish(tableDir.toString, "idx0", 0))
+      assert(Snapshot.commit(tableDir.toString, 1, Snapshot.Manifest("idx0")))
       // history text is gone — a rescan would now fail loudly
       org.apache.commons.io.FileUtils.deleteDirectory(histDir.toFile)
 
@@ -42,7 +43,7 @@ class IncrementalSnapshotDedupSpec extends SparkSpecBase {
         10L -> "alpha beta gamma delta epsilon zeta", // clone of hist 1
         11L -> "completely fresh content nothing shared here",
         12L -> "completely fresh content nothing shared here")) // in-batch dup
-      val index = Warehouse.o16Read(spark, tableDir.toString, 1)
+      val index = Snapshot.read(spark, tableDir.toString, 1)
       val (pairs, _) = Dedup.d18IncrementalStep(index, batch)
       val got = pairs.orderBy("provenance", "doc_a", "doc_b")
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2),
@@ -66,28 +67,28 @@ class IncrementalSnapshotDedupSpec extends SparkSpecBase {
       val fp1 = Dedup.d4Simhash64Of(docsDf(Seq(
         1L -> "alpha beta gamma", 2L -> "one two three")))
       Warehouse.o16Stage(base, "idx0", fp1)
-      assert(Warehouse.o16TryPublish(base, "idx0", 0))
-      val v1Rows = Warehouse.o16Read(spark, base, 1)
+      assert(Snapshot.commit(base, 1, Snapshot.Manifest("idx0")))
+      val v1Rows = Snapshot.read(spark, base, 1)
         .collect().map(_.toSeq).toSet
       val fpNew = Dedup.d4Simhash64Of(docsDf(Seq(
         10L -> "brand new crawl doc")))
       Warehouse.o16Stage(base, "idx1",
-        Warehouse.o16Read(spark, base, 1).unionByName(fpNew))
-      assert(Warehouse.o16TryPublish(base, "idx1", 1))
+        Snapshot.read(spark, base, 1).unionByName(fpNew))
+      assert(Snapshot.commit(base, 2, Snapshot.Manifest("idx1")))
       // chain is faithful
-      assert(Warehouse.o16Latest(base) == 2)
-      assert(Warehouse.o16Read(spark, base, 1)
+      assert(TableLog.latest(base) == 2)
+      assert(Snapshot.read(spark, base, 1)
         .collect().map(_.toSeq).toSet == v1Rows,
         "v1 must stay readable and unchanged after the v2 commit")
-      val v2 = Warehouse.o16Read(spark, base, 2).collect().map(_.toSeq).toSet
+      val v2 = Snapshot.read(spark, base, 2).collect().map(_.toSeq).toSet
       assert(v2.size == v1Rows.size + 1 && v1Rows.subsetOf(v2),
         "v2 must be exactly v1 plus the batch fingerprints")
       // a crawl shard replaying its commit at the stale expectation
       // must LOSE (and would then retry against v2) — never overwrite
       Warehouse.o16Stage(base, "idx1-replay", fpNew)
-      assert(!Warehouse.o16TryPublish(base, "idx1-replay", 1),
+      assert(!Snapshot.commit(base, 2, Snapshot.Manifest("idx1-replay")),
         "stale CAS must conflict loudly, not last-writer-win")
-      assert(Warehouse.o16Read(spark, base, 2)
+      assert(Snapshot.read(spark, base, 2)
         .collect().map(_.toSeq).toSet == v2,
         "the losing replay must not perturb the committed v2")
     } finally org.apache.commons.io.FileUtils.deleteDirectory(tableDir.toFile)

@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.SparkSpecBase
+import graft.table.Snapshot
 
 /** o23 — manifest-log checkpointing. The registered query drives the
   * 17-commit ladder with counted opens; this spec pins the mechanism
@@ -54,7 +55,7 @@ class ManifestCheckpointSpec extends SparkSpecBase {
       // pointer swap — checkpoint-15 exists, pointer still says 10
       (11 to 14).foreach(i => Warehouse.o23Append(base, s"t$i", batch(i)))
       Warehouse.o16Stage(base, "t15", batch(15))
-      assert(Warehouse.o16TryPublish(base, "t15", 14))
+      assert(Snapshot.commit(base, 15, Snapshot.Manifest("t15")))
       Warehouse.o23Checkpoint(base, 15, crashBeforePointer = true)
       assert(Files.exists(Paths.get(base, "checkpoint-15")))
       assert(Files.readString(Paths.get(base, "_last_checkpoint")).trim == "10",

@@ -2,6 +2,7 @@ package graft.queries
 
 import graft.SparkSpecBase
 import org.apache.spark.sql.functions._
+import graft.table.{Snapshot, TableLog}
 
 /** Pins o16's optimistic-concurrency commit protocol — the CAS
   * primitive itself (atomic create-if-absent via link(2)), the
@@ -25,23 +26,23 @@ class OptimisticCommitSpec extends SparkSpecBase {
     try {
       val v1 = Seq((1L, "a"), (2L, "b")).toDF("doc_id", "lang")
       o16Stage(base, "w0", v1)
-      assert(o16TryPublish(base, "w0", expected = 0))
-      assert(o16Latest(base) == 1)
+      assert(Snapshot.commit(base, 1, Snapshot.Manifest("w0")))
+      assert(TableLog.latest(base) == 1)
       // two writers observe latest=1; A commits first
       o16Stage(base, "wA", v1.withColumn("lang", lit("A")))
       o16Stage(base, "wB", v1.withColumn("lang", lit("B")))
-      assert(o16TryPublish(base, "wA", expected = 1))
+      assert(Snapshot.commit(base, 2, Snapshot.Manifest("wA")))
       // B's CAS at the stale expectation must FAIL, not overwrite
-      assert(!o16TryPublish(base, "wB", expected = 1),
+      assert(!Snapshot.commit(base, 2, Snapshot.Manifest("wB")),
         "stale CAS won - lost update")
       // v2 is A's data, untouched by B's failed attempt
-      assert(o16Read(spark, base, 2).select("lang").distinct()
+      assert(Snapshot.read(spark, base, 2).select("lang").distinct()
         .head().getString(0) == "A")
       // B retries at the fresh expectation and wins v3
-      assert(o16TryPublish(base, "wB", expected = 2))
-      assert(o16Read(spark, base, 3).select("lang").distinct()
+      assert(Snapshot.commit(base, 3, Snapshot.Manifest("wB")))
+      assert(Snapshot.read(spark, base, 3).select("lang").distinct()
         .head().getString(0) == "B")
-      assert(o16Latest(base) == 3)
+      assert(TableLog.latest(base) == 3)
     } finally cleanup(base)
   }
 
@@ -50,13 +51,14 @@ class OptimisticCommitSpec extends SparkSpecBase {
     val base = tmp()
     try {
       o16Stage(base, "w0", Seq((1L, "x")).toDF("doc_id", "lang"))
-      assert(o16TryPublish(base, "w0", expected = 0))
+      assert(Snapshot.commit(base, 1, Snapshot.Manifest("w0")))
       o16Stage(base, "orphan", Seq((9L, "z")).toDF("doc_id", "lang"))
       // no manifest names the orphan; reads resolve only committed state
-      assert(o16Latest(base) == 1)
-      assert(o16Read(spark, base, 1).agg(max("doc_id")).head().getLong(0) == 1L)
+      assert(TableLog.latest(base) == 1)
+      assert(Snapshot.read(spark, base, 1).agg(max("doc_id")).head()
+        .getLong(0) == 1L)
       val thrown = intercept[IllegalArgumentException] {
-        o16Read(spark, base, 2)
+        Snapshot.read(spark, base, 2)
       }
       assert(thrown.getMessage.contains("not committed"))
     } finally cleanup(base)
@@ -67,7 +69,7 @@ class OptimisticCommitSpec extends SparkSpecBase {
     val base = tmp()
     try {
       o16Stage(base, "w0", Seq((1L, "x")).toDF("doc_id", "lang"))
-      assert(o16TryPublish(base, "w0", expected = 0))
+      assert(Snapshot.commit(base, 1, Snapshot.Manifest("w0")))
       // both racers stage up front (staging never races - unique
       // tokens); the race is ONLY the CAS, repeated across rounds so a
       // lucky serialization can't green a broken primitive
@@ -76,13 +78,14 @@ class OptimisticCommitSpec extends SparkSpecBase {
         val tb = s"rb-$round"
         o16Stage(base, ta, Seq((10L + round, "a")).toDF("doc_id", "lang"))
         o16Stage(base, tb, Seq((20L + round, "b")).toDF("doc_id", "lang"))
-        val expected = o16Latest(base)
+        val expected = TableLog.latest(base)
         val gate = new java.util.concurrent.CountDownLatch(1)
         val results = new java.util.concurrent.ConcurrentHashMap[String, Boolean]()
         val threads = Seq(ta, tb).map { tok =>
           new Thread(() => {
             gate.await()
-            results.put(tok, o16TryPublish(base, tok, expected))
+            results.put(tok,
+              Snapshot.commit(base, expected + 1, Snapshot.Manifest(tok)))
           })
         }
         threads.foreach(_.start())
@@ -98,7 +101,7 @@ class OptimisticCommitSpec extends SparkSpecBase {
         assert(named == winner, s"manifest names $named, winner was $winner")
       }
       // 8 rounds x 1 winner on top of v1
-      assert(o16Latest(base) == 9)
+      assert(TableLog.latest(base) == 9)
     } finally cleanup(base)
   }
 
@@ -107,7 +110,7 @@ class OptimisticCommitSpec extends SparkSpecBase {
     val base = tmp()
     try {
       o16Stage(base, "seed", Seq((0L, "seed")).toDF("doc_id", "lang"))
-      assert(o16TryPublish(base, "seed", expected = 0))
+      assert(Snapshot.commit(base, 1, Snapshot.Manifest("seed")))
       val n = 6
       // N writers in real retry-until-commit loops on real threads:
       // read latest, re-derive (append own row to the committed state),
@@ -128,13 +131,14 @@ class OptimisticCommitSpec extends SparkSpecBase {
               tries += 1
               require(tries <= n + 1,
                 s"writer $i exceeded the theoretical retry bound")
-              val latest = o16Latest(base)
+              val latest = TableLog.latest(base)
               val token = s"w$i-t$tries"
               o16Stage(base, token,
-                o16Read(spark, base, latest)
+                Snapshot.read(spark, base, latest)
                   .unionByName(Seq((i.toLong, s"writer-$i"))
                     .toDF("doc_id", "lang")))
-              committed = o16TryPublish(base, token, latest)
+              committed =
+                Snapshot.commit(base, latest + 1, Snapshot.Manifest(token))
             }
             attempts.put(i, tries)
           } catch { case t: Throwable => failures.add(t) }
@@ -146,13 +150,13 @@ class OptimisticCommitSpec extends SparkSpecBase {
       assert(failures.isEmpty, s"writer threads failed: ${failures.peek()}")
       assert(attempts.size == n, "every writer must eventually commit")
       // progress: versions = seed + exactly one per writer
-      assert(o16Latest(base) == 1 + n)
+      assert(TableLog.latest(base) == 1 + n)
       // each writer's loss count is bounded by the others' commits
       (1 to n).foreach(i => assert(attempts.get(i) <= n,
         s"writer $i took ${attempts.get(i)} attempts (> bound $n)"))
       // nothing lost: the FINAL version carries the seed and all n
       // appended rows — every retry re-derived from the fresh state
-      val fin = o16Read(spark, base, 1 + n)
+      val fin = Snapshot.read(spark, base, 1 + n)
       assert(fin.count() == 1 + n)
       assert((0 to n).forall(k =>
         fin.filter(col("doc_id") === k.toLong).count() == 1),

@@ -2,6 +2,7 @@ package graft.queries
 
 import graft.SparkSpecBase
 import org.apache.spark.sql.functions._
+import graft.table.Snapshot
 
 /** o15 OPTIMIZE-as-snapshot-commit: content identity across the
   * rewrite, immutability of the fragmented version's files, the
@@ -21,7 +22,8 @@ class OptimizeSpec extends SparkSpecBase {
   private def dataFiles(fs: org.apache.hadoop.fs.FileSystem, base: String,
       v: Int): Array[org.apache.hadoop.fs.FileStatus] =
     fs.listStatus(
-      new org.apache.hadoop.fs.Path(Warehouse.o16DataDir(base, v)))
+      new org.apache.hadoop.fs.Path(
+        Snapshot.dataPath(base, Snapshot.manifestOf(base, v).token)))
       .filter(st => st.isFile && !st.getPath.getName.startsWith("_") &&
         !st.getPath.getName.startsWith("."))
 
@@ -37,7 +39,7 @@ class OptimizeSpec extends SparkSpecBase {
         .map(st => (st.getPath.getName, st.getLen, st.getModificationTime))
       assert(before.length > 1, "fragmentation did not materialize")
 
-      val v0 = Warehouse.o16Read(spark, base, 0)
+      val v0 = Snapshot.read(spark, base, 0)
       val bound = graft.sink.Compact.targetFileCount(
         dataFiles(fs, base, 0).map(_.getLen).sum, Warehouse.O15TargetBytes)
       Warehouse.o12Commit(base, 1,
@@ -45,8 +47,8 @@ class OptimizeSpec extends SparkSpecBase {
           .sortWithinPartitions("doc_id"), keepLayout = true)
 
       // content identity under the rewrite
-      val a = Warehouse.o16Read(spark, base, 0)
-      val b = Warehouse.o16Read(spark, base, 1)
+      val a = Snapshot.read(spark, base, 0)
+      val b = Snapshot.read(spark, base, 1)
       assert(a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty,
         "optimize changed table content")
       // the fragmented version is untouched: same files, sizes, mtimes
@@ -67,7 +69,7 @@ class OptimizeSpec extends SparkSpecBase {
     try {
       Warehouse.o12Commit(base, 0, docs().repartition(4), keepLayout = true)
       Warehouse.o12Commit(base, 1,
-        Warehouse.o16Read(spark, base, 0).coalesce(1),
+        Snapshot.read(spark, base, 0).coalesce(1),
         keepLayout = true)
       val e = intercept[IllegalArgumentException] {
         Warehouse.o12Commit(base, 1, docs())
@@ -81,15 +83,15 @@ class OptimizeSpec extends SparkSpecBase {
     val (base, _) = freshTable()
     try {
       Warehouse.o12Commit(base, 0, docs().repartition(4), keepLayout = true)
-      val n0 = Warehouse.o16Read(spark, base, 0).count()
+      val n0 = Snapshot.read(spark, base, 0).count()
       Warehouse.o12Commit(base, 1,
-        Warehouse.o16Read(spark, base, 0).coalesce(1),
+        Snapshot.read(spark, base, 0).coalesce(1),
         keepLayout = true)
       val (expired, _) = Warehouse.vacuum(base, retain = 1)
       assert(expired == Seq(0))
-      assert(Warehouse.o16Read(spark, base, 1).count() == n0)
+      assert(Snapshot.read(spark, base, 1).count() == n0)
       val e = intercept[IllegalArgumentException] {
-        Warehouse.o16Read(spark, base, 0)
+        Snapshot.read(spark, base, 0)
       }
       assert(e.getMessage.contains("not committed"))
     } finally org.apache.commons.io.FileUtils.deleteDirectory(

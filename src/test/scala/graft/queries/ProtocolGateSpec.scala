@@ -2,6 +2,7 @@ package graft.queries
 
 import graft.SparkSpecBase
 import org.apache.spark.sql.functions._
+import graft.table.Snapshot
 
 /** o32 — the reader protocol gate in isolation. The registered row
   * drives the refusal + the legacy-corruption demo; this pins the
@@ -14,7 +15,7 @@ import org.apache.spark.sql.functions._
   *  - the gate propagates through commits that CARRY features forward
   *    (a DV delete on top of an eq entry still stamps);
   *  - every consumer path gates automatically (all parsing goes
-  *    through o22ManifestOf).
+  *    through Snapshot.decode).
   */
 class ProtocolGateSpec extends SparkSpecBase {
 
@@ -30,27 +31,27 @@ class ProtocolGateSpec extends SparkSpecBase {
       import spark.implicits._
       Warehouse.o16Stage(base, "t0",
         table(Seq(1L -> "a", 2L -> "b", 3L -> "c", 4L -> "d")))
-      assert(Warehouse.o22Commit(base, 1, "t0", None))
+      assert(Snapshot.commit(base, 1, Snapshot.Manifest("t0")))
       assert(WarehouseDeletes.o27EqDelete(spark, base,
         Seq(2L).toDF("k"), "eq0") == 2)
       // a DV delete CARRIES the eq entry forward — still gated
       assert(Warehouse.o22Delete(spark, base, col("k") === 4, "dv0") == 3)
-      assert(Warehouse.o22ManifestOf(base, 3).minReader == 2)
+      assert(Snapshot.manifestOf(base, 3).minReader == 2)
       // OPTIMIZE retires the features; the fresh version is protocol-1
       // again — per-version gating, not a monotone table-level lock
       assert(Warehouse.o22Optimize(spark, base, "t1") == 4)
-      assert(Warehouse.o22ManifestOf(base, 4).minReader == 1)
+      assert(Snapshot.manifestOf(base, 4).minReader == 1)
       def readableBy1(v: Int): Boolean =
         scala.util.Try(
-          Warehouse.o22ManifestOf(base, v, maxReader = 1)).isSuccess
+          Snapshot.manifestOf(base, v, maxReader = 1)).isSuccess
       assert(readableBy1(1) && !readableBy1(2) && !readableBy1(3) &&
         readableBy1(4),
         "a v1 reader must read exactly the versions whose grammar it " +
           "speaks")
       // and the v2 reader reads everything, correctly
-      assert(Warehouse.o22Read(spark, base, 3).orderBy("k")
+      assert(Snapshot.read(spark, base, 3).orderBy("k")
         .collect().map(_.getLong(0)).toSeq == Seq(1L, 3L))
-      assert(Warehouse.o22Read(spark, base, 4).count() == 2)
+      assert(Snapshot.read(spark, base, 4).count() == 2)
     } finally org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)
   }
 }

@@ -2,6 +2,7 @@ package graft.queries
 
 import graft.SparkSpecBase
 import org.apache.spark.sql.functions._
+import graft.table.{Snapshot, TableLog}
 
 /** o29 — [[Warehouse.vacuum]] over a checkpointed log (the o26×o23
   * composition). The registered query drives the 17-append / vacuum /
@@ -48,7 +49,7 @@ class RetentionCheckpointSpec extends SparkSpecBase {
       assert(chain == Warehouse.o23VersionsByListing(base))
       assert(opens.n == 3, "pointer + checkpoint + the probe miss")
       // expired fails loudly; repeat vacuum is a no-op
-      assert(scala.util.Try(Warehouse.o16Read(spark, base, 2)).isFailure)
+      assert(scala.util.Try(Snapshot.read(spark, base, 2)).isFailure)
       assert(Warehouse.vacuum(base, 3)
         == ((Seq(), Seq())))
       // the log lives on: append 8, 9, 10 — fold lands checkpoint-10
@@ -112,8 +113,8 @@ class RetentionCheckpointSpec extends SparkSpecBase {
       assert(Files.isDirectory(Paths.get(base, "data-inflight")),
         "the staged-but-uncommitted token must survive the sweep")
       // ... and the append still commits readable after the vacuum
-      assert(Warehouse.o16TryPublish(base, "inflight", expected = 7))
-      assert(Warehouse.o16Read(spark, base, 8).count() == 1)
+      assert(Snapshot.commit(base, 8, Snapshot.Manifest("inflight")))
+      assert(Snapshot.read(spark, base, 8).count() == 1)
       assert(Warehouse.o23VersionsByListing(base).last == (8 -> "inflight"))
     } finally org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)
   }

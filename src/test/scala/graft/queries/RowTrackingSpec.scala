@@ -2,6 +2,7 @@ package graft.queries
 
 import graft.SparkSpecBase
 import org.apache.spark.sql.functions._
+import graft.table.Snapshot
 
 /** o31 — row tracking. The registered row drives the corpus ladder;
   * this spec pins the id algebra on a controlled table: virtual ids at
@@ -26,7 +27,7 @@ class RowTrackingSpec extends SparkSpecBase {
       RowTracking.o31Ingest(spark, base, "t0",
         table(Seq(1L -> "a", 2L -> "b", 3L -> "c", 4L -> "d"))
           .repartition(2))
-      assert(Warehouse.o22Commit(base, 1, "t0", None))
+      assert(Snapshot.commit(base, 1, Snapshot.Manifest("t0")))
       // no physical id column; the sidecar + position derive them
       assert(!spark.read.parquet(s"$base/data-t0").columns.contains("__rid"))
       val v1 = pairs(base, 1)
@@ -59,7 +60,7 @@ class RowTrackingSpec extends SparkSpecBase {
     try {
       RowTracking.o31Ingest(spark, base, "t0",
         table(Seq(1L -> "a", 2L -> "b", 3L -> "c")))
-      assert(Warehouse.o22Commit(base, 1, "t0", None))
+      assert(Snapshot.commit(base, 1, Snapshot.Manifest("t0")))
       assert(RowTracking.o31Update(spark, base, col("k") === 2,
         "v" -> lit("B!"), "m1", "dv0") == 2)
       val feed = RowTracking.o31FeedOf(spark, base, 1, Seq("k", "v"))

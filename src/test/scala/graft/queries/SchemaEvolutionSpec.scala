@@ -2,6 +2,7 @@ package graft.queries
 
 import graft.SparkSpecBase
 import org.apache.spark.sql.functions._
+import graft.table.Snapshot
 
 /** Pins o17's snapshot schema evolution beyond the registered row's
   * in-op requires: schema NARROWING is a commit like any other (a
@@ -26,11 +27,11 @@ class SchemaEvolutionSpec extends SparkSpecBase {
         Seq((1L, "en", "cc")).toDF("doc_id", "lang", "source"))
       // the column is dropped again - narrowing is just another commit
       Warehouse.o12Commit(base, 2, Seq(Tuple1(1L)).toDF("doc_id"))
-      assert(Warehouse.o16Read(spark, base, 0)
+      assert(Snapshot.read(spark, base, 0)
         .schema.fieldNames.toSeq == Seq("doc_id", "lang"))
-      assert(Warehouse.o16Read(spark, base, 1)
+      assert(Snapshot.read(spark, base, 1)
         .schema.fieldNames.toSeq == Seq("doc_id", "lang", "source"))
-      assert(Warehouse.o16Read(spark, base, 2)
+      assert(Snapshot.read(spark, base, 2)
         .schema.fieldNames.toSeq == Seq("doc_id"))
     } finally org.apache.commons.io.FileUtils
       .deleteDirectory(new java.io.File(base))
@@ -45,10 +46,10 @@ class SchemaEvolutionSpec extends SparkSpecBase {
         Seq((1L, "en", "cc")).toDF("doc_id", "lang", "source"))
       val (expired, _) = Warehouse.vacuum(base, retain = 1)
       assert(expired == Seq(0))
-      val v1 = Warehouse.o16Read(spark, base, 1)
+      val v1 = Snapshot.read(spark, base, 1)
       assert(v1.schema.fieldNames.contains("source") && v1.count() == 1)
       val thrown = intercept[IllegalArgumentException] {
-        Warehouse.o16Read(spark, base, 0)
+        Snapshot.read(spark, base, 0)
       }
       assert(thrown.getMessage.contains("not committed"),
         "an expired pre-evolution version must fail loudly, never " +

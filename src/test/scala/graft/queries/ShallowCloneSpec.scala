@@ -2,6 +2,7 @@ package graft.queries
 
 import graft.SparkSpecBase
 import org.apache.spark.sql.functions._
+import graft.table.Snapshot
 
 /** o21 — shallow clone. Pins the divergence contracts around the
   * registered query's zero-copy/copy-on-write core: source edits after
@@ -20,7 +21,7 @@ class ShallowCloneSpec extends SparkSpecBase {
     import spark.implicits._
     val df = Seq((1L, "x"), (2L, "y")).toDF("doc_id", "lang")
     Warehouse.o16Stage(base, "a0", df)
-    assert(Warehouse.o16TryPublish(base, "a0", 0))
+    assert(Snapshot.commit(base, 1, Snapshot.Manifest("a0")))
   }
 
   test("source edits after the clone never reach the clone") {
@@ -32,8 +33,8 @@ class ShallowCloneSpec extends SparkSpecBase {
       // the source moves on: v2 rewrites everything
       Warehouse.o16Stage(a.toString, "a1",
         Seq((1L, "CHANGED"), (2L, "CHANGED")).toDF("doc_id", "lang"))
-      assert(Warehouse.o16TryPublish(a.toString, "a1", 1))
-      val cloneLangs = Warehouse.o16Read(spark, b.toString, 1)
+      assert(Snapshot.commit(a.toString, 2, Snapshot.Manifest("a1")))
+      val cloneLangs = Snapshot.read(spark, b.toString, 1)
         .orderBy("doc_id").collect().map(_.getString(1)).toSeq
       assert(cloneLangs == Seq("x", "y"),
         "the clone must keep serving the version it was cloned from")
@@ -53,7 +54,7 @@ class ShallowCloneSpec extends SparkSpecBase {
       org.apache.commons.io.FileUtils
         .deleteDirectory(a.resolve("data-a0").toFile)
       val failed =
-        try { Warehouse.o16Read(spark, b.toString, 1).count(); false }
+        try { Snapshot.read(spark, b.toString, 1).count(); false }
         catch { case _: Exception => true }
       assert(failed,
         "a clone over vacuumed source data must fail loudly, not serve partial data")

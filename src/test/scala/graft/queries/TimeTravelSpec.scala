@@ -1,7 +1,7 @@
 package graft.queries
 
 import graft.SparkSpecBase
-import graft.table.TableLog
+import graft.table.{Snapshot, TableLog}
 import org.apache.spark.sql.functions._
 import scala.util.{Failure, Success, Try}
 
@@ -21,13 +21,13 @@ class TimeTravelSpec extends SparkSpecBase {
     try {
       val v0 = Seq((1L, "a"), (2L, "b")).toDF("k", "v")
       Warehouse.o12Commit(base, 0, v0)
-      val v0Pre = Warehouse.o16Read(spark, base, 0).collect().sortBy(_.getLong(0))
+      val v0Pre = Snapshot.read(spark, base, 0).collect().sortBy(_.getLong(0))
       Warehouse.o12Commit(base, 1, Seq((1L, "a2"), (3L, "c")).toDF("k", "v"))
       assert(TableLog.versions(base) === Seq(0, 1))
-      val v0Post = Warehouse.o16Read(spark, base, 0).collect().sortBy(_.getLong(0))
+      val v0Post = Snapshot.read(spark, base, 0).collect().sortBy(_.getLong(0))
       assert(v0Pre.toSeq === v0Post.toSeq,
         "a later commit must not change an earlier version's rows")
-      assert(Warehouse.o16Read(spark, base, 1).count() === 2L)
+      assert(Snapshot.read(spark, base, 1).count() === 2L)
     } finally org.apache.commons.io.FileUtils.deleteDirectory(
       new java.io.File(base))
   }
@@ -37,7 +37,7 @@ class TimeTravelSpec extends SparkSpecBase {
     try {
       Warehouse.o12Commit(base, 0, Seq((1L, "a")).toDF("k", "v"))
       val e = intercept[IllegalArgumentException] {
-        Warehouse.o16Read(spark, base, 7)
+        Snapshot.read(spark, base, 7)
       }
       assert(e.getMessage.contains("not committed"))
       // simulate a crash between staging and the manifest create: a
@@ -47,13 +47,13 @@ class TimeTravelSpec extends SparkSpecBase {
       assert(TableLog.versions(base) === Seq(0),
         "staged debris must not appear in the manifest")
       val e2 = intercept[IllegalArgumentException] {
-        Warehouse.o16Read(spark, base, 2)
+        Snapshot.read(spark, base, 2)
       }
       assert(e2.getMessage.contains("not committed"))
       // re-running the crashed commit completes it
       Warehouse.o12Commit(base, 2, Seq((9L, "z")).toDF("k", "v"))
       assert(TableLog.versions(base) === Seq(0, 2))
-      assert(Warehouse.o16Read(spark, base, 2)
+      assert(Snapshot.read(spark, base, 2)
         .collect().map(_.getLong(0)).toSeq === Seq(9L))
     } finally org.apache.commons.io.FileUtils.deleteDirectory(
       new java.io.File(base))
@@ -84,13 +84,13 @@ class TimeTravelSpec extends SparkSpecBase {
         .parquet(s"$base/data-v1-crashed")
       assert(TableLog.versions(base) === Seq(0))
       val e = intercept[IllegalArgumentException] {
-        Warehouse.o16Read(spark, base, 1)
+        Snapshot.read(spark, base, 1)
       }
       assert(e.getMessage.contains("not committed"))
       // re-running the commit must commit its own data, never the debris
       Warehouse.o12Commit(base, 1, Seq((9L, "z")).toDF("k", "v"))
       assert(TableLog.versions(base) === Seq(0, 1))
-      assert(Warehouse.o16Read(spark, base, 1)
+      assert(Snapshot.read(spark, base, 1)
         .collect().map(r => (r.getLong(0), r.getString(1))).toSeq ===
         Seq((9L, "z")))
     } finally org.apache.commons.io.FileUtils.deleteDirectory(
@@ -114,10 +114,10 @@ class TimeTravelSpec extends SparkSpecBase {
               e.getMessage.contains("high-water")), s"round $round: $e")
         }
         val w = winners.head
-        assert(Warehouse.o16Read(spark, base, 0).collect()
+        assert(Snapshot.read(spark, base, 0).collect()
           .map(r => (r.getLong(0), r.getString(1))).toSeq ===
           Seq((w.toLong, s"w$w")), s"round $round: not the winner's rows")
-        val won = "data-" + TableLog.read(base, TableLog.manifest(0)).trim
+        val won = "data-" + Snapshot.manifestOf(base, 0).token
         def tokens(): Set[String] =
           graft.Tables.listDir(java.nio.file.Paths.get(base))
             .map(_.getFileName.toString).filter(_.startsWith("data-")).toSet
@@ -126,7 +126,7 @@ class TimeTravelSpec extends SparkSpecBase {
           ((Seq(), (staged - won).toSeq.sorted)),
           s"round $round: the vacuum must sweep exactly the losers' staging")
         assert(tokens() == Set(won))
-        assert(Warehouse.o16Read(spark, base, 0).count() === 1L)
+        assert(Snapshot.read(spark, base, 0).count() === 1L)
         staged.size - 1
       } finally org.apache.commons.io.FileUtils.deleteDirectory(
         new java.io.File(base))

@@ -1,7 +1,7 @@
 package graft.queries
 
 import graft.SparkSpecBase
-import graft.table.TableLog
+import graft.table.{Snapshot, TableLog}
 
 /** o13 vacuum ([[Warehouse.vacuum]] over the o12 snapshot table): the
   * unlink-before-delete protocol's crash windows and retention edges.
@@ -23,7 +23,8 @@ class VacuumSpec extends SparkSpecBase {
 
   /** The data dir version `v`'s manifest names. */
   private def dataDir(base: String, v: Int) =
-    new java.io.File(Warehouse.o16DataDir(base, v))
+    new java.io.File(
+      Snapshot.dataPath(base, Snapshot.manifestOf(base, v).token))
 
   test("o13 expires oldest versions, newest stay readable") {
     val base = freshTable(4)
@@ -33,10 +34,10 @@ class VacuumSpec extends SparkSpecBase {
       assert(TableLog.versions(base) === Seq(2, 3))
       assert(!v0.exists())
       assert(!v1.exists())
-      assert(Warehouse.o16Read(spark, base, 2).count() === 1L)
-      assert(Warehouse.o16Read(spark, base, 3).count() === 1L)
+      assert(Snapshot.read(spark, base, 2).count() === 1L)
+      assert(Snapshot.read(spark, base, 3).count() === 1L)
       val e = intercept[IllegalArgumentException] {
-        Warehouse.o16Read(spark, base, 0)
+        Snapshot.read(spark, base, 0)
       }
       assert(e.getMessage.contains("not committed"))
     } finally org.apache.commons.io.FileUtils.deleteDirectory(
@@ -55,7 +56,7 @@ class VacuumSpec extends SparkSpecBase {
       // the live-manifest reader already fails loudly — it can never
       // see the undeleted files as data
       val e = intercept[IllegalArgumentException] {
-        Warehouse.o16Read(spark, base, 0)
+        Snapshot.read(spark, base, 0)
       }
       assert(e.getMessage.contains("not committed"))
       // re-running the vacuum expires nothing new but sweeps the debris
@@ -63,7 +64,7 @@ class VacuumSpec extends SparkSpecBase {
       assert(!v0.exists(),
         "re-run must complete the crashed delete")
       assert(TableLog.versions(base) === Seq(1, 2))
-      assert(Warehouse.o16Read(spark, base, 1).count() === 1L)
+      assert(Snapshot.read(spark, base, 1).count() === 1L)
     } finally org.apache.commons.io.FileUtils.deleteDirectory(
       new java.io.File(base))
   }
@@ -97,7 +98,7 @@ class VacuumSpec extends SparkSpecBase {
       Warehouse.o12Commit(base, 3, Seq((99L, "re")).toDF("k", "s"))
       assert(TableLog.versions(base) === Seq(1, 2, 3))
       assert(TableLog.versions(base).lastOption === Some(3))
-      assert(Warehouse.o16Read(spark, base, 3)
+      assert(Snapshot.read(spark, base, 3)
         .collect().map(_.getLong(0)).toSeq === Seq(99L))
     } finally org.apache.commons.io.FileUtils.deleteDirectory(
       new java.io.File(base))

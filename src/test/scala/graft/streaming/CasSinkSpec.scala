@@ -3,6 +3,7 @@ package graft.streaming
 import graft.SparkSpecBase
 import graft.queries.Warehouse
 import org.apache.spark.sql.functions._
+import graft.table.{Snapshot, TableLog}
 
 /** st25 — the CAS-committed streaming sink. The registered query drives
   * the REAL crash/replay through a checkpointed restart; this spec pins
@@ -28,7 +29,7 @@ class CasSinkSpec extends SparkSpecBase {
       CasSink.commitBatch(base, "app", b0, 0L) // replay after successful commit
       CasSink.commitBatch(base, "app", df(Seq(3L -> "c")), 1L)
       CasSink.commitBatch(base, "app", df(Seq(3L -> "c")), 1L) // replay again
-      assert(Warehouse.o16Latest(base) == 2,
+      assert(TableLog.latest(base) == 2,
         "two batches must land as exactly two versions")
       val log = CasSink.readLog(spark, base)
       assert(log.count() == 3, "no row may duplicate under replay")
@@ -44,16 +45,16 @@ class CasSinkSpec extends SparkSpecBase {
       // another shard/writer lands v2 under a token this stream never
       // probes as its own
       Warehouse.o16Stage(base, "foreign", df(Seq(9L -> "z")))
-      assert(Warehouse.o16TryPublish(base, "foreign", 1))
+      assert(Snapshot.commit(base, 2, Snapshot.Manifest("foreign")))
       // this stream's next batch must retry past the foreign commit
       CasSink.commitBatch(base, "app", df(Seq(2L -> "b")), 1L)
-      assert(Warehouse.o16Latest(base) == 3)
+      assert(TableLog.latest(base) == 3)
       assert(CasSink.readLog(spark, base).count() == 3,
         "every writer's rows must survive the interleave")
       // and its OWN replay still skips despite the foreign manifest
       // sitting between its commits
       CasSink.commitBatch(base, "app", df(Seq(2L -> "b")), 1L)
-      assert(Warehouse.o16Latest(base) == 3,
+      assert(TableLog.latest(base) == 3,
         "replay across an interleaved foreign commit must still dedupe")
     } finally org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)
   }
@@ -69,14 +70,14 @@ class CasSinkSpec extends SparkSpecBase {
       CasSink.commitBatch(base, "shardB", df(Seq(2L -> "b")), 0L)
       CasSink.commitBatch(base, "shardA", df(Seq(3L -> "c")), 1L)
       CasSink.commitBatch(base, "shardB", df(Seq(4L -> "d")), 1L)
-      assert(Warehouse.o16Latest(base) == 4,
+      assert(TableLog.latest(base) == 4,
         "each shard's each batch must land as its own version")
       assert(CasSink.readLog(spark, base).count() == 4,
         "no shard's batch may be lost to the other's token")
       // replays on both shards still dedupe against their OWN tokens
       CasSink.commitBatch(base, "shardA", df(Seq(3L -> "c")), 1L)
       CasSink.commitBatch(base, "shardB", df(Seq(2L -> "b")), 0L)
-      assert(Warehouse.o16Latest(base) == 4,
+      assert(TableLog.latest(base) == 4,
         "per-shard replay must still skip after the interleave")
     } finally org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)
   }
@@ -89,15 +90,15 @@ class CasSinkSpec extends SparkSpecBase {
       // a foreign writer whose token LOOKS like a bare numeric batch
       // token (the r18 ADVICE false-terminator scenario)
       Warehouse.o16Stage(base, "batch-7", df(Seq(9L -> "z")))
-      assert(Warehouse.o16TryPublish(base, "batch-7", 1))
+      assert(Snapshot.commit(base, 2, Snapshot.Manifest("batch-7")))
       // replaying this stream's batch 0 must still find ITS commit
       // below the foreign token (no false early-exit, no false match)
       CasSink.commitBatch(base, "app", df(Seq(1L -> "a")), 0L)
-      assert(Warehouse.o16Latest(base) == 2,
+      assert(TableLog.latest(base) == 2,
         "replay must dedupe through a foreign numeric batch token")
       // and a NEW batch must not false-match the foreign "batch-7"
       CasSink.commitBatch(base, "app", df(Seq(2L -> "b")), 7L)
-      assert(Warehouse.o16Latest(base) == 3,
+      assert(TableLog.latest(base) == 3,
         "this stream's batch 7 is not the foreign writer's batch-7")
     } finally org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)
   }
@@ -115,9 +116,9 @@ class CasSinkSpec extends SparkSpecBase {
       // the loop-guard variant is exercised by the interleave below.
       val twinToken = "batch-app-0"
       Warehouse.o16Stage(base, twinToken, df(Seq(1L -> "a")))
-      assert(Warehouse.o16TryPublish(base, twinToken, 0))
+      assert(Snapshot.commit(base, 1, Snapshot.Manifest(twinToken)))
       CasSink.commitBatch(base, "app", df(Seq(1L -> "a")), 0L)
-      assert(Warehouse.o16Latest(base) == 1,
+      assert(TableLog.latest(base) == 1,
         "a batch already committed by its twin must not publish again")
       assert(CasSink.readLog(spark, base).count() == 1)
     } finally org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)

@@ -5,6 +5,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import graft.queries.Warehouse
+import graft.table.Snapshot
 
 /** st27 — streaming the deletion-vector change feed. The registered
   * query drives the checkpointed two-run restart on the corpus; this
@@ -30,7 +31,7 @@ class DvFeedStreamSpec extends SparkSpecBase {
       Warehouse.o16Stage(base, "t0",
         Seq((1L, "a"), (2L, "b"), (3L, "c"), (4L, "d"))
           .toDF("k", "v").repartition(2))
-      assert(Warehouse.o22Commit(base, 1, "t0", None))
+      assert(Snapshot.commit(base, 1, Snapshot.Manifest("t0")))
       assert(Warehouse.o22Delete(spark, base, col("k") % 2 === 0, "dv0") == 2)
       assert(Warehouse.o22Delete(spark, base, col("v") === "c", "dv1") == 3)
       assert(Warehouse.o22Optimize(spark, base, "t1") == 4)
@@ -50,7 +51,7 @@ class DvFeedStreamSpec extends SparkSpecBase {
           bdf.collect().map(_.getString(0)
             .replaceAll(".*manifest-", "").toInt).distinct.sorted.foreach { v =>
             val feed =
-              if (v == 1) Warehouse.o22Read(spark, base, 1)
+              if (v == 1) Snapshot.read(spark, base, 1)
                 .withColumn("change_type", lit("insert"))
               else Warehouse.o24FeedOf(spark, base, v - 1, cols)
             feed.withColumn("version", lit(v))
@@ -80,7 +81,7 @@ class DvFeedStreamSpec extends SparkSpecBase {
           .unionByName(fv.filter(col("change_type") === "insert")
             .select(cols.map(col): _*))
       }
-      val latest = Warehouse.o22Read(spark, base, 4)
+      val latest = Snapshot.read(spark, base, 4)
       assert(applied.join(latest, cols, "left_anti").isEmpty &&
         latest.join(applied, cols, "left_anti").isEmpty)
     } finally org.apache.commons.io.FileUtils.deleteDirectory(root.toFile)

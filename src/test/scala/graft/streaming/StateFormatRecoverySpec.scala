@@ -1,6 +1,7 @@
 package graft.streaming
 
-import graft.{SparkSpecBase, Tables}
+import graft.{GraftSession, SparkSpecBase, Tables}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
@@ -46,48 +47,49 @@ class StateFormatRecoverySpec extends SparkSpecBase {
     val cp = root.resolve("cp")
     val runId = java.util.UUID.randomUUID().toString.replace("-", "").take(12)
 
-    def runOnce(sink: String, provider: String): Unit = {
-      val scoped = Seq(
-        "spark.sql.shuffle.partitions" -> "4",
-        "spark.sql.streaming.stateStore.providerClass" -> provider)
-      val prior = scoped.map { case (k, _) => k -> spark.conf.getOption(k) }
-      scoped.foreach { case (k, v) => spark.conf.set(k, v) }
-      try {
-        val ev = Tables.normalizeTs(spark.readStream
-            .schema(rawSchema).parquet(data.toString))
-          .withWatermark("ts", "10 minutes")
-        val q = EventWindows.tumbling(ev)
-          .writeStream.format("memory").queryName(sink)
-          .outputMode("complete")
-          .option("checkpointLocation", cp.toString)
-          .trigger(Trigger.AvailableNow())
-          .start()
-        assert(q.awaitTermination(180000), s"$sink did not finish in time")
-      } finally prior.foreach {
-        case (k, Some(v)) => spark.conf.set(k, v)
-        case (k, None) => spark.conf.unset(k)
+    /** Run the stream once on a clone of the spec session set to 4
+      * shuffle partitions and state-store `provider`, then hand the
+      * clone (which holds the memory sink's view) to `after`. */
+    def runOnce[A](sink: String, provider: String)(
+        after: SparkSession => A): A =
+      GraftSession.withConf(spark, Seq(
+          "spark.sql.shuffle.partitions" -> "4",
+          "spark.sql.streaming.stateStore.providerClass" -> provider)) { c =>
+        try {
+          val ev = Tables.normalizeTs(c.readStream
+              .schema(rawSchema).parquet(data.toString))
+            .withWatermark("ts", "10 minutes")
+          val q = EventWindows.tumbling(ev)
+            .writeStream.format("memory").queryName(sink)
+            .outputMode("complete")
+            .option("checkpointLocation", cp.toString)
+            .trigger(Trigger.AvailableNow())
+            .start()
+          assert(q.awaitTermination(180000), s"$sink did not finish in time")
+          after(c)
+        } finally c.catalog.dropTempView(sink)
       }
-    }
 
     try {
       val src = java.nio.file.Paths.get(s"$sf/events.parquet")
       java.nio.file.Files.copy(src, data.resolve("a.parquet"))
-      runOnce(s"stfmt_run1_$runId", hdfsProvider)
+      runOnce(s"stfmt_run1_$runId", hdfsProvider)(_ => ())
       java.nio.file.Files.copy(src, data.resolve("b.parquet"))
       // run 2: the session asks for RocksDB; the checkpoint was written
       // under the HDFS-backed provider
-      runOnce(s"stfmt_run2_$runId", StreamRun.rocksDbProvider)
-
-      // state survived: every (window, type) count doubled exactly
-      val run2 = spark.table(s"stfmt_run2_$runId")
-      val expected = EventWindows.tumbling(Tables.events(spark, sf))
-        .select(col("window_start"), col("event_type"),
-          (col("n") * 2).as("n"))
-      val mismatches = run2.select(col("window_start"), col("event_type"), col("n"))
-        .join(expected, Seq("window_start", "event_type"), "full")
-        .filter(run2("n").isNull || expected("n").isNull ||
-          run2("n") =!= expected("n"))
-        .count()
+      val mismatches =
+        runOnce(s"stfmt_run2_$runId", StreamRun.rocksDbProvider) { c =>
+          // state survived: every (window, type) count doubled exactly
+          val run2 = c.table(s"stfmt_run2_$runId")
+          val expected = EventWindows.tumbling(Tables.events(c, sf))
+            .select(col("window_start"), col("event_type"),
+              (col("n") * 2).as("n"))
+          run2.select(col("window_start"), col("event_type"), col("n"))
+            .join(expected, Seq("window_start", "event_type"), "full")
+            .filter(run2("n").isNull || expected("n").isNull ||
+              run2("n") =!= expected("n"))
+            .count()
+        }
       assert(mismatches == 0,
         "recovered aggregate is not exactly A ∪ B — state was lost or doubled")
 
@@ -97,10 +99,6 @@ class StateFormatRecoverySpec extends SparkSpecBase {
       assert(provs.size >= 2, s"expected ≥2 offsets entries, got ${provs.size}")
       assert(provs.forall(_.contains("HDFSBackedStateStoreProvider")),
         s"offsets metadata lost the original provider:\n${provs.mkString("\n")}")
-    } finally {
-      spark.catalog.dropTempView(s"stfmt_run1_$runId")
-      spark.catalog.dropTempView(s"stfmt_run2_$runId")
-      org.apache.commons.io.FileUtils.deleteDirectory(root.toFile)
-    }
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(root.toFile)
   }
 }

@@ -70,7 +70,7 @@ class TableLogSpec extends AnyFunSuite {
     withDir { src =>
       val srcBase = src.toString
       (1 to racers).foreach(v =>
-        assert(Warehouse.o16TryPublish(srcBase, s"a$v", v - 1)))
+        assert(Snapshot.commit(srcBase, v, Snapshot.Manifest(s"a$v"))))
       (1 to rounds).foreach { r =>
         val dst = Files.createDirectory(src.resolve(s"clone-$r"))
         val w = onlyWinner(r, race(i =>
@@ -88,7 +88,7 @@ class TableLogSpec extends AnyFunSuite {
       withDir { dir =>
         val base = dir.toString
         (1 to 5).foreach(v =>
-          assert(Warehouse.o16TryPublish(base, s"t$v", v - 1)))
+          assert(Snapshot.commit(base, v, Snapshot.Manifest(s"t$v"))))
         race(_ => Warehouse.o23Checkpoint(base, 5))
         assert(TableLog.read(base, "checkpoint-5") ==
           (1 to 5).map(v => s"$v:t$v").mkString("\n"))
