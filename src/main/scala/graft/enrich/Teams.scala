@@ -1,21 +1,23 @@
 package graft.enrich
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
 /** Team-entity canonicalization (SURVEY J1 + F15/F16/F17):
-  * alias-dimension broadcast lookup with mascot-strip retry, record-suffix
-  * stripping, and the order-sensitive "LOS ANGELES" disambiguation.
+  * alias lookup with mascot-strip retry, record-suffix stripping, and
+  * the order-sensitive "LOS ANGELES" disambiguation.
   *
   * Reference semantics reproduced: `DEFENSEVSPOSTION.PY:83-116` (alias
   * dict), `:162-188` (canonicalize + mascot-strip retry + LA counter),
   * `:171-172` (record suffix).
   *
-  * Scale design: the alias dimension is bounded (≤ a few hundred rows) —
-  * always a broadcast hash join; the LA fix is a window over only the
-  * ambiguous rows' partitions. The fact side never shuffles for the
-  * lookup itself.
+  * Scale design: the alias table is a bounded constant (≤ a few hundred
+  * entries), so the lookup is an expression, not a join: one map literal
+  * probed per row inside the projection, with no broadcast, no hash
+  * relation held by the plan and no exchange — the fact side never
+  * shuffles or waits for the lookup. The LA fix is a window over only
+  * the ambiguous rows' partitions.
   */
 object Teams {
 
@@ -95,6 +97,11 @@ object Teams {
     (base ++ cities ++ abbrs ++ mascots).distinct
   }
 
+  /** [[aliases]] as one map literal, the lookup's only copy in a plan.
+    * The keys are unique (`TeamsSpec` checks it), so the map keeps
+    * every entry. */
+  private lazy val aliasMap = typedLit(aliases.toMap)
+
   /** Normalize a raw team string for lookup: upper, strip periods and the
     * trailing `(W-L)` record suffix, collapse whitespace. */
   def normalizeRaw(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
@@ -102,10 +109,10 @@ object Teams {
       regexp_replace(upper(c), "\\.", ""),
       "\\s*\\([^)]*\\)\\s*$", ""))
 
-  /** Canonicalize `rawCol` against the alias dimension.
+  /** Canonicalize `rawCol` against the alias table.
     *
-    * Pipeline: normalize → broadcast alias join → mascot-strip retry
-    * (drop the last word, rejoin) → order-sensitive LA fix: the 1st bare
+    * Pipeline: normalize → alias lookup → mascot-strip retry (look up
+    * all but the last word) → order-sensitive LA fix: the 1st bare
     * "LOS ANGELES" per (position, timeframe) in `row_idx` order is the
     * Lakers, the 2nd the Clippers. Unresolvable names yield null
     * `canonical` (callers validate, SURVEY A8).
@@ -113,37 +120,23 @@ object Teams {
   def canonicalize(df: DataFrame, rawCol: String,
       partitionCols: Seq[String] = Seq("position", "timeframe"),
       orderCol: String = "row_idx"): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    val dim = aliases.toDF("alias", "canonical_dim")
-    val dimRetry = aliases.toDF("alias_retry", "canonical_retry")
-
-    val normed = df.withColumn("__norm", normalizeRaw(col(rawCol)))
-    val joined = normed
-      .join(broadcast(dim), normed("__norm") === dim("alias"), "left")
-      .drop("alias")
-    // mascot-strip retry: "CHICAGO BULLS X" → "CHICAGO BULLS" already
-    // covered; this drops a trailing unknown word ("CLEVELAND CAVALIERS
-    // FANS" → retry on all-but-last-word)
-    val retried = joined
-      .withColumn("__stripped",
-        regexp_replace(col("__norm"), "\\s+\\S+$", ""))
-      .join(broadcast(dimRetry),
-        col("canonical_dim").isNull &&
-          col("__stripped") === col("alias_retry"), "left")
-      .drop("alias_retry")
+    val norm = col("__norm")
+    val isLa = norm === "LOS ANGELES"
+    // mascot-strip retry: drops a trailing unknown word ("CLEVELAND
+    // CAVALIERS FANS" → "CLEVELAND CAVALIERS") when the whole name misses
+    val looked = coalesce(
+      try_element_at(aliasMap, norm),
+      try_element_at(aliasMap, regexp_replace(norm, "\\s+\\S+$", "")))
     val laWindow = Window
-      .partitionBy(partitionCols.map(col) :+
-        (col("__norm") === "LOS ANGELES"): _*)
+      .partitionBy(partitionCols.map(col) :+ isLa: _*)
       .orderBy(col(orderCol))
-    retried
+    df.withColumn("__norm", normalizeRaw(col(rawCol)))
       .withColumn("__la_rank",
-        when(col("__norm") === "LOS ANGELES",
-          row_number().over(laWindow)).otherwise(lit(null)))
+        when(isLa, row_number().over(laWindow)).otherwise(lit(null)))
       .withColumn("canonical",
-        when(col("__norm") === "LOS ANGELES",
+        when(isLa,
           when(col("__la_rank") === 1, "LA Lakers").otherwise("LA Clippers"))
-          .otherwise(coalesce(col("canonical_dim"), col("canonical_retry"))))
-      .drop("__norm", "__stripped", "__la_rank", "canonical_dim", "canonical_retry")
+          .otherwise(looked))
+      .drop("__norm", "__la_rank")
   }
 }

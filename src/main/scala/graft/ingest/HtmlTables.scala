@@ -52,9 +52,9 @@ import scala.collection.mutable.ArrayBuffer
   *    is an intentional improvement, not parity.
   *
   * Parsing is a per-page, executor-side operation (see
-  * [[graft.sources.HtmlTableSource]] — one input partition per page
-  * file); at 100 TB the unit of parallelism is pages, never rows of one
-  * page, so nothing here touches Spark.
+  * [[graft.sources.HtmlTableSource]] — page files packed into splits,
+  * each read page by page); at 100 TB the unit of parallelism is
+  * pages, never rows of one page, so nothing here touches Spark.
   */
 object HtmlTables {
 

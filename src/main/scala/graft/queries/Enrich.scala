@@ -248,8 +248,8 @@ object Enrich {
     "Utah  Jazz", "Phoenix Suns Basketball", "UNKNOWN SQUAD", "Raptors (3-2)")
 
   /** E5 / F15 full path — [[graft.enrich.Teams.canonicalize]] end-to-end
-    * under the oracle: normalize → broadcast alias-dict join →
-    * mascot-strip retry join → stateful LA disambiguation
+    * under the oracle: normalize → alias-map lookup → mascot-strip
+    * retry lookup → stateful LA disambiguation
     * (`DEFENSEVSPOSTION.PY:162-188`), over deterministic raw names cycled
     * from `customer`. The oracle replays the identical alias dimension
     * (generated from [[graft.enrich.Teams.aliases]] — single source of

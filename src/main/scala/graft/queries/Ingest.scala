@@ -341,9 +341,10 @@ object Ingest {
     * directory (bos/mil/nyk), read through [[graft.sources
     * .HtmlTableSource]]'s per-table wide mode with a
     * `page IN ('bos','mil')` filter the source pushes down to prune
-    * nyk's FILE at planning time (`HtmlTableSourceSpec` pins the
-    * planned-partition count; this row certifies the surviving pages'
-    * VALUES and metadata). The oracle replays the hand-derived golden's
+    * nyk's FILE at planning time, before the surviving pages are packed
+    * into splits (`HtmlTableSourceSpec` pins the split rule and which
+    * files a filtered scan plans; this row certifies the surviving
+    * pages' VALUES and metadata). The oracle replays the hand-derived golden's
     * Roster player column once per surviving page — so the hash covers
     * directory listing, per-page parsing, page metadata, the wide
     * projection, and that pruning removes exactly the filtered page and

@@ -1,10 +1,14 @@
 package graft.sources
 
 import java.util
+import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read._
+import org.apache.spark.sql.execution.datasources.{FilePartition, PartitionDirectory}
 import org.apache.spark.sql.sources.{EqualTo, Filter, In}
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
@@ -20,12 +24,19 @@ import graft.normalize.Columns
   * exposes it as an already-normalized wide relation.
   *
   * Scale model: the unit of parallelism is the PAGE, never rows within
-  * one page — `planInputPartitions` emits one partition per page file,
-  * so a directory of 30 team pages scans 30-wide exactly like a
-  * multi-split file source, and a 100 TB crawl shards by page with no
-  * cross-page coordination. Parsing happens inside the partition
-  * reader (executor-side); the driver only lists files and parses ONE
-  * page at planning time for schema inference.
+  * one page, and pages are packed into splits the way Spark's file
+  * sources pack small files ([[HtmlTableSource.packPages]]): the split
+  * size is `FilePartition.maxSplitBytes` under the session's
+  * `spark.sql.files.maxPartitionBytes` / `openCostInBytes` /
+  * `minPartitionNum`, and a split's task reads its pages one after the
+  * other. A ~5 KB team page costs a task far more to schedule than to
+  * parse, so 30 pages scan as a few splits on a 4-core session rather
+  * than 30 one-page tasks, while a 100 TB crawl still shards by page
+  * with no cross-page coordination (a split holds at most
+  * `maxPartitionBytes` of pages, or one page larger than that).
+  * Parsing happens inside the partition reader (executor-side); the
+  * driver only lists files and parses ONE page at planning time for
+  * schema inference.
   *
   * Pushdown:
   *  - `SupportsPushDownRequiredColumns`: pruned columns are never
@@ -136,6 +147,36 @@ object HtmlTableSource {
       reserved = Set("page", "from_comment", "row_idx"))
   }
 
+  /** Page files packed next-fit into splits, in the given (sorted)
+    * order, so reading split after split returns the pages' rows in the
+    * same global order as page after page. A page costs its length plus
+    * `spark.sql.files.openCostInBytes`, and a split is closed when the
+    * next page would take it past `FilePartition.maxSplitBytes` — the
+    * rule `FilePartition.getFilePartitions` applies to file splits.
+    */
+  private[sources] def packPages(session: SparkSession,
+      pages: Seq[java.io.File]): Seq[Seq[String]] = {
+    val listing = PartitionDirectory(InternalRow.empty, pages.map(f =>
+      new FileStatus(f.length, false, 1, 0, f.lastModified,
+        new Path(f.toURI))).toArray)
+    val maxSplit = FilePartition.maxSplitBytes(session, Seq(listing))
+    val openCost = session.sessionState.conf.filesOpenCostInBytes
+    val splits = Seq.newBuilder[Seq[String]]
+    var split = Vector.empty[String]
+    var size = 0L
+    pages.foreach { f =>
+      if (split.nonEmpty && size + f.length > maxSplit) {
+        splits += split
+        split = Vector.empty
+        size = 0L
+      }
+      split :+= f.getAbsolutePath
+      size += f.length + openCost
+    }
+    if (split.nonEmpty) splits += split
+    splits.result()
+  }
+
   private[sources] def buildSchema(path: String, tableId: String): StructType =
     if (tableId == allTables) longSchema
     else {
@@ -182,13 +223,15 @@ class HtmlTableScanBuilder(path: String, tableId: String, full: StructType)
 
   override def pushedFilters(): Array[Filter] = pushed
 
+  /** The scan keeps the session that plans it: its split settings
+    * (`spark.sql.files.*`) are that session's. */
   override def build(): Scan =
-    new HtmlTableScan(path, tableId, full, required, pushed)
+    new HtmlTableScan(path, tableId, full, required, pushed, SparkSession.active)
 }
 
 class HtmlTableScan(path: String, tableId: String,
     full: StructType, required: StructType,
-    pushed: Array[Filter]) extends Scan with Batch {
+    pushed: Array[Filter], session: SparkSession) extends Scan with Batch {
 
   override def readSchema(): StructType = required
   override def toBatch: Batch = this
@@ -201,113 +244,118 @@ class HtmlTableScan(path: String, tableId: String,
     case _ => true
   }
 
-  /** One partition per surviving page file — pages are the scale unit. */
+  /** The surviving page files packed into splits (see
+    * [[HtmlTableSource.packPages]]). */
   override def planInputPartitions(): Array[InputPartition] =
-    HtmlTableSource.pageFiles(path)
-      .filter(f => pageAccepted(HtmlTableSource.pageName(f)))
-      .map(f => HtmlPagePartition(f.getAbsolutePath))
+    HtmlTableSource.packPages(session, HtmlTableSource.pageFiles(path)
+        .filter(f => pageAccepted(HtmlTableSource.pageName(f))))
+      .map(HtmlPageSplit(_))
       .toArray[InputPartition]
 
   override def createReaderFactory(): PartitionReaderFactory =
     new HtmlTableReaderFactory(tableId, full, required)
 }
 
-case class HtmlPagePartition(file: String) extends InputPartition
+/** Page files read in turn by one task, in their sorted order. */
+case class HtmlPageSplit(files: Seq[String]) extends InputPartition
 
 class HtmlTableReaderFactory(tableId: String,
     full: StructType, required: StructType) extends PartitionReaderFactory {
 
-  override def createReader(p: InputPartition): PartitionReader[InternalRow] = {
-    val file = new java.io.File(p.asInstanceOf[HtmlPagePartition].file)
-    if (tableId == HtmlTableSource.allTables) longReader(file)
-    else wideReader(file)
-  }
+  // source-side projection: only required ordinals materialize
+  private val ordinals = required.fieldNames.map(full.fieldIndex)
 
-  /** Per-table wide relation: meta columns + one column per header. */
-  private def wideReader(file: java.io.File): PartitionReader[InternalRow] =
+  /** Each file of the split through the per-page reader, one page after
+    * the other; a page is opened only once the previous one is spent. */
+  override def createReader(p: InputPartition): PartitionReader[InternalRow] =
     new PartitionReader[InternalRow] {
-      private val page = HtmlTableSource.pageName(file)
-      private val rows: Iterator[(Long, Boolean, Seq[String])] =
-        HtmlTableSource.tableIn(file, tableId) match {
-          case Some(t) =>
-            // schema-drift guard: the schema was inferred from the first
-            // page carrying this table; a page whose headers differ would
-            // otherwise misalign cells POSITIONALLY and silently corrupt
-            // every downstream value. Fail loudly with the page name
-            // instead (the reference re-reads each page's own headers,
-            // `unified_nba_scraper.py:284-289`, so it cannot misalign).
-            val names = HtmlTableSource.dataNames(t)
-            val expected = full.fieldNames.drop(HtmlTableSource.metaFields.size).toSeq
-            if (names != expected)
-              throw new IllegalStateException(
-                s"html table '$tableId' on page '$page' has drifted headers: " +
-                  s"expected $expected, found $names")
-            t.rows.iterator.zipWithIndex
-              .map { case (r, i) => (i.toLong, t.fromComment, r) }
-          case None => Iterator.empty
-        }
-      // source-side projection: only required ordinals materialize
-      private val ordinals = required.fieldNames.map(full.fieldIndex)
+      private val rows = p.asInstanceOf[HtmlPageSplit].files.iterator
+        .map(new java.io.File(_))
+        .flatMap(f =>
+          if (tableId == HtmlTableSource.allTables) longRows(f) else wideRows(f))
       private var current: InternalRow = _
 
       override def next(): Boolean = {
         if (!rows.hasNext) return false
-        val (idx, fromComment, cells) = rows.next()
-        def fullValue(i: Int): Any = i match {
-          case 0 => UTF8String.fromString(page)
-          case 1 => fromComment
-          case 2 => idx
-          case c => cells.lift(c - 3).flatMap(Option(_))
-            .map(UTF8String.fromString).orNull
-        }
-        current = InternalRow.fromSeq(ordinals.toIndexedSeq.map(fullValue))
+        current = rows.next()
         true
       }
 
       override def get(): InternalRow = current
       override def close(): Unit = ()
     }
+
+  /** Per-table wide relation: meta columns + one column per header. */
+  private def wideRows(file: java.io.File): Iterator[InternalRow] = {
+    val page = HtmlTableSource.pageName(file)
+    HtmlTableSource.tableIn(file, tableId) match {
+      case Some(t) =>
+        // schema-drift guard: the schema was inferred from the first
+        // page carrying this table; a page whose headers differ would
+        // otherwise misalign cells POSITIONALLY and silently corrupt
+        // every downstream value. Fail loudly with the page name
+        // instead (the reference re-reads each page's own headers,
+        // `unified_nba_scraper.py:284-289`, so it cannot misalign).
+        val names = HtmlTableSource.dataNames(t)
+        val expected = full.fieldNames.drop(HtmlTableSource.metaFields.size).toSeq
+        if (names != expected)
+          throw new IllegalStateException(
+            s"html table '$tableId' on page '$page' has drifted headers: " +
+              s"expected $expected, found $names")
+        val pageValue = UTF8String.fromString(page)
+        t.rows.iterator.zipWithIndex.map { case (r, i) =>
+          val cells = r.toIndexedSeq
+          val values = new Array[Any](ordinals.length)
+          var k = 0
+          while (k < ordinals.length) {
+            values(k) = ordinals(k) match {
+              case 0 => pageValue
+              case 1 => t.fromComment
+              case 2 => i.toLong
+              case c => if (c - 3 < cells.length) utf8(cells(c - 3)) else null
+            }
+            k += 1
+          }
+          new GenericInternalRow(values)
+        }
+      case None => Iterator.empty
+    }
+  }
 
   /** All tables in one parse: one long row per cell, header
     * normalization identical to the wide path (same [[HtmlTableSource
     * .dataNames]] algebra, so wide and long reads of a table agree on
     * column names by construction).
     */
-  private def longReader(file: java.io.File): PartitionReader[InternalRow] =
-    new PartitionReader[InternalRow] {
-      private val page = HtmlTableSource.pageName(file)
-      private val cells: Iterator[(String, Boolean, Long, String, String)] = {
-        val html = new String(
-          java.nio.file.Files.readAllBytes(file.toPath),
-          java.nio.charset.StandardCharsets.UTF_8)
-        graft.ingest.HtmlTables.extractAll(html).iterator.flatMap { t =>
-          val names = HtmlTableSource.dataNames(t)
-          t.rows.iterator.zipWithIndex.flatMap { case (r, i) =>
-            names.iterator.zip(r.iterator).map { case (n, v) =>
-              (t.tableId, t.fromComment, i.toLong, n, v)
+  private def longRows(file: java.io.File): Iterator[InternalRow] = {
+    val pageValue = UTF8String.fromString(HtmlTableSource.pageName(file))
+    val html = new String(
+      java.nio.file.Files.readAllBytes(file.toPath),
+      java.nio.charset.StandardCharsets.UTF_8)
+    HtmlTables.extractAll(html).iterator.flatMap { t =>
+      val tid = UTF8String.fromString(t.tableId)
+      val names = HtmlTableSource.dataNames(t).map(UTF8String.fromString)
+      t.rows.iterator.zipWithIndex.flatMap { case (r, i) =>
+        names.iterator.zip(r.iterator).map { case (colName, value) =>
+          val values = new Array[Any](ordinals.length)
+          var k = 0
+          while (k < ordinals.length) {
+            values(k) = ordinals(k) match {
+              case 0 => pageValue
+              case 1 => tid
+              case 2 => t.fromComment
+              case 3 => i.toLong
+              case 4 => colName
+              case 5 => utf8(value)
             }
+            k += 1
           }
+          new GenericInternalRow(values)
         }
       }
-      private val ordinals = required.fieldNames.map(full.fieldIndex)
-      private var current: InternalRow = _
-
-      override def next(): Boolean = {
-        if (!cells.hasNext) return false
-        val (tid, fromComment, idx, colName, value) = cells.next()
-        def fullValue(i: Int): Any = i match {
-          case 0 => UTF8String.fromString(page)
-          case 1 => UTF8String.fromString(tid)
-          case 2 => fromComment
-          case 3 => idx
-          case 4 => UTF8String.fromString(colName)
-          case 5 => Option(value).map(UTF8String.fromString).orNull
-        }
-        current = InternalRow.fromSeq(ordinals.toIndexedSeq.map(fullValue))
-        true
-      }
-
-      override def get(): InternalRow = current
-      override def close(): Unit = ()
     }
+  }
+
+  private def utf8(s: String): UTF8String =
+    if (s == null) null else UTF8String.fromString(s)
 }

@@ -4,6 +4,7 @@ import java.util
 import scala.jdk.CollectionConverters._
 import com.fasterxml.jackson.databind.ObjectMapper
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read._
@@ -51,27 +52,28 @@ class RawTableSource extends TableProvider {
 object RawTableSource {
   private val mapper = new ObjectMapper()
 
-  /** Parse the file ONCE per caller into the table's JsonNodes.
+  /** The file's non-empty lines, one JSON row each, unparsed: planning
+    * splits them into ranges and each reader parses only its own range.
     * Fixture files are immutable by contract; on mutable storage the
     * line count used for partition planning and a retried reader's
     * re-read could diverge — a real source would plan byte offsets
     * against an immutable snapshot instead. */
-  private[sources] def readNodes(path: String, tableId: String)
-      : IndexedSeq[com.fasterxml.jackson.databind.JsonNode] = {
+  private[sources] def readLines(path: String): IndexedSeq[String] =
     java.nio.file.Files.readAllLines(java.nio.file.Paths.get(path))
-      .asScala.iterator
-      .filter(_.nonEmpty)
-      .map(mapper.readTree)
-      .filter(_.path("table_id").asText() == tableId)
-      .toIndexedSeq
-  }
+      .asScala.iterator.filter(_.nonEmpty).toIndexedSeq
+
+  /** The rows of `tableId` among `lines`, parsed as they are consumed. */
+  private[sources] def nodesOf(lines: Iterator[String], tableId: String)
+      : Iterator[com.fasterxml.jackson.databind.JsonNode] =
+    lines.map(mapper.readTree).filter(_.path("table_id").asText() == tableId)
 
   /** Metadata columns + normalized header columns (strings at ingest). */
   private[sources] def buildSchema(path: String, tableId: String): StructType = {
     val meta = Seq(
       StructField("team", StringType), StructField("page", StringType),
       StructField("tab", StringType), StructField("row_idx", LongType))
-    val headerFields = readNodes(path, tableId).headOption.map { node =>
+    val headerFields = nodesOf(readLines(path).iterator, tableId)
+        .nextOption().map { node =>
       val headers = node.path("headers")
         .elements().asScala.map(_.asText()).toSeq
       Columns.normalizeRawHeaders(headers).map(StructField(_, StringType))
@@ -132,8 +134,10 @@ class RawTableScan(path: String, tableId: String,
   override def description(): String =
     s"RawTableScan(tableId=$tableId, pushed=[${pushed.mkString(", ")}])"
 
+  /** Line ranges over ALL the file's rows, of every table id: planning
+    * parses nothing, and each reader drops the other tables' rows. */
   override def planInputPartitions(): Array[InputPartition] = {
-    val n = RawTableSource.readNodes(path, tableId).size
+    val n = RawTableSource.readLines(path).size
     val k = math.max(1, math.min(slices, n))
     val per = math.max(1, (n + k - 1) / k)
     (0 until n by per)
@@ -154,8 +158,9 @@ class RawTableReaderFactory(path: String, tableId: String,
   override def createReader(p: InputPartition): PartitionReader[InternalRow] = {
     val range = p.asInstanceOf[RawTableRange]
     new PartitionReader[InternalRow] {
-      private val nodes = RawTableSource.readNodes(path, tableId)
-        .slice(range.start, range.end).iterator
+      private val nodes = RawTableSource.nodesOf(
+        RawTableSource.readLines(path).slice(range.start, range.end).iterator,
+        tableId)
       // source-side projection: only required ordinals materialize
       private val ordinals = required.fieldNames.map(full.fieldIndex)
       private var current: InternalRow = _
@@ -183,6 +188,9 @@ class RawTableReaderFactory(path: String, tableId: String,
         if (n == null || n.isNull) null else n.asText()
       }
 
+      private def utf8(s: String): UTF8String =
+        if (s == null) null else UTF8String.fromString(s)
+
       override def next(): Boolean = {
         while (nodes.hasNext) {
           val node = nodes.next()
@@ -194,16 +202,19 @@ class RawTableReaderFactory(path: String, tableId: String,
           if (passes(team, rowIdx)) {
             val cells = node.path("cells").elements().asScala
               .map(_.asText(null)).toIndexedSeq
-            def fullValue(i: Int): Any = i match {
-              case 0 => Option(team).map(UTF8String.fromString).orNull
-              case 1 => Option(strOrNull(node, "page")).map(UTF8String.fromString).orNull
-              case 2 => Option(strOrNull(node, "tab")).map(UTF8String.fromString).orNull
-              case 3 => if (rowIdx == null) null else rowIdx.longValue()
-              case c =>
-                cells.lift(c - 4).flatMap(Option(_))
-                  .map(UTF8String.fromString).orNull
+            val values = new Array[Any](ordinals.length)
+            var k = 0
+            while (k < ordinals.length) {
+              values(k) = ordinals(k) match {
+                case 0 => utf8(team)
+                case 1 => utf8(strOrNull(node, "page"))
+                case 2 => utf8(strOrNull(node, "tab"))
+                case 3 => if (rowIdx == null) null else rowIdx.longValue()
+                case c => if (c - 4 < cells.length) utf8(cells(c - 4)) else null
+              }
+              k += 1
             }
-            current = InternalRow.fromSeq(ordinals.toIndexedSeq.map(fullValue))
+            current = new GenericInternalRow(values)
             return true
           }
         }

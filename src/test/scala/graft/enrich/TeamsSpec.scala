@@ -1,9 +1,12 @@
 package graft.enrich
 
 import graft.SparkSpecBase
+import org.apache.spark.sql.catalyst.plans.logical.Join
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.BroadcastExchangeExec
 import org.apache.spark.sql.functions._
 
-class TeamsSpec extends SparkSpecBase {
+class TeamsSpec extends SparkSpecBase with AdaptiveSparkPlanHelper {
   import spark.implicits._
 
   private def canon(raws: (String, Long)*): Map[Long, String] = {
@@ -53,5 +56,26 @@ class TeamsSpec extends SparkSpecBase {
     assert(out(("SG", 0L)) == "LA Lakers") // counter resets per partition
     assert(out(("SG", 1L)) == "LA Clippers")
     assert(out(("PG", 1L)) == "Boston Celtics")
+  }
+
+  test("alias keys are unique, so the lookup map keeps every alias") {
+    val dupes = Teams.aliases.groupBy(_._1).collect {
+      case (k, vs) if vs.size > 1 => k -> vs.map(_._2)
+    }
+    assert(dupes.isEmpty, s"duplicate alias keys: $dupes")
+  }
+
+  test("the lookup is an expression: no join planned, no broadcast run") {
+    val df = Seq(("BOSTON CELTICS", 0L), ("CLEVELAND CAVALIERS FANS", 1L),
+      ("LOS ANGELES", 2L)).toDF("team_raw", "row_idx")
+      .withColumn("position", lit("PG"))
+      .withColumn("timeframe", lit("2025-26"))
+    val out = Teams.canonicalize(df, "team_raw")
+    val joins = out.queryExecution.optimizedPlan.collect { case j: Join => j }
+    assert(joins.isEmpty, s"optimized plan joins:\n${out.queryExecution.optimizedPlan}")
+    assert(out.collect().length == 3)
+    val plan = out.queryExecution.executedPlan
+    assert(collect(plan) { case b: BroadcastExchangeExec => b }.isEmpty,
+      s"executed plan broadcasts:\n$plan")
   }
 }

@@ -112,7 +112,7 @@ class AntiPatternSweepSpec extends SparkSpecBase {
       ("existence probe loops over DISTINCT partition keys only (spec'd); " +
         "result is a scratch scan"),
     "i8_html_page_prune" ->
-      ("DSv2 scan of staged fixture pages (one partition per page, " +
+      ("DSv2 scan of staged fixture pages (pages packed into splits, " +
         "pruning pinned in HtmlTableSourceSpec); result is a scratch scan"),
     "st20_funnel_detect" ->
       ("flatMapGroupsWithState CEP pass; state bounds + semantics in " +

@@ -85,12 +85,15 @@ class PlanSpec extends SparkSpecBase {
     assert(p.contains("HashAggregate") || p.contains("SortAggregate"))
   }
 
-  test("e5 full canonicalization: both alias lookups broadcast, LA fix windows") {
+  test("e5 full canonicalization: alias lookups probe a map, LA fix windows") {
     val p = plan(Enrich.e5TeamCanonicalize(spark, sf))
-    // two-stage lookup = two broadcast joins of the bounded alias dim;
-    // the fact side must never shuffle for the lookups themselves
-    assert(p.split("BroadcastHashJoin").length >= 3,
-      s"expected 2 broadcast alias joins:\n$p")
+    // both lookups (whole name, then mascot-stripped) probe the bounded
+    // alias map inside the projection: no join, so the fact side never
+    // shuffles for them and the plan holds no broadcast relation
+    assert(!p.contains("Join") && !p.contains("BroadcastExchange"),
+      s"alias lookup planned as a join:\n$p")
+    assert(p.split("element_at\\(map\\(").length == 3,
+      s"expected 2 alias map probes:\n$p")
     assert(p.contains("row_number"), "LA disambiguation window lost")
   }
 

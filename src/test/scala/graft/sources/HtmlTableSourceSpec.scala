@@ -1,12 +1,13 @@
 package graft.sources
 
-import graft.SparkSpecBase
+import graft.{GraftSession, SparkSpecBase}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
 import org.apache.spark.sql.functions.col
 
 /** DSv2 behaviors of the HTML page source: normalized schema, source-side
-  * column pruning, one-partition-per-page parallelism, and page-filter
-  * file pruning (the partition-pruning analog at the crawl layer).
+  * column pruning, pages packed into file splits, and page-filter file
+  * pruning (the partition-pruning analog at the crawl layer).
   */
 class HtmlTableSourceSpec extends SparkSpecBase {
 
@@ -161,32 +162,70 @@ class HtmlTableSourceSpec extends SparkSpecBase {
     }
   }
 
-  test("a directory of pages scans one partition per page, page filter prunes files") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_html_pages")
-    try {
-      val src = java.nio.file.Paths.get(fixturePath)
-      Seq("bos", "mil", "nyk").foreach { team =>
-        java.nio.file.Files.copy(src, dir.resolve(s"$team.html"))
-      }
-      val all = spark.read.format("graft.sources.HtmlTableSource")
-        .option("path", dir.toString).option("tableId", "Roster").load()
-      assert(all.rdd.getNumPartitions == 3)
-      assert(all.count() == 12)
-      assert(all.select("page").distinct().collect().map(_.getString(0))
-        .sorted.toSeq == Seq("bos", "mil", "nyk"))
+  /** `body` on a clone whose split settings pack pages by their own
+    * bytes: a page costs its length + 1, and the split size is the
+    * listing's total over `minPartitionNum`. The scan plans its splits
+    * with the settings of the session that built it, so every read and
+    * collect happens on the clone. */
+  private def packing[A](minPartitionNum: Int)(body: SparkSession => A): A =
+    GraftSession.withConf(spark, Seq(
+      "spark.sql.files.openCostInBytes" -> "1",
+      "spark.sql.files.minPartitionNum" -> minPartitionNum.toString))(body)
 
-      val one = all.filter(col("page") === "mil")
-      val plan = one.queryExecution.executedPlan
-      assert(plan.toString.contains("EqualTo(page,mil)"),
-        s"page filter not pushed:\n$plan")
-      // whole-file pruning: only the matching page's partition is planned
-      assert(one.rdd.getNumPartitions == 1)
-      assert(one.count() == 4)
-    } finally {
-      import scala.jdk.CollectionConverters._
-      java.nio.file.Files.list(dir).iterator().asScala
-        .foreach(java.nio.file.Files.delete)
-      java.nio.file.Files.delete(dir)
+  private def splitsOf(df: DataFrame): Seq[Seq[String]] =
+    df.queryExecution.executedPlan.collect { case b: BatchScanExec => b }
+      .flatMap(_.inputPartitions)
+      .map(_.asInstanceOf[HtmlPageSplit].files.map(f =>
+        new java.io.File(f).getName))
+
+  test("pages pack next-fit into splits, rows in page order") {
+    inTempDir { dir =>
+      val src = java.nio.file.Paths.get(fixturePath)
+      val pages = Seq("bos", "chi", "den", "mil", "nyk")
+      pages.foreach(p => java.nio.file.Files.copy(src, dir.resolve(s"$p.html")))
+      packing(minPartitionNum = 2) { c =>
+        val all = c.read.format("graft.sources.HtmlTableSource")
+          .option("path", dir.toString).option("tableId", "Roster").load()
+        // 5 equal pages, split size 2.5 pages: two pages fit, a third
+        // would not
+        assert(splitsOf(all) == Seq(Seq("bos.html", "chi.html"),
+          Seq("den.html", "mil.html"), Seq("nyk.html")))
+        assert(all.rdd.getNumPartitions == 3)
+        val rows = all.select("page", "row_idx", "Player").collect()
+          .map(r => (r.getString(0), r.getLong(1), r.getString(2))).toSeq
+        val players = Seq("Jayson Tatum", "Jaylen Brown",
+          "Kristaps Porziņģis", "Texas A&M Guy")
+        assert(rows == pages.flatMap(p =>
+          players.zipWithIndex.map { case (n, i) => (p, i.toLong, n) }))
+
+        val one = all.filter(col("page") === "mil")
+        val plan = one.queryExecution.executedPlan
+        assert(plan.toString.contains("EqualTo(page,mil)"),
+          s"page filter not pushed:\n$plan")
+        // whole-file pruning: only the matching page's file is planned
+        assert(splitsOf(one) == Seq(Seq("mil.html")))
+        assert(one.count() == 4)
+      }
+    }
+  }
+
+  test("a drifted page fails by name in a shared split") {
+    inTempDir { dir =>
+      writePage(dir, "a_first.html",
+        """<table id="roster"><tr><th>Rk</th><th>Name</th></tr>
+          |<tr><td>1</td><td>Tatum</td></tr></table>""".stripMargin)
+      writePage(dir, "b_drifted.html",
+        """<table id="roster"><tr><th>Rk</th><th>FullName</th></tr>
+          |<tr><td>1</td><td>James</td></tr></table>""".stripMargin)
+      packing(minPartitionNum = 1) { c =>
+        val df = c.read.format("graft.sources.HtmlTableSource")
+          .option("path", dir.toString).option("tableId", "Roster").load()
+        assert(splitsOf(df) == Seq(Seq("a_first.html", "b_drifted.html")))
+        val e = intercept[org.apache.spark.SparkException] { df.collect() }
+        val msg = Option(e.getCause).map(_.getMessage).getOrElse(e.getMessage)
+        assert(msg.contains("b_drifted") && msg.contains("drifted headers"),
+          s"unexpected message: $msg")
+      }
     }
   }
 }
