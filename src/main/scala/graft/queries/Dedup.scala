@@ -2101,30 +2101,20 @@ object Dedup {
     d15Of(Similarity.withNorm(s, d).select(col("vec_id"), col("embedding")), 8)
 
   private[graft] def d15Of(e: DataFrame, nlist: Int): DataFrame = {
-    import Similarity.{pqSubvectors, pqAssign, pqRefit, pqKsub, pqM}
+    import Similarity.{pqSubvectors, pqTrain, pqKsub, pqM, uqDot}
     val a1 = Similarity.lloydAssign(e, Similarity.seedCentroids(e, nlist))
     val a2 = Similarity.lloydAssign(e, Similarity.lloydRefit(e, a1))
     val subs = pqSubvectors(e)
-    val seed = subs.filter(col("vec_id") < pqKsub)
-      .select(col("sub"), col("vec_id").as("code"),
-        transform(col("sv"), x => x.cast("double")).as("cw"))
-    // cb feeds codes + the norm/pair tables (3 references) — one
-    // m×ksub materialization truncates the rebuild (the hierAssign
-    // lesson)
-    val cb = pqRefit(subs, pqAssign(subs, seed)).localCheckpoint()
-    val codes = pqAssign(subs, cb)
-    def uqS(x: String) =
-      s"CAST(floor(CAST($x AS DOUBLE) * 1000000.0 + 0.5) AS BIGINT)"
+    // cb feeds the codes and the norm/pair tables
+    val (cb, codes) = pqTrain(subs, subs.filter(col("vec_id") < pqKsub))
     val csq = cb.select(col("sub"), col("code"),
-      expr(s"aggregate(transform(cw, y -> ${uqS("y")} * ${uqS("y")}), " +
-        "CAST(0 AS BIGINT), (acc, v) -> acc + v)").as("cwsq_u"))
+      uqDot(col("cw"), col("cw")).as("cwsq_u"))
     val ctab = cb.select(col("sub"), col("code").as("code_a"),
         col("cw").as("cwa"))
       .join(cb.select(col("sub"), col("code").as("code_b"),
         col("cw").as("cwb")), Seq("sub"))
       .select(col("sub"), col("code_a"), col("code_b"),
-        expr(s"aggregate(zip_with(cwa, cwb, (x, y) -> ${uqS("x")} * ${uqS("y")}), " +
-          "CAST(0 AS BIGINT), (acc, v) -> acc + v)").as("ip_u"))
+        uqDot(col("cwa"), col("cwb")).as("ip_u"))
     val vcode = codes.join(broadcast(csq), Seq("sub", "code"))
       .groupBy(col("vec_id"))
       .agg(sort_array(collect_list(struct(col("sub"), col("code")))).as("pm"),

@@ -35,9 +35,13 @@ object EndToEnd {
     // F1 clean: the stat column arrives as strings; the guard decides
     // from global stats (all-numeric here) and casts
     val cleaned = graft.clean.Clean.guardedNumericCoercion(raw, Seq("pts"))
+    // four consumers (the cube, A8, the A9 grid and the A9 contract):
+    // canonicalize the fixture once, not its scan and LA window per
+    // consumer
     val canon = graft.enrich.Teams.canonicalize(cleaned, "team_raw")
       .select(col("position"), col("timeframe"), col("row_idx"),
         col("canonical"), col("pts"))
+      .localCheckpoint()
 
     val expected = graft.enrich.Teams.canonicalTeams.toDF("team")
     // A8: expected teams that never appear

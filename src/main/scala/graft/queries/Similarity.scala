@@ -61,6 +61,66 @@ object Similarity {
       .withColumn("nrm", sqrt(expr("graft_dot(embedding, embedding)")))
   }
 
+  /** Exact cosine of a query `(qe, qnrm)` against a vector
+    * `(embedding, nrm)`: one codegen'd `graft_dot`, the query norm first. */
+  private def queryCos: Column =
+    expr("graft_dot(qe, embedding)") / (col("qnrm") * col("nrm"))
+
+  /** The query set of a normed frame: its rows at `ids`, as
+    * `(query_id, qe, qnrm)`. */
+  private[graft] def queriesOf(e: DataFrame, ids: Column): DataFrame =
+    e.filter(ids).select(col("vec_id").as("query_id"),
+      col("embedding").as("qe"), col("nrm").as("qnrm"))
+
+  /** Brute-force scoring: every query of `q` (broadcast) against every
+    * other vector of `e` by exact cosine — `(query_id, vec_id, score)`.
+    * The table is scanned once and never shuffled. */
+  private[graft] def exactScored(e: DataFrame, q: DataFrame): DataFrame =
+    e.join(broadcast(q), col("vec_id") =!= col("query_id"))
+      .select(col("query_id"), col("vec_id"), queryCos.as("score"))
+
+  /** Per-query top-`k` of a scored `(query_id, vec_id, score)` frame
+    * through the bounded-heap `graft_topk` aggregate (score desc, ties
+    * to the lowest id; null scores skipped): `(query_id, rank,
+    * neighbor_id, score)`, the score r6-rounded. Map-side partials keep
+    * ≤k rows per query per partition, so the candidates never
+    * window-sort. */
+  private[graft] def topKOf(scored: DataFrame, k: Int): DataFrame =
+    scored.groupBy(col("query_id"))
+      .agg(expr(s"graft_topk(score, vec_id, $k)").as("top"))
+      .select(col("query_id"), posexplode(col("top")).as(Seq("pos", "t")))
+      .select(col("query_id"), (col("pos") + 1).cast("int").as("rank"),
+        col("t.id").as("neighbor_id"), r6(col("t.score")).as("score"))
+
+  /** A ranked `(query_id, neighbor_id, …)` frame judged against the
+    * exact top-5 of the same queries over `e`: each row gains `hit`
+    * (0/1) and its query's `recall_at_5`. */
+  private[graft] def withRecallAt5(ranked: DataFrame, e: DataFrame,
+      q: DataFrame): DataFrame = {
+    val exact = topKOf(exactScored(e, q), 5)
+      .select(col("query_id"), col("neighbor_id"), lit(1).as("hit"))
+    ranked.join(exact, Seq("query_id", "neighbor_id"), "left")
+      .withColumn("hit", coalesce(col("hit"), lit(0)))
+      .withColumn("recall_at_5",
+        r6(sum(col("hit")).over(Window.partitionBy(col("query_id")))
+          .cast("double") / lit(5.0)))
+  }
+
+  /** One recall row: `hits` counts the rows of `hit`, `truth` those of
+    * `truth`, `recall` is their r6 ratio. An empty truth set makes the
+    * measurement undefined, not zero: `recall` is then NULL (each
+    * oracle mirrors the guard) instead of a divide-by-zero. */
+  private[graft] def recallOf(hit: DataFrame, truth: DataFrame): DataFrame =
+    hit.agg(count(lit(1)).as("hits"))
+      .crossJoin(truth.agg(count(lit(1)).as("truth")))
+      .withColumn("recall", when(col("truth") === 0, lit(null).cast("double"))
+        .otherwise(r6(col("hits") / col("truth"))))
+
+  /** A top-k frame in the shape the cosine rows return. */
+  private def asCosSim(top: DataFrame): DataFrame =
+    top.select(col("query_id"), col("neighbor_id"), col("rank"),
+      col("score").as("cos_sim"))
+
   /** DuckDB rendering of the same strict-left-fold cosine. */
   private[queries] def cosineSql(a: String, b: String): String = {
     def fold(items: String) =
@@ -83,18 +143,7 @@ object Similarity {
     */
   def s1BruteForceTopK(s: SparkSession, d: String): DataFrame = {
     val emb = withNorm(s, d)
-    val q = emb.filter(col("vec_id") < 10)
-      .select(col("vec_id").as("query_id"), col("embedding").as("qe"),
-        col("nrm").as("qnrm"))
-    emb.join(broadcast(q), col("vec_id") =!= col("query_id"))
-      .withColumn("cos",
-        expr("graft_dot(qe, embedding)") / (col("qnrm") * col("nrm")))
-      .groupBy(col("query_id"))
-      .agg(expr("graft_topk(cos, vec_id, 5)").as("top"))
-      .select(col("query_id"), posexplode(col("top")).as(Seq("pos", "t")))
-      .select(col("query_id"), col("t.id").as("neighbor_id"),
-        (col("pos") + 1).cast("int").as("rank"),
-        r6(col("t.score")).as("cos_sim"))
+    asCosSim(topKOf(exactScored(emb, queriesOf(emb, col("vec_id") < 10)), 5))
       .orderBy("query_id", "rank")
   }
 
@@ -162,22 +211,11 @@ object Similarity {
     */
   def s22FilteredTopK(s: SparkSession, d: String): DataFrame = {
     val emb = withNorm(s, d)
-    val q = emb.filter(col("vec_id") < 10)
-      .select(col("vec_id").as("query_id"), col("embedding").as("qe"),
-        col("nrm").as("qnrm"))
     // sign-preserving % on both engines (the j5 lesson: pmod and % agree
     // only for non-negative ids; keep the expressions identical so a
     // future corpus with negative ids cannot silently hash-diverge)
     val cand = emb.filter(expr("vec_id % 7") === FilterCategory)
-    cand.join(broadcast(q), col("vec_id") =!= col("query_id"))
-      .withColumn("cos",
-        expr("graft_dot(qe, embedding)") / (col("qnrm") * col("nrm")))
-      .groupBy(col("query_id"))
-      .agg(expr("graft_topk(cos, vec_id, 5)").as("top"))
-      .select(col("query_id"), posexplode(col("top")).as(Seq("pos", "t")))
-      .select(col("query_id"), col("t.id").as("neighbor_id"),
-        (col("pos") + 1).cast("int").as("rank"),
-        r6(col("t.score")).as("cos_sim"))
+    asCosSim(topKOf(exactScored(cand, queriesOf(emb, col("vec_id") < 10)), 5))
       .orderBy("query_id", "rank")
   }
 
@@ -338,9 +376,16 @@ object Similarity {
   def s4IvfTopK(s: SparkSession, d: String): DataFrame =
     ivfTopKOf(withNorm(s, d))
 
+  /** The first-`nlist` coarse quantizer of a normed frame, `(cent_id,
+    * ce, cnrm)`: the deterministic seeding every IVF probe here starts
+    * from. */
+  private def firstCentroids(e: DataFrame, nlist: Int): DataFrame =
+    e.filter(col("vec_id") < nlist).select(col("vec_id").as("cent_id"),
+      col("embedding").as("ce"), col("nrm").as("cnrm"))
+
   /** The scored IVF candidate set over any (vec_id, embedding, nrm)
     * frame: every (query, indexed-vector) pair the probe phase scans,
-    * with its cosine — `(query_id, vec_id, cos)`. With `nprobe > 1` the
+    * with its cosine — `(query_id, vec_id, score)`. With `nprobe > 1` the
     * query probes its `nprobe` NEAREST cells instead of only its own
     * (production IVF tuning: recall rises with the number of probed
     * cells, and so does scan cost — this frame's cardinality IS that
@@ -350,9 +395,7 @@ object Similarity {
     * join, never all-pairs) at every nprobe.
     */
   private def ivfCandidates(e: DataFrame, nprobe: Int): DataFrame = {
-    val cent = e.filter(col("vec_id") < 8)
-      .select(col("vec_id").as("cent_id"), col("embedding").as("ce"),
-        col("nrm").as("cnrm"))
+    val cent = firstCentroids(e, 8)
     // nearest-centroid assignment as a k=1 heap aggregate (same
     // (score desc, id asc) order as the row_number formulation): the
     // n×k assignment rows partial-aggregate map-side to one row per
@@ -383,9 +426,7 @@ object Similarity {
         col("t.id").as("qcell"))
     assigned.join(broadcast(q),
         col("cent_id") === col("qcell") && col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("vec_id"),
-        (expr("graft_dot(qe, embedding)") / (col("qnrm") * col("nrm")))
-          .as("cos"))
+      .select(col("query_id"), col("vec_id"), queryCos.as("score"))
   }
 
   /** The IVF top-3 pipeline over any (vec_id, embedding, nrm) frame —
@@ -393,14 +434,7 @@ object Similarity {
     * s10 multi-probe harness.
     */
   private[graft] def ivfTopKOf(e: DataFrame, nprobe: Int = 1): DataFrame =
-    ivfCandidates(e, nprobe)
-      .groupBy(col("query_id"))
-      .agg(expr("graft_topk(cos, vec_id, 3)").as("top"))
-      .select(col("query_id"), posexplode(col("top")).as(Seq("pos", "t")))
-      .select(col("query_id"), col("t.id").as("neighbor_id"),
-        (col("pos") + 1).cast("int").as("rank"),
-        r6(col("t.score")).as("cos_sim"))
-      .orderBy("query_id", "rank")
+    asCosSim(topKOf(ivfCandidates(e, nprobe), 3)).orderBy("query_id", "rank")
 
   /** S8 — the IVF index as a PERSISTED artifact (build once / probe
     * many, how ANN actually ships): the nearest-centroid assignment and
@@ -438,9 +472,7 @@ object Similarity {
     * routed probe (s27) can resolve its cells DRIVER-side before
     * touching the index. */
   private def ivfQueryAssign(e: DataFrame, cents: DataFrame): DataFrame =
-    e.filter(col("vec_id") >= 8 && col("vec_id") < 13)
-      .select(col("vec_id").as("query_id"), col("embedding").as("qe"),
-        col("nrm").as("qnrm"))
+    queriesOf(e, col("vec_id") >= 8 && col("vec_id") < 13)
       .crossJoin(broadcast(cents))
       .withColumn("ccos",
         expr("graft_dot(qe, ce)") / (col("qnrm") * col("cnrm")))
@@ -453,16 +485,9 @@ object Similarity {
   /** Score an index against an assigned query batch: cell-keyed
     * broadcast join, exact cosine, top-3 per query. */
   private def ivfScoreCells(index: DataFrame, q: DataFrame): DataFrame =
-    index.join(broadcast(q),
+    asCosSim(topKOf(index.join(broadcast(q),
         col("cent_id") === col("qcell") && col("vec_id") =!= col("query_id"))
-      .withColumn("cos",
-        expr("graft_dot(qe, embedding)") / (col("qnrm") * col("nrm")))
-      .groupBy(col("query_id"))
-      .agg(expr("graft_topk(cos, vec_id, 3)").as("top"))
-      .select(col("query_id"), posexplode(col("top")).as(Seq("pos", "t")))
-      .select(col("query_id"), col("t.id").as("neighbor_id"),
-        (col("pos") + 1).cast("int").as("rank"),
-        r6(col("t.score")).as("cos_sim"))
+      .select(col("query_id"), col("vec_id"), queryCos.as("score")), 3))
 
   /** Probe a read-back IVF index through read-back centroids — the
     * query-time phase shared by s8 and s17: queries assign to their
@@ -476,9 +501,7 @@ object Similarity {
     val e = withNorm(s, d)
     val dir = java.nio.file.Files.createTempDirectory("graft_s8_")
     try {
-      val cent = e.filter(col("vec_id") < 8)
-        .select(col("vec_id").as("cent_id"), col("embedding").as("ce"),
-          col("nrm").as("cnrm"))
+      val cent = firstCentroids(e, 8)
       ivfAssignTo(e, cent).write.parquet(s"$dir/ivf")
       cent.write.parquet(s"$dir/centroids")
 
@@ -516,9 +539,7 @@ object Similarity {
     val e = withNorm(s, d)
     val dir = java.nio.file.Files.createTempDirectory("graft_s17_")
     try {
-      val cent = e.filter(col("vec_id") < 8)
-        .select(col("vec_id").as("cent_id"), col("embedding").as("ce"),
-          col("nrm").as("cnrm"))
+      val cent = firstCentroids(e, 8)
       // build: index only the even half, persist index + centroids
       ivfAssignTo(e.filter(pmod(col("vec_id"), lit(2)) === 0), cent)
         .write.parquet(s"$dir/ivf")
@@ -563,9 +584,7 @@ object Similarity {
     val e = withNorm(s, d)
     val dir = java.nio.file.Files.createTempDirectory("graft_s27_")
     try {
-      val cent = e.filter(col("vec_id") < 8)
-        .select(col("vec_id").as("cent_id"), col("embedding").as("ce"),
-          col("nrm").as("cnrm"))
+      val cent = firstCentroids(e, 8)
       val path = s"$dir/ivf_cells"
       // cell-clustered layout: co-partition by cell so each cell's rows
       // land in few files (the a14 discipline on the cell axis)
@@ -640,9 +659,7 @@ object Similarity {
     val dir = java.nio.file.Files.createTempDirectory("graft_s28_")
     val base = dir.toString
     try {
-      val cent = e.filter(col("vec_id") < 8)
-        .select(col("vec_id").as("cent_id"), col("embedding").as("ce"),
-          col("nrm").as("cnrm"))
+      val cent = firstCentroids(e, 8)
       // one manifest entry per (cell, dir, rows); CAS-committed
       def commit(v: Int, entries: Seq[(Long, String, Long)]): Unit =
         if (!TableLog.create(base, TableLog.manifest(v),
@@ -891,36 +908,28 @@ object Similarity {
     * Changing a bucket key, band width, or centroid assignment now
     * changes a VERIFIED number, not an unasserted spec printout.
     */
+  /** The exact top-3 of the s4 query set over a capped normed frame,
+    * `(query_id, neighbor_id)`: the truth s7 and s10 judge the IVF
+    * probe against. */
+  private def ivfTruthOf(capped: DataFrame): DataFrame =
+    topKOf(exactScored(capped,
+        queriesOf(capped, col("vec_id") >= 8 && col("vec_id") < 13)), 3)
+      .select(col("query_id"), col("neighbor_id"))
+
   def s7AnnRecall(s: SparkSession, d: String): DataFrame = {
     val capped = withNorm(s, d).filter(col("vec_id") < s3Cap)
       .select(col("vec_id"), col("embedding"), col("nrm"))
     val truthPairs = exactNearDupPairs(capped, 0.35).select("vec_a", "vec_b")
     val lshPairs = lshNearDup(capped).filter(col("cos_sim") >= 0.35)
       .select("vec_a", "vec_b")
-    val q = capped.filter(col("vec_id") >= 8 && col("vec_id") < 13)
-      .select(col("vec_id").as("query_id"), col("embedding").as("qe"),
-        col("nrm").as("qnrm"))
-    val exactTop = capped.join(broadcast(q), col("vec_id") =!= col("query_id"))
-      .withColumn("cos",
-        expr("graft_dot(qe, embedding)") / (col("qnrm") * col("nrm")))
-      .groupBy(col("query_id"))
-      .agg(expr("graft_topk(cos, vec_id, 3)").as("top"))
-      .select(col("query_id"), explode(col("top")).as("t"))
-      .select(col("query_id"), col("t.id").as("neighbor_id"))
+    val exactTop = ivfTruthOf(capped)
     val ivfTop = ivfTopKOf(capped).select("query_id", "neighbor_id")
-    val pairRow = lshPairs.agg(count(lit(1)).as("hits"))
-      .crossJoin(truthPairs.agg(count(lit(1)).as("truth")))
-      .select(lit("s2_lsh_pairs").as("method"), col("hits"), col("truth"))
-    val topRow = ivfTop.intersect(exactTop).agg(count(lit(1)).as("hits"))
-      .crossJoin(exactTop.agg(count(lit(1)).as("truth")))
-      .select(lit("s4_ivf_top3").as("method"), col("hits"), col("truth"))
-    pairRow.unionByName(topRow)
-      .select(col("method"), col("hits"), col("truth"),
-        // Degenerate-corpus guard (r4 advice): an empty truth set means
-        // the measurement is undefined, not zero — emit an explicit NULL
-        // (mirrored in s7Sql) instead of a divide-by-zero.
-        when(col("truth") === 0, lit(null).cast("double"))
-          .otherwise(r6(col("hits") / col("truth"))).as("recall"))
+    def row(method: String, r: DataFrame) =
+      r.select(lit(method).as("method"), col("hits"), col("truth"),
+        col("recall"))
+    row("s2_lsh_pairs", recallOf(lshPairs, truthPairs))
+      .unionByName(row("s4_ivf_top3",
+        recallOf(ivfTop.intersect(exactTop), exactTop)))
       .orderBy("method")
   }
 
@@ -978,26 +987,14 @@ object Similarity {
   def s10IvfMultiprobe(s: SparkSession, d: String): DataFrame = {
     val capped = withNorm(s, d).filter(col("vec_id") < s3Cap)
       .select(col("vec_id"), col("embedding"), col("nrm"))
-    val q = capped.filter(col("vec_id") >= 8 && col("vec_id") < 13)
-      .select(col("vec_id").as("query_id"), col("embedding").as("qe"),
-        col("nrm").as("qnrm"))
-    val exactTop = capped.join(broadcast(q), col("vec_id") =!= col("query_id"))
-      .withColumn("cos",
-        expr("graft_dot(qe, embedding)") / (col("qnrm") * col("nrm")))
-      .groupBy(col("query_id"))
-      .agg(expr("graft_topk(cos, vec_id, 3)").as("top"))
-      .select(col("query_id"), explode(col("top")).as("t"))
-      .select(col("query_id"), col("t.id").as("neighbor_id"))
+    val exactTop = ivfTruthOf(capped)
     Seq(1, 2, 4).map { np =>
-      ivfTopKOf(capped, np).select("query_id", "neighbor_id")
-        .intersect(exactTop).agg(count(lit(1)).as("hits"))
-        .crossJoin(exactTop.agg(count(lit(1)).as("truth")))
+      recallOf(ivfTopKOf(capped, np).select("query_id", "neighbor_id")
+          .intersect(exactTop), exactTop)
         .crossJoin(ivfCandidates(capped, np)
           .agg(count(lit(1)).as("candidates")))
         .select(lit(np).as("nprobe"), col("hits"), col("truth"),
-          when(col("truth") === 0, lit(null).cast("double"))
-            .otherwise(r6(col("hits") / col("truth"))).as("recall"),
-          col("candidates"))
+          col("recall"), col("candidates"))
     }.reduce(_ unionByName _)
       .orderBy("nprobe")
   }
@@ -1547,14 +1544,25 @@ object Similarity {
   def s21MaximinRefine(s: SparkSession, d: String): DataFrame = {
     val e = withNorm(s, d).filter(col("vec_id") < s3Cap)
       .select(col("vec_id"), col("embedding"))
-    val ids = maximinSeedIds(e, 8)
-    val cent0 = e.filter(col("vec_id").isin(ids: _*))
+    lloydLadder(e, maximinSeedIds(e, 8))
+  }
+
+  /** Seed centroids `(cent_id, ce double)`: the vectors of a
+    * (vec_id, embedding) frame at `ids`. */
+  private[graft] def centroidsOf(e: DataFrame, ids: Seq[Long]): DataFrame =
+    e.filter(col("vec_id").isin(ids: _*))
       .select(col("vec_id").as("cent_id"),
         transform(col("embedding"), x => x.cast("double")).as("ce"))
+
+  /** The s21/s24 build ladder from the seed centroids at `ids`: assign →
+    * refit → assign → refit → assign with [[lloydAssign]]/[[lloydRefit]],
+    * each vector's cell after the seed assignment and after each Lloyd
+    * update — `(vec_id, cell_seed, cell_iter1, cell_iter2)`. */
+  private def lloydLadder(e: DataFrame, ids: Seq[Long]): DataFrame = {
     // each assignment feeds the NEXT refit and the output join — left
     // declarative, a1 re-evaluates ~4× inside one action (a3 nests a2
     // nests a1); the s14/s16 assign-once discipline
-    val a1 = lloydAssign(e, cent0).localCheckpoint()
+    val a1 = lloydAssign(e, centroidsOf(e, ids)).localCheckpoint()
     val a2 = lloydAssign(e, lloydRefit(e, a1)).localCheckpoint()
     val a3 = lloydAssign(e, lloydRefit(e, a2))
     a1.select(col("vec_id"), col("cell").as("cell_seed"))
@@ -1620,19 +1628,17 @@ object Similarity {
       |ORDER BY vec_id""".stripMargin
   }
 
-  /** Maximin-seeded, `rounds`-times-Lloyd-refined centroids over a
-    * normed frame, shaped for [[ivfPqProbeOf]]'s coarse quantizer
-    * (cent_id, ce float, cnrm). The float cast matches the first-n
-    * centroid representation (and `graft_dot`'s input contract); the
-    * spec path has no oracle twin, so the cast costs nothing.
+  /** `rounds` Lloyd steps over a normed frame from the seed centroids
+    * at `ids` — [[maximinSeedIds]] or [[kmparChosenIds]] — shaped for
+    * [[ivfPqProbeOf]]'s coarse quantizer (cent_id, ce float, cnrm).
+    * The float cast matches the first-n centroid representation (and
+    * `graft_dot`'s input contract); this path has no oracle twin, so
+    * the cast costs nothing.
     */
-  private[graft] def refinedCentroids(e: DataFrame, nlist: Int,
+  private[graft] def lloydCentroids(e: DataFrame, ids: Seq[Long],
       rounds: Int): DataFrame = {
     val base = e.select(col("vec_id"), col("embedding"))
-    val ids = maximinSeedIds(base, nlist)
-    var cent = base.filter(col("vec_id").isin(ids: _*))
-      .select(col("vec_id").as("cent_id"),
-        transform(col("embedding"), x => x.cast("double")).as("ce"))
+    var cent = centroidsOf(base, ids)
     // checkpoint per round (nlist rows): left declarative, round r's
     // plan nests every earlier round's assignment+refit — the classic
     // iterative-lineage blowup
@@ -1706,9 +1712,7 @@ object Similarity {
     val cand = kmparCandidateIds(e, l, rounds)
     require(cand.size >= k,
       s"kmpar: candidate set must cover k=$k (got ${cand.size})")
-    val candCent = e.filter(col("vec_id").isin(cand: _*))
-      .select(col("vec_id").as("cent_id"),
-        transform(col("embedding"), x => x.cast("double")).as("ce"))
+    val candCent = centroidsOf(e, cand)
       .localCheckpoint() // feeds weights + every greedy round
     val w = lloydAssign(e, candCent)
       .groupBy(col("cell")).agg(count(lit(1)).as("w"))
@@ -1736,27 +1740,6 @@ object Similarity {
     chosen
   }
 
-  /** k-means‖-seeded, `rounds`-times-Lloyd-refined centroids shaped
-    * for [[ivfPqProbeOf]] — the spec-path twin of [[refinedCentroids]]
-    * with the sequential maximin seeding replaced by the oversampled
-    * selection (l = 2·nlist over 3 sampling rounds, the paper's
-    * l ≈ Θ(k) regime). */
-  private[graft] def kmparCentroids(e: DataFrame, nlist: Int,
-      rounds: Int): DataFrame = {
-    val base = e.select(col("vec_id"), col("embedding"))
-    val ids = kmparChosenIds(base, nlist, l = 2L * nlist, rounds = 3)
-    var cent = base.filter(col("vec_id").isin(ids: _*))
-      .select(col("vec_id").as("cent_id"),
-        transform(col("embedding"), x => x.cast("double")).as("ce"))
-    // checkpoint per round — the refinedCentroids lineage discipline
-    for (_ <- 1 to rounds)
-      cent = lloydRefit(base, lloydAssign(base, cent)).localCheckpoint()
-    cent.select(col("cent_id"),
-        transform(col("ce"), x => x.cast("float")).as("ce"))
-      .withColumn("cnrm", sqrt(expr("graft_dot(ce, ce)")))
-      .localCheckpoint()
-  }
-
   /** S24 — the k-means‖ BUILD path end-to-end under the oracle:
     * oversampled candidates ([[kmparCandidateIds]]), candidate weights
     * by corpus assignment counts, reduction to nlist=8 centroids via
@@ -1778,22 +1761,7 @@ object Similarity {
   def s24KmeansParallel(s: SparkSession, d: String): DataFrame = {
     val e = withNorm(s, d).filter(col("vec_id") < s3Cap)
       .select(col("vec_id"), col("embedding"))
-    val chosen = kmparChosenIds(e, 8)
-    val cent0 = e.filter(col("vec_id").isin(chosen: _*))
-      .select(col("vec_id").as("cent_id"),
-        transform(col("embedding"), x => x.cast("double")).as("ce"))
-    // each assignment feeds the NEXT refit and the output join — left
-    // declarative, a1 re-evaluates ~4× inside one action (a3 nests a2
-    // nests a1); the s14/s16 assign-once discipline
-    val a1 = lloydAssign(e, cent0).localCheckpoint()
-    val a2 = lloydAssign(e, lloydRefit(e, a1)).localCheckpoint()
-    val a3 = lloydAssign(e, lloydRefit(e, a2))
-    a1.select(col("vec_id"), col("cell").as("cell_seed"))
-      .join(a2.select(col("vec_id"), col("cell").as("cell_iter1")),
-        Seq("vec_id"))
-      .join(a3.select(col("vec_id"), col("cell").as("cell_iter2")),
-        Seq("vec_id"))
-      .orderBy("vec_id")
+    lloydLadder(e, kmparChosenIds(e, 8))
   }
 
   val s24Sql: String = {
@@ -1921,12 +1889,10 @@ object Similarity {
       .select(col("vec_id"), col("embedding"))
     val q = e.filter(col("vec_id") >= 8 && col("vec_id") < 13)
       .select(col("vec_id").as("query_id"), col("embedding").as("qe"))
-    val exactTop = e.join(broadcast(q), col("vec_id") =!= col("query_id"))
-      .withColumn("cos", cosineHof(col("qe"), col("embedding")))
-      .groupBy(col("query_id"))
-      .agg(expr("graft_topk(cos, vec_id, 3)").as("top"))
-      .select(col("query_id"), explode(col("top")).as("t"))
-      .select(col("query_id"), col("t.id").as("neighbor_id"))
+    val exactTop = topKOf(e.join(broadcast(q), col("vec_id") =!= col("query_id"))
+        .select(col("query_id"), col("vec_id"),
+          cosineHof(col("qe"), col("embedding")).as("score")), 3)
+      .select(col("query_id"), col("neighbor_id"))
       // exact truth consumed by both configs' recall AND truth-count —
       // one brute-force pass, not four
       .localCheckpoint()
@@ -1946,22 +1912,15 @@ object Similarity {
       val cand = assigned.join(e, "vec_id")
         .join(broadcast(qcells),
           col("cell") === col("qcell") && col("vec_id") =!= col("query_id"))
-        .withColumn("cos", cosineHof(col("qe"), col("embedding")))
-        .select(col("query_id"), col("vec_id"), col("cos"))
+        .select(col("query_id"), col("vec_id"),
+          cosineHof(col("qe"), col("embedding")).as("score"))
         // consumed by the top-3 AND the candidate count — scan once
         .localCheckpoint()
-      val top3 = cand.groupBy(col("query_id"))
-        .agg(expr("graft_topk(cos, vec_id, 3)").as("top"))
-        .select(col("query_id"), explode(col("top")).as("t"))
-        .select(col("query_id"), col("t.id").as("neighbor_id"))
-      top3.intersect(exactTop).agg(count(lit(1)).as("hits"))
-        .crossJoin(exactTop.agg(count(lit(1)).as("truth")))
+      val top3 = topKOf(cand, 3).select(col("query_id"), col("neighbor_id"))
+      recallOf(top3.intersect(exactTop), exactTop)
         .crossJoin(cand.agg(count(lit(1)).as("candidates")))
         .select(lit(nlist).as("nlist"), lit(np).as("nprobe"),
-          col("hits"), col("truth"),
-          when(col("truth") === 0, lit(null).cast("double"))
-            .otherwise(r6(col("hits") / col("truth"))).as("recall"),
-          col("candidates"))
+          col("hits"), col("truth"), col("recall"), col("candidates"))
     }.reduce(_ unionByName _)
       .orderBy("nlist")
   }
@@ -2104,6 +2063,67 @@ object Similarity {
       .select(col("sub"), col("code"),
         expr("transform(pm, x -> x.m)").as("cw"))
 
+  /** Train a PQ codebook from `seed` — rows of `subs` whose subvectors
+    * start the codewords, one code per seed vec_id — with one
+    * [[pqRefit]] Lloyd step, then encode every subvector:
+    * `(codebook (sub, code, cw), codes (vec_id, sub, code))`. The
+    * codebook is materialized once (m × ksub rows): it feeds the codes
+    * and every table built from it, and left declarative each consumer
+    * would re-train it. */
+  private[graft] def pqTrain(subs: DataFrame,
+      seed: DataFrame): (DataFrame, DataFrame) = {
+    val cw0 = seed.select(col("sub"), col("vec_id").as("code"),
+      transform(col("sv"), x => x.cast("double")).as("cw"))
+    val cb = pqRefit(subs, pqAssign(subs, cw0)).localCheckpoint()
+    (cb, pqAssign(subs, cb))
+  }
+
+  /** Exact integer dot product of two arrays in micro-units
+    * ([[graft.Tables.uq6]] per element, a BIGINT sum): the unit of every
+    * ADC table, bit-identical in DuckDB's replay. */
+  private[queries] def uqDot(a: Column, b: Column): Column =
+    aggregate(zip_with(a, b, (x, y) => uq6(x) * uq6(y)), lit(0L),
+      (acc, v) => acc + v)
+
+  /** The ADC lookup table of a query set `(query_id, qe, …)` against a
+    * codebook: per (query, sub, code), `ip_u` = ⟨q_sub, cw⟩ and
+    * `cw_sq_u` = ‖cw‖², both in integer micro-units (scale 10⁻¹²). */
+  private[graft] def adcLut(q: DataFrame, cb: DataFrame): DataFrame =
+    pqSubvectors(q.select(col("query_id").as("vec_id"),
+        col("qe").as("embedding")))
+      .select(col("vec_id").as("query_id"), col("sub"), col("sv").as("qsv"))
+      .join(cb, "sub")
+      .select(col("query_id"), col("sub"), col("code"),
+        uqDot(col("qsv"), col("cw")).as("ip_u"),
+        uqDot(col("cw"), col("cw")).as("cw_sq_u"))
+
+  /** ADC cosine from a summed micro-unit dot and squared reconstruction
+    * norm, over the exact query norm `qnrm`. */
+  private def adcCos(dotU: Column, sqU: Column): Column =
+    (dotU / lit(1.0e12)) / (col("qnrm") * sqrt(sqU / lit(1.0e12)))
+
+  /** Non-residual ADC scoring: the LUT `hits` of each candidate's codes
+    * `(query_id, vec_id, ip_u, cw_sq_u)` summed per pair (one
+    * map-side-combined shuffle) → `(query_id, vec_id, score)`. */
+  private[graft] def adcScored(hits: DataFrame, q: DataFrame): DataFrame =
+    hits.groupBy(col("query_id"), col("vec_id"))
+      .agg(sum(col("ip_u")).as("adot_u"), sum(col("cw_sq_u")).as("asq_u"))
+      .join(broadcast(q.select(col("query_id"), col("qnrm"))), "query_id")
+      .select(col("query_id"), col("vec_id"),
+        adcCos(col("adot_u"), col("asq_u")).as("score"))
+
+  /** The full-scan ADC stage of s18 and s20: PQ-train on `e`
+    * (first-ksub seed), then score every query of `q` against every
+    * other vector's codes. Subvectors feed the seed, the training and
+    * the codes — materialized once. */
+  private def adcScanOf(e: DataFrame, q: DataFrame): DataFrame = {
+    val subs = pqSubvectors(e.select(col("vec_id"), col("embedding")))
+      .localCheckpoint()
+    val (cb, codes) = pqTrain(subs, subs.filter(col("vec_id") < pqKsub))
+    adcScored(codes.join(broadcast(adcLut(q, cb)), Seq("sub", "code"))
+      .filter(col("vec_id") =!= col("query_id")), q)
+  }
+
   /** S18 — product quantization with an ADC probe (r10 verdict #4: the
     * production ANN compression next to s6's scalar int8). Pipeline:
     *  1. BUILD: per-subspace codebooks — deterministic first-ksub
@@ -2145,58 +2165,10 @@ object Similarity {
     */
   def s18PqAdc(s: SparkSession, d: String): DataFrame = {
     val e = withNorm(s, d).filter(col("vec_id") < s3Cap)
-    val raw = e.select(col("vec_id"), col("embedding"))
-    val subs = pqSubvectors(raw)
-    val seed = subs.filter(col("vec_id") < pqKsub)
-      .select(col("sub"), col("vec_id").as("code"),
-        transform(col("sv"), x => x.cast("double")).as("cw"))
-    val cb = pqRefit(subs, pqAssign(subs, seed))
-    val codes = pqAssign(subs, cb)
-    val q = e.filter(col("vec_id") < 10)
-      .select(col("vec_id").as("query_id"), col("embedding").as("qe"),
-        col("nrm").as("qnrm"))
-    val qsubs = pqSubvectors(
-      q.select(col("query_id").as("vec_id"), col("qe").as("embedding")))
-      .select(col("vec_id").as("query_id"), col("sub"), col("sv").as("qsv"))
-    // integer micro-unit quantizer: bit-identical across engines at the
-    // element level (the s16 pattern); products/sums stay exact BIGINTs
-    def uq(x: String) =
-      s"CAST(floor(CAST($x AS DOUBLE) * 1000000.0 + 0.5) AS BIGINT)"
-    val lut = qsubs.join(cb, "sub")
-      .select(col("query_id"), col("sub"), col("code"),
-        expr(s"aggregate(zip_with(qsv, cw, (x, y) -> ${uq("x")} * ${uq("y")})," +
-          " CAST(0 AS BIGINT), (acc, v) -> acc + v)").as("ip_u"),
-        expr(s"aggregate(transform(cw, y -> ${uq("y")} * ${uq("y")})," +
-          " CAST(0 AS BIGINT), (acc, v) -> acc + v)").as("cw_sq_u"))
-    val adc = codes.join(broadcast(lut), Seq("sub", "code"))
-      .filter(col("vec_id") =!= col("query_id"))
-      .groupBy(col("query_id"), col("vec_id"))
-      .agg(sum(col("ip_u")).as("adot_u"), sum(col("cw_sq_u")).as("asq_u"))
-    val pqTop = adc
-      .join(broadcast(q.select(col("query_id"), col("qnrm"))), "query_id")
-      .withColumn("acos", (col("adot_u") / lit(1.0e12)) /
-        (col("qnrm") * sqrt(col("asq_u") / lit(1.0e12))))
-      .groupBy(col("query_id"))
-      .agg(expr("graft_topk(acos, vec_id, 5)").as("top"))
-      .select(col("query_id"), posexplode(col("top")).as(Seq("pos", "t")))
-      .select(col("query_id"), col("t.id").as("neighbor_id"),
-        (col("pos") + 1).cast("int").as("rank"),
-        r6(col("t.score")).as("adc_cos"))
-    val exact = e.join(broadcast(q), col("vec_id") =!= col("query_id"))
-      .withColumn("cos",
-        expr("graft_dot(qe, embedding)") / (col("qnrm") * col("nrm")))
-      .groupBy(col("query_id"))
-      .agg(expr("graft_topk(cos, vec_id, 5)").as("top"))
-      .select(col("query_id"),
-        explode(expr("transform(top, x -> x.id)")).as("neighbor_id"),
-        lit(1).as("hit"))
-    pqTop.join(exact, Seq("query_id", "neighbor_id"), "left")
-      .withColumn("hit", coalesce(col("hit"), lit(0)))
-      .withColumn("recall_at_5",
-        r6(sum(col("hit")).over(Window.partitionBy(col("query_id")))
-          .cast("double") / lit(5.0)))
+    val q = queriesOf(e, col("vec_id") < 10)
+    withRecallAt5(topKOf(adcScanOf(e, q), 5), e, q)
       .select(col("query_id"), col("rank"), col("neighbor_id"),
-        col("adc_cos"), col("hit"), col("recall_at_5"))
+        col("score").as("adc_cos"), col("hit"), col("recall_at_5"))
       .orderBy("query_id", "rank")
   }
 
@@ -2300,13 +2272,8 @@ object Similarity {
     * linear in corpus size by construction.
     */
   private[graft] def pqEncodeOf(e: DataFrame): DataFrame = {
-    val raw = e.select(col("vec_id"), col("embedding"))
-    val subs = pqSubvectors(raw)
-    val seed = subs.filter(col("vec_id") < pqKsub)
-      .select(col("sub"), col("vec_id").as("code"),
-        transform(col("sv"), x => x.cast("double")).as("cw"))
-    val cb = pqRefit(subs, pqAssign(subs, seed))
-    pqAssign(subs, cb)
+    val subs = pqSubvectors(e.select(col("vec_id"), col("embedding")))
+    pqTrain(subs, subs.filter(col("vec_id") < pqKsub))._2
   }
 
   /** S19 — the composed IVF-PQ probe, the shape a 100 TB ANN deployment
@@ -2350,11 +2317,9 @@ object Similarity {
       centroids: Option[DataFrame] = None,
       residual: Boolean = false): DataFrame = {
     // default coarse quantizer: first-nlist seed; `centroids` lets the
-    // s21 recall pin swap in the maximin+Lloyd set on the SAME probe
-    // budget ((cent_id, ce float, cnrm) shape, see refinedCentroids)
-    val cent = centroids.getOrElse(e.filter(col("vec_id") < nlist)
-      .select(col("vec_id").as("cent_id"), col("embedding").as("ce"),
-        col("nrm").as("cnrm")))
+    // recall pins swap in a Lloyd-refined set on the SAME probe budget
+    // ((cent_id, ce float, cnrm) shape, see lloydCentroids)
+    val cent = centroids.getOrElse(firstCentroids(e, nlist))
     // The assignment, subvector and codebook relations each feed 2-4
     // downstream consumers; left declarative, every consumer re-runs
     // the corpus×centroid scoring (assignment), re-slices the corpus
@@ -2381,46 +2346,30 @@ object Similarity {
     // residual seeds skip [0, nlist): with the first-n coarse quantizer
     // those vectors ARE centroids, so their residuals are exactly zero
     // — ksub duplicate zero codewords would collapse the codebook
-    val seed = (if (!residual) subs.filter(col("vec_id") < pqKsub)
+    val (cb, codes) = pqTrain(subs,
+      if (!residual) subs.filter(col("vec_id") < pqKsub)
       else subs.filter(col("vec_id") >= nlist &&
         col("vec_id") < nlist + pqKsub))
-      .select(col("sub"), col("vec_id").as("code"),
-        transform(col("sv"), x => x.cast("double")).as("cw"))
-    val cb = pqRefit(subs, pqAssign(subs, seed)).localCheckpoint()
-    val codes = pqAssign(subs, cb)
-    val q = e.filter(col("vec_id") >= nlist && col("vec_id") < nlist + 5)
-      .select(col("vec_id").as("query_id"), col("embedding").as("qe"),
-        col("nrm").as("qnrm"))
+    // the query set feeds the probe, the LUT, the norms and the truth;
+    // the candidates feed the scoring and the candidate count — each
+    // materialized once (queries × nprobe cells' members)
+    val q = queriesOf(e, col("vec_id") >= nlist && col("vec_id") < nlist + 5)
+      .localCheckpoint()
     val qprobe = q.crossJoin(broadcast(cent))
       .withColumn("ccos",
         expr("graft_dot(qe, ce)") / (col("qnrm") * col("cnrm")))
       .groupBy(col("query_id"))
-      .agg(first(col("qnrm")).as("qnrm"),
-        expr(s"graft_topk(ccos, cent_id, $nprobe)").as("top"))
-      .select(col("query_id"), col("qnrm"),
+      .agg(expr(s"graft_topk(ccos, cent_id, $nprobe)").as("top"))
+      .select(col("query_id"),
         explode(expr("transform(top, x -> x.id)")).as("qcell"))
     val cand = assigned.join(broadcast(qprobe),
         col("cent_id") === col("qcell") && col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("vec_id"), col("cent_id"), col("qnrm"))
-    val qsubs = pqSubvectors(
-      q.select(col("query_id").as("vec_id"), col("qe").as("embedding")))
-      .select(col("vec_id").as("query_id"), col("sub"), col("sv").as("qsv"))
-    def uq(x: String) =
-      s"CAST(floor(CAST($x AS DOUBLE) * 1000000.0 + 0.5) AS BIGINT)"
-    val lut = qsubs.join(cb, "sub")
-      .select(col("query_id"), col("sub"), col("code"),
-        expr(s"aggregate(zip_with(qsv, cw, (x, y) -> ${uq("x")} * ${uq("y")})," +
-          " CAST(0 AS BIGINT), (acc, v) -> acc + v)").as("ip_u"),
-        expr(s"aggregate(transform(cw, y -> ${uq("y")} * ${uq("y")})," +
-          " CAST(0 AS BIGINT), (acc, v) -> acc + v)").as("cw_sq_u"))
+      .select(col("query_id"), col("vec_id"), col("cent_id"))
+      .localCheckpoint()
+    val hits = cand.join(codes, "vec_id")
+      .join(broadcast(adcLut(q, cb)), Seq("query_id", "sub", "code"))
     val scored =
-      if (!residual) cand.join(codes, "vec_id")
-        .join(broadcast(lut), Seq("query_id", "sub", "code"))
-        .groupBy(col("query_id"), col("vec_id"))
-        .agg(first(col("qnrm")).as("qnrm"),
-          sum(col("ip_u")).as("adot_u"), sum(col("cw_sq_u")).as("asq_u"))
-        .withColumn("acos", (col("adot_u") / lit(1.0e12)) /
-          (col("qnrm") * sqrt(col("asq_u") / lit(1.0e12))))
+      if (!residual) adcScored(hits, q)
       else {
         // residual ADC decomposition: with x̂ = c + r̂,
         //   ⟨q,x̂⟩  = ⟨q,c⟩ + Σ_j ⟨q_j, cw_j⟩          (qc + LUT)
@@ -2433,54 +2382,30 @@ object Similarity {
           .select(col("vec_id").as("cent_id"), col("sub"), col("sv").as("csv"))
           .join(cb, "sub")
           .select(col("cent_id"), col("sub"), col("code"),
-            expr(s"aggregate(zip_with(csv, cw, (x, y) -> ${uq("x")} * ${uq("y")})," +
-              " CAST(0 AS BIGINT), (acc, v) -> acc + v)").as("cc_u"))
+            uqDot(col("csv"), col("cw")).as("cc_u"))
         val csq = cent.select(col("cent_id"),
-          expr(s"aggregate(transform(ce, y -> ${uq("y")} * ${uq("y")})," +
-            " CAST(0 AS BIGINT), (acc, v) -> acc + v)").as("c_sq_u"))
+          uqDot(col("ce"), col("ce")).as("c_sq_u"))
         val qc = q.crossJoin(broadcast(cent.select(col("cent_id"), col("ce"))))
           .select(col("query_id"), col("cent_id"),
-            expr(s"aggregate(zip_with(qe, ce, (x, y) -> ${uq("x")} * ${uq("y")})," +
-              " CAST(0 AS BIGINT), (acc, v) -> acc + v)").as("qc_u"))
-        cand.join(codes, "vec_id")
-          .join(broadcast(lut), Seq("query_id", "sub", "code"))
-          .join(broadcast(cc), Seq("cent_id", "sub", "code"))
+            uqDot(col("qe"), col("ce")).as("qc_u"))
+        hits.join(broadcast(cc), Seq("cent_id", "sub", "code"))
           .groupBy(col("query_id"), col("vec_id"), col("cent_id"))
-          .agg(first(col("qnrm")).as("qnrm"),
-            sum(col("ip_u")).as("rdot_u"), sum(col("cw_sq_u")).as("rsq_u"),
+          .agg(sum(col("ip_u")).as("rdot_u"), sum(col("cw_sq_u")).as("rsq_u"),
             sum(col("cc_u")).as("ccs_u"))
           .join(broadcast(qc), Seq("query_id", "cent_id"))
           .join(broadcast(csq), "cent_id")
-          .withColumn("adot_u", col("qc_u") + col("rdot_u"))
-          .withColumn("asq_u",
-            col("c_sq_u") + lit(2L) * col("ccs_u") + col("rsq_u"))
-          .withColumn("acos", (col("adot_u") / lit(1.0e12)) /
-            (col("qnrm") * sqrt(col("asq_u") / lit(1.0e12))))
+          .join(broadcast(q.select(col("query_id"), col("qnrm"))), "query_id")
+          .select(col("query_id"), col("vec_id"),
+            adcCos(col("qc_u") + col("rdot_u"),
+              col("c_sq_u") + lit(2L) * col("ccs_u") + col("rsq_u")).as("score"))
       }
-    val pqTop = scored.groupBy(col("query_id"))
-      .agg(count(lit(1)).as("n_cand"),
-        expr(s"graft_topk(acos, vec_id, $shortK)").as("top"))
-      .select(col("query_id"), col("n_cand"),
-        posexplode(col("top")).as(Seq("pos", "t")))
-      .select(col("query_id"), col("n_cand"),
-        col("t.id").as("neighbor_id"),
-        (col("pos") + 1).cast("int").as("rank"),
-        r6(col("t.score")).as("adc_cos"))
-    val exact = e.join(broadcast(q), col("vec_id") =!= col("query_id"))
-      .withColumn("cos",
-        expr("graft_dot(qe, embedding)") / (col("qnrm") * col("nrm")))
-      .groupBy(col("query_id"))
-      .agg(expr("graft_topk(cos, vec_id, 5)").as("top"))
-      .select(col("query_id"),
-        explode(expr("transform(top, x -> x.id)")).as("neighbor_id"),
-        lit(1).as("hit"))
-    pqTop.join(exact, Seq("query_id", "neighbor_id"), "left")
-      .withColumn("hit", coalesce(col("hit"), lit(0)))
-      .withColumn("recall_at_5",
-        r6(sum(col("hit")).over(Window.partitionBy(col("query_id")))
-          .cast("double") / lit(5.0)))
+    // every candidate pair is scored (a vector that reaches a cell has
+    // a code in every subspace), so the scan cost is counted on `cand`
+    val nCand = cand.groupBy(col("query_id")).agg(count(lit(1)).as("n_cand"))
+    withRecallAt5(topKOf(scored, shortK).join(nCand, "query_id"), e, q)
       .select(col("query_id"), col("rank"), col("neighbor_id"),
-        col("adc_cos"), col("hit"), col("recall_at_5"), col("n_cand"))
+        col("score").as("adc_cos"), col("hit"), col("recall_at_5"),
+        col("n_cand"))
       .orderBy("query_id", "rank")
   }
 
@@ -2827,8 +2752,7 @@ object Similarity {
   private[graft] def opqSnakePerm(e: DataFrame): Seq[Int] = {
     val en = e
       .select(posexplode(col("embedding")).as(Seq("pos", "v")))
-      .withColumn("u",
-        expr("CAST(floor(CAST(v AS DOUBLE) * 1000000.0 + 0.5) AS BIGINT)"))
+      .withColumn("u", uq6(col("v")))
       .groupBy((col("pos") + 1).as("dim"))
       .agg(sum(col("u") * col("u")).as("en"))
       .collect().map(r => (r.getInt(0), r.getLong(1)))
@@ -2969,75 +2893,26 @@ object Similarity {
 
   def s20Rerank(s: SparkSession, d: String): DataFrame = {
     val e = withNorm(s, d).filter(col("vec_id") < s3Cap)
-    // train once, encode once (the ivfPqProbeOf materialization
-    // discipline): subs feeds seed/cb/codes, cb feeds codes + the LUT
-    val subs = pqSubvectors(e.select(col("vec_id"), col("embedding")))
-      .localCheckpoint()
-    val seed = subs.filter(col("vec_id") < pqKsub)
-      .select(col("sub"), col("vec_id").as("code"),
-        transform(col("sv"), x => x.cast("double")).as("cw"))
-    val cb = pqRefit(subs, pqAssign(subs, seed)).localCheckpoint()
-    val codes = pqAssign(subs, cb)
-    val q = e.filter(col("vec_id") < 10)
-      .select(col("vec_id").as("query_id"), col("embedding").as("qe"),
-        col("nrm").as("qnrm"))
-    val qsubs = pqSubvectors(
-      q.select(col("query_id").as("vec_id"), col("qe").as("embedding")))
-      .select(col("vec_id").as("query_id"), col("sub"), col("sv").as("qsv"))
-    def uq(x: String) =
-      s"CAST(floor(CAST($x AS DOUBLE) * 1000000.0 + 0.5) AS BIGINT)"
-    val lut = qsubs.join(cb, "sub")
-      .select(col("query_id"), col("sub"), col("code"),
-        expr(s"aggregate(zip_with(qsv, cw, (x, y) -> ${uq("x")} * ${uq("y")})," +
-          " CAST(0 AS BIGINT), (acc, v) -> acc + v)").as("ip_u"),
-        expr(s"aggregate(transform(cw, y -> ${uq("y")} * ${uq("y")})," +
-          " CAST(0 AS BIGINT), (acc, v) -> acc + v)").as("cw_sq_u"))
-    val shortlist = codes.join(broadcast(lut), Seq("sub", "code"))
-      .filter(col("vec_id") =!= col("query_id"))
-      .groupBy(col("query_id"), col("vec_id"))
-      .agg(sum(col("ip_u")).as("adot_u"), sum(col("cw_sq_u")).as("asq_u"))
-      .join(broadcast(q.select(col("query_id"), col("qnrm"))), "query_id")
-      .withColumn("acos", (col("adot_u") / lit(1.0e12)) /
-        (col("qnrm") * sqrt(col("asq_u") / lit(1.0e12))))
-      .groupBy(col("query_id"))
-      .agg(expr(s"graft_topk(acos, vec_id, $s20Shortlist)").as("top"))
-      .select(col("query_id"), posexplode(col("top")).as(Seq("pos", "t")))
-      .select(col("query_id"), col("t.id").as("vec_id"),
-        (col("pos") + 1).cast("int").as("adc_rank"))
+    val q = queriesOf(e, col("vec_id") < 10)
+    val shortlist = topKOf(adcScanOf(e, q), s20Shortlist)
+      .select(col("query_id"), col("neighbor_id").as("vec_id"),
+        col("rank").as("adc_rank"))
       // queries×k′ rows, consumed twice (re-rank join + adc_rank
       // re-attach) — materialize so the ADC stage runs once
       .localCheckpoint()
     // stage 2: point-fetch ONLY the shortlisted vectors, exact re-rank
-    val rer = shortlist
-      .join(e.select(col("vec_id"), col("embedding"), col("nrm")), "vec_id")
-      .join(broadcast(q), "query_id")
-      .withColumn("cos",
-        expr("graft_dot(qe, embedding)") / (col("qnrm") * col("nrm")))
-      .groupBy(col("query_id"))
-      .agg(expr("graft_topk(cos, vec_id, 5)").as("top"))
-      .select(col("query_id"), posexplode(col("top")).as(Seq("pos", "t")))
-      .select(col("query_id"), col("t.id").as("neighbor_id"),
-        (col("pos") + 1).cast("int").as("rank"),
-        r6(col("t.score")).as("cos_sim"))
+    val rer = topKOf(shortlist
+        .join(e.select(col("vec_id"), col("embedding"), col("nrm")), "vec_id")
+        .join(broadcast(q), "query_id")
+        .select(col("query_id"), col("vec_id"), queryCos.as("score")), 5)
       // re-attach where the compressed index had ranked each survivor
       .join(shortlist.select(col("query_id"),
         col("vec_id").as("neighbor_id"), col("adc_rank")),
         Seq("query_id", "neighbor_id"))
-    val exact = e.join(broadcast(q), col("vec_id") =!= col("query_id"))
-      .withColumn("cos",
-        expr("graft_dot(qe, embedding)") / (col("qnrm") * col("nrm")))
-      .groupBy(col("query_id"))
-      .agg(expr("graft_topk(cos, vec_id, 5)").as("top"))
-      .select(col("query_id"),
-        explode(expr("transform(top, x -> x.id)")).as("neighbor_id"),
-        lit(1).as("hit"))
-    rer.join(exact, Seq("query_id", "neighbor_id"), "left")
-      .withColumn("hit", coalesce(col("hit"), lit(0)))
-      .withColumn("recall_at_5",
-        r6(sum(col("hit")).over(Window.partitionBy(col("query_id")))
-          .cast("double") / lit(5.0)))
+    withRecallAt5(rer, e, q)
       .select(col("query_id"), col("rank"), col("neighbor_id"),
-        col("adc_rank"), col("cos_sim"), col("hit"), col("recall_at_5"))
+        col("adc_rank"), col("score").as("cos_sim"), col("hit"),
+        col("recall_at_5"))
       .orderBy("query_id", "rank")
   }
 

@@ -26,8 +26,8 @@ import graft.normalize.Columns
   *    column algebra, no data pass);
   *  - `SupportsPushDownRequiredColumns`: column pruning reaches the
   *    source — pruned cells are never materialized into rows;
-  *  - line-range input partitions: the file splits into `slices` ranges
-  *    (option `slices`, default 4) so the scan parallelizes like any
+  *  - line-range input partitions: the file splits into
+  *    [[RawTableSource.Slices]] ranges so the scan parallelizes like any
   *    multi-split source.
   *
   * Usage:
@@ -44,13 +44,15 @@ class RawTableSource extends TableProvider {
   override def getTable(schema: StructType, partitioning: Array[Transform],
       properties: util.Map[String, String]): Table = {
     val opts = new CaseInsensitiveStringMap(properties)
-    val slices = Option(opts.get("slices")).map(_.toInt).getOrElse(4)
-    new RawTableTable(opts.get("path"), opts.get("tableId"), schema, slices)
+    new RawTableTable(opts.get("path"), opts.get("tableId"), schema)
   }
 }
 
 object RawTableSource {
   private val mapper = new ObjectMapper()
+
+  /** Line ranges a scan plans (fewer when the file has fewer lines). */
+  private[sources] val Slices = 4
 
   /** The file's non-empty lines, one JSON row each, unparsed: planning
     * splits them into ranges and each reader parses only its own range.
@@ -82,8 +84,8 @@ object RawTableSource {
   }
 }
 
-class RawTableTable(path: String, tableId: String, tableSchema: StructType,
-    slices: Int) extends Table with SupportsRead {
+class RawTableTable(path: String, tableId: String, tableSchema: StructType)
+    extends Table with SupportsRead {
 
   override def name(): String = s"raw_table($tableId)"
   override def schema(): StructType = tableSchema
@@ -91,11 +93,10 @@ class RawTableTable(path: String, tableId: String, tableSchema: StructType,
     util.EnumSet.of(TableCapability.BATCH_READ)
 
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new RawTableScanBuilder(path, tableId, tableSchema, slices)
+    new RawTableScanBuilder(path, tableId, tableSchema)
 }
 
-class RawTableScanBuilder(path: String, tableId: String, full: StructType,
-    slices: Int)
+class RawTableScanBuilder(path: String, tableId: String, full: StructType)
     extends ScanBuilder with SupportsPushDownRequiredColumns
     with SupportsPushDownFilters {
 
@@ -122,12 +123,12 @@ class RawTableScanBuilder(path: String, tableId: String, full: StructType,
   override def pushedFilters(): Array[Filter] = pushed
 
   override def build(): Scan =
-    new RawTableScan(path, tableId, full, required, pushed, slices)
+    new RawTableScan(path, tableId, full, required, pushed)
 }
 
 class RawTableScan(path: String, tableId: String,
     full: StructType, required: StructType,
-    pushed: Array[Filter], slices: Int) extends Scan with Batch {
+    pushed: Array[Filter]) extends Scan with Batch {
 
   override def readSchema(): StructType = required
   override def toBatch: Batch = this
@@ -138,7 +139,7 @@ class RawTableScan(path: String, tableId: String,
     * parses nothing, and each reader drops the other tables' rows. */
   override def planInputPartitions(): Array[InputPartition] = {
     val n = RawTableSource.readLines(path).size
-    val k = math.max(1, math.min(slices, n))
+    val k = math.max(1, math.min(RawTableSource.Slices, n))
     val per = math.max(1, (n + k - 1) / k)
     (0 until n by per)
       .map(start => RawTableRange(start, math.min(start + per, n)))

@@ -85,7 +85,8 @@ class OpqSpec extends SparkSpecBase {
     val perm = Similarity.opqSnakePerm(anis)
 
     def meanRecallAndCands(e: org.apache.spark.sql.DataFrame): (Double, Long) = {
-      val cent = Similarity.kmparCentroids(e, nlist = 32, rounds = 6)
+      val cent = Similarity.lloydCentroids(e,
+        Similarity.kmparChosenIds(e, 32, l = 64, rounds = 3), rounds = 6)
       val probe = Similarity.ivfPqProbeOf(e, nlist = 32, nprobe = 8,
         centroids = Some(cent), residual = true).cache()
       try {

@@ -199,7 +199,8 @@ class PqRecallSpec extends SparkSpecBase {
     }
 
     val (baseMean, baseCands) = rerankRecallAndCands(None)
-    val cent = Similarity.refinedCentroids(e, nlist = 32, rounds = 4)
+    val cent = Similarity.lloydCentroids(e,
+      Similarity.maximinSeedIds(e, 32), rounds = 4)
     val (maxiMean, maxiCands) = rerankRecallAndCands(Some(cent))
 
     assert(maxiMean > baseMean,
@@ -268,14 +269,16 @@ class PqRecallSpec extends SparkSpecBase {
       } finally probe.unpersist()
     }
 
-    val cent6 = Similarity.refinedCentroids(e, nlist = 32, rounds = 6)
+    val cent6 = Similarity.lloydCentroids(e,
+      Similarity.maximinSeedIds(e, 32), rounds = 6)
     val curve6 = Seq(4, 8, 16).map(np => np -> recallAndCands(Some(cent6), np))
     val curve0 = Seq(4, 8, 16).map(np => np -> recallAndCands(None, np)).toMap
 
     // headline: strictly past 0.52 at the s21 budget
     val (r8, c8) = curve6.find(_._1 == 8).get._2
     val (_, s21c8) = recallAndCands(
-      Some(Similarity.refinedCentroids(e, nlist = 32, rounds = 4)), 8)
+      Some(Similarity.lloydCentroids(e,
+        Similarity.maximinSeedIds(e, 32), rounds = 4)), 8)
     assert(r8 > 0.52, f"six-round recall@5 at nprobe=8 fell to $r8%.3f " +
       "(measured 0.560 at capture; s21's four-round build measured 0.520)")
     assert(c8 <= s21c8 * 2 && s21c8 <= c8 * 2,
@@ -355,7 +358,8 @@ class PqRecallSpec extends SparkSpecBase {
     }
 
     val (baseMean, baseCands) = recallAndCands(None)
-    val cent = Similarity.kmparCentroids(e, nlist = 32, rounds = 6)
+    val cent = Similarity.lloydCentroids(e,
+      Similarity.kmparChosenIds(e, 32, l = 64, rounds = 3), rounds = 6)
     val (kmMean, kmCands) = recallAndCands(Some(cent))
     info(f"first-n=$baseMean%.3f kmpar=$kmMean%.3f cands=$baseCands/$kmCands")
     assert(kmMean > baseMean,
@@ -421,7 +425,8 @@ class PqRecallSpec extends SparkSpecBase {
       } finally probe.unpersist()
     }
 
-    val cent = Similarity.kmparCentroids(e, nlist = 32, rounds = 6)
+    val cent = Similarity.lloydCentroids(e,
+      Similarity.kmparChosenIds(e, 32, l = 64, rounds = 3), rounds = 6)
     val (rawMean, rawCands) = recallAndCands(residual = false, cent)
     val (resMean, resCands) = recallAndCands(residual = true, cent)
     info(f"raw=$rawMean%.3f residual=$resMean%.3f cands=$rawCands/$resCands")
