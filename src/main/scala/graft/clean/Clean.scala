@@ -1,6 +1,6 @@
 package graft.clean
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Observation}
 import org.apache.spark.sql.functions._
 
 /** Row/value cleaning stage (SURVEY.md §2.2 P6-P11, §2.3 F1-F4).
@@ -32,37 +32,62 @@ object Clean {
     def coerce: Boolean = nonNull == 0L || castable.toDouble >= nonNull.toDouble / 2.0
   }
 
-  /** Compute coercion stats for `cols` in ONE aggregate pass over `df`
-    * (2×|cols| counters, map-side combined — a single scan at any scale,
-    * not per-column scans). SURVEY F1.
-    */
-  def coercionStats(df: DataFrame, cols: Seq[String]): Seq[CoercionStat] = {
-    val aggs = cols.flatMap { c =>
+  /** The guard's counters over `cols`: per column its non-null count
+    * (`__orig`) and its castable count (`__cast`). Both functions below
+    * aggregate exactly this list, so their decisions cannot drift. */
+  private def coercionCounters(cols: Seq[String]): Seq[Column] =
+    cols.flatMap { c =>
       Seq(count(col(c)).as(s"${c}__orig"),
         count(try_cast_double(col(c))).as(s"${c}__cast"))
     }
-    val row = df.agg(aggs.head, aggs.tail: _*).head()
-    cols.map { c =>
-      CoercionStat(c,
-        row.getAs[Long](s"${c}__orig"),
-        row.getAs[Long](s"${c}__cast"))
+
+  private def statsOf(cols: Seq[String], counter: String => Long): Seq[CoercionStat] =
+    cols.map(c => CoercionStat(c, counter(s"${c}__orig"), counter(s"${c}__cast")))
+
+  /** Coercion stats for `cols` as data: ONE aggregate over `df`
+    * (2×|cols| counters, map-side combined — a single scan at any scale,
+    * not per-column scans). No columns, no job. SURVEY F1.
+    */
+  def coercionStats(df: DataFrame, cols: Seq[String]): Seq[CoercionStat] =
+    if (cols.isEmpty) Seq.empty
+    else {
+      val aggs = coercionCounters(cols)
+      val row = df.agg(aggs.head, aggs.tail: _*).head()
+      statsOf(cols, n => row.getAs[Long](n))
     }
-  }
 
   /** Null-on-failure double cast (pandas `to_numeric(errors='coerce')`). */
   def try_cast_double(c: Column): Column = c.try_cast("double")
 
   /** Guarded numeric coercion: decide per column from global statistics,
-    * then cast only the columns that pass the ≥½ guard. Two-pass driver
-    * logic by design — a Catalyst rule cannot see data (SURVEY §4.2 #1).
-    * The decision is global (one aggregate), never per-partition, so the
-    * output schema is deterministic across any cluster layout.
+    * then cast only the columns that pass the ≥½ guard. A Catalyst rule
+    * cannot see data (SURVEY §4.2 #1), so the decision is driver logic,
+    * but it costs no second pass over `df`: the counters ride an
+    * [[org.apache.spark.sql.Observation]] on the one job that
+    * checkpoints `df`, and the casts project over that checkpoint. The
+    * decision is global (one aggregate), never per-partition, so the
+    * output schema is deterministic across any cluster layout. No
+    * columns, no job: `df` comes back as it is.
     */
-  def guardedNumericCoercion(df: DataFrame, candidateCols: Seq[String]): DataFrame = {
-    val stats = coercionStats(df, candidateCols)
-    stats.filter(_.coerce).foldLeft(df) { (d, s) =>
-      d.withColumn(s.column, try_cast_double(col(s.column)))
+  def guardedNumericCoercion(df: DataFrame, candidateCols: Seq[String]): DataFrame =
+    if (candidateCols.isEmpty) df
+    else {
+      val (held, stats) = checkpointWithStats(df, candidateCols)
+      stats.filter(_.coerce).foldLeft(held) { (d, s) =>
+        d.withColumn(s.column, try_cast_double(col(s.column)))
+      }
     }
+
+  /** `df` eagerly checkpointed, with [[coercionStats]]' counters
+    * observed on that one job. `cols` must not be empty. */
+  private[clean] def checkpointWithStats(df: DataFrame,
+      cols: Seq[String]): (DataFrame, Seq[CoercionStat]) = {
+    val obs = Observation()
+    val aggs = coercionCounters(cols)
+    val held = df.observe(obs, aggs.head, aggs.tail: _*)
+      .localCheckpoint() // eager: this action also completes `obs`
+    val counters = obs.get
+    (held, statsOf(cols, n => counters(n).asInstanceOf[Long]))
   }
 
   /** Date parse + US re-format, null on garbage: SURVEY F2,

@@ -16,8 +16,9 @@ import org.apache.spark.sql.expressions.Window
   * entries), so the lookup is an expression, not a join: one map literal
   * probed per row inside the projection, with no broadcast, no hash
   * relation held by the plan and no exchange — the fact side never
-  * shuffles or waits for the lookup. The LA fix is a window over only
-  * the ambiguous rows' partitions.
+  * shuffles or waits for the lookup. The LA fix is one window
+  * partitioned by the caller's keys, so every row shuffles once, by
+  * the keys the validators group on.
   */
 object Teams {
 
@@ -127,9 +128,16 @@ object Teams {
     val looked = coalesce(
       try_element_at(aliasMap, norm),
       try_element_at(aliasMap, regexp_replace(norm, "\\s+\\S+$", "")))
-    val laWindow = Window
-      .partitionBy(partitionCols.map(col) :+ isLa: _*)
-      .orderBy(col(orderCol))
+    // LA rows sort first in each partition, so row_number ranks each
+    // among the LA rows alone, and the output stays hash-partitioned by
+    // the caller's keys: a grouping by them downstream (Validate's
+    // per-cell counts) plans no exchange of its own. With no caller
+    // keys, isLa is the key: a window with no partition key runs on
+    // one task.
+    val laWindow =
+      if (partitionCols.isEmpty) Window.partitionBy(isLa).orderBy(col(orderCol))
+      else Window.partitionBy(partitionCols.map(col): _*)
+        .orderBy(isLa.desc, col(orderCol))
     df.withColumn("__norm", normalizeRaw(col(rawCol)))
       .withColumn("__la_rank",
         when(isLa, row_number().over(laWindow)).otherwise(lit(null)))

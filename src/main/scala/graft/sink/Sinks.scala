@@ -82,12 +82,16 @@ object Sinks {
     finally out.close()
   }
 
-  /** S11 — run-summary sink: per-status tallies of an operation ledger. */
+  /** S11 — run-summary sink: per-status tallies of an operation ledger.
+    * The ledger is ledger-sized (one row per operation of a run), so it
+    * is planned on one partition: the tally and its sort need no
+    * exchange, and the summary is written as one file.
+    */
   def writeRunSummary(statusDf: DataFrame, statusCol: String, path: String): Unit =
-    statusDf.groupBy(col(statusCol))
+    statusDf.coalesce(1)
+      .groupBy(col(statusCol))
       .agg(count(lit(1)).as("n"))
       .orderBy(statusCol)
-      .coalesce(1)
       .write.mode(SaveMode.Overwrite).json(path)
 
   /** S13 — incremental skip-if-exists: true iff the partition directory

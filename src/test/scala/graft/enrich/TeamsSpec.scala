@@ -1,9 +1,10 @@
 package graft.enrich
 
 import graft.SparkSpecBase
+import graft.validate.Validate
 import org.apache.spark.sql.catalyst.plans.logical.Join
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
-import org.apache.spark.sql.execution.exchange.BroadcastExchangeExec
+import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ShuffleExchangeExec}
 import org.apache.spark.sql.functions._
 
 class TeamsSpec extends SparkSpecBase with AdaptiveSparkPlanHelper {
@@ -40,15 +41,17 @@ class TeamsSpec extends SparkSpecBase with AdaptiveSparkPlanHelper {
     assert(r(1L) == null)
   }
 
+  private def laRows = Seq(
+    ("LOS ANGELES", 0L, "PG", "2025-26"),
+    ("BOS", 1L, "PG", "2025-26"),
+    ("LOS ANGELES", 2L, "PG", "2025-26"),
+    ("LOS ANGELES", 3L, "PG", "2025-26"), // a third: past the pair
+    ("LOS ANGELES (10-4)", 0L, "SG", "2025-26"), // suffix stripped first
+    ("LOS ANGELES", 1L, "SG", "2025-26"),
+  ).toDF("team_raw", "row_idx", "position", "timeframe")
+
   test("LA disambiguation is occurrence-ordered per (position, timeframe)") {
-    val df = Seq(
-      ("LOS ANGELES", 0L, "PG", "2025-26"),
-      ("BOS", 1L, "PG", "2025-26"),
-      ("LOS ANGELES", 2L, "PG", "2025-26"),
-      ("LOS ANGELES (10-4)", 0L, "SG", "2025-26"), // suffix stripped first
-      ("LOS ANGELES", 1L, "SG", "2025-26"),
-    ).toDF("team_raw", "row_idx", "position", "timeframe")
-    val out = Teams.canonicalize(df, "team_raw").collect()
+    val out = Teams.canonicalize(laRows, "team_raw").collect()
       .map(r => (r.getAs[String]("position"), r.getAs[Long]("row_idx")) ->
         r.getAs[String]("canonical")).toMap
     assert(out(("PG", 0L)) == "LA Lakers")
@@ -56,6 +59,17 @@ class TeamsSpec extends SparkSpecBase with AdaptiveSparkPlanHelper {
     assert(out(("SG", 0L)) == "LA Lakers") // counter resets per partition
     assert(out(("SG", 1L)) == "LA Clippers")
     assert(out(("PG", 1L)) == "Boston Celtics")
+    assert(out(("PG", 3L)) == "LA Clippers")
+  }
+
+  test("per-cell validation reuses the LA window's partitioning: one shuffle") {
+    val viol = Validate.groupsWithWrongDistinctCount(
+      Teams.canonicalize(laRows, "team_raw"), Seq("position", "timeframe"),
+      "canonical", 30)
+    assert(viol.collect().map(_.getAs[Long]("n_distinct")).sorted.toSeq == Seq(2L, 3L))
+    val plan = viol.queryExecution.executedPlan
+    val shuffles = collect(plan) { case e: ShuffleExchangeExec => e }
+    assert(shuffles.size == 1, s"executed plan shuffles ${shuffles.size} times:\n$plan")
   }
 
   test("alias keys are unique, so the lookup map keeps every alias") {

@@ -1,10 +1,13 @@
 package graft.sink
 
 import graft.SparkSpecBase
+import graft.tools.DumpPlans.executionsOf
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.functions._
 import java.nio.file.Files
 
-class SinksSpec extends SparkSpecBase {
+class SinksSpec extends SparkSpecBase with AdaptiveSparkPlanHelper {
   import spark.implicits._
 
   private def tmpDir(): String =
@@ -63,5 +66,23 @@ class SinksSpec extends SparkSpecBase {
     assert(back == Map("done" -> 2L, "error" -> 1L, "skipped" -> 1L))
     assert(Sinks.partitionExists(ledger, path))
     assert(!Sinks.partitionExists(ledger, path + "/nope"))
+  }
+
+  test("writeRunSummary plans its tally on one partition: no shuffle") {
+    val path = tmpDir()
+    // three partitions and no exchange of its own, as a scan would be
+    val ledger = spark.sparkContext
+      .parallelize(Seq("done", "error", "done", "skipped", "done"), 3).toDF("status")
+    val (_, ran) = executionsOf(spark) {
+      Sinks.writeRunSummary(ledger, "status", path)
+      ledger
+    }
+    assert(ran.nonEmpty)
+    val shuffles = ran.map(_.executedPlan).flatMap(p =>
+      collect(p) { case e: ShuffleExchangeExec => e })
+    assert(shuffles.isEmpty, s"run summary shuffles:\n${ran.map(_.executedPlan).mkString("\n")}")
+    val back = spark.read.json(path).collect()
+      .map(r => r.getAs[String]("status") -> r.getAs[Long]("n")).toSeq
+    assert(back == Seq("done" -> 3L, "error" -> 1L, "skipped" -> 1L))
   }
 }
