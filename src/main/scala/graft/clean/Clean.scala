@@ -64,7 +64,10 @@ object Clean {
     * cannot see data (SURVEY §4.2 #1), so the decision is driver logic,
     * but it costs no second pass over `df`: the counters ride an
     * [[org.apache.spark.sql.Observation]] on the one job that
-    * checkpoints `df`, and the casts project over that checkpoint. The
+    * checkpoints `df`, and the casts project over that checkpoint (an
+    * aggregate over the checkpoint would be one more query per call).
+    * So the returned frame holds all of `df` as checkpoint blocks
+    * (memory, spilling to disk) until it is collected as garbage. The
     * decision is global (one aggregate), never per-partition, so the
     * output schema is deterministic across any cluster layout. No
     * columns, no job: `df` comes back as it is.

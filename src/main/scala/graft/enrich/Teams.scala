@@ -128,16 +128,11 @@ object Teams {
     val looked = coalesce(
       try_element_at(aliasMap, norm),
       try_element_at(aliasMap, regexp_replace(norm, "\\s+\\S+$", "")))
-    // LA rows sort first in each partition, so row_number ranks each
-    // among the LA rows alone, and the output stays hash-partitioned by
-    // the caller's keys: a grouping by them downstream (Validate's
-    // per-cell counts) plans no exchange of its own. With no caller
-    // keys, isLa is the key: a window with no partition key runs on
-    // one task.
-    val laWindow =
-      if (partitionCols.isEmpty) Window.partitionBy(isLa).orderBy(col(orderCol))
-      else Window.partitionBy(partitionCols.map(col): _*)
-        .orderBy(isLa.desc, col(orderCol))
+    // LA rows rank first, so each ranks among LA rows only; keyed by
+    // the caller's keys alone, the output stays partitioned by them.
+    val laWindow = Window
+      .partitionBy((if (partitionCols.isEmpty) Seq(isLa) else partitionCols.map(col)): _*)
+      .orderBy(isLa.desc, col(orderCol))
     df.withColumn("__norm", normalizeRaw(col(rawCol)))
       .withColumn("__la_rank",
         when(isLa, row_number().over(laWindow)).otherwise(lit(null)))

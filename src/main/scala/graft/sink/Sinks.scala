@@ -1,6 +1,7 @@
 package graft.sink
 
 import org.apache.spark.sql.{DataFrame, SaveMode}
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.functions._
 import graft.JsonString.quote
 
@@ -82,17 +83,21 @@ object Sinks {
     finally out.close()
   }
 
-  /** S11 — run-summary sink: per-status tallies of an operation ledger.
-    * The ledger is ledger-sized (one row per operation of a run), so it
-    * is planned on one partition: the tally and its sort need no
-    * exchange, and the summary is written as one file.
+  /** S11 — run-summary sink: per-status tallies of an operation ledger,
+    * written as one file. A ledger whose rows the plan already holds on
+    * the driver (a `LocalRelation` once optimized, as a run's own ledger
+    * of one row per operation is) is tallied on one partition, with no
+    * exchange; a scanned ledger keeps its partition-parallel tally.
     */
-  def writeRunSummary(statusDf: DataFrame, statusCol: String, path: String): Unit =
-    statusDf.coalesce(1)
+  def writeRunSummary(statusDf: DataFrame, statusCol: String, path: String): Unit = {
+    val onDriver = statusDf.queryExecution.optimizedPlan.isInstanceOf[LocalRelation]
+    (if (onDriver) statusDf.coalesce(1) else statusDf)
       .groupBy(col(statusCol))
       .agg(count(lit(1)).as("n"))
       .orderBy(statusCol)
+      .coalesce(1)
       .write.mode(SaveMode.Overwrite).json(path)
+  }
 
   /** S13 — incremental skip-if-exists: true iff the partition directory
     * already exists at `path` (job-level gate, not a per-row filter).

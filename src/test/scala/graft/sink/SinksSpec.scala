@@ -68,21 +68,23 @@ class SinksSpec extends SparkSpecBase with AdaptiveSparkPlanHelper {
     assert(!Sinks.partitionExists(ledger, path + "/nope"))
   }
 
-  test("writeRunSummary plans its tally on one partition: no shuffle") {
-    val path = tmpDir()
-    // three partitions and no exchange of its own, as a scan would be
-    val ledger = spark.sparkContext
-      .parallelize(Seq("done", "error", "done", "skipped", "done"), 3).toDF("status")
-    val (_, ran) = executionsOf(spark) {
-      Sinks.writeRunSummary(ledger, "status", path)
-      ledger
+  test("writeRunSummary tallies a driver-held ledger on one partition; a scanned one in parallel") {
+    val statuses = Seq("done", "error", "done", "skipped", "done")
+    val held = statuses.toDF("status") // a LocalRelation, scanned in 4 partitions
+    val scanned = spark.sparkContext.parallelize(statuses, 3).toDF("status")
+    for ((ledger, shuffles) <- Seq(held -> 0, scanned -> 2)) {
+      val path = tmpDir()
+      val (_, ran) = executionsOf(spark) {
+        Sinks.writeRunSummary(ledger, "status", path)
+        ledger
+      }
+      val plans = ran.map(_.executedPlan)
+      assert(plans.nonEmpty)
+      assert(plans.flatMap(p => collect(p) { case e: ShuffleExchangeExec => e }).size ==
+        shuffles, s"run summary plans:\n${plans.mkString("\n")}")
+      val back = spark.read.json(path).collect()
+        .map(r => r.getAs[String]("status") -> r.getAs[Long]("n")).toSeq
+      assert(back == Seq("done" -> 3L, "error" -> 1L, "skipped" -> 1L))
     }
-    assert(ran.nonEmpty)
-    val shuffles = ran.map(_.executedPlan).flatMap(p =>
-      collect(p) { case e: ShuffleExchangeExec => e })
-    assert(shuffles.isEmpty, s"run summary shuffles:\n${ran.map(_.executedPlan).mkString("\n")}")
-    val back = spark.read.json(path).collect()
-      .map(r => r.getAs[String]("status") -> r.getAs[Long]("n")).toSeq
-    assert(back == Seq("done" -> 3L, "error" -> 1L, "skipped" -> 1L))
   }
 }
